@@ -25,7 +25,8 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+           or len(os.sched_getaffinity(0)))  # nproc
 # The scaling series replicates the corpus 512-8192x, so it runs on
 # the smaller sf0.01 table set unless explicitly pointed elsewhere.
 SCALING_SF_DIR = os.environ.get("SPARK_GRAFT_SCALING_SF_DIR",

@@ -525,10 +525,21 @@ def pr_report(spark, expected_dir: str = EXPECTED_DIR,
               exclude: Iterable[str] = ()) -> dict:
     """Corpus-wide triple precision/recall vs the reference goldens.
 
-    Returns {"aggregate": {...}, "fixtures": {name: {...}}} where the
-    aggregate is micro-averaged over every fixture triple."""
+    Returns {"status", "aggregate": {...}, "fixtures": {name: {...}}}
+    where the aggregate is micro-averaged over every fixture triple.
+    With no fixture under `expected_dir` the status is "unavailable"
+    and precision/recall are None: there is nothing to score."""
     docs = {k: v for k, v in golden_fixture_docs(expected_dir).items()
             if k not in set(exclude)}
+    if not docs:
+        return {
+            "status": "unavailable",
+            "reason": f"no reference golden fixtures under {expected_dir}",
+            "aggregate": {"precision": None, "recall": None,
+                          "true_positives": 0, "n_ours": 0, "n_gold": 0,
+                          "n_fixtures": 0},
+            "fixtures": {},
+        }
     gold = {name: golden_triples(doc) for name, doc in docs.items()}
     ours = spark_triples_by_fixture(spark, golden_pages(spark, docs))
 
@@ -554,4 +565,4 @@ def pr_report(spark, expected_dir: str = EXPECTED_DIR,
         "true_positives": tp, "n_ours": n_ours, "n_gold": n_gold,
         "n_fixtures": len(docs),
     }
-    return {"aggregate": agg, "fixtures": fixtures}
+    return {"status": "ok", "aggregate": agg, "fixtures": fixtures}

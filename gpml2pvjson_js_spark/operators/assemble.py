@@ -156,6 +156,7 @@ def _stage_many(named: dict) -> dict:
 from . import edges as E
 from . import entities as N
 from . import groups as G
+from . import waypoints as W
 from .entities import DOC_KEY
 from .parse import parse_gpml
 
@@ -258,12 +259,12 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
                 "attachment_position", "is_attached_to")
     )
     edges0 = E.convert_edges(converted)
-    # no _stage here: synthesize_waypoints checkpoints its loop input
-    # unconditionally (see its docstring)
     edges1 = E.resolve_edge_points(edges0, targets)
-    # implicit Elbow/Curved waypoints (F4/F5) before group re-basing
-    from .waypoints import synthesize_waypoints
-    edges1 = synthesize_waypoints(edges1)
+    # implicit Elbow/Curved waypoints (F4/F5) before group re-basing;
+    # staged because the edges fan out into the nodes' z-map, the
+    # pathways' contains and the returned edges, and each un-staged
+    # consumer would re-run the Python kernel
+    edges1 = _stage(W.synthesize_waypoints(edges1))
 
     # rebase grouped members (A4)
     node_like = free_nodes.unionByName(states, allowMissingColumns=True)

@@ -1,35 +1,39 @@
 """Waypoint synthesis stage: Elbow/Curved edges gain their implicit
-intermediate points (F4/F5) via the Arrow-batched geometry kernel.
+intermediate points (F4/F5) via the geometry kernel.
 
 Hyperedges (edges attached to other edges via anchors) need the
-referenced edge's resolved points to pick an emanation orientation, so
-the stage runs as bounded topo rounds (the Spark analog of the
-reference's fixpoint scheduler, src/2013a/toPvjson.ts:470-637): round
-k processes edges whose referenced edges are already final. Leftovers
-(cycles) pass through unchanged, matching the reference's cycle
+referenced edge's resolved points to pick an emanation orientation.
+The reference resolves them with a topological fixpoint inside one
+document (src/2013a/toPvjson.ts:470-637), and every reference is
+scoped to its (url, frag), so the stage is one grouped-map pass: each
+document's curvy edges, plus the narrow (id, points) pool of its
+straight edges, reach one Python call that resolves them level by
+level in memory. Level k holds the edges whose referenced curvy edges
+all resolved in earlier levels. Levels deeper than `MAX_ROUNDS` and
+cycles pass through unchanged, matching the reference's cycle
 tolerance.
+
+Both roles travel in ONE frame with a role flag rather than as a
+`cogroup` of two frames: cogroup segfaulted inside pyarrow 16.1's
+`arrow_to_pandas` on this code path.
 """
 
 from __future__ import annotations
-
-from typing import Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .entities import DOC_KEY
 from ..functions.geometry import calculate_all_points
-from ..functions.skew import left_join_skipping_null_keys
 
-# hyperedge depth covered lazily (no driver actions): the deepest
-# chain in the reference golden corpus is depth 3
-# (hyperedge-singleend-depth3-*), so 4 rounds leave headroom; deeper
+# the deepest hyperedge chain in the reference golden corpus is depth 3
+# (hyperedge-singleend-depth3-*), so 4 levels leave headroom; deeper
 # chains pass through unchanged (reference cycle tolerance)
 MAX_ROUNDS = 4
 _CURVY = ("ElbowLine", "CurvedLine")
+_ROLE = "_waypoint_curvy"
 
 
 def _point_to_dict(p) -> dict:
@@ -43,27 +47,59 @@ def _point_to_dict(p) -> dict:
     }
 
 
-def _synthesize_batch(batches: Iterable[pd.DataFrame]
-                      ) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        new_points = []
-        for points, src_pts, tgt_pts in zip(
-                pdf["points"], pdf["src_edge_points"],
-                pdf["tgt_edge_points"]):
-            pts = [_point_to_dict(dict(p)) for p in points]
-            src = ([_point_to_dict(dict(p)) for p in src_pts]
-                   if src_pts is not None and len(src_pts) else None)
-            tgt = ([_point_to_dict(dict(p)) for p in tgt_pts]
-                   if tgt_pts is not None and len(tgt_pts) else None)
+def _points(points) -> list[dict]:
+    return [_point_to_dict(dict(p)) for p in points]
+
+
+def _edge_points(points) -> list[dict] | None:
+    """A referenced edge's points; None when it has none."""
+    return _points(points) if points is not None and len(points) \
+        else None
+
+
+def resolve_document(pdf: pd.DataFrame,
+                     max_rounds: int = MAX_ROUNDS) -> pd.DataFrame:
+    """One document's rows -> its curvy rows with synthesized points.
+
+    Rows with the role flag set are curvy edges; the others are the
+    straight edges' (id, points) pool. A curvy edge is ready once none
+    of its `is_attached_to` refs names a curvy edge still unresolved.
+    Each level's ready edges take their endpoint refs' points from the
+    pool as it stood when the level began, then join the pool."""
+    curvy = pdf[pdf[_ROLE]].drop(columns=[_ROLE]).reset_index(drop=True)
+    if curvy.empty:  # assigning no points would make the column float
+        return curvy
+    straight = pdf[~pdf[_ROLE]]
+    pool = dict(zip(straight["id"], straight["points"]))
+    ids = curvy["id"].tolist()
+    firsts = curvy["endpoint_first_ref"].tolist()
+    lasts = curvy["endpoint_last_ref"].tolist()
+    refs = [set(r) if r is not None else set()
+            for r in curvy["is_attached_to"]]
+    # plain lists: Arrow cannot convert a numpy object array back to the
+    # production schema's array of non-null structs
+    points = [None if p is None else list(p) for p in curvy["points"]]
+    pending = list(range(len(curvy)))
+    for _ in range(max_rounds):
+        unresolved = {ids[i] for i in pending}
+        ready = [i for i in pending if not refs[i] & unresolved]
+        if not ready:
+            break
+        level = []
+        for i in ready:
             try:
-                out = calculate_all_points(pts, src, tgt)
+                pts = calculate_all_points(
+                    _points(points[i]), _edge_points(pool.get(firsts[i])),
+                    _edge_points(pool.get(lasts[i])))
             except Exception:
-                out = pts  # cycle/degenerate tolerance: keep explicit
-            new_points.append(out)
-        res = pdf.drop(columns=["points", "src_edge_points",
-                                "tgt_edge_points"])
-        res["points"] = new_points
-        yield res
+                pts = points[i]  # degenerate geometry: keep explicit
+            level.append((i, pts))
+        for i, pts in level:
+            points[i] = pool[ids[i]] = pts
+        done = set(ready)
+        pending = [i for i in pending if i not in done]
+    curvy["points"] = points
+    return curvy
 
 
 def synthesize_waypoints(edges: DataFrame,
@@ -71,121 +107,16 @@ def synthesize_waypoints(edges: DataFrame,
     """edges (resolved, from resolve_edge_points) -> edges with
     Elbow/Curved implicit waypoints made explicit.
 
-    The loop input is checkpointed UNCONDITIONALLY (independent of the
-    SPARK_GRAFT_STAGE_STORAGE fan-out mode): every round references
-    the edges frame several times, so an un-staged input would be
-    re-embedded ~4x per round and driver plan analysis goes
-    super-linear (observed: 25+ min of single-threaded analysis)."""
-    edges = edges.localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    needs = edges.filter(F.col("draw_as").isin(*_CURVY))
-    rest = edges.filter(~F.col("draw_as").isin(*_CURVY))
-
-    # The loop state deliberately EXCLUDES the untouched majority:
-    # `rest` (straight edges — most of the corpus) is emitted once at
-    # the end and never re-staged. What carries between rounds is only
-    # (a) the narrow resolved-points pool (url, frag, id, points) that
-    # ready-tests and point-attachment join against, and (b) the
-    # shrinking `needs` set. (A previous version unioned every round's
-    # output into one growing full-width frame and re-checkpointed it
-    # per round — 4x full-corpus serialization, measured 15x slower at
-    # replicate-64.)
-    pool = rest.select(
-        F.col("url").alias("d_url"), F.col("frag").alias("d_frag"),
-        F.col("id").alias("d_id"), F.col("points").alias("d_points"))
-
-    out_schema = edges.schema
-    fixed_parts: list[DataFrame] = []
-    # NOTE: fixed rounds with NO driver-side actions — the whole stage
-    # stays one lazy DAG (same rationale as the fixed-round CC mode in
-    # canonicalize.py). Curvy-edge chains deeper than max_rounds pass
-    # through unchanged (reference cycle tolerance).
-    for rnd in range(max_rounds):
-        # an edge is ready when each edge-typed endpoint ref has
-        # resolved points in the pool. A ref is BLOCKED iff it names
-        # an edge whose points are not yet resolved — and the set of
-        # unresolved edges at round entry is exactly `needs` itself
-        # (rest + fixed parts + needs partition the edge ids), so one
-        # lookup against the small shrinking needs frame replaces the
-        # former pair of joins against all-edges and the full pool.
-        refs = needs.select(*DOC_KEY, "id",
-                            F.explode_outer("is_attached_to").alias("ref"))
-        blocked_ids = needs.select(
-            F.col("url").alias("n_url"), F.col("frag").alias("n_frag"),
-            F.col("id").alias("n_id"))
-        # unattached refs (NULL — the majority) bypass the lookup
-        refs = left_join_skipping_null_keys(
-            refs, blocked_ids,
-            (refs.url == blocked_ids.n_url)
-            & (refs.frag == blocked_ids.n_frag)
-            & (refs.ref == blocked_ids.n_id),
-            "ref",
-        ).withColumn("ref_blocked", F.col("n_id").isNotNull()) \
-            .drop("n_url", "n_frag", "n_id")
-        ready_ids = refs.groupBy(*DOC_KEY, "id").agg(
-            F.min(F.when(F.col("ref_blocked"), 0)
-                  .otherwise(1)).alias("ready")
-        ).filter(F.col("ready") == 1).select(*DOC_KEY, "id")
-
-        ready = needs.join(ready_ids, [*DOC_KEY, "id"], "left_semi")
-        # attach referenced edge points for anchor-attached endpoints
-        dp = pool.select(
-            F.col("d_url").alias("p_url"), F.col("d_frag").alias("p_frag"),
-            F.col("d_id").alias("p_id"),
-            F.col("d_points").alias("src_edge_points"))
-        ready2 = left_join_skipping_null_keys(
-            ready, dp,
-            (ready.url == dp.p_url) & (ready.frag == dp.p_frag)
-            & (ready.endpoint_first_ref == dp.p_id),
-            "endpoint_first_ref",
-        ).drop("p_url", "p_frag", "p_id")
-        dp2 = pool.select(
-            F.col("d_url").alias("q_url"), F.col("d_frag").alias("q_frag"),
-            F.col("d_id").alias("q_id"),
-            F.col("d_points").alias("tgt_edge_points"))
-        ready2 = left_join_skipping_null_keys(
-            ready2, dp2,
-            (ready2.url == dp2.q_url) & (ready2.frag == dp2.q_frag)
-            & (ready2.endpoint_last_ref == dp2.q_id),
-            "endpoint_last_ref",
-        ).drop("q_url", "q_frag", "q_id")
-
-        # checkpoint ONLY this round's newly-fixed rows (small) — cuts
-        # the iterative lineage without restaging the whole corpus;
-        # SERIALIZED blocks (deserialized storage measured to
-        # GC-thrash at high parallelism)
-        def _ck(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(
-                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-
-        fixed_df = ready2.mapInPandas(_synthesize_batch, out_schema)
-        needs_next = needs.join(ready_ids, [*DOC_KEY, "id"], "left_anti")
-        if rnd + 1 < max_rounds:
-            # the round's two checkpoints are independent siblings —
-            # with AQE on, a lazy checkpoint's toRdd materializes its
-            # shuffle stages synchronously, so checkpointing them
-            # concurrently overlaps those jobs (same rationale as
-            # assemble._stage_many). After the LAST round, extending
-            # the pool is dead code and the final `needs` (cycle
-            # passthrough) is referenced exactly once, so its
-            # checkpoint would buy nothing — each skipped lazy
-            # checkpoint saves a full planning+materialization pass
-            # on the driver.
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                ff, nf = ex.submit(_ck, fixed_df), \
-                    ex.submit(_ck, needs_next)
-                fixed, needs = ff.result(), nf.result()
-            pool = pool.unionByName(fixed.select(
-                F.col("url").alias("d_url"), F.col("frag").alias("d_frag"),
-                F.col("id").alias("d_id"),
-                F.col("points").alias("d_points")))
-        else:
-            fixed, needs = _ck(fixed_df), needs_next
-        fixed_parts.append(fixed)
-
-    out = rest
-    for part in fixed_parts:
-        out = out.unionByName(part)
-    # cycle tolerance: anything never ready passes through unchanged
-    return out.unionByName(needs)
+    Straight edges pass through untouched; only their narrow
+    (url, frag, id, points) projection joins the curvy edges in the
+    grouped pass. Lazy: the caller stages the result."""
+    is_curvy = F.coalesce(F.col("draw_as").isin(*_CURVY), F.lit(False))
+    rest = edges.filter(~is_curvy)
+    kernel_in = edges.filter(is_curvy).withColumn(_ROLE, F.lit(True)) \
+        .unionByName(
+            rest.select(*DOC_KEY, "id", "points",
+                        F.lit(False).alias(_ROLE)),
+            allowMissingColumns=True)
+    resolved = kernel_in.groupBy(*DOC_KEY).applyInPandas(
+        lambda pdf: resolve_document(pdf, max_rounds), edges.schema)
+    return rest.unionByName(resolved)

@@ -12,6 +12,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+MAX_DRIVER_MEMORY_MB = 24 * 1024
+
+
+def host_cpus() -> int:
+    """CPUs this process may run on (what `nproc` prints)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Half the host's RAM (MemTotal), capped at 24g: a fixed 24g heap
+    on a smaller host lets the kernel OOM-kill the driver JVM, while
+    half leaves room for the Python workers and the page cache."""
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") \
+        // (1024 * 1024)
+    return f"{min(MAX_DRIVER_MEMORY_MB, total_mb // 2)}m"
+
 
 def get_spark(
     app_name: str = "gpml2pvjson_js_spark",
@@ -19,7 +35,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     master = master or f"local[{cpus}]"
     # local[N] / local[*] / local-cluster[n,cores,mem]
     n = master.rstrip("]").rsplit("[", 1)[-1]
@@ -87,7 +103,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # wide generated projections: keep plan stringification cheap
         # (plan-description generation of large CaseWhen trees otherwise

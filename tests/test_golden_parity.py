@@ -64,7 +64,7 @@ def test_mim_marker_types_match_reference_behavior(model):
          "SBO:0000394", "DirectedInteraction"])
 
 
-def test_group_style_defaults_match_golden_shape(model, golden):
+def test_group_style_defaults_match_golden_shape(model):
     """Style 'Group' group: overrides + class defaults as in golden
     groups.json cb201 (strokeWidth 0, drawAs none, strokeDasharray 5,3,
     fill transparent, fontSize 1, fillOpacity 0.1)."""

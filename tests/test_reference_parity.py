@@ -14,10 +14,15 @@ than new geometry code:
 
 import glob
 import json
+import os
 
-GOLDEN_DIR = "/root/reference/test/expected"
+import pytest
+
+from gpml2pvjson_js_spark.golden import EXPECTED_DIR as GOLDEN_DIR
 
 
+@pytest.mark.skipif(not os.path.isdir(GOLDEN_DIR), reason=(
+    f"reference goldens absent: {GOLDEN_DIR} not found"))
 def test_golden_anchors_never_carry_xy():
     n_anchor = n_with_xy = 0
     for path in glob.glob(f"{GOLDEN_DIR}/*.json"):
