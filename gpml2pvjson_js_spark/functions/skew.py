@@ -77,42 +77,6 @@ def salted_repartition(df: DataFrame, keys: list[str],
     return out.drop("__salt")
 
 
-_TYPED_NULL_CACHE: dict[tuple, list] = {}
-
-
-def _typed_null_cols(schema) -> list:
-    """`lit(None).cast(type).alias(name)` per field — memoized on the
-    schema signature. The same few right-side schemas recur on every
-    waypoint round / model build, and rebuilding the list cost ~1.9k
-    py4j round-trips per build; unresolved Columns are immutable and
-    DataFrame-independent, so reuse is safe."""
-    key = tuple((f.name, f.dataType.json(), f.nullable)
-                for f in schema.fields)
-    cols = _TYPED_NULL_CACHE.get(key)
-    if cols is None:
-        cols = [F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields]
-        _TYPED_NULL_CACHE[key] = cols
-    return cols
-
-
-def left_join_skipping_null_keys(left: DataFrame, right: DataFrame,
-                                 cond, null_key: str | Column
-                                 ) -> DataFrame:
-    """LEFT OUTER equi-join where left rows whose join key is NULL
-    bypass the join entirely (they can never match, but a hash
-    exchange still funnels every null-key row into ONE reducer — the
-    dominant straggler pattern in this pipeline, where most edge
-    points/refs are unattached). The null-key rows get the right
-    side's columns as typed NULLs and rejoin via union, exactly the
-    rows a plain left join would have produced."""
-    k = F.col(null_key) if isinstance(null_key, str) else null_key
-    matched = left.filter(k.isNotNull()).join(right, cond, "left")
-    passthrough = left.filter(k.isNull()).select(
-        "*", *_typed_null_cols(right.schema))
-    return matched.unionByName(passthrough)
-
-
 def salted_join(big: DataFrame, small: DataFrame,
                 key: str | list[str],
                 how: str = "inner",

@@ -45,7 +45,7 @@ PRED_TERM = "wp:term"
 def _hop(ents: dict, ref: str | None) -> str | None:
     """Anchor hop: an edge endpoint attached to an Anchor is, at the
     edge level, attached to the anchor's parent edge
-    (ref: src/edge/edge.ts:148-317; mirrors resolve_edge_points)."""
+    (ref: src/edge/edge.ts:148-317; mirrors document._resolve_points)."""
     if ref is None:
         return None
     t = ents.get(ref)

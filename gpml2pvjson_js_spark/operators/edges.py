@@ -1,13 +1,11 @@
-"""Edge processing: point attachment resolution (J7), marker -> ontology
-typing (J11), markerStart/markerEnd, and edge-level isAttachedTo with
-the anchor hop (an edge attaches to another EDGE via an anchor,
-ref: src/edge/edge.ts:92-383).
+"""Edge entities: marker -> ontology typing (J11), markerStart/markerEnd,
+drawAs and the has-Points stroke/fill converters
+(ref: src/edge/edge.ts:92-383, src/2013a/ValueConverters.ts:339-386).
 
-Pipeline shape (all Catalyst built-ins):
-  edges --explode points--> attachable points
-        --equi join (url, frag, graph_ref = target.id)--> targets
-        --anchor hop: F.when(target is Anchor, anchor.is_attached_to)-->
-        --collect_list sorted by point idx--> resolved edges
+Point attachment (J7), the anchor hop (an edge attaches to another
+EDGE via an anchor) and the Elbow/Curved waypoints are resolved per
+document, in memory, by the document kernel (document.py);
+`build_edges` joins its output onto the converted edges.
 
 Marker typing is an F.aggregate over the points array against a
 broadcast literal map (16-row MarkerMappings dimension).
@@ -21,7 +19,6 @@ from pyspark.sql import functions as F
 from .entities import DOC_KEY
 from ..functions import converters as C
 from ..functions.mappings import MARKER_MAPPINGS
-from ..functions.skew import left_join_skipping_null_keys
 
 _EDGE_NAMES = ("Interaction", "GraphicalLine")
 
@@ -114,8 +111,21 @@ def _edge_exprs() -> tuple:
     return _EDGE_EXPRS
 
 
+_EDGE_COLS = [
+    *DOC_KEY, "id", "pathway_id", "elem_idx", "gpml_element_name",
+    "kaavio_type", "types", "marker_start", "marker_end", "draw_as",
+    "stroke", "stroke_width", "stroke_dasharray", "fill", "z_index",
+    "citations", "comments", "group_ref", "xref_datasource",
+    "xref_identifier"]
+# the columns the document kernel derives for an edge (document.py)
+_EDGE_DERIVED = [
+    "is_attached_to", "point_targets", "endpoint_first_ref",
+    "endpoint_last_ref", "points", "is_part_of", "burrs"]
+
+
 def convert_edges(converted: DataFrame) -> DataFrame:
-    """Edge mentions -> edge entities with provisional points.
+    """Edge mentions -> edge entities, without the columns the
+    document kernel derives (_EDGE_DERIVED).
 
     drawAs = ConnectorType + 'Line' (P12); stroke/fill/strokeWidth use
     the has-Points branch of the converters
@@ -123,128 +133,16 @@ def convert_edges(converted: DataFrame) -> DataFrame:
     expressions are memoized per process (_edge_exprs)."""
     e = converted.filter(F.col("gpml_element_name").isin(*_EDGE_NAMES))
     pts, outcols = _edge_exprs()
-    return (
-        e.withColumn("pts", pts)
-        .withColumns(outcols)
-        .select(
-            *DOC_KEY, "pathway_id", "elem_idx", "id", "gpml_element_name",
-            "kaavio_type", "types", "marker_start", "marker_end", "draw_as",
-            "stroke", "stroke_width", "stroke_dasharray", "fill", "z_index",
-            "citations", "comments", "group_ref", "pts",
-            "xref_datasource", "xref_identifier",
-        )
-    )
+    return e.withColumn("pts", pts).withColumns(outcols) \
+        .select(*_EDGE_COLS)
 
 
-def resolve_edge_points(edges: DataFrame, targets: DataFrame) -> DataFrame:
-    """Resolve each attachable point against the entity it references;
-    apply the anchor hop for edge-level attachment (J7,
-    ref: src/edge/edge.ts:148-317).
-
-    `targets` must provide: url, frag, id, gpml_element_name, width,
-    height, attachment_position (for anchors), is_attached_to (anchor's
-    parent edge).
-    """
-    t = targets.select(
-        F.col("url").alias("t_url"), F.col("frag").alias("t_frag"),
-        F.col("id").alias("t_id"),
-        F.col("gpml_element_name").alias("t_elem"),
-        F.col("width").alias("t_width"), F.col("height").alias("t_height"),
-        F.col("attachment_position").alias("t_att_pos"),
-        F.col("is_attached_to").alias("t_parent"),
-    )
-
-    p = edges.select(
-        *DOC_KEY, "id", F.posexplode("pts").alias("pos", "p")
-    ).select(*DOC_KEY, "id", "pos", "p.*")
-
-    # most points are unattached (graph_ref NULL): they bypass the
-    # join instead of hashing into one straggler reducer
-    j = left_join_skipping_null_keys(
-        p, t,
-        (p.url == t.t_url) & (p.frag == t.t_frag)
-        & (p.graph_ref == t.t_id),
-        "graph_ref",
-    )
-
-    is_anchor = F.col("t_elem") == "Anchor"
-    is_first = F.col("idx") == 0
-    attached = F.col("graph_ref").isNotNull()
-
-    # node/group/burr attachment: absolute offset + emanation orientation
-    off_x = F.col("roff_x") * F.col("t_width")
-    off_y = F.col("roff_y") * F.col("t_height")
-    orient_sign = F.when(is_first, F.lit(1.0)).otherwise(F.lit(-1.0))
-    orient_x = orient_sign * C.orientation_scalar(F.col("pos_x"))
-    orient_y = orient_sign * C.orientation_scalar(F.col("pos_y"))
-
-    resolved = j.withColumns({
-        # what the EDGE is attached to (anchor -> its parent edge)
-        "edge_ref": F.when(is_anchor, F.col("t_parent"))
-        .otherwise(F.col("t_id")),
-        "att_position": F.when(is_anchor, F.col("t_att_pos"))
-        .when(attached, F.array("pos_x", "pos_y")),
-        "att_offset": F.when(is_anchor, F.array(F.lit(0.0), F.lit(0.0)))
-        .when(attached, F.array(off_x, off_y)),
-        "orientation": F.when(attached & ~is_anchor,
-                              F.array(orient_x, orient_y)),
-        "resolved_target_elem": F.col("t_elem"),
-    })
-
-    point_struct = F.struct(
-        F.col("x"), F.col("y"),
-        F.col("graph_ref").alias("is_attached_to"),
-        F.col("att_position").alias("attachment_position"),
-        F.col("att_offset").alias("attachment_offset"),
-        F.col("orientation"),
-        F.col("marker"),
-    )
-    agg = resolved.groupBy(*DOC_KEY, "id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("idx"),
-                                                 point_struct.alias("pt")))),
-            lambda s: s.pt,
-        ).alias("points_resolved"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("edge_ref").isNotNull(),
-                           F.struct(F.col("idx"), F.col("edge_ref"))))),
-            lambda s: s.edge_ref,
-        ).alias("is_attached_to"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("graph_ref").isNotNull(),
-                           F.struct(F.col("idx"),
-                                    F.col("resolved_target_elem"),
-                                    F.col("graph_ref"))))),
-            lambda s: F.struct(s.resolved_target_elem.alias("elem"),
-                               s.graph_ref.alias("point_ref")),
-        ).alias("point_targets"),
-        # edge-level endpoint refs (anchor hop applied) for the
-        # interaction-classification stage
-        F.min_by(F.col("edge_ref"), F.col("idx")).alias("endpoint_first_ref"),
-        F.max_by(F.col("edge_ref"), F.col("idx")).alias("endpoint_last_ref"),
-    )
-    agg = agg.withColumn(
-        "is_attached_to",
-        F.when(F.size("is_attached_to") > 0, F.col("is_attached_to")),
-    )
-    out = edges.join(agg, [*DOC_KEY, "id"], "left").withColumn(
-        "points", F.coalesce(
-            F.col("points_resolved"),
-            F.transform(
-                "pts",
-                lambda pnt: F.struct(
-                    pnt.x.alias("x"), pnt.y.alias("y"),
-                    F.lit(None).cast("string").alias("is_attached_to"),
-                    F.lit(None).cast("array<double>").alias("attachment_position"),
-                    F.lit(None).cast("array<double>").alias("attachment_offset"),
-                    F.lit(None).cast("array<double>").alias("orientation"),
-                    pnt.marker.alias("marker"),
-                ),
-            ),
-        ),
-    ).drop("points_resolved", "pts")
-    return out
+def build_edges(converted: DataFrame, derived: DataFrame) -> DataFrame:
+    """Edge entities with the columns the document kernel derived for
+    them (`derived`, keyed (url, frag, elem_idx)): resolved points
+    with Elbow/Curved waypoints, isAttachedTo after the anchor hop,
+    the point targets and endpoint refs that interaction
+    classification reads, isPartOf and burrs."""
+    return convert_edges(converted).join(
+        derived.select(*DOC_KEY, "elem_idx", *_EDGE_DERIVED),
+        [*DOC_KEY, "elem_idx"]).select(*_EDGE_COLS, *_EDGE_DERIVED)

@@ -10,13 +10,10 @@ mentions frame plus two broadcast dimension joins:
 - group style     (P16) : broadcast join on Style with override
                           precedence (ref: src/group.ts:153-181)
 
-plus one real equi join:
-
-- State -> parent DataNode ZOrder inheritance + burr offset (J3/J8,
-  ref: src/Processor.ts:251-276, src/2013a/toPvjson.ts:680-710)
-
-All joins are keyed (url, frag, ...) so co-partitioning by url makes
-them local after one shuffle; dimension sides are literal broadcasts.
+Everything that follows a reference inside a document (a State's
+parent, group membership and bounding box, burrs, contains) is derived
+by the per-document kernel (document.py); `build_nodes` joins its
+output once on (url, frag, elem_idx).
 """
 
 from __future__ import annotations
@@ -377,88 +374,75 @@ def _finish(df: DataFrame) -> DataFrame:
     return df.select(*_FINISH_COLS)
 
 
-def build_free_nodes(converted: DataFrame) -> DataFrame:
-    """DataNode / Shape / Label entities (no relational deps).
-    DataNode unions wpType into types (ref: src/2013a/toPvjson.ts:340-346);
-    Shape with a cellular component gains PhysicalEntity typing
-    (ref: src/2013a/toPvjson.ts:359-373)."""
-    df = converted.filter(
-        F.col("gpml_element_name").isin("DataNode", "Shape", "Label"))
-    df = df.withColumns(_free_node_exprs())
-    return _finish(df)
+_NODE_NAMES = ("DataNode", "Shape", "Label", "State", "Anchor", "Group")
+# the columns the document kernel derives (document.py)
+_NODE_DERIVED = ["x", "y", "width", "height", "z_index",
+                 "attachment_offset", "is_part_of", "burrs", "contains"]
+# build_nodes' output: the entity columns, then isPartOf, burrs, a
+# group's GroupId and its contains
+_NODE_COLS = [_RENAME.get(c, c) for c in _ENTITY_COLS] + [
+    "is_part_of", "burrs", "gpml_group_id", "contains"]
 
 
-_FREE_NODE_EXPRS: dict | None = None
+_NODE_EXPRS: tuple | None = None
 
 
-def _free_node_exprs() -> dict:
-    """build_free_nodes' typing projection — name-based expressions
-    only, memoized per process."""
-    global _FREE_NODE_EXPRS
-    if _FREE_NODE_EXPRS is not None:
-        return _FREE_NODE_EXPRS
-    is_dn = F.col("gpml_element_name") == "DataNode"
-    is_shape = F.col("gpml_element_name") == "Shape"
+def _node_exprs() -> tuple:
+    """build_nodes' typing projection — name-based expressions only,
+    memoized per process.
+
+    - DataNode unions wpType into types
+      (ref: src/2013a/toPvjson.ts:340-346);
+    - a Shape with a cellular component gains PhysicalEntity typing
+      (ref: src/2013a/toPvjson.ts:359-373);
+    - a Group's types start from its Style's (src/group.ts:153-181);
+    - wpType stays on DataNodes and Groups, stateType on States and
+      Groups; a State's relative offset becomes its absolute
+      attachment_offset in the kernel;
+    - a Group's GroupId moves to gpml_group_id."""
+    global _NODE_EXPRS
+    if _NODE_EXPRS is not None:
+        return _NODE_EXPRS
+    name = F.col("gpml_element_name")
     cc = F.col("cellular_component")
     types = _base_types()
-    types = F.when(is_dn, C.union_types(types, C.arr(F.col("wp_type_out")))) \
-        .when(is_shape & cc.isNotNull(),
+    typing = {
+        "types": F.when(name == "Group", _base_types(F.col("style_types")))
+        .when(name == "DataNode",
+              C.union_types(types, C.arr(F.col("wp_type_out"))))
+        .when((name == "Shape") & cc.isNotNull(),
               C.union_types(types, F.array(F.lit("PhysicalEntity"),
                                            F.lit("CellularComponent")),
-                            C.arr(cc))) \
-        .otherwise(types)
-    _FREE_NODE_EXPRS = {
-        "types": types,
-        # wpType key only exists on DataNodes; stateType never here
-        "wp_type_out": F.when(is_dn, F.col("wp_type_out")),
-        "state_type_out": F.lit(None).cast("string"),
+                            C.arr(cc)))
+        .otherwise(types),
+        "wp_type_out": F.when(name.isin("DataNode", "Group"),
+                              F.col("wp_type_out")),
+        "state_type_out": F.when(name.isin("State", "Group"),
+                                 F.col("state_type_out")),
+        "attachment_relative_offset": F.when(
+            name != "State", F.col("attachment_relative_offset")),
     }
-    return _FREE_NODE_EXPRS
+    group_ids = {
+        "gpml_group_id": F.when(name == "Group", F.col("group_id")),
+        "group_id": F.when(name != "Group", F.col("group_id")),
+    }
+    _NODE_EXPRS = (typing, group_ids)
+    return _NODE_EXPRS
 
 
-def build_states(converted: DataFrame) -> DataFrame:
-    """State entities: inherit ZOrder from the parent DataNode (J3)
-    and resolve the burr offset against parent dims (J8)."""
-    states = converted.filter(F.col("gpml_element_name") == "State")
-    parents = converted.select(
-        F.col("url").alias("p_url"),
-        F.col("frag").alias("p_frag"),
-        F.col("graph_id").alias("p_id"),
-        F.col("zorder").alias("p_zorder"),
-        F.col("width_out").alias("p_width"),
-        F.col("height_out").alias("p_height"),
-    )
-    j = states.join(
-        parents,
-        (states.url == parents.p_url) & (states.frag == parents.p_frag)
-        & (states.graph_ref == parents.p_id),
-        "left",
-    ).drop("p_url", "p_frag")
-    j = j.withColumn("z_index", F.coalesce(F.col("z_index"), F.col("p_zorder")))
-    j = j.withColumn(
-        "attachment_offset",
-        F.when(
-            F.col("attachment_relative_offset").isNotNull(),
-            F.array(
-                F.element_at("attachment_relative_offset", 1) * F.col("p_width"),
-                F.element_at("attachment_relative_offset", 2) * F.col("p_height"),
-            ),
-        ),
-    ).withColumn("attachment_relative_offset", F.lit(None).cast("array<double>"))
-    j = j.withColumn("types", _base_types())
-    j = j.withColumn("wp_type_out", F.lit(None).cast("string"))
-    return _finish(j)
-
-
-def build_anchors(converted: DataFrame) -> DataFrame:
-    anchors = converted.filter(F.col("gpml_element_name") == "Anchor")
-    anchors = anchors.withColumn("types", _base_types())
-    anchors = anchors.withColumn("wp_type_out", F.lit(None).cast("string")) \
-        .withColumn("state_type_out", F.lit(None).cast("string"))
-    # anchor x/y along the parent edge path needs arc-length
-    # parametrization (SmartPath.position) — not needed for triples;
-    # deferred (SURVEY.md §2.7 F2).
-    return _finish(anchors)
+def build_nodes(converted: DataFrame, derived: DataFrame) -> DataFrame:
+    """DataNode / Shape / Label / State / Anchor / Group entities with
+    the columns the document kernel derived for them (`derived`, keyed
+    (url, frag, elem_idx)). The inner join drops the empty groups the
+    kernel leaves out (P21). An Anchor's x/y along its edge's path
+    needs arc-length parametrization (SmartPath.position) — not needed
+    for triples; deferred (SURVEY.md §2.7 F2)."""
+    typing, group_ids = _node_exprs()
+    df = converted.filter(F.col("gpml_element_name").isin(*_NODE_NAMES))
+    df = _finish(df.withColumns(typing)).withColumns(group_ids) \
+        .drop(*_NODE_DERIVED)
+    d = derived.select(*DOC_KEY, "elem_idx", *_NODE_DERIVED)
+    return df.join(d, [*DOC_KEY, "elem_idx"]).select(*_NODE_COLS)
 
 
 _CITATION_COLS: list | None = None

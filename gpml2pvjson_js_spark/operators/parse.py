@@ -487,10 +487,13 @@ def extracted_text(pages: DataFrame) -> DataFrame:
     expressed as regexp_extract_all + array_join on the JVM, removing
     a second full-corpus Python/Arrow boundary (the first one is the
     page synthesis itself). Java and Python regex agree exactly on
-    this pattern (literal delimiters, lazy dot-all group), and the
-    binary→string cast matches the UTF-8 decode because page html is
-    synthesized from parquet strings — valid UTF-8 by construction
-    (pinned against the Python kernel by test_parse_and_text)."""
+    this pattern (literal delimiters, lazy dot-all group). The
+    binary→string cast matches the Python kernel's UTF-8 decode, also
+    on malformed bytes, which both replace with U+FFFD (pinned by
+    test_parse_and_text), with one known exception: an encoded
+    surrogate (ED A0..BF xx) is one U+FFFD here and three there.
+    F.decode is no way out: in Spark 4 it raises on malformed
+    input."""
     return pages.select(
         "url",
         F.array_join(

@@ -1,4 +1,4 @@
-"""Waypoint synthesis stage: Elbow/Curved edges gain their implicit
+"""Waypoint synthesis: Elbow/Curved edges gain their implicit
 intermediate points (F4/F5) via the geometry kernel.
 
 Hyperedges (edges attached to other edges via anchors) need the
@@ -13,8 +13,12 @@ all resolved in earlier levels. Levels deeper than `MAX_ROUNDS` and
 cycles pass through unchanged, matching the reference's cycle
 tolerance.
 
-Both roles travel in ONE frame with a role flag rather than as a
-`cogroup` of two frames: cogroup segfaulted inside pyarrow 16.1's
+`resolve_document` is that per-document pass. The model build runs it
+inside the document assembly kernel (document.py), after the points
+are resolved; `synthesize_waypoints` runs it as its own grouped pass
+over an edges frame whose points are already resolved. There both
+roles travel in ONE frame with a role flag rather than as a `cogroup`
+of two frames: cogroup segfaulted inside pyarrow 16.1's
 `arrow_to_pandas` on this code path.
 """
 
@@ -104,8 +108,9 @@ def resolve_document(pdf: pd.DataFrame,
 
 def synthesize_waypoints(edges: DataFrame,
                          max_rounds: int = MAX_ROUNDS) -> DataFrame:
-    """edges (resolved, from resolve_edge_points) -> edges with
-    Elbow/Curved implicit waypoints made explicit.
+    """edges with resolved explicit points (points, is_attached_to and
+    endpoint refs as build_edges has them) -> edges with Elbow/Curved
+    implicit waypoints made explicit.
 
     Straight edges pass through untouched; only their narrow
     (url, frag, id, points) projection joins the curvy edges in the

@@ -158,20 +158,27 @@ class SnapshotStore:
             # thrashed the JVM and the write ANTI-scaled (87 s at 32
             # cores vs 51 s at 8). One-dir-per-task with a salt is
             # both scalable and allocation-bounded.
-            mult = int(os.environ.get(
-                "SPARK_GRAFT_WRITE_TASKS_PER_BUCKET", "2"))
-            salt2 = F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
-                           F.lit(mult))
+            mult = _write_mult()
+            keys = (F.col("bucket"),
+                    F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
+                           F.lit(mult)))
             # scale-adaptive write parallelism: the hash keys still
             # pin the one-dir-per-task layout for corpus-scale frames
             # (AQE's parallelismFirst coalescing never drops a frame
             # >= ~cores x minPartitionSize below default parallelism),
             # while near-empty stages (quarantine, vocabularies)
             # coalesce to a few tasks instead of paying a fixed
-            # mult * n_buckets task floor per commit.
-            (out.repartition(F.col("bucket"), salt2)
-                .write.mode("overwrite").partitionBy("bucket")
-                .parquet(data_path))
+            # mult * n_buckets task floor per commit. Without AQE
+            # (a session not built by session.py) nothing would size
+            # the count-less exchange: it would get
+            # spark.sql.shuffle.partitions tasks, each writing several
+            # bucket dirs, so the count is explicit then.
+            aqe = df.sparkSession.conf.get(
+                "spark.sql.adaptive.enabled", "true").lower() == "true"
+            out = out.repartition(*keys) if aqe else \
+                out.repartition(self.n_buckets * mult, *keys)
+            out.write.mode("overwrite").partitionBy("bucket") \
+                .parquet(data_path)
         else:
             out.write.mode("overwrite").parquet(data_path)
         write_ms = int((time.time() - t0) * 1000)
@@ -296,13 +303,16 @@ class Pipeline:
         def model() -> dict:
             with model_lock:
                 if not model_cache:
-                    # stage_outputs stays ON: the five returned frames
-                    # share subtrees (edges3 feeds nodes' z-map and
-                    # pathways' contains), so the checkpoints dedupe
-                    # that work across the five CONCURRENT commits —
-                    # measured: skipping them cost +16% on a 4-executor
-                    # fleet (156.3 s vs 134.4 s at replicate 512) while
-                    # the 1-executor leg was unchanged.
+                    # stage_outputs stays ON although each returned
+                    # frame has one consumer here, its commit: the
+                    # checkpoints run the model's joins inside the
+                    # build, so the five concurrent commits only read
+                    # blocks and write. Measured on the `pipeline`
+                    # benchmark (4 vCPUs): OFF saved ~5% cpu_s, but
+                    # peak_rss_mb jumped by 2.5 GB in 4 of 11 runs
+                    # (0 of 5 ON): the sampled process tree caught the
+                    # driver JVM mid-spawn of a child process, under
+                    # the load of five joins and writes at once.
                     model_cache.update(build_document_model(
                         spark, pages, mentions=parsed_holder["df"]))
                 return model_cache

@@ -1,16 +1,14 @@
 """The per-process memoization of input-independent Column expression
-lists (entities._finish / _eff_exprs, skew._typed_null_cols /
-salt_column, converters.html_unescape_name) must (a) actually return
-the cached objects on repeat calls and (b) change nothing about
-results — the cached Columns are the same immutable expression trees
-the un-memoized code built every time."""
+lists (entities._finish / _eff_exprs, skew.salt_column,
+converters.html_unescape_name) must (a) actually return the cached
+objects on repeat calls and (b) change nothing about results — the
+cached Columns are the same immutable expression trees the
+un-memoized code built every time."""
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gpml2pvjson_js_spark.functions import converters as C
-from gpml2pvjson_js_spark.functions.skew import (
-    _typed_null_cols, left_join_skipping_null_keys, salt_column)
+from gpml2pvjson_js_spark.functions.skew import salt_column
 from gpml2pvjson_js_spark.operators import entities as E
 
 
@@ -26,40 +24,12 @@ def test_html_unescape_name_is_memoized_and_equivalent(spark):
     assert got == want == ["<b> & #38; ☺", None]
 
 
-def test_typed_null_cols_memoized_per_schema():
-    s1 = T.StructType([T.StructField("a", T.IntegerType()),
-                       T.StructField("b", T.StringType())])
-    s1b = T.StructType([T.StructField("a", T.IntegerType()),
-                        T.StructField("b", T.StringType())])
-    s2 = T.StructType([T.StructField("a", T.LongType())])
-    assert _typed_null_cols(s1) is _typed_null_cols(s1b)
-    assert _typed_null_cols(s1) is not _typed_null_cols(s2)
-
-
 def test_salt_column_memoized_for_names_only():
     assert salt_column(["x", "y"], 8) is salt_column(["x", "y"], 8)
     assert salt_column(["x", "y"], 8) is not salt_column(["x"], 8)
     assert salt_column(["x"], 8) is not salt_column(["x"], 4)
     # Column inputs stay un-cached (identity differs) but still work
     assert salt_column([F.col("x")], 8) is not salt_column([F.col("x")], 8)
-
-
-def test_null_skipping_join_matches_plain_left_join(spark):
-    left = spark.createDataFrame(
-        [(1, "k1"), (2, None), (3, "k3"), (4, None)], "id int, k string")
-    right = spark.createDataFrame(
-        [("k1", 10.5), ("kx", 99.0)], "rk string, v double")
-    got = left_join_skipping_null_keys(
-        left, right, left.k == right.rk, "k")
-    want = left.join(right, left.k == right.rk, "left")
-    assert got.schema == want.schema
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-    # second invocation (cache hit) returns identical rows
-    again = left_join_skipping_null_keys(
-        left, right, left.k == right.rk, "k")
-    assert sorted(map(tuple, again.collect())) == \
-        sorted(map(tuple, got.collect()))
 
 
 def test_finish_and_eff_exprs_are_cached():

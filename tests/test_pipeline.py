@@ -168,6 +168,39 @@ def test_empty_stage_round_trip(spark, tmp_path_factory):
     assert "error" in q.columns  # schema preserved for empty snapshot
 
 
+def test_commit_without_aqe_uses_explicit_write_task_count(
+        spark, tmp_path, monkeypatch):
+    """With AQE off nothing coalesces the count-less layout exchange,
+    so SnapshotStore.commit asks for n_buckets * mult partitions; with
+    AQE on it leaves the count to AQE."""
+    from gpml2pvjson_js_spark.plans.pipeline import (
+        SnapshotStore, _write_mult)
+
+    counts = []
+    cls = type(spark.range(0))
+    repartition = cls.repartition
+
+    def spy(self, *args, **kwargs):
+        counts.append(args[0] if isinstance(args[0], int) else None)
+        return repartition(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "repartition", spy)
+    store = SnapshotStore(str(tmp_path), n_buckets=3)
+    df = spark.createDataFrame(
+        [(f"https://d/{i}", i) for i in range(20)], "url string, v int")
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        store.commit(df, "no_aqe")
+        spark.conf.set(key, "true")
+        store.commit(df, "aqe")
+    finally:
+        spark.conf.set(key, before)
+    assert counts == [3 * _write_mult(), None]
+    assert store.read(spark, "no_aqe").count() == 20
+
+
 def test_bucketed_distinct_fuses_dedup_into_one_exchange(spark):
     """bucketed_distinct == dropDuplicates relationally, with exactly
     ONE Exchange in the plan: the (bucket, __wsalt) hash partitioning
