@@ -161,61 +161,6 @@ def _flag_window(sanity: dict) -> None:
               file=sys.stderr)
 
 
-def run_kg_pipeline(spark, sf_dir: str) -> tuple[int, float]:
-    """Full KG pipeline over pages synthesized from the documents
-    table; returns (n_triples, seconds). Wall time excludes the
-    one-time plan construction (measured separately as plan_build)."""
-    from gpml2pvjson_js_spark.corpus import pages_from_documents
-    from gpml2pvjson_js_spark.operators.assemble import build_document_model
-    from gpml2pvjson_js_spark.operators.canonicalize import (
-        canonical_map, rewrite_triples)
-    from gpml2pvjson_js_spark.operators.interactions import (
-        classify_interactions)
-    from gpml2pvjson_js_spark.operators.linking import (
-        link_entities, same_as_edges, xref_dictionary)
-    from gpml2pvjson_js_spark.operators.triples import build_triples
-
-    pages = pages_from_documents(spark, sf_dir)
-    model = build_document_model(spark, pages)
-    inter = classify_interactions(model["edges"], model["nodes"])
-    triples = build_triples(model, inter)
-    xd = xref_dictionary(spark)
-    linked = link_entities(model["nodes"], xd)
-    canon = rewrite_triples(
-        triples, canonical_map(linked, same_as_edges(linked, xd)))
-    t0 = time.time()
-    n = canon.count()
-    return n, time.time() - t0
-
-
-def _kg_lazy(spark, sf_dir: str, replicate: int = 1):
-    """Build the full pipeline DAG with NO driver-side actions
-    (fixed CC rounds), so one count() captures all execution."""
-    from gpml2pvjson_js_spark.corpus import pages_from_documents
-    from gpml2pvjson_js_spark.operators.assemble import build_document_model
-    from gpml2pvjson_js_spark.operators.canonicalize import (
-        canonical_map, rewrite_triples)
-    from gpml2pvjson_js_spark.operators.interactions import (
-        classify_interactions)
-    from gpml2pvjson_js_spark.operators.linking import (
-        link_entities, same_as_edges, xref_dictionary)
-    from gpml2pvjson_js_spark.operators.triples import build_triples
-
-    pages = pages_from_documents(spark, sf_dir)
-    if replicate > 1:
-        from gpml2pvjson_js_spark.corpus import replicate_pages
-        pages = replicate_pages(pages, replicate)
-    model = build_document_model(spark, pages)
-    inter = classify_interactions(model["edges"], model["nodes"])
-    triples = build_triples(model, inter)
-    xd = xref_dictionary(spark)
-    linked = link_entities(model["nodes"], xd)
-    return rewrite_triples(
-        triples,
-        canonical_map(linked, same_as_edges(linked, xd),
-                      check_convergence=False))
-
-
 def run_pipeline_measured(spark, sf_dir: str, out_root: str,
                           replicate: int = 1) -> tuple[int, float, dict]:
     """Snapshot pipeline (the production path) over the derived

@@ -41,27 +41,6 @@ def _spark():
                                               "256")))
 
 
-def _contention():
-    out = {"t": time.time()}
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        out["cpu_total"] = sum(vals)
-        out["cpu_steal"] = vals[7] if len(vals) > 7 else 0
-    except Exception:
-        pass
-    return out
-
-
-def _steal_pct(a, b):
-    try:
-        return round(100.0 * (b["cpu_steal"] - a["cpu_steal"])
-                     / max(b["cpu_total"] - a["cpu_total"], 1), 2)
-    except Exception:
-        return None
-
-
 def pipeline_reps(k: int) -> None:
     import bench as B
     spark = _spark()
@@ -69,14 +48,14 @@ def pipeline_reps(k: int) -> None:
     B.run_pipeline_measured(spark, "/root/testdata/sf0.001",
                             f"{tmp}/warmup")
     for i in range(k):
-        c0 = _contention()
+        c0 = B._contention_sample()
         n, wall, stages, _f = B.run_pipeline_measured(
             spark, SF_DIR, f"{tmp}/m{i}")
         n_lazy, lazy_sec = B._lazy_probe(spark, SF_DIR, 1)
         rep = {"rep": i, "kg_pipeline_exec": round(wall, 3),
                "triples_per_sec": round(n / wall, 1),
                "kg_lazy_exec": round(lazy_sec, 3),
-               "steal_pct": _steal_pct(c0, _contention()),
+               **B._contention_pct(c0, B._contention_sample()),
                **{f"kg_stage_{s}": round(ms / 1000.0, 3)
                   for s, ms in stages.items()}}
         print(json.dumps(rep), flush=True)

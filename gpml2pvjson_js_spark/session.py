@@ -4,6 +4,26 @@ Local-mode defaults mirror what we would set cluster-side via
 spark-submit: AQE on (skew-join splitting for hot domains / giant
 pages), Arrow for every pandas UDF exchange, shuffle partitions sized
 to the parallelism level rather than the 200 default.
+
+JIT policy of the driver JVM. The entry points (`python -m
+gpml2pvjson_js_spark`, `tools/submit_job.py`, the benchmark) each start
+a fresh driver JVM and run one batch in it, so the traffic is cold
+runs. On a cold `Pipeline.run` the JIT compilers are the largest CPU
+consumer: HotSpot's C2 tier spends most of its time compiling Janino,
+Catalyst and Java serialization code that one batch runs only a few
+thousand times. `DRIVER_JIT_OPTIONS` keeps tiered compilation but
+raises the four tier-4 (C2) thresholds twentyfold, so a cold batch
+runs on C1 code and C2 compiles only code that stays hot across
+batches. On a 4-vCPU host, `perfbench/run.py --workload pipeline` read
+-24% `cpu_s` cold, and `tools/jvm_cpu_split.py` read compiler-thread
+CPU 60-70 -> 23-27 s. The warm check is the same workload run back to back
+in one JVM (`--seconds 300`): long-lived sessions (streaming
+micro-batches, the test suite) must stay at parity, which is why C2
+stays on: C1 only (`-XX:TieredStopAtLevel=1`) was cheaper cold but
+~25% slower warm. The options reach the driver only when this factory
+launches its JVM; under `spark-submit` (`tools/submit_job.py`) pass
+them with `--driver-java-options`. Executors keep the JVM's default
+policy.
 """
 
 from __future__ import annotations
@@ -13,6 +33,12 @@ import os
 from pyspark.sql import SparkSession
 
 MAX_DRIVER_MEMORY_MB = 24 * 1024
+# tier-4 thresholds at 20x HotSpot's defaults (5000/600/15000/40000)
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=100000 "
+    "-XX:Tier4MinInvocationThreshold=12000 "
+    "-XX:Tier4CompileThreshold=300000 "
+    "-XX:Tier4BackEdgeThreshold=800000")
 
 
 def host_cpus() -> int:
@@ -112,8 +138,11 @@ def get_spark(
         # dominates driver time)
         .config("spark.sql.maxPlanStringLength", "65536")
         .config("spark.sql.debug.maxToStringFields", "10")
-        .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
-        .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
+        # defaultJavaOptions, which Spark prepends to extraJavaOptions,
+        # so a caller's own extraJavaOptions adds to these, not replaces
+        .config("spark.driver.defaultJavaOptions",
+                f"-Duser.timezone=UTC {DRIVER_JIT_OPTIONS}")
+        .config("spark.executor.defaultJavaOptions", "-Duser.timezone=UTC")
     )
     # Generic conf passthrough (semicolon-separated k=v pairs), the
     # local analog of spark-submit --conf: lets a deployment or a

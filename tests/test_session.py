@@ -1,4 +1,4 @@
-"""Session defaults are sized from the host, not fixed."""
+"""Session defaults: sized from the host, and the driver JVM's options."""
 
 import os
 
@@ -19,3 +19,14 @@ def test_driver_memory_is_capped_at_24g(monkeypatch):
     _host_ram(monkeypatch, 256)
     assert session.default_driver_memory() == "24576m"
 
+
+def test_driver_jvm_gets_the_jit_policy_and_utc(spark):
+    """The suite's own driver JVM runs with the tier-4 thresholds and
+    the UTC zone that get_spark sets in spark.driver.defaultJavaOptions."""
+    args = set(spark._jvm.java.lang.management.ManagementFactory
+               .getRuntimeMXBean().getInputArguments())
+    assert {"-XX:Tier4InvocationThreshold=100000",
+            "-XX:Tier4MinInvocationThreshold=12000",
+            "-XX:Tier4CompileThreshold=300000",
+            "-XX:Tier4BackEdgeThreshold=800000",
+            "-Duser.timezone=UTC"} <= args

@@ -31,7 +31,7 @@ SCHEMA = T.StructType([
     T.StructField("is_attached_to", T.ArrayType(T.StringType())),
     T.StructField("endpoint_first_ref", T.StringType()),
     T.StructField("endpoint_last_ref", T.StringType()),
-    # non-null elements, as resolve_edge_points produces them
+    # non-null elements, as the document kernel's edges carry them
     T.StructField("points", T.ArrayType(POINT, containsNull=False)),
 ])
 
