@@ -649,19 +649,25 @@ def kg_golden_pr(spark, sf_dir):
     """North-rule gate: per-fixture triple precision/recall vs ALL 93
     reference golden documents (sf-independent — the goldens are the
     dataset). Row '__aggregate__' carries the corpus-wide micro
-    average; the gate is P/R >= 0.95 (currently 1.0/1.0). Without the
-    goldens it is the only row, with null P/R."""
+    average. `ok` is the gate, P and R >= 0.95 (currently 1.0/1.0);
+    without the goldens the aggregate is the only row, with null P/R
+    and `ok` false."""
     from gpml2pvjson_js_spark.golden import pr_report
     rep = pr_report(spark)
+
+    def ok(p, r):
+        return rep["status"] == "ok" and p >= 0.95 and r >= 0.95
+
     rows = [(k, float(v["precision"]), float(v["recall"]),
-             v["n_ours"], v["n_gold"])
+             v["n_ours"], v["n_gold"], ok(v["precision"], v["recall"]))
             for k, v in sorted(rep["fixtures"].items())]
     agg = rep["aggregate"]
     rows.append(("__aggregate__", agg["precision"], agg["recall"],
-                 agg["n_ours"], agg["n_gold"]))
+                 agg["n_ours"], agg["n_gold"],
+                 ok(agg["precision"], agg["recall"])))
     return spark.createDataFrame(
         rows, "fixture string, precision double, recall double, "
-              "n_ours long, n_gold long")
+              "n_ours long, n_gold long, ok boolean")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -7,13 +7,15 @@ Snapshot layout (Iceberg-style commit protocol on plain parquet — the
 same code works against real Iceberg by swapping `_write`/`_read` for
 `writeTo(...).append()` / `read.table(...)`):
 
-    {root}/{stage}/data/...parquet     (partitioned by url-hash bucket)
+    {root}/{stage}/data/part-*.parquet (one file per write task, rows
+                                        sorted by url-hash `bucket`)
     {root}/{stage}/manifest.json       (commit marker + lineage)
 
 A stage is committed iff its manifest exists; `run(resume=True)` skips
 committed stages, which makes any run restartable after a crash.
-Manifests record per-partition row counts + wall time (the metrics
-channel the north rule requires).
+Like an Iceberg manifest, it lists the data files with their row
+counts and `bucket` bounds, read from the parquet footers, plus wall
+time (the metrics channel the north rule requires).
 """
 
 from __future__ import annotations
@@ -62,9 +64,9 @@ def bucketed_distinct(df: DataFrame, cols: list[str],
     exchange hash-partitioned on (bucket, __wsalt) — which satisfies
     the dedup aggregate's ClusteredDistribution (subset rule; bucket
     and __wsalt are url functions, so a triple's duplicates all land
-    in one partition) AND the writer's one-dir-per-task layout, where
-    dropDuplicates + commit-repartition would shuffle the full corpus
-    twice."""
+    in one partition) AND the snapshot layout SnapshotStore.commit
+    writes, one file per task, where dropDuplicates +
+    commit-repartition would shuffle the full corpus twice."""
     b = with_bucket_cols(df, n_buckets, mult)
     # no explicit partition count: hash keys fix the LAYOUT (which
     # rows co-locate), while AQE sizes the task count from runtime
@@ -102,34 +104,44 @@ class SnapshotStore:
             return json.load(f)
 
     @staticmethod
-    def _footer_rowcounts(data_path: str) -> list[dict]:
-        """Row counts per bucket partition from parquet file metadata
-        (footers only — the write itself is the single data pass)."""
+    def _footer_files(data_path: str) -> list[dict]:
+        """The committed data files, each with its row count and the
+        min/max of its `bucket` column (None for an empty file or a
+        frame without one), read from the parquet footers only (the
+        write itself is the single data pass)."""
         import glob as _glob
 
         import pyarrow.parquet as pq
 
-        per_part: dict[int, int] = {}
-        bucket_dirs = _glob.glob(os.path.join(data_path, "bucket=*"))
-        if bucket_dirs:
-            for d in bucket_dirs:
-                b = int(os.path.basename(d).split("=", 1)[1])
-                rows = sum(pq.ParquetFile(f).metadata.num_rows
-                           for f in _glob.glob(os.path.join(d, "*.parquet")))
-                per_part[b] = per_part.get(b, 0) + rows
-        else:
-            rows = sum(pq.ParquetFile(f).metadata.num_rows
-                       for f in _glob.glob(
-                           os.path.join(data_path, "*.parquet")))
-            per_part[0] = rows
-        return [{"partition": k, "rows": v}
-                for k, v in sorted(per_part.items())]
+        files = []
+        for path in sorted(_glob.glob(os.path.join(data_path, "*.parquet"))):
+            md = pq.ParquetFile(path).metadata
+            lo = hi = None
+            leaves = [md.schema.column(i).path for i in range(md.num_columns)]
+            if "bucket" in leaves:
+                col = leaves.index("bucket")
+                stats = [md.row_group(g).column(col).statistics
+                         for g in range(md.num_row_groups)]
+                stats = [st for st in stats if st is not None
+                         and st.has_min_max]
+                if stats:
+                    lo = min(st.min for st in stats)
+                    hi = max(st.max for st in stats)
+            files.append({"file": os.path.basename(path),
+                          "rows": md.num_rows,
+                          "bucket_min": lo, "bucket_max": hi})
+        return files
 
     def commit(self, df: DataFrame, stage: str,
                bucket_col: str = "url") -> DataFrame:
-        """Write a stage snapshot partitioned by url-hash bucket (the
-        co-partitioning key for every per-document join) and commit a
-        manifest with per-partition lineage + metrics."""
+        """Write a stage snapshot, one parquet file per write task, its
+        rows hash-partitioned and sorted by url-hash bucket (the
+        co-partitioning key for every per-document join), and commit a
+        manifest that lists the data files with their row counts and
+        bucket bounds.
+
+        The manifest is the commit marker, so no `_SUCCESS` file is
+        written (pyarrow and Spark skip `_` files either way)."""
         data_path, manifest_path = self._paths(stage)
         t0 = time.time()
         out = df
@@ -138,59 +150,59 @@ class SnapshotStore:
             # by the operator's own exchange — bucketed_distinct /
             # jsonld_documents(bucketize=...)): the data is already
             # hash-partitioned on (bucket, __wsalt), so writing here
-            # without the repartition keeps the one-dir-per-task
-            # layout while skipping a second full-corpus shuffle.
-            out = df.drop("__wsalt")
-            (out.write.mode("overwrite").partitionBy("bucket")
-                .parquet(data_path))
+            # without the repartition keeps the layout while skipping
+            # a second full-corpus shuffle. `bucket` goes last, where
+            # every other stage has it.
+            out = df.select(*[c for c in df.columns
+                              if c not in ("bucket", "__wsalt")], "bucket")
         elif bucket_col in df.columns:
             out = df.withColumn(
                 "bucket",
                 F.pmod(F.xxhash64(F.col(bucket_col)),
                        F.lit(self.n_buckets)).cast("int"))
-            # 2 tasks per bucket (an independent seeded hash splits
-            # each bucket), every task writing exactly ONE bucket dir.
-            # Measured tradeoff: partitioning by bucket alone gives
-            # <= n_buckets write tasks (under-parallel), while
-            # shuffle_partitions-many tasks each writing all 64
-            # partitionBy dirs held 64 open parquet writers per task
-            # — row-group buffers for 2048 concurrent writers GC-
-            # thrashed the JVM and the write ANTI-scaled (87 s at 32
-            # cores vs 51 s at 8). One-dir-per-task with a salt is
-            # both scalable and allocation-bounded.
+            # mult tasks per bucket (an independent seeded hash splits
+            # each bucket): partitioning by bucket alone would cap the
+            # write at n_buckets tasks. The exchange has at most
+            # n_buckets * mult distinct keys, so at corpus scale each
+            # write task holds about one bucket.
             mult = _write_mult()
             keys = (F.col("bucket"),
                     F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
                            F.lit(mult)))
-            # scale-adaptive write parallelism: the hash keys still
-            # pin the one-dir-per-task layout for corpus-scale frames
-            # (AQE's parallelismFirst coalescing never drops a frame
-            # >= ~cores x minPartitionSize below default parallelism),
-            # while near-empty stages (quarantine, vocabularies)
-            # coalesce to a few tasks instead of paying a fixed
-            # mult * n_buckets task floor per commit. Without AQE
-            # (a session not built by session.py) nothing would size
-            # the count-less exchange: it would get
-            # spark.sql.shuffle.partitions tasks, each writing several
-            # bucket dirs, so the count is explicit then.
+            # scale-adaptive write parallelism: the hash keys fix which
+            # rows co-locate, while AQE sizes the task count, so
+            # corpus-scale frames keep full parallelism (parallelismFirst
+            # coalescing never drops a frame >= ~cores x
+            # minPartitionSize below default parallelism) and
+            # near-empty stages (quarantine, vocabularies) coalesce to
+            # a few tasks, and so a few files. Without AQE (a session
+            # not built by session.py) nothing would size the
+            # count-less exchange: it would get
+            # spark.sql.shuffle.partitions tasks, so the count is
+            # explicit then.
             aqe = df.sparkSession.conf.get(
                 "spark.sql.adaptive.enabled", "true").lower() == "true"
             out = out.repartition(*keys) if aqe else \
                 out.repartition(self.n_buckets * mult, *keys)
-            out.write.mode("overwrite").partitionBy("bucket") \
-                .parquet(data_path)
-        else:
-            out.write.mode("overwrite").parquet(data_path)
+        if "bucket" in out.columns:
+            # the sort the partitioned writer used to insert: a task
+            # AQE coalesced holds several buckets, each then one run
+            # of rows, so row-group and page bounds stay tight
+            out = out.sortWithinPartitions("bucket")
+        (out.write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+                    "false")
+            .parquet(data_path))
         write_ms = int((time.time() - t0) * 1000)
 
         spark = df.sparkSession
         committed = spark.read.schema(out.schema).parquet(data_path)
-        # per-partition lineage from the parquet FOOTERS the write just
+        # per-file lineage from the parquet FOOTERS the write just
         # produced — metadata-only, no second scan (the old
         # read-back + groupBy-count was measured as the bulk of a 12x
         # snapshot-vs-lazy throughput gap)
         t1 = time.time()
-        per_part = self._footer_rowcounts(data_path)
+        files = self._footer_files(data_path)
         footer_ms = int((time.time() - t1) * 1000)
         wall_ms = int((time.time() - t0) * 1000)
         manifest = {
@@ -198,8 +210,8 @@ class SnapshotStore:
             "path": data_path,
             "schema": json.dumps(out.schema.jsonValue()),
             "n_buckets": self.n_buckets,
-            "rows": sum(p["rows"] for p in per_part),
-            "partitions": sorted(per_part, key=lambda p: p["partition"]),
+            "rows": sum(f["rows"] for f in files),
+            "files": files,
             "wall_ms": wall_ms,
             "write_ms": write_ms,
             "footer_ms": footer_ms,

@@ -7,7 +7,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from gpml2pvjson_js_spark.corpus import pages_df
-from gpml2pvjson_js_spark.plans.pipeline import Pipeline
+from gpml2pvjson_js_spark.plans.pipeline import STAGES, Pipeline
 
 
 def test_pipeline_run_resume_manifests(spark, tmp_path_factory):
@@ -20,7 +20,7 @@ def test_pipeline_run_resume_manifests(spark, tmp_path_factory):
                             "canonical_triples", "text"}
     m = metrics["triples"]
     assert m["rows"] > 0 and m["wall_ms"] > 0
-    assert sum(x["rows"] for x in m["partitions"]) == m["rows"]
+    assert sum(x["rows"] for x in m["files"]) == m["rows"]
 
     # simulate crash after `nodes`: delete later manifests, resume
     for stage in ["edges", "triples", "canonical_triples"]:
@@ -118,12 +118,11 @@ def test_read_pages_source_validates_contract(spark, tmp_path_factory):
 
 def test_pipeline_resume_after_mid_commit_crash(spark, tmp_path_factory):
     """Kill-mid-commit semantics: a stage whose WRITE was interrupted
-    (partial data dir, no _SUCCESS, no manifest) plus its never-
-    started downstream stages are recommitted on resume; every stage
-    with a manifest is untouched (timestamps unchanged). The manifest
-    is the commit marker — data without one is garbage to overwrite."""
-    import glob
-
+    (partial data dir, no manifest) plus its never-started downstream
+    stages are recommitted on resume; every stage with a manifest is
+    untouched (timestamps unchanged). The manifest is the commit marker
+    (no _SUCCESS file is written) — data without one is garbage to
+    overwrite."""
     root = str(tmp_path_factory.mktemp("kgout_crash"))
     pages = pages_df(spark, 7, giant_every=0)
     p = Pipeline(spark, pages, root, n_buckets=4)
@@ -133,12 +132,10 @@ def test_pipeline_resume_after_mid_commit_crash(spark, tmp_path_factory):
 
     # simulate kill -9 during the `edges` commit
     os.remove(os.path.join(root, "edges", "manifest.json"))
-    bucket_dirs = sorted(glob.glob(
-        os.path.join(root, "edges", "data", "bucket=*")))
-    shutil.rmtree(bucket_dirs[0])  # partial write
-    succ = os.path.join(root, "edges", "data", "_SUCCESS")
-    if os.path.exists(succ):
-        os.remove(succ)
+    edges_data = os.path.join(root, "edges", "data")
+    first = sorted(f for f in os.listdir(edges_data)
+                   if f.endswith(".parquet"))[0]
+    os.remove(os.path.join(edges_data, first))  # partial write
     # downstream stages had not started
     downstream = ["interactions", "triples", "canonical_triples",
                   "documents"]
@@ -156,6 +153,45 @@ def test_pipeline_resume_after_mid_commit_crash(spark, tmp_path_factory):
         else:
             assert after[s] == ts, f"{s} should not have been touched"
     assert p2.metrics()["canonical_triples"]["rows"] == rows_before
+
+
+def test_snapshot_layout_is_one_sorted_file_per_write_task(
+        spark, tmp_path_factory):
+    """Every committed stage is flat parquet, one file per write task:
+    no bucket=N/ directory and no _SUCCESS; each file's rows are
+    sorted by bucket and each url lives in one file; the manifest
+    lists exactly those files, with row counts that sum to the stage's
+    rows and bucket bounds equal to each file's min/max."""
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path_factory.mktemp("kgout_layout"))
+    pages = pages_df(spark, 7, giant_every=0)
+    p = Pipeline(spark, pages, root, n_buckets=4)
+    p.run(resume=False)
+    metrics = p.metrics()
+    assert set(metrics) == set(STAGES)
+    for stage, m in metrics.items():
+        data = os.path.join(root, stage, "data")
+        names = os.listdir(data)
+        assert not [n for n in names if n.startswith("bucket=")], stage
+        assert "_SUCCESS" not in names, stage
+        files = sorted(n for n in names if n.endswith(".parquet"))
+        assert [f["file"] for f in m["files"]] == files, stage
+        assert sum(f["rows"] for f in m["files"]) == m["rows"], stage
+        url_file: dict[str, str] = {}
+        for f in m["files"]:
+            t = pq.read_table(os.path.join(data, f["file"]),
+                              columns=["url", "bucket"])
+            buckets = t["bucket"].to_pylist()
+            assert buckets == sorted(buckets), (stage, f["file"])
+            assert f["rows"] == len(buckets), (stage, f["file"])
+            bounds = (min(buckets), max(buckets)) if buckets \
+                else (None, None)
+            assert (f["bucket_min"], f["bucket_max"]) == bounds, \
+                (stage, f)
+            for url in set(t["url"].to_pylist()):
+                assert url_file.setdefault(url, f["file"]) == f["file"], \
+                    (stage, url)
 
 
 def test_empty_stage_round_trip(spark, tmp_path_factory):

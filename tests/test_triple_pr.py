@@ -62,3 +62,20 @@ def test_fixture_coverage(report):
     # 13 real WikiPathways documents)
     assert report["aggregate"]["n_fixtures"] >= 85
     assert report["aggregate"]["n_gold"] > 5000
+
+
+def test_kg_golden_pr_gate_is_false_without_reference(
+        spark, tmp_path, monkeypatch):
+    """kg_golden_pr gates itself: with no golden fixture to score, the
+    only row is __aggregate__, with null P/R and ok false."""
+    import __spark_entry__ as entry
+    from gpml2pvjson_js_spark import golden
+
+    score = golden.pr_report
+    monkeypatch.setattr(golden, "pr_report", lambda spark: score(
+        spark, str(tmp_path / "expected")))
+    rows = entry.kg_golden_pr(spark, None).collect()
+    assert [r["fixture"] for r in rows] == ["__aggregate__"]
+    agg = rows[0]
+    assert agg["ok"] is False
+    assert agg["precision"] is None and agg["recall"] is None

@@ -11,7 +11,10 @@ CPU seconds, read from /proc, for the set-up (JVM start to the batch's
 start) and for the batch:
 - the driver JVM, split by thread name into the JIT compilers (C2,
   C1), executor task threads, GC and the rest;
-- the Python workers: the JVM's descendant processes;
+- the Python workers: the daemon the JVM forks and its workers;
+- JVM child commands: the JVM's own reaped children, such as the
+  `chmod` Hadoop's local file system forks for each file and directory
+  it creates when the native Hadoop library is missing;
 - this process, the Python driver.
 
 perfbench's trace times layers and stages, not threads, so it cannot
@@ -71,6 +74,13 @@ def cpu_ticks(pid: int | str, children: bool = False) -> int:
     return sum(int(x) for x in fields[11:15 if children else 13])
 
 
+def process_name(pid: int) -> str:
+    try:
+        return read_stat(f"/proc/{pid}/stat")[0]
+    except FileNotFoundError:
+        return ""
+
+
 class JvmThreads:
     """The last sampled CPU ticks of each thread of the driver JVM."""
 
@@ -98,18 +108,22 @@ class JvmThreads:
 
     def snapshot(self) -> dict[str, float]:
         """CPU seconds so far: per thread kind, the JVM's threads that
-        exited unsampled, its child processes (the Python workers)."""
+        exited unsampled, the Python workers, the JVM's reaped child
+        commands."""
         self.sample()
         out = {kind: 0 for kind, _ in KINDS} | {"rest": 0}
         with self.lock:
             for kind, ticks in self.last.values():
                 out[kind] += ticks
         out["exited threads"] = cpu_ticks(self.pid) - sum(out.values())
-        # live descendants, and what the reaped ones used
-        out["python workers"] = cpu_ticks(self.pid, children=True) \
-            - cpu_ticks(self.pid) + sum(
-                cpu_ticks(p, children=True)
-                for p in process_tree(self.pid) if p != self.pid)
+        # the daemon tree: live Python descendants, with what the
+        # workers they reaped used
+        out["python workers"] = sum(
+            cpu_ticks(p, children=True)
+            for p in process_tree(self.pid) if p != self.pid
+            and process_name(p).startswith("python"))
+        out["JVM child commands"] = cpu_ticks(self.pid, children=True) \
+            - cpu_ticks(self.pid)
         out["python driver"] = cpu_ticks("self")
         return {k: v / TICK for k, v in out.items()}
 
@@ -120,7 +134,8 @@ def report(setup: dict, batch: dict, wall: tuple[float, float]) -> None:
              sum(batch[k] for k in jvm))]
     rows += [(f"  {k}", setup[k], batch[k]) for k in jvm]
     rows += [(k, setup[k], batch[k])
-             for k in ("python workers", "python driver")]
+             for k in ("python workers", "JVM child commands",
+                       "python driver")]
     rows.append(("all", sum(setup.values()), sum(batch.values())))
     print(f"{'CPU s':<20}{'set-up':>9}{'batch':>9}{'total':>9}")
     for name, s, b in rows:
