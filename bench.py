@@ -762,8 +762,9 @@ network on BOTH legs, so the measured efficiency UNDERSTATES true
 N -> 4N scaling. The symmetric alternative (single-core-executor
 fleets, 4x1c vs 16x1c) was measured and rejected — a 1-core JVM
 oversubscribes its pinned core with task + shuffle-server + GC
-threads (eff 0.29 at 512x); the staging-mode A/Bs behind
-SPARK_GRAFT_STAGE_STORAGE are in BENCH/PLANS.md round-4.
+threads (eff 0.29 at 512x); the staging-mode A/Bs (the model
+build now keeps only the serialized lazy checkpoint) are in
+BENCH/PLANS.md round-4.
 
 Noise control: this sandbox shares its hypervisor and one virtio
 disk with other tenants, and identical back-to-back runs were

@@ -1,23 +1,32 @@
-"""Column-expression library: GPML value -> pvjson value converters.
+"""GPML value -> pvjson value converters, in plain Python.
 
-Spark-first re-expression of /root/reference/src/2013a/ValueConverters.ts
-(P4-P14 in SURVEY.md §2.2).  Everything here is a pure Catalyst column
-expression (JVM-side, codegen-friendly) — no Python UDFs.
+Re-expression of the reference's src/2013a/ValueConverters.ts (P4-P14
+in SURVEY.md §2.2). The document kernel (operators/document.py) calls
+these once per element. Each one ports the semantics of the Catalyst
+expression it replaced, not those of a Python library:
+
+- regular expressions follow java.util.regex: `$` also matches before
+  a final line terminator, and `.` matches no line terminator;
+- HTML decoding decodes numeric entities first, in one
+  non-recursive pass, then exactly six named entities;
+- `encode_uri` is Java's URLEncoder plus a fixed table of rewrites;
+- the string casts (`cast_double`, `cast_int`) accept what Spark's
+  ANSI-mode casts (the Spark 4 default) accept, and raise where they
+  raise.
+
+`_map_literal` builds a literal map column for the Catalyst operators
+that still look up dialect tables (interactions, linking).
 """
 
 from __future__ import annotations
 
 import math
-from functools import lru_cache
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .mappings import NAMED_COLORS, VALUE_MAPPINGS
-
-_HEX6 = r"^[0-9a-fA-F]{6}$"
-_HEX3 = r"^[0-9a-fA-F]{3}$"
-
 
 _PAIR_SEP = "\x1e"
 _KV_SEP = "\x1f"
@@ -32,124 +41,88 @@ def _map_literal(d: dict) -> Column:
     return F.str_to_map(F.lit(flat), F.lit(_PAIR_SEP), F.lit(_KV_SEP))
 
 
-_NAMED_COLOR_MAP = None
-_VALUE_MAP = None
+# java.util.regex's `$` without MULTILINE: the end of input, or before
+# a line terminator that ends it
+_JAVA_END = "(?:\r\n|[\n\r\u0085\u2028\u2029])?\\Z"
+_HEX6 = re.compile("[0-9a-fA-F]{6}" + _JAVA_END)
+_HEX3 = re.compile("[0-9a-fA-F]{3}" + _JAVA_END)
 
 
-def named_color_map() -> Column:
-    global _NAMED_COLOR_MAP
-    if _NAMED_COLOR_MAP is None:
-        _NAMED_COLOR_MAP = _map_literal(NAMED_COLORS)
-    return _NAMED_COLOR_MAP
-
-
-def value_mappings_map() -> Column:
-    global _VALUE_MAP
-    if _VALUE_MAP is None:
-        _VALUE_MAP = _map_literal(VALUE_MAPPINGS)
-    return _VALUE_MAP
-
-
-def map_value(col: Column) -> Column:
+def map_value(v):
     """ValueMappings lookup with identity fallback
     (ref: src/Processor.ts:435-440)."""
-    return F.coalesce(F.element_at(value_mappings_map(), col), col)
+    return VALUE_MAPPINGS.get(v, v)
 
 
-def css_color(col: Column) -> Column:
+def css_color(v):
     """gpmlColorToCssColor (ref: src/2013a/ValueConverters.ts:314-332):
     'Transparent'/'None' pass through lowercased; hex gets '#'; named
-    colors resolve via the rgbcolor table; unknown -> null (quarantine
-    upstream)."""
-    low = F.lower(col)
-    return (
-        F.when(col.isNull(), F.lit(None))
-        .when(low.isin("transparent", "none"), low)
-        .when(col.rlike(_HEX6), F.concat(F.lit("#"), low))
-        .when(
-            col.rlike(_HEX3),
-            F.concat(
-                F.lit("#"),
-                F.substring(low, 1, 1), F.substring(low, 1, 1),
-                F.substring(low, 2, 1), F.substring(low, 2, 1),
-                F.substring(low, 3, 1), F.substring(low, 3, 1),
-            ),
-        )
-        .otherwise(F.element_at(named_color_map(), low))
-    )
+    colors resolve via the rgbcolor table; unknown -> None."""
+    if v is None:
+        return None
+    low = v.lower()
+    if low in ("transparent", "none"):
+        return low
+    if _HEX6.match(v):
+        return "#" + low
+    if _HEX3.match(v):
+        return "#" + "".join(c + c for c in low[:3])
+    return NAMED_COLORS.get(low)
 
 
-def kebab(col: Column) -> Column:
+def kebab(v):
     """kebabCase for single-word GPML enum values (Center -> center)."""
-    return F.lower(col)
+    return None if v is None else v.lower()
 
 
-def _chr(codepoint: Column) -> Column:
-    """codepoint -> single-character string, fully JVM-side: UTF-16BE
-    code units (surrogate pair above the BMP) as hex, unhexed,
-    decoded (Spark's decode supports UTF-16BE, not UTF-32)."""
-    cp = codepoint.cast("long")
-    bmp = F.lpad(F.hex(cp), 4, "0")
-    astral = cp - F.lit(0x10000)
-    hi = F.lit(0xD800) + F.shiftright(astral, 10)
-    lo = F.lit(0xDC00) + F.pmod(astral, F.lit(1024))
-    pair = F.concat(F.lpad(F.hex(hi), 4, "0"), F.lpad(F.hex(lo), 4, "0"))
-    return F.decode(
-        F.unhex(F.when(cp <= 0xFFFF, bmp).otherwise(pair)), "UTF-16BE")
+_DEC_ENTITY = re.compile(r"&#([0-9]{1,7});")
+_HEX_ENTITY = re.compile(r"&#[xX]([0-9a-fA-F]{1,6});")
+_NAMED_ENTITIES = (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
+                   ("&apos;", "'"), ("&nbsp;", " "), ("&amp;", "&"))
 
 
-def _decode_numeric_entities(col: Column) -> Column:
-    """One non-recursive left-to-right pass over &#NNN; / &#xHH;
-    entities (he.decode semantics): lookahead-split the string before
-    every '&#', decode each piece's leading entity, reassemble."""
-    parts = F.split(col, r"(?=&#)")
-    dec = r"^&#([0-9]{1,7});"
-    hexp = r"^&#[xX]([0-9a-fA-F]{1,6});"
-
-    def piece(p):
-        cp_d = F.regexp_extract(p, dec, 1).cast("long")
-        cp_h = F.conv(F.regexp_extract(p, hexp, 1), 16, 10).cast("long")
-        return (
-            F.when(p.rlike(dec) & (cp_d <= 1114111),
-                   F.concat(_chr(cp_d), F.regexp_replace(p, dec, "")))
-            .when(p.rlike(hexp) & (cp_h <= 1114111),
-                  F.concat(_chr(cp_h), F.regexp_replace(p, hexp, "")))
-            .otherwise(p))
-
-    return F.when(col.isNull(), F.lit(None)).otherwise(
-        F.concat_ws("", F.transform(parts, piece)))
+def _chr(cp: int) -> str:
+    """A code point as a string. A lone surrogate is malformed UTF-16,
+    which Spark 4's decode rejects."""
+    if 0xD800 <= cp <= 0xDFFF:
+        raise ValueError(f"malformed UTF-16 code point {cp:#x}")
+    return chr(cp)
 
 
-@lru_cache(maxsize=None)
-def html_unescape_name(name: str) -> Column:
-    """``html_unescape(F.col(name))`` memoized per process: the
-    decode chain costs ~60 py4j round-trips to construct, the same
-    few named columns recur on every model build, and unresolved
-    Columns are immutable / DataFrame-independent, so reuse is
-    safe."""
-    return html_unescape(F.col(name))
+def _decode_numeric(piece: str) -> str:
+    for pattern, base in ((_DEC_ENTITY, 10), (_HEX_ENTITY, 16)):
+        m = pattern.match(piece)
+        if m:
+            cp = int(m.group(1), base)
+            if cp <= 0x10FFFF:
+                return _chr(cp) + piece[m.end():]
+    return piece
 
 
-def html_unescape(col: Column) -> Column:
+def html_unescape(v):
     """he.decode for the entities that occur in GPML text
     (ref: decodeIfNotEmpty, src/2013a/ValueConverters.ts:38-40).
-    Numeric entities decode FIRST (a '&#' produced by the later
-    '&amp;' -> '&' rewrite must NOT re-decode — he is non-recursive),
-    then the named entities. Everything stays a Catalyst expression."""
-    c = _decode_numeric_entities(col)
-    for ent, rep in [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-                     ("&apos;", "'"), ("&nbsp;", " "),
-                     ("&amp;", "&")]:
-        c = F.regexp_replace(c, ent, rep)
-    return c
+    Numeric entities decode FIRST, each piece of the text before a
+    '&#' once, so a '&#' that the later '&amp;' -> '&' rewrite produces
+    is not decoded again (he is non-recursive); then the six named
+    entities, in order."""
+    if v is None:
+        return None
+    first, *rest = v.split("&#")
+    out = first + "".join(_decode_numeric("&#" + p) for p in rest)
+    for ent, rep in _NAMED_ENTITIES:
+        out = out.replace(ent, rep)
+    return out
 
 
+_URL_SAFE = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
+                      "0123456789.-*_")
 # JS encodeURI keeps exactly A-Za-z0-9 ; , / ? : @ & = + $ - _ . ! ~
 # * ' ( ) # and percent-encodes everything else as uppercase UTF-8.
-# Java's URLEncoder (F.url_encode) keeps A-Za-z0-9 . - * _ , maps
-# space to '+', and encodes the rest — so the delta is a FIXED set of
-# literal rewrites. Order matters: '+' (space) must become %20 before
-# %2B is restored to '+'.
+# Java's URLEncoder keeps A-Za-z0-9 . - * _ , maps space to '+', and
+# encodes the rest — so the delta is a FIXED set of literal rewrites.
+# Order matters: '+' (space) must become %20 before %2B is restored
+# to '+'.
 _URL_ENCODE_FIXUPS = [
     ("+", "%20"),
     # unreserved in JS, encoded by Java
@@ -162,104 +135,191 @@ _URL_ENCODE_FIXUPS = [
 ]
 
 
-def encode_uri(col: Column) -> Column:
+def _url_encode(v: str) -> str:
+    """java.net.URLEncoder.encode(v, UTF-8)."""
+    out = []
+    for c in v:
+        if c in _URL_SAFE:
+            out.append(c)
+        elif c == " ":
+            out.append("+")
+        else:
+            out.extend(f"%{b:02X}" for b in c.encode("utf-8"))
+    return "".join(out)
+
+
+def encode_uri(v):
     """JS encodeURI for Href values (ref: src/2013a/ValueConverters.ts
-    :308-311), as a JVM-side url_encode plus literal fixups."""
-    c = F.url_encode(col)
+    :308-311), as URLEncoder plus literal fixups."""
+    if v is None:
+        return None
+    out = _url_encode(v)
     for frm, to in _URL_ENCODE_FIXUPS:
-        c = F.replace(c, F.lit(frm), F.lit(to))
-    return c
+        out = out.replace(frm, to)
+    return out
 
 
-def rotation_degrees(col: Column) -> Column:
+# java.lang.Double.parseDouble's grammar, after String.trim
+_JAVA_DOUBLE = re.compile(
+    r"[+-]?(?:NaN|Infinity|(?:(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+    r"|0[xX](?:[0-9a-fA-F]+\.?|[0-9a-fA-F]*\.[0-9a-fA-F]+)[pP][+-]?[0-9]+)"
+    r"[fFdD]?)")
+# the literals Spark accepts where parseDouble fails, matched trimmed
+# and lowercased
+_SPECIAL_DOUBLES = {"inf": math.inf, "+inf": math.inf, "infinity": math.inf,
+                    "+infinity": math.inf, "-inf": -math.inf,
+                    "-infinity": -math.inf, "nan": math.nan}
+_INT = re.compile(r"[+-]?[0-9]+")
+
+
+def _java_trim(v: str) -> str:
+    """String.trim: strips every char <= U+0020 from both ends."""
+    i, j = 0, len(v)
+    while i < j and v[i] <= " ":
+        i += 1
+    while j > i and v[j - 1] <= " ":
+        j -= 1
+    return v[i:j]
+
+
+def _invalid_cast(v: str, to: str):
+    raise ValueError(f"[CAST_INVALID_INPUT] The value '{v}' of the type "
+                     f"\"STRING\" cannot be cast to \"{to}\"")
+
+
+def cast_double(v):
+    """Spark's ANSI string -> double cast: parseDouble, then the special
+    literals inf/infinity/nan in any case; other input raises."""
+    if v is None:
+        return None
+    s = _java_trim(v)
+    if _JAVA_DOUBLE.fullmatch(s):
+        if s[-1] in "fFdD":
+            s = s[:-1]
+        return float.fromhex(s) if "x" in s or "X" in s else float(s)
+    special = _SPECIAL_DOUBLES.get(s.lower())
+    if special is None:
+        _invalid_cast(v, "DOUBLE")
+    return special
+
+
+def cast_int(v):
+    """Spark's ANSI string -> int cast: surrounding whitespace trimmed,
+    an optional sign, digits; a fraction, malformed or out-of-range
+    input raises."""
+    if v is None:
+        return None
+    s = _java_trim(v)
+    if _INT.fullmatch(s) and -2**31 <= int(s) < 2**31:
+        return int(s)
+    _invalid_cast(v, "INT")
+
+
+_SIDES = {"Top": 0.0, "Right": 0.5 * math.pi, "Bottom": math.pi,
+          "Left": 1.5 * math.pi}
+_TWO_PI = 2.0 * math.pi
+_RADIANS_TO_DEGREES = 57.29577951308232  # java.lang.Math.toDegrees
+
+
+def rotation_degrees(v) -> float:
     """Rotation: radians (or a side keyword) -> normalized [0, 2pi) ->
     degrees (ref: src/2013a/ValueConverters.ts:191-222 + Angle.ts:60-62).
-    Null input -> 0."""
-    side = F.when(col == "Top", F.lit(0.0)) \
-        .when(col == "Right", F.lit(0.5 * math.pi)) \
-        .when(col == "Bottom", F.lit(math.pi)) \
-        .when(col == "Left", F.lit(1.5 * math.pi))
-    rad = F.coalesce(side, col.cast("double"), F.lit(0.0))
-    norm = F.pmod(rad, F.lit(2.0 * math.pi))
-    return F.degrees(norm)
+    None -> 0. The normalization is Spark's pmod."""
+    rad = _SIDES.get(v)
+    if rad is None:
+        rad = cast_double(v)
+    if rad is None:
+        rad = 0.0
+    r = math.fmod(rad, _TWO_PI) if math.isfinite(rad) else math.nan
+    if r < 0:
+        r = math.fmod(r + _TWO_PI, _TWO_PI)
+    return r * _RADIANS_TO_DEGREES
 
 
-def text_decoration(font_decoration: Column, font_strikethru: Column) -> Column:
+def text_decoration(font_decoration, font_strikethru) -> str:
     """underline / line-through / none synthesis
     (ref: src/2013a/ValueConverters.ts:270-288)."""
     under = font_decoration == "Underline"
     strike = font_strikethru == "Strikethru"
-    return (
-        F.when(under & strike, F.lit("underline line-through"))
-        .when(under, F.lit("underline"))
-        .when(strike, F.lit("line-through"))
-        .otherwise(F.lit("none"))
-    )
+    if under and strike:
+        return "underline line-through"
+    if under:
+        return "underline"
+    return "line-through" if strike else "none"
 
 
-def stroke_dasharray(line_style: Column) -> Column:
-    """Solid -> absent(null); Broken -> '5,3'
+def stroke_dasharray(line_style):
+    """Solid -> absent (None); Broken -> '5,3'
     (ref: src/2013a/ValueConverters.ts:224-238)."""
-    return F.when(line_style == "Broken", F.lit("5,3"))
+    return "5,3" if line_style == "Broken" else None
 
 
-def stroke_width(line_thickness: Column, shape_type: Column,
-                 has_points: Column) -> Column:
+def _real_shape(shape_type) -> bool:
+    return shape_type is not None and shape_type.lower() != "none"
+
+
+def stroke_width(line_thickness, shape_type, has_points: bool) -> float:
     """LineThickness converter (ref: src/2013a/ValueConverters.ts:351-381):
     0 if undefined; the value if ShapeType is a real shape or the element
     has edge Points; else 0."""
-    shape_ok = shape_type.isNotNull() & (F.lower(shape_type) != "none")
-    return (
-        F.when(line_thickness.isNull(), F.lit(0.0))
-        .when(shape_ok, line_thickness)
-        .when(has_points, line_thickness)
-        .otherwise(F.lit(0.0))
-    )
+    if line_thickness is None:
+        return 0.0
+    if _real_shape(shape_type) or has_points:
+        return line_thickness
+    return 0.0
 
 
-def fill(fill_color: Column, shape_type: Column, has_points: Column) -> Column:
+def fill(fill_color, shape_type, has_points: bool):
     """FillColor converter (ref: src/2013a/ValueConverters.ts:339-349)."""
-    shape_ok = shape_type.isNotNull() & (F.lower(shape_type) != "none")
-    return F.when(shape_ok | has_points, css_color(fill_color)) \
-        .otherwise(F.lit("transparent"))
+    if _real_shape(shape_type) or has_points:
+        return css_color(fill_color)
+    return "transparent"
 
 
-def rel_position_scalar(rel: Column) -> Column:
+def rel_position_scalar(rel):
     """RelX/RelY -> position scalar with clamping into [0,1]
-    (ref: src/2013a/ValueConverters.ts:405-432)."""
-    rel01 = (rel + F.lit(1.0)) / F.lit(2.0)
-    return F.when(rel01 < 0, F.lit(0.0)) \
-        .when(rel01 > 1, F.lit(1.0)).otherwise(rel01)
+    (ref: src/2013a/ValueConverters.ts:405-432). NaN sorts above every
+    number, as in Spark's comparisons."""
+    if rel is None:
+        return None
+    rel01 = (rel + 1.0) / 2.0
+    if rel01 < 0:
+        return 0.0
+    return 1.0 if rel01 > 1 or rel01 != rel01 else rel01
 
 
-def rel_offset_scalar(rel: Column) -> Column:
-    """RelX/RelY -> relative offset scalar (spill outside [0,1])."""
-    rel01 = (rel + F.lit(1.0)) / F.lit(2.0)
-    return F.when(rel01 < 0, rel01) \
-        .when(rel01 > 1, rel01 - F.lit(1.0)).otherwise(F.lit(0.0))
+def rel_offset_scalar(rel):
+    """RelX/RelY -> relative offset scalar (spill outside [0,1]); None
+    gives 0."""
+    if rel is None:
+        return 0.0
+    rel01 = (rel + 1.0) / 2.0
+    if rel01 < 0:
+        return rel01
+    return rel01 - 1.0 if rel01 > 1 or rel01 != rel01 else 0.0
 
 
-def orientation_scalar(position_scalar: Column) -> Column:
+def orientation_scalar(position) -> float:
     """Initial edge emanation sign along an axis
-    (ref: src/edge/edge.ts:74-82)."""
-    return F.when(position_scalar == 0.0, F.lit(-1.0)) \
-        .when(position_scalar == 1.0, F.lit(1.0)).otherwise(F.lit(0.0))
+    (ref: src/edge/edge.ts:74-82); None gives 0."""
+    return -1.0 if position == 0.0 else 1.0 if position == 1.0 else 0.0
 
 
-def union_types(*cols: Column) -> Column:
-    """unionLSV over array/string columns: flatten, drop nulls, distinct,
-    preserving first-seen order (ref: src/spinoffs/jsonld-utils.ts:85-89
-    — lodash union keeps insertion order; array_union does too)."""
-    arrs = []
-    for c in cols:
-        arrs.append(c)
-    out = arrs[0]
-    for c in arrs[1:]:
-        out = F.array_union(out, c)
-    return F.filter(out, lambda x: x.isNotNull())
+def union_types(*arrays):
+    """unionLSV (ref: src/spinoffs/jsonld-utils.ts:85-89): the arrays
+    concatenated, distinct in first-seen order, None elements dropped —
+    lodash union and Spark's array_union both keep insertion order. Like
+    array_union, a None array makes the result None."""
+    if any(a is None for a in arrays):
+        return None
+    out = []
+    for a in arrays:
+        for v in a:
+            if v is not None and v not in out:
+                out.append(v)
+    return out
 
 
-def arr(col: Column) -> Column:
-    """arrayify a scalar column (null -> empty array)."""
-    return F.when(col.isNull(), F.array().cast("array<string>")) \
-        .otherwise(F.array(col))
+def arr(v) -> list:
+    """arrayify a scalar (None -> empty list)."""
+    return [] if v is None else [v]

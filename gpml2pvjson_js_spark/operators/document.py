@@ -1,40 +1,54 @@
-"""Per-document assembly kernel: every GraphId/GroupId reference inside
-one document resolved in memory, in one grouped-map pass.
+"""The document compiler: one document's mention rows -> the finished
+rows of the five model frames, in one grouped-map pass.
 
-The reference resolves a document's references in one in-memory pass
-(src/2013a/toPvjson.ts:470-710), and every reference is scoped to its
-(url, frag). So one `groupBy(url, frag).applyInPandas` call hands each
-document's narrow element rows (`kernel_input`) to `assemble_document`,
-which derives, in dependency order:
+The reference is a one-document compiler: it turns each GPML element
+into its typed pvjson entity and resolves the document's references in
+one in-memory pass (src/Processor.ts:88-121,373-560,
+src/2013a/toPvjson.ts:470-710). Every reference is scoped to its
+(url, frag), so one `groupBy(url, frag).applyInArrow` call hands each
+document's ok mention rows to `assemble_document`, which
 
-1. states: ZOrder inherited from the parent, burr offset against the
-   parent's size (J3/J8, ref: src/Processor.ts:251-276);
-2. groups: bounding box over node and edge-endpoint members; empty
-   groups are dropped and nested groups are not bbox members (A3/P21,
-   ref: src/group.ts:28-150, src/2013a/toPvjson.ts:781);
-3. edge points: attachment against node/state/group/anchor targets,
-   with the anchor hop to the anchor's edge (J7,
-   ref: src/edge/edge.ts:148-317);
-4. Elbow/Curved waypoints, via `waypoints.resolve_document` (F4/F5);
-5. members re-based to their group's origin, gaining isPartOf (A4,
-   ref: src/2013a/toPvjson.ts:800-860);
-6. burrs on their hosts, group and pathway `contains`, each sorted by
-   zIndex with nulls first and ties by id (J8/O1,
-   ref: src/2013a/toPvjson.ts:663-667,680-710,791-798).
+1. layers the class defaults and the group-style overrides
+   (P16, ref: src/2013a/toPvjson.ts:114-156, src/group.ts:153-181);
+2. converts every element's values (functions/converters.py):
+   colours, stroke, fill, rotation, HTML decoding, encodeURI, marker
+   -> SBO/WP typing, processType CURIEs, vocabulary IRIs, citation
+   ordinals and pathway names (P1-P22, J10, J11, A1, A6);
+3. resolves the references, in dependency order:
+   - states: ZOrder inherited from the parent, burr offset against the
+     parent's size (J3/J8, ref: src/Processor.ts:251-276);
+   - groups: bounding box over node and edge-endpoint members; empty
+     groups are dropped and nested groups are not bbox members
+     (A3/P21, ref: src/group.ts:28-150, src/2013a/toPvjson.ts:781);
+   - edge points: attachment against node/state/group/anchor targets,
+     with the anchor hop to the anchor's edge (J7,
+     ref: src/edge/edge.ts:148-317);
+   - Elbow/Curved waypoints, via `waypoints.resolve_document` (F4/F5);
+   - members re-based to their group's origin, gaining isPartOf (A4,
+     ref: src/2013a/toPvjson.ts:800-860);
+   - burrs on their hosts, group and pathway `contains`, each sorted
+     by zIndex with nulls first and ties by id (J8/O1,
+     ref: src/2013a/toPvjson.ts:663-667,680-710,791-798).
 
 A GraphId (or GroupId) that repeats inside one document resolves to the
 last element carrying it in document order, like the reference's
 `entitiesById` overwrite.
 
-The output has one row per kept element, keyed (url, frag, elem_idx),
-holding its derived columns, plus one row per document with a null
-elem_idx holding the pathway's `contains`.
+The output is ONE frame (SCHEMA): a `role` column naming the model
+frame a row belongs to, and the union of the five frames' columns.
+`select_frame` projects one role back to its frame's exact schema
+(FRAMES). The values are those the earlier Catalyst projections
+produced, nulls and NaNs included; the string casts follow Spark's
+ANSI mode, so input that made those projections raise makes the
+kernel raise.
+
+The rows cross the Arrow boundary as plain Python values, without
+pandas: most documents are small, and building a pandas frame of some
+80 columns per document cost more than compiling it.
 
 Bound: the kernel sees a whole document at once, so one document's
-narrow rows (about 20 columns per element) must fit in one Python
-worker's memory; a page with tens of thousands of elements is still a
-few MB. Like the waypoint pass, the input is ONE frame; `cogroup`
-segfaulted inside pyarrow 16.1's `arrow_to_pandas`.
+mention rows must fit in one Python worker's memory; a page with tens
+of thousands of elements is still a few MB.
 """
 
 from __future__ import annotations
@@ -42,85 +56,178 @@ from __future__ import annotations
 from collections import defaultdict
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import edges as E
+from . import entities as N
 from . import waypoints as W
 from .entities import DOC_KEY
+from ..functions import converters as C
 
 _NAN = float("nan")
 _FREE = ("DataNode", "Shape", "Label")
 _NODE_LIKE = (*_FREE, "State")
 # group bbox members: re-based into their group, hosts of burrs, and
 # the elements whose zIndex a group's contains sorts by
-_GEO = (*_NODE_LIKE, *E._EDGE_NAMES)
+_GEO = (*_NODE_LIKE, *E.EDGE_NAMES)
 _BURRS = ("State", "Anchor")
-_ELEMENTS = (*_NODE_LIKE, "Group", "Anchor", *E._EDGE_NAMES)
+_NODE_NAMES = (*_NODE_LIKE, "Anchor", "Group")
+_ELEMENTS = (*_NODE_NAMES, *E.EDGE_NAMES)
 
-_D, _S = T.DoubleType(), T.StringType()
-_DOUBLES, _STRINGS = T.ArrayType(_D), T.ArrayType(_S)
+# --- the five frames' schemas ------------------------------------------
+
+_S, _D, _I = T.StringType(), T.DoubleType(), T.IntegerType()
+_STRS, _DOUBLES = T.ArrayType(_S), T.ArrayType(_D)
 
 
-def _struct(*fields) -> T.StructType:
-    return T.StructType([T.StructField(n, t) for n, t in fields])
+def _struct(*fields, required=()) -> T.StructType:
+    return T.StructType([T.StructField(n, t, n not in required)
+                         for n, t in fields])
 
 
+_COMMENTS = T.ArrayType(_struct(("content", _S), ("source", _S)))
 _POINT = _struct(("x", _D), ("y", _D), ("is_attached_to", _S),
                  ("attachment_position", _DOUBLES),
                  ("attachment_offset", _DOUBLES),
                  ("orientation", _DOUBLES), ("marker", _S))
-# points and point_targets hold non-null elements, as the edges' schema
-# always has
-SCHEMA = _struct(
-    ("url", _S), ("frag", T.IntegerType()), ("elem_idx", T.IntegerType()),
-    ("x", _D), ("y", _D), ("width", _D), ("height", _D), ("z_index", _D),
-    ("attachment_offset", _DOUBLES),
-    ("points", T.ArrayType(_POINT, containsNull=False)),
-    ("is_attached_to", _STRINGS),
+_KEY = (("url", _S), ("frag", _I))
+
+NODES = _struct(
+    *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("id", _S),
+    ("gpml_element_name", _S), ("kaavio_type", _S), ("types", _STRS),
+    ("text_content", _S), ("href", _S), ("wp_type", _S),
+    ("state_type", _S), ("x", _D), ("y", _D), ("width", _D),
+    ("height", _D), ("z_index", _D), ("draw_as", _S), ("stroke", _S),
+    ("stroke_width", _D), ("stroke_dasharray", _S), ("stroke_style", _S),
+    ("fill", _S), ("fill_opacity", _D), ("rotation", _D),
+    ("text_rotation", _D), ("font_family", _S), ("font_size", _D),
+    ("font_weight", _S), ("font_style", _S), ("text_align", _S),
+    ("vertical_align", _S), ("text_decoration", _S), ("padding", _D),
+    ("rx", _D), ("ry", _D), ("xref_datasource", _S),
+    ("xref_identifier", _S), ("cellular_component", _S),
+    ("backpage_head", _S), ("citations", _STRS), ("comments", _COMMENTS),
+    ("is_attached_to", _S), ("attachment_position", _DOUBLES),
+    ("attachment_relative_offset", _DOUBLES),
+    ("attachment_offset", _DOUBLES), ("group_id", _S), ("group_ref", _S),
+    ("is_part_of", _S), ("burrs", _STRS), ("gpml_group_id", _S),
+    ("contains", _STRS),
+    required=("url", "frag"))
+EDGES = _struct(
+    *_KEY, ("id", _S), ("pathway_id", _S), ("elem_idx", _I),
+    ("gpml_element_name", _S), ("kaavio_type", _S), ("types", _STRS),
+    ("marker_start", _S), ("marker_end", _S), ("draw_as", _S),
+    ("stroke", _S), ("stroke_width", _D), ("stroke_dasharray", _S),
+    ("fill", _S), ("z_index", _D), ("citations", _STRS),
+    ("comments", _COMMENTS), ("group_ref", _S), ("xref_datasource", _S),
+    ("xref_identifier", _S), ("is_attached_to", _STRS),
     ("point_targets", T.ArrayType(
         _struct(("elem", _S), ("point_ref", _S)), containsNull=False)),
     ("endpoint_first_ref", _S), ("endpoint_last_ref", _S),
-    ("is_part_of", _S), ("burrs", _STRINGS), ("contains", _STRINGS))
-_DERIVED = SCHEMA.names[3:]
+    ("points", T.ArrayType(_POINT, containsNull=False)),
+    ("is_part_of", _S), ("burrs", _STRS),
+    required=("url", "frag", "kaavio_type"))
+CITATIONS = _struct(
+    *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("id", _S),
+    ("gpml_element_name", _S), ("xref_identifier", _S),
+    ("xref_datasource", _S), ("standard_name", _S), ("source", _S),
+    ("year", _I), ("authors", _STRS), ("types", _STRS),
+    ("text_content", _S),
+    required=("url", "frag", "gpml_element_name", "types",
+              "text_content"))
+VOCABULARIES = _struct(
+    *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("ontology", _S),
+    ("term", _S), ("xref_identifier", _S), ("iri_prefix", _S),
+    ("id", _S), ("types", T.ArrayType(_S, containsNull=False)),
+    ("gpml_element_name", _S),
+    required=("url", "frag", "types", "gpml_element_name"))
+PATHWAYS = _struct(
+    *_KEY, ("pathway_id", _S), ("id", _S), ("gpml_element_name", _S),
+    ("kaavio_type", _S), ("name", _S), ("standard_name", _S),
+    ("display_name", _S), ("text_content", _S), ("is_similar_to", _S),
+    ("organism", _S), ("license", _S), ("data_source", _S),
+    ("data_source_version", _S), ("author", _S), ("email", _S),
+    ("maintainer", _S), ("last_modified", _S), ("width", _D),
+    ("height", _D), ("comments", _COMMENTS),
+    ("types", T.ArrayType(_S, containsNull=False)), ("contains", _STRS),
+    required=("url", "frag", "gpml_element_name", "kaavio_type",
+              "text_content", "height", "contains"))
+FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
+          "vocabularies": VOCABULARIES, "pathways": PATHWAYS}
 
 
-def kernel_input(converted: DataFrame) -> DataFrame:
-    """One narrow row per element; `gpml_element_name` is the role.
-    Edges carry their points with the rel scalars and markers computed
-    by the same expressions as convert_edges."""
-    pts, outcols = E._edge_exprs()
-    return converted.filter(
-        F.col("gpml_element_name").isin(*_ELEMENTS)).select(
-        *DOC_KEY, "elem_idx", "gpml_element_name",
-        F.col("graph_id").alias("id"), "group_id", "group_ref",
-        "graph_ref", "zorder", "x", "y",
-        F.col("width_out").alias("width"),
-        F.col("height_out").alias("height"), "padding", "stroke_width",
-        "attachment_position", "attachment_relative_offset",
-        "attachment_offset",
-        F.coalesce(outcols["draw_as"].isin(*W._CURVY), F.lit(False))
-        .alias("curvy"),
-        pts.alias("pts"))
+def _union_schema() -> tuple[T.StructType, dict]:
+    """The kernel's output schema and, per (role, field), the column
+    that carries it. A field shares a column with every other frame's
+    field of the same name and type; a field whose type differs gets
+    its own column, `{name}_{role}`. Every column but the key and the
+    role is nullable; `select_frame` restores each frame's
+    nullability."""
+    fields = [T.StructField("url", _S, False),
+              T.StructField("frag", _I, False),
+              T.StructField("role", _S, False)]
+    names = {(f.name, f.dataType.json()): f.name for f in fields}
+    column_of = {}
+    for role, schema in FRAMES.items():
+        for f in schema.fields:
+            key = f.name, f.dataType.json()
+            if key not in names:
+                names[key] = f.name if f.name not in {g.name for g in fields} \
+                    else f"{f.name}_{role}"
+                fields.append(T.StructField(names[key], f.dataType))
+            column_of[role, f.name] = names[key]
+    return T.StructType(fields), column_of
 
 
-def resolve_documents(converted: DataFrame) -> DataFrame:
-    """The kernel over every document: lazy, the caller stages it."""
-    return kernel_input(converted).groupBy(*DOC_KEY).applyInPandas(
-        assemble_document, SCHEMA)
+SCHEMA, COLUMN_OF = _union_schema()
+_ARROW_SCHEMA = to_arrow_schema(SCHEMA)
+# the only doubles the converters can make NaN (a rotation of "NaN" or
+# "Infinity"), which Spark's cast makes NaN too; everywhere else NaN
+# only stands for null arithmetic (`_num`) and goes back as null
+_NAN_COLUMNS = ("rotation", "text_rotation")
+_STRUCT = pa.struct([f for f in _ARROW_SCHEMA if f.name not in _NAN_COLUMNS])
 
+
+def resolve_documents(ok: DataFrame) -> DataFrame:
+    """The compiler over every document of the ok mention rows: lazy,
+    the caller stages it."""
+    return ok.groupBy(*DOC_KEY).applyInArrow(assemble_document, SCHEMA)
+
+
+def _non_null(col, dtype: T.DataType):
+    """`col` as a non-nullable column of the same type: it holds no
+    null for its role, so the coalesce only restores the frame's
+    declared nullability."""
+    if isinstance(dtype, T.ArrayType):
+        return F.coalesce(col, F.array())
+    return F.coalesce(col, F.lit(0.0 if dtype == _D else ""))
+
+
+def select_frame(out: DataFrame, role: str) -> DataFrame:
+    """One model frame (FRAMES[role]) out of the kernel's output."""
+    cols = []
+    for f in FRAMES[role].fields:
+        col = F.col(COLUMN_OF.get((role, f.name), f.name))
+        if f.nullable or f.name in DOC_KEY:
+            cols.append(col.alias(f.name))
+        else:
+            cols.append(_non_null(col, f.dataType).alias(f.name))
+    return out.filter(F.col("role") == role).select(*cols)
+
+
+# --- reference resolution ----------------------------------------------
 
 def _null(v) -> bool:
     return v is None or v != v
 
 
 def _num(v) -> float:
-    """Arrow hands a null double over as None or NaN; arithmetic on
-    NaN gives NaN, which goes back to Spark as null, like null
-    arithmetic in Catalyst. (So a coordinate that is NaN, not null,
-    in Spark also comes back null.)"""
+    """A null double as NaN: arithmetic on it gives NaN, which goes
+    back to Spark as null, like null arithmetic in Catalyst."""
     return _NAN if v is None else v
 
 
@@ -135,21 +242,16 @@ def _max(vals) -> float:
 
 
 def _z_sorted(items) -> list[str]:
-    """(z, id) pairs -> ids, ordered like Spark's array_sort of
-    struct(z, id): null z first, then ascending z, ties by id."""
+    """(z, id) pairs -> ids, null z first, then ascending z, ties by
+    id."""
     return [i for _, i in sorted(
         items, key=lambda zi: (not _null(zi[0]),
                                0.0 if _null(zi[0]) else zi[0], zi[1]))]
 
 
-def _orientation_scalar(pos) -> float:
-    """converters.orientation_scalar: a null position gives 0.0."""
-    return -1.0 if pos == 0.0 else 1.0 if pos == 1.0 else 0.0
-
-
 def _edge_box(pts) -> tuple:
     """An edge member's box from its first and last explicit points
-    (least/greatest skip nulls, like Catalyst's)."""
+    (least/greatest skip nulls)."""
     if pts is None or len(pts) == 0:
         return _NAN, _NAN, _NAN, _NAN
     xs = (pts[0]["x"], pts[-1]["x"])
@@ -193,9 +295,7 @@ def _resolve_points(edge: dict, target) -> None:
                  "orientation": None, "marker": p["marker"]}
         edge_ref = None
         if t is not None and t["gpml_element_name"] == "Anchor":
-            # the anchor hop: the edge attaches to the anchor's edge.
-            # attachment_position stays the numpy array Arrow delivers
-            # (see ROADMAP item 3 on the defect this keeps).
+            # the anchor hop: the edge attaches to the anchor's edge
             edge_ref = t["graph_ref"]
             point["attachment_position"] = t["attachment_position"]
             point["attachment_offset"] = [0.0, 0.0]
@@ -209,8 +309,8 @@ def _resolve_points(edge: dict, target) -> None:
                 edge_ref = ref
                 sign = 1.0 if p["idx"] == 0 else -1.0
                 point["orientation"] = [
-                    sign * _orientation_scalar(p["pos_x"]),
-                    sign * _orientation_scalar(p["pos_y"])]
+                    sign * C.orientation_scalar(p["pos_x"]),
+                    sign * C.orientation_scalar(p["pos_y"])]
         points.append(point)
         edge_refs.append(edge_ref)
         if ref is not None:
@@ -240,13 +340,12 @@ def _synthesize_waypoints(edges: list[dict]) -> None:
         edges[pos]["points"] = points
 
 
-def assemble_document(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One document's element rows (kernel_input) -> its derived
-    columns (SCHEMA)."""
-    els = sorted(pdf.to_dict("records"), key=lambda e: e["elem_idx"])
-    url, frag = els[0]["url"], els[0]["frag"]
+def _resolve(els: list[dict]) -> tuple[set, list]:
+    """Resolve the references among a document's element rows in
+    place; returns the kept groups' elem_idx and the pathway's
+    contains."""
     by_id = {e["id"]: e for e in els}
-    groups = {e["group_id"]: e for e in els
+    groups = {e["group_id_"]: e for e in els
               if e["gpml_element_name"] == "Group"}
 
     # 1. states
@@ -256,11 +355,11 @@ def assemble_document(pdf: pd.DataFrame) -> pd.DataFrame:
             parent = by_id.get(e["graph_ref"], {})
             if _null(e["z_index"]):
                 e["z_index"] = parent.get("zorder")
-            rel = e["attachment_relative_offset"]
+            rel = e["_rel_offset"]
             if rel is not None:
                 e["attachment_offset"] = [
-                    rel[0] * _num(parent.get("width")),
-                    rel[1] * _num(parent.get("height"))]
+                    _num(rel[0]) * _num(parent.get("width")),
+                    _num(rel[1]) * _num(parent.get("height"))]
 
     # 2. groups: membership by GroupRef, bbox over node/edge members
     members = defaultdict(list)
@@ -289,7 +388,7 @@ def assemble_document(pdf: pd.DataFrame) -> pd.DataFrame:
             return t
         return None
 
-    edges = [e for e in els if e["gpml_element_name"] in E._EDGE_NAMES]
+    edges = [e for e in els if e["gpml_element_name"] in E.EDGE_NAMES]
     for e in edges:
         _resolve_points(e, target)
     _synthesize_waypoints(edges)
@@ -325,16 +424,106 @@ def assemble_document(pdf: pd.DataFrame) -> pd.DataFrame:
                 (m["z_index"] if m["gpml_element_name"] in _GEO else None,
                  m["id"]) for m in members[e["elem_idx"]])
     top = [(e["z_index"], e["id"]) for e in els
-           if (e["gpml_element_name"] in (*_FREE, *E._EDGE_NAMES)
+           if (e["gpml_element_name"] in (*_FREE, *E.EDGE_NAMES)
                or kept_group(e)) and e.get("is_part_of") is None]
+    return kept, _z_sorted(top)
 
-    rows = [e for e in els
-            if e["gpml_element_name"] != "Group" or kept_group(e)]
-    rows.append({"contains": _z_sorted(top)})
-    out = pd.DataFrame([{c: r.get(c) for c in _DERIVED} for r in rows],
-                       columns=_DERIVED)
-    out.insert(0, "elem_idx", pd.array(
-        [r.get("elem_idx") for r in rows], dtype="Int32"))
-    out.insert(0, "frag", frag)
-    out.insert(0, "url", url)
-    return out
+
+# --- the kernel ----------------------------------------------------------
+
+def _records(table: pa.Table) -> list[dict]:
+    """The rows as dicts. Most columns are null for a whole document
+    (a DataNode has no pub_year), and skipping their conversion halves
+    its cost."""
+    n = table.num_rows
+    columns = [[None] * n if c.null_count == n else c.to_pylist()
+               for c in table.columns]
+    return [dict(zip(table.column_names, row)) for row in zip(*columns)]
+
+
+def _table(rows: list[tuple[str, dict]]) -> pa.Table:
+    """(role, row) pairs -> the kernel's output table (SCHEMA), in one
+    struct conversion that turns NaN into null (`from_pandas`), except
+    in the columns that keep NaN."""
+    recs, nan_columns = [], {c: [] for c in _NAN_COLUMNS}
+    for role, row in rows:
+        rec = {COLUMN_OF[role, name]: v for name, v in row.items()}
+        rec["role"] = role
+        for c, values in nan_columns.items():
+            values.append(rec.pop(c, None))
+        recs.append(rec)
+    batch = pa.RecordBatch.from_struct_array(
+        pa.array(recs, type=_STRUCT, from_pandas=True))
+    return pa.Table.from_arrays(
+        [pa.array(nan_columns[f.name], type=f.type)
+         if f.name in nan_columns else batch.column(f.name)
+         for f in _ARROW_SCHEMA], schema=_ARROW_SCHEMA)
+
+
+def _key_fields(r: dict, *names) -> dict:
+    return {n: r[n] for n in names}
+
+
+def assemble_document(table: pa.Table) -> pa.Table:
+    """One document's ok mention rows (MENTIONS_SCHEMA, as Arrow hands
+    them over) -> its rows of the five model frames (SCHEMA)."""
+    recs = _records(table)
+    for r in recs:
+        if r["attributes"] is not None:  # a map arrives as pairs
+            r["attributes"] = dict(r["attributes"])
+    return _table(compile_document(recs))
+
+
+def compile_document(recs: list[dict]) -> list[tuple[str, dict]]:
+    """One document's ok mention rows, as dicts -> (role, row) pairs,
+    each row keyed by its frame's field names."""
+    recs = sorted(recs, key=lambda r: r["elem_idx"])
+    by_name = defaultdict(list)
+    for r in recs:
+        by_name[r["gpml_element_name"]].append(r)
+
+    els = []
+    for r in recs:
+        name = r["gpml_element_name"]
+        if name not in _ELEMENTS:
+            continue
+        e = E.convert_edge(r) if name in E.EDGE_NAMES else N.convert_node(r)
+        e.update(url=r["url"], frag=r["frag"], pathway_id=r["pathway_id"],
+                 elem_idx=r["elem_idx"], gpml_element_name=name,
+                 group_id_=r["group_id"], group_ref=r["group_ref"],
+                 graph_ref=r["graph_ref"], zorder=r["zorder"],
+                 comments=r["comments"],
+                 xref_datasource=r["xref_datasource"],
+                 xref_identifier=r["xref_identifier"])
+        if name in E.EDGE_NAMES:
+            e["is_attached_to"] = None
+        els.append(e)
+    kept, contains = _resolve(els)
+
+    rows = []
+    for e in els:
+        name = e["gpml_element_name"]
+        if name in E.EDGE_NAMES:
+            rows.append(("edges", {f: e.get(f) for f in EDGES.names}))
+        elif name != "Group" or e["elem_idx"] in kept:
+            rows.append(("nodes", {f: e.get(f) for f in NODES.names}))
+    for r, row in zip(by_name["PublicationXref"],
+                      N.citation_rows(by_name["PublicationXref"])):
+        row.update(_key_fields(r, "url", "frag", "pathway_id", "elem_idx",
+                               "xref_identifier"))
+        rows.append(("citations", row))
+    po_terms = []
+    for r in by_name["openControlledVocabulary"]:
+        row = N.vocabulary_row(r)
+        row.update(_key_fields(r, "url", "frag", "pathway_id", "elem_idx",
+                               "ontology", "xref_identifier"))
+        rows.append(("vocabularies", row))
+        if r["ontology"] == "Pathway Ontology" and row["id"] is not None:
+            po_terms.append(row["id"])
+    for r in by_name["Pathway"]:
+        row = N.pathway_row(r, contains, po_terms)
+        row.update(_key_fields(r, "url", "frag", "pathway_id", "organism",
+                               "license", "last_modified"),
+                   comments=r["comments"])
+        rows.append(("pathways", row))
+    return rows

@@ -14,7 +14,7 @@ cycles pass through unchanged, matching the reference's cycle
 tolerance.
 
 `resolve_document` is that per-document pass. The model build runs it
-inside the document assembly kernel (document.py), after the points
+inside the document compiler (document.py), after the points
 are resolved; `synthesize_waypoints` runs it as its own grouped pass
 over an edges frame whose points are already resolved. There both
 roles travel in ONE frame with a role flag rather than as a `cogroup`
@@ -109,8 +109,8 @@ def resolve_document(pdf: pd.DataFrame,
 def synthesize_waypoints(edges: DataFrame,
                          max_rounds: int = MAX_ROUNDS) -> DataFrame:
     """edges with resolved explicit points (points, is_attached_to and
-    endpoint refs as build_edges has them) -> edges with Elbow/Curved
-    implicit waypoints made explicit.
+    endpoint refs as the model's edges frame has them) -> edges with
+    Elbow/Curved implicit waypoints made explicit.
 
     Straight edges pass through untouched; only their narrow
     (url, frag, id, points) projection joins the curvy edges in the

@@ -27,7 +27,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import entities as N
 from ..operators.assemble import build_document_model
 from ..operators.canonicalize import canonicalize_linked, rewrite_triples
 from ..operators.interactions import classify_interactions
@@ -258,12 +257,12 @@ class Pipeline:
         persistent RDDs grew 24 -> 41 -> 57; with release, flat).
         Only RDDs persisted DURING this run are touched."""
         try:
-            jsc = self.spark.sparkContext._jsc.sc()
-            it = jsc.getPersistentRDDs().toList().iterator()
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() not in persisted_before:
-                    kv._2().unpersist(False)
+            sc = self.spark.sparkContext._jsc.sc()
+            for rdd_id in self._persisted_ids() - persisted_before:
+                # SparkContext.unpersistRDD, not RDD.unpersist: the
+                # latter WARNs that a locally checkpointed RDD's lineage
+                # is truncated before releasing the same blocks
+                sc.unpersistRDD(rdd_id, False)
         except Exception:
             pass  # cleanup is best-effort; never fail a committed run
 
@@ -315,16 +314,9 @@ class Pipeline:
         def model() -> dict:
             with model_lock:
                 if not model_cache:
-                    # stage_outputs stays ON although each returned
-                    # frame has one consumer here, its commit: the
-                    # checkpoints run the model's joins inside the
-                    # build, so the five concurrent commits only read
-                    # blocks and write. Measured on the `pipeline`
-                    # benchmark (4 vCPUs): OFF saved ~5% cpu_s, but
-                    # peak_rss_mb jumped by 2.5 GB in 4 of 11 runs
-                    # (0 of 5 ON): the sampled process tree caught the
-                    # driver JVM mid-spawn of a child process, under
-                    # the load of five joins and writes at once.
+                    # the model's one staging runs the document
+                    # compiler inside the first commit that reads it;
+                    # the five commits then only read its blocks
                     model_cache.update(build_document_model(
                         spark, pages, mentions=parsed_holder["df"]))
                 return model_cache

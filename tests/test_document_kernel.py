@@ -1,56 +1,71 @@
-"""The per-document assembly kernel (operators/document.py): pure-pandas
-cases for `assemble_document` on hand-built element rows, and Spark
-cases through `build_document_model`."""
+"""The document compiler (operators/document.py): pure-pandas cases
+for `assemble_document` on hand-built mention rows, and Spark cases
+through `build_document_model`."""
 
 import datetime as dt
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators.assemble import build_document_model
 from gpml2pvjson_js_spark.operators.document import (
-    SCHEMA, assemble_document)
+    FRAMES, SCHEMA, assemble_document, compile_document)
+from gpml2pvjson_js_spark.operators.parse import MENTIONS_SCHEMA
 
 
-def _el(idx, name, eid, **kw):
-    """One kernel_input row; nodes default to an 80x20 box at (0, 0)."""
-    row = {"url": "u", "frag": 0, "elem_idx": idx,
-           "gpml_element_name": name, "id": eid, "group_id": None,
-           "group_ref": None, "graph_ref": None, "zorder": 0.0,
-           "x": 0.0, "y": 0.0, "width": 80.0, "height": 20.0,
-           "padding": 8.0, "stroke_width": 1.0,
-           "attachment_position": None,
-           "attachment_relative_offset": None, "attachment_offset": None,
-           "curvy": False, "pts": None}
+def _el(idx, element, eid, x=0.0, y=0.0, width=80.0, height=20.0,
+        **kw):
+    """One mention row; nodes default to an 80x20 box whose top-left
+    corner is (x, y)."""
+    row = dict.fromkeys(MENTIONS_SCHEMA.names)
+    row.update(url="u", frag=0, pathway_id="p", elem_idx=idx,
+               gpml_element_name=element, graph_id=eid,
+               graph_id_explicit=True, zorder=0.0, width=width,
+               height=height,
+               center_x=None if x is None else x + width / 2,
+               center_y=None if y is None else y + height / 2)
     row.update(kw)
     return row
 
 
-def _pt(idx, x, y, ref=None, pos=(None, None), roff=(0.0, 0.0),
-        marker=None):
-    return {"idx": idx, "x": x, "y": y, "marker": marker, "graph_ref": ref,
-            "pos_x": pos[0], "pos_y": pos[1], "roff_x": roff[0],
-            "roff_y": roff[1]}
+def _pt(idx, x, y, ref=None, rel=(None, None), arrow_head=None):
+    return {"idx": idx, "x": x, "y": y, "rel_x": rel[0], "rel_y": rel[1],
+            "graph_ref": ref, "arrow_head": arrow_head}
 
 
-def _edge(idx, eid, pts, **kw):
-    return _el(idx, "Interaction", eid, x=None, y=None, width=None,
-               height=None, pts=pts, **kw)
+def _edge(idx, eid, pts, element="Interaction", **kw):
+    return _el(idx, element, eid, x=None, y=None, width=None, height=None,
+               points=pts, **kw)
+
+
+def _pathway(idx, **kw):
+    return _el(idx, "Pathway", None, x=None, y=None, width=None,
+               height=None, graph_id_explicit=None, zorder=None, **kw)
+
+
+def _roles(pairs) -> dict:
+    """The compiler's (role, row) pairs by role, keeping each row's
+    fields in its frame's order."""
+    by_role = {}
+    for role, row in pairs:
+        assert set(row) <= set(FRAMES[role].names)
+        by_role.setdefault(role, []).append(
+            {f: row.get(f) for f in FRAMES[role].names})
+    return by_role
 
 
 def _run(*rows):
-    """Kernel output: element rows by id, and the document's row."""
-    out = assemble_document(pd.DataFrame(list(rows)))
-    assert list(out.columns) == SCHEMA.names
-    recs = out.to_dict("records")
-    doc = [r for r in recs if pd.isna(r["elem_idx"])]
-    assert len(doc) == 1
-    ids = {r["elem_idx"]: r["id"] for r in rows}
-    return {ids[r["elem_idx"]]: r for r in recs
-            if not pd.isna(r["elem_idx"])}, doc[0]
+    """Kernel output: element rows by id, and the document's pathway
+    row."""
+    last = max(r["elem_idx"] for r in rows)
+    by_role = _roles(compile_document([*rows, _pathway(last + 1)]))
+    assert len(by_role["pathways"]) == 1
+    els = by_role.get("nodes", []) + by_role.get("edges", [])
+    return {r["id"]: r for r in els}, by_role["pathways"][0]
 
 
 def _null(v):
@@ -60,8 +75,9 @@ def _null(v):
 def test_state_inherits_parent_z_and_gets_its_burr_offset():
     got, _ = _run(
         _el(0, "DataNode", "n1", zorder=5.0),
+        # RelX/RelY 2.0/-1.5: relative offset [0.5, -0.25]
         _el(1, "State", "s1", graph_ref="n1", zorder=None,
-            attachment_relative_offset=np.array([0.5, -0.25])))
+            rel_x=2.0, rel_y=-1.5))
     assert got["s1"]["z_index"] == 5.0
     assert list(got["s1"]["attachment_offset"]) == [40.0, -5.0]
     assert got["n1"]["burrs"] == ["s1"]
@@ -157,15 +173,19 @@ def test_pathway_contains_lists_only_top_level_entities():
 
 
 def test_anchor_hop():
-    position = np.array([0.4, 0.0])
     got, _ = _run(
         _el(0, "DataNode", "n1"),
-        _edge(1, "e1", [_pt(0, 0.0, 0.0, "n1", (1.0, 0.5), (0.0, 0.0)),
+        _edge(1, "e1", [_pt(0, 0.0, 0.0, "n1", (1.0, 0.0)),
                         _pt(1, 100.0, 0.0)]),
-        _el(2, "Anchor", "an", graph_ref="e1",
-            attachment_position=position),
-        _edge(3, "e2", [_pt(0, 50.0, 50.0, "n1", (0.0, 1.0)),
+        _el(2, "Anchor", "an", x=None, y=None, width=None, height=None,
+            graph_ref="e1", position=0.4),
+        _edge(3, "e2", [_pt(0, 50.0, 50.0, "n1", (-1.0, 1.0)),
                         _pt(1, 40.0, 0.0, "an")]))
+    # the anchor's position as the numpy array the anchor hop hands on
+    # (ROADMAP item 5 pins the defect it keeps)
+    position = got["an"]["attachment_position"]
+    assert isinstance(position, np.ndarray)
+    assert list(position) == [0.4, 0.0]
     e2 = got["e2"]
     assert e2["is_attached_to"] == ["n1", "e1"]
     assert e2["endpoint_first_ref"] == "n1"
@@ -189,8 +209,9 @@ def test_dangling_group_ref_and_graph_ref_do_not_throw():
     got, _ = _run(
         _el(0, "DataNode", "n1", x=3.0, group_ref="nowhere"),
         _el(1, "State", "st", graph_ref="nobody", zorder=None,
-            attachment_relative_offset=np.array([0.5, 0.5])),
-        _edge(2, "e1", [_pt(0, 0.0, 0.0, "nobody", (1.0, 0.5), (0.5, 0.0)),
+            rel_x=2.0, rel_y=2.0),
+        # RelX 2.0: position 1.0, relative offset 0.5
+        _edge(2, "e1", [_pt(0, 0.0, 0.0, "nobody", (2.0, 0.0)),
                         _pt(1, 9.0, 9.0)]))
     assert got["n1"]["x"] == 3.0 and _null(got["n1"]["is_part_of"])
     assert _null(got["st"]["z_index"])
@@ -206,20 +227,176 @@ def test_dangling_group_ref_and_graph_ref_do_not_throw():
 
 
 def test_repeated_graph_id_resolves_to_the_last_element():
-    got = assemble_document(pd.DataFrame([
+    got = _roles(compile_document([
         _el(2, "DataNode", "dup", width=10.0, zorder=7.0),
         _el(0, "DataNode", "dup", width=50.0, zorder=3.0),
+        # RelX 3.0: position 1.0, relative offset 1.0
         _el(3, "State", "st", graph_ref="dup", zorder=None,
-            attachment_relative_offset=np.array([1.0, 0.0])),
-        _edge(4, "e1", [_pt(0, 0.0, 0.0, "dup", (1.0, 0.5), (1.0, 0.0)),
+            rel_x=3.0, rel_y=0.0),
+        _edge(4, "e1", [_pt(0, 0.0, 0.0, "dup", (3.0, 0.0)),
                         _pt(1, 9.0, 9.0)]),
     ]))
-    by_idx = {r["elem_idx"]: r for r in got.to_dict("records")}
+    by_idx = {r["elem_idx"]: r for r in got["nodes"] + got["edges"]}
     # the rows arrive out of order; document order is elem_idx
     assert by_idx[2]["burrs"] == ["st"] and _null(by_idx[0]["burrs"])
     assert by_idx[3]["z_index"] == 7.0
     assert list(by_idx[3]["attachment_offset"]) == [10.0, 0.0]
     assert by_idx[4]["points"][0]["attachment_offset"] == [10.0, 0.0]
+
+
+def _compiled(*rows, **pathway):
+    """Kernel output rows by role, with the document's Pathway row."""
+    last = max(r["elem_idx"] for r in rows)
+    return _roles(compile_document(
+        [*rows, _pathway(last + 1, **pathway)]))
+
+
+def _by_id(rows):
+    return {r["id"]: r for r in rows}
+
+
+def test_data_node_gets_its_class_defaults_and_typing():
+    node = _by_id(_compiled(
+        _el(0, "DataNode", "n1", wp_type="Protein",
+            xref_datasource="Entrez Gene", xref_identifier="1"))["nodes"])
+    n1 = node["n1"]
+    # FillColor White and ShapeType Rectangle are DataNode defaults
+    assert (n1["fill"], n1["draw_as"], n1["stroke"]) == (
+        "#ffffff", "rect", "#000000")
+    assert n1["types"] == ["DataNode", "SingleFreeNode", "Entrez Gene:1",
+                           "Protein"]
+
+
+def test_shape_rotation_and_cellular_component():
+    sh = _by_id(_compiled(
+        _el(0, "Shape", "sh", shape_type="Oval", rotation="Right",
+            attributes={"org.pathvisio.CellularComponentProperty":
+                        "Nucleus"}))["nodes"])["sh"]
+    assert sh["draw_as"] == "Ellipse"
+    assert (sh["rotation"], sh["text_rotation"]) == (90.0, -90.0)
+    assert sh["types"] == ["Shape", "SingleFreeNode", "PhysicalEntity",
+                           "CellularComponent", "Nucleus"]
+
+
+def test_label_decodes_text_and_encodes_href():
+    lb = _by_id(_compiled(
+        _el(0, "Label", "lb", text_label="A &amp; B",
+            href="http://x.org/a b"))["nodes"])["lb"]
+    assert (lb["text_content"], lb["href"]) == (
+        "A & B", "http://x.org/a%20b")
+    assert (lb["fill"], lb["draw_as"]) == ("transparent", "none")
+
+
+def test_state_position_and_typing():
+    st = _by_id(_compiled(
+        _el(0, "DataNode", "n1"),
+        _el(1, "State", "st", graph_ref="n1", rel_x=1.0, rel_y=-1.0,
+            state_type="Phosphorylation"))["nodes"])["st"]
+    assert st["attachment_position"] == [1.0, 0.0]
+    assert _null(st["attachment_relative_offset"])
+    assert (st["kaavio_type"], st["state_type"]) == ("Burr",
+                                                     "Phosphorylation")
+    assert st["types"] == ["State", "Burr"]
+
+
+def test_anchor_size_and_draw_shape():
+    nodes = _by_id(_compiled(
+        _edge(0, "e1", [_pt(0, 0.0, 0.0), _pt(1, 9.0, 0.0)]),
+        _el(1, "Anchor", "a1", graph_ref="e1", position=0.5,
+            anchor_shape="Circle"),
+        _el(2, "Anchor", "a2", graph_ref="e1", position=0.2,
+            graph_id_explicit=False))["nodes"])
+    assert (nodes["a1"]["draw_as"], nodes["a1"]["width"]) == (
+        "Ellipse", 8.0)
+    # an implicit-id anchor of Shape None is drawn as a 4x4 rectangle
+    assert (nodes["a2"]["draw_as"], nodes["a2"]["width"]) == ("rect", 4.0)
+    assert nodes["a1"]["stroke_width"] == 0.0
+
+
+def test_group_style_overrides_and_types():
+    g = _by_id(_compiled(
+        _el(0, "DataNode", "n1", group_ref="g1"),
+        _el(1, "Group", "G1", group_id="g1", style="Complex",
+            fill_color="FF0000"))["nodes"])["G1"]
+    assert (g["draw_as"], g["fill"], g["padding"]) == (
+        "Octagon", "#b4b464", 11.0)
+    assert g["types"] == ["Group", "Complex", "GroupComplex"]
+    assert (g["gpml_group_id"], g["group_id"]) == ("g1", None)
+
+
+def test_interaction_marker_typing():
+    e = _by_id(_compiled(_edge(0, "e1", [
+        _pt(0, 0.0, 0.0), _pt(1, 9.0, 0.0, arrow_head="Arrow")],
+        connector_type="Elbow"))["edges"])["e1"]
+    assert (e["marker_start"], e["marker_end"]) == (None, "Arrow")
+    assert e["types"] == ["Interaction", "Edge", "SBO:0000167",
+                          "SBO:0000393", "SBO:0000394",
+                          "DirectedInteraction"]
+    assert (e["draw_as"], e["fill"]) == ("ElbowLine", "none")
+
+
+def test_graphical_line_keeps_mim_markers_untyped():
+    e = _by_id(_compiled(_edge(0, "l1", [
+        _pt(0, 0.0, 0.0), _pt(1, 9.0, 0.0, arrow_head="mim-conversion")],
+        element="GraphicalLine"))["edges"])["l1"]
+    assert e["marker_end"] == "MimConversion"
+    assert e["types"] == ["GraphicalLine", "Edge"]
+
+
+def test_citations_are_ordered_by_year():
+    pubs = _by_id(_compiled(
+        _el(0, "PublicationXref", None, pub_id="p1", pub_year="2005",
+            pub_title="T &amp; U", pub_db="PubMed", xref_identifier="9"),
+        _el(1, "PublicationXref", None, pub_id="p2", pub_year=" 1999 "),
+        _el(2, "PublicationXref", None, pub_id="p3"))["citations"])
+    assert [pubs[f"publicationXref{p}"]["text_content"]
+            for p in ("p1", "p2", "p3")] == ["2", "1", "3"]
+    p1 = pubs["publicationXref" + "p1"]
+    assert (p1["year"], p1["standard_name"]) == (2005, "T & U")
+    assert p1["types"] == ["PublicationXref", "PubMed:9"]
+
+
+def test_vocabulary_iri_and_pathway_ontology_type():
+    out = _compiled(
+        _el(0, "openControlledVocabulary", None, ontology="Disease",
+            vocab_term="d", xref_identifier="DOID:1"),
+        _el(1, "openControlledVocabulary", None,
+            ontology="Pathway Ontology", xref_identifier="PW:1"),
+        _el(2, "openControlledVocabulary", None, ontology="Unknown",
+            xref_identifier="X:1"))
+    ids = [v["id"] for v in out["vocabularies"]]
+    assert ids == ["http://identifiers.org/doid/DOID:1",
+                   "http://identifiers.org/pw/PW:1", None]
+    assert out["pathways"][0]["types"] == [
+        "Pathway", "http://identifiers.org/pw/PW:1"]
+
+
+def test_pathway_name_split_and_search_link():
+    p = _compiled(_el(0, "Label", "l"), name="Glycolysis (Homo sapiens)",
+                  organism="Homo sapiens")["pathways"][0]
+    assert (p["standard_name"], p["display_name"]) == (
+        "Glycolysis", "Homo sapiens")
+    assert p["is_similar_to"] == (
+        "http://wikipathways.org/index.php/Special:SearchPathways"
+        "?query=Glycolysis%20(Homo%20sapiens)&species=Homo%20sapiens"
+        "&doSearch=1")
+    assert p["height"] == 500.0
+
+
+def test_arrow_boundary_keeps_nan_rotations_and_nulls_other_nans():
+    rows = [_el(0, "Shape", "sh", rotation="NaN"),
+            _el(1, "State", "st", graph_ref="nobody", rel_x=2.0,
+                rel_y=0.0),
+            _pathway(2)]
+    out = assemble_document(pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(MENTIONS_SCHEMA)))
+    assert out.schema == to_arrow_schema(SCHEMA)
+    got = {r["id"]: r for r in out.to_pylist()}
+    # a NaN rotation goes back as NaN, as the Catalyst cast gave it
+    assert math.isnan(got["sh"]["rotation"])
+    assert math.isnan(got["sh"]["text_rotation"])
+    # an offset against a missing parent is null, not NaN
+    assert got["st"]["attachment_offset"] == [None, None]
 
 
 # --- Spark --------------------------------------------------------------

@@ -127,31 +127,6 @@ def test_shapes_and_labels(model):
     assert lb["fill"] == "transparent"
 
 
-def test_encode_uri_matches_js_semantics(spark):
-    """encode_uri == JS encodeURI (ref src/2013a/ValueConverters.ts:
-    308-311): keep A-Za-z0-9;,/?:@&=+$-_.!~*'()# and uppercase-UTF-8
-    percent-encode the rest. Oracle = urllib.parse.quote with exactly
-    that safe set."""
-    from urllib.parse import quote
-
-    from gpml2pvjson_js_spark.functions.converters import encode_uri
-
-    cases = [
-        "http://example.org/more info",
-        "http://example.org/ünïcødé päth/?q=a b&x=1+2#frag",
-        "https://a.b/~user/file(1).txt;v=2,3$@!'*",
-        '100% "sure" <tag> [x] {y} |z| \\w^`',
-        "emoji \U0001F600 and 中文",
-        "",
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "s string")
-    got = {r["s"]: r["e"] for r in
-           df.select("s", encode_uri(F.col("s")).alias("e")).collect()}
-    safe = ";,/?:@&=+$-_.!~*'()#"
-    for c in cases:
-        assert got[c] == quote(c, safe=safe), repr(c)
-
-
 def test_styled_converters(model):
     """P7-P11/P15: colors, broken lines, fonts, rx/ry, double-line,
     entity decoding."""
@@ -194,3 +169,98 @@ def test_elbow_waypoint_synthesis(model):
     # endpoints unchanged
     assert (pts[0]["x"], pts[0]["y"]) == (80.0, 130.0)
     assert (pts[3]["x"], pts[3]["y"]) == (260.0, 80.0)
+
+
+def _arr(element, contains_null=True):
+    return {"type": "array", "elementType": element,
+            "containsNull": contains_null}
+
+
+def _st(*fields):
+    return {"type": "struct", "fields": [
+        {"name": n, "type": t, "nullable": True, "metadata": {}}
+        for n, t in fields]}
+
+
+_STRS, _DOUBLES = _arr("string"), _arr("double")
+_COMMENTS = _arr(_st(("content", "string"), ("source", "string")))
+_KEY = [("url", "string", False), ("frag", "integer", False)]
+_S = "string"
+# the five frames' schemas as the Catalyst build produced them before
+# the document compiler replaced it
+MODEL_SCHEMAS = {
+    "nodes": _KEY + [(n, t, True) for n, t in [
+        ("pathway_id", _S), ("elem_idx", "integer"), ("id", _S),
+        ("gpml_element_name", _S), ("kaavio_type", _S), ("types", _STRS),
+        ("text_content", _S), ("href", _S), ("wp_type", _S),
+        ("state_type", _S), ("x", "double"), ("y", "double"),
+        ("width", "double"), ("height", "double"), ("z_index", "double"),
+        ("draw_as", _S), ("stroke", _S), ("stroke_width", "double"),
+        ("stroke_dasharray", _S), ("stroke_style", _S), ("fill", _S),
+        ("fill_opacity", "double"), ("rotation", "double"),
+        ("text_rotation", "double"), ("font_family", _S),
+        ("font_size", "double"), ("font_weight", _S), ("font_style", _S),
+        ("text_align", _S), ("vertical_align", _S),
+        ("text_decoration", _S), ("padding", "double"), ("rx", "double"),
+        ("ry", "double"), ("xref_datasource", _S), ("xref_identifier", _S),
+        ("cellular_component", _S), ("backpage_head", _S),
+        ("citations", _STRS), ("comments", _COMMENTS),
+        ("is_attached_to", _S), ("attachment_position", _DOUBLES),
+        ("attachment_relative_offset", _DOUBLES),
+        ("attachment_offset", _DOUBLES), ("group_id", _S),
+        ("group_ref", _S), ("is_part_of", _S), ("burrs", _STRS),
+        ("gpml_group_id", _S), ("contains", _STRS)]],
+    "edges": _KEY + [
+        ("id", _S, True), ("pathway_id", _S, True),
+        ("elem_idx", "integer", True), ("gpml_element_name", _S, True),
+        ("kaavio_type", _S, False), ("types", _STRS, True),
+        ("marker_start", _S, True), ("marker_end", _S, True),
+        ("draw_as", _S, True), ("stroke", _S, True),
+        ("stroke_width", "double", True), ("stroke_dasharray", _S, True),
+        ("fill", _S, True), ("z_index", "double", True),
+        ("citations", _STRS, True), ("comments", _COMMENTS, True),
+        ("group_ref", _S, True), ("xref_datasource", _S, True),
+        ("xref_identifier", _S, True), ("is_attached_to", _STRS, True),
+        ("point_targets", _arr(_st(("elem", _S), ("point_ref", _S)),
+                               False), True),
+        ("endpoint_first_ref", _S, True), ("endpoint_last_ref", _S, True),
+        ("points", _arr(_st(
+            ("x", "double"), ("y", "double"), ("is_attached_to", _S),
+            ("attachment_position", _DOUBLES),
+            ("attachment_offset", _DOUBLES), ("orientation", _DOUBLES),
+            ("marker", _S)), False), True),
+        ("is_part_of", _S, True), ("burrs", _STRS, True)],
+    "citations": _KEY + [
+        ("pathway_id", _S, True), ("elem_idx", "integer", True),
+        ("id", _S, True), ("gpml_element_name", _S, False),
+        ("xref_identifier", _S, True), ("xref_datasource", _S, True),
+        ("standard_name", _S, True), ("source", _S, True),
+        ("year", "integer", True), ("authors", _STRS, True),
+        ("types", _STRS, False), ("text_content", _S, False)],
+    "vocabularies": _KEY + [
+        ("pathway_id", _S, True), ("elem_idx", "integer", True),
+        ("ontology", _S, True), ("term", _S, True),
+        ("xref_identifier", _S, True), ("iri_prefix", _S, True),
+        ("id", _S, True), ("types", _arr(_S, False), False),
+        ("gpml_element_name", _S, False)],
+    "pathways": _KEY + [
+        ("pathway_id", _S, True), ("id", _S, True),
+        ("gpml_element_name", _S, False), ("kaavio_type", _S, False),
+        ("name", _S, True), ("standard_name", _S, True),
+        ("display_name", _S, True), ("text_content", _S, False),
+        ("is_similar_to", _S, True), ("organism", _S, True),
+        ("license", _S, True), ("data_source", _S, True),
+        ("data_source_version", _S, True), ("author", _S, True),
+        ("email", _S, True), ("maintainer", _S, True),
+        ("last_modified", _S, True), ("width", "double", True),
+        ("height", "double", False), ("comments", _COMMENTS, True),
+        ("types", _arr(_S, False), True), ("contains", _STRS, False)],
+}
+
+
+def test_model_frame_schemas_are_pinned(model):
+    for name, fields in MODEL_SCHEMAS.items():
+        assert model[name].schema.jsonValue() == {
+            "type": "struct", "fields": [
+                {"name": n, "type": t, "nullable": nullable, "metadata": {}}
+                for n, t, nullable in fields]}, name

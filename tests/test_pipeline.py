@@ -283,3 +283,31 @@ def test_jsonld_bucketize_matches_join_path(spark):
         assert base[k]["pathway_id"] == buck[k]["pathway_id"]
         assert b["pathway"] == g["pathway"]
         assert b["entitiesById"] == g["entitiesById"]
+
+
+def _persistent_rdd_ids(spark) -> set:
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().toList() \
+        .iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next()._1())
+    return ids
+
+
+def test_pipeline_releases_the_rdds_it_persisted(
+        spark, tmp_path_factory, monkeypatch):
+    root = str(tmp_path_factory.mktemp("kgout_release"))
+    p = Pipeline(spark, pages_df(spark, 4, giant_every=0), root,
+                 n_buckets=4)
+    before = _persistent_rdd_ids(spark)
+    staged = set()
+    release = Pipeline._release_stage_blocks
+
+    def spy(self, persisted_before):
+        staged.update(_persistent_rdd_ids(spark) - before)
+        release(self, persisted_before)
+
+    monkeypatch.setattr(Pipeline, "_release_stage_blocks", spy)
+    p.run(resume=False)
+    assert staged  # the run did stage something
+    assert not staged & _persistent_rdd_ids(spark)

@@ -178,8 +178,8 @@ def test_edge_anchored_to_straight_edge_gets_its_points(by_key):
 
 
 @pytest.mark.xfail(strict=True, reason=(
-    "known defect kept for the benchmark pins: Arrow hands the "
-    "anchor's attachment_position over as a numpy array, whose truth "
+    "known defect kept for the benchmark pins: the anchor hop hands "
+    "the anchor's attachment_position on as a numpy array, whose truth "
     "test raises inside hyperedge_start_orientation, so the edge "
     "keeps its explicit points"))
 def test_edge_anchored_with_position_gets_its_points(by_key):
