@@ -51,9 +51,9 @@ def _kg(spark: SparkSession, sf_dir: str, limit: int = 64) -> dict:
             classify_interactions)
         from gpml2pvjson_js_spark.operators.triples import build_triples
         from gpml2pvjson_js_spark.operators.linking import (
-            link_entities, same_as_edges, xref_dictionary)
+            link_entities, xref_dictionary)
         from gpml2pvjson_js_spark.operators.canonicalize import (
-            canonical_map, rewrite_triples)
+            canonicalize_linked, rewrite_triples)
 
         pages = pages_from_documents(spark, sf_dir, limit=limit) \
             .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
@@ -65,7 +65,7 @@ def _kg(spark: SparkSession, sf_dir: str, limit: int = 64) -> dict:
         linked = link_entities(model["nodes"], xd) \
             .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
         canon = rewrite_triples(
-            triples, canonical_map(linked, same_as_edges(linked, xd))
+            triples, canonicalize_linked(linked, xd)
         ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
         _MODEL_CACHE[key] = {
             "pages": pages, "model": model, "interactions": inter,

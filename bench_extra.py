@@ -14,7 +14,7 @@ Modes:
                                        §1.4): times the computation,
                                        not the snapshot write.
 
-Same env contract as bench.py (SPARK_GRAFT_SF_DIR / _CPUS / _SHUFFLE).
+Same env contract as bench.py (SPARK_GRAFT_SF_DIR / _CPUS).
 """
 
 from __future__ import annotations
@@ -35,10 +35,8 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
 
 def _spark():
     from gpml2pvjson_js_spark.session import get_spark
-    return get_spark(
-        app_name="bench_extra", master=f"local[{CPUS}]",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE",
-                                              "256")))
+    return get_spark(app_name="bench_extra", master=f"local[{CPUS}]",
+                     shuffle_partitions=256)
 
 
 def pipeline_reps(k: int) -> None:
@@ -51,7 +49,7 @@ def pipeline_reps(k: int) -> None:
         c0 = B._contention_sample()
         n, wall, stages, _f = B.run_pipeline_measured(
             spark, SF_DIR, f"{tmp}/m{i}")
-        n_lazy, lazy_sec = B._lazy_probe(spark, SF_DIR, 1)
+        n_lazy, lazy_sec = B._lazy_probe(spark, SF_DIR)
         rep = {"rep": i, "kg_pipeline_exec": round(wall, 3),
                "triples_per_sec": round(n / wall, 1),
                "kg_lazy_exec": round(lazy_sec, 3),

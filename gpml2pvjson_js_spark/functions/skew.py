@@ -38,25 +38,11 @@ from pyspark.sql import functions as F
 DEFAULT_SALTS = 16
 
 
-_SALT_COL_CACHE: dict[tuple, Column] = {}
-
-
 def salt_column(cols: list[str | Column], n_salts: int = DEFAULT_SALTS,
                 seed: int = 0) -> Column:
     """Deterministic salt in [0, n_salts) derived from `cols` (use
     fine-grained columns — e.g. the element id inside a giant page —
-    so one hot coarse key spreads). Memoized when `cols` are names
-    (the common case — both in-repo callers pass strings): the
-    xxhash64 over ~40 columns is hundreds of py4j round-trips and the
-    same wide column lists recur on every model build."""
-    if all(isinstance(c, str) for c in cols):
-        key = (tuple(cols), n_salts, seed)
-        col = _SALT_COL_CACHE.get(key)
-        if col is None:
-            col = F.pmod(F.xxhash64(*cols, F.lit(seed)),
-                         F.lit(n_salts)).cast("int")
-            _SALT_COL_CACHE[key] = col
-        return col
+    so one hot coarse key spreads)."""
     return F.pmod(F.xxhash64(*cols, F.lit(seed)), F.lit(n_salts)) \
         .cast("int")
 

@@ -35,10 +35,10 @@ from ..operators.parse import extracted_text, parse_gpml
 from ..operators.triples import TRIPLE_COLS, build_triples
 
 N_BUCKETS_DEFAULT = 32
-
-
-def _write_mult() -> int:
-    return int(os.environ.get("SPARK_GRAFT_WRITE_TASKS_PER_BUCKET", "2"))
+# write tasks per snapshot bucket (see SnapshotStore.commit)
+WRITE_TASKS_PER_BUCKET = 2
+# submitter threads of Pipeline.run's stage pool
+STAGE_WORKERS = 4
 
 
 def with_bucket_cols(df: DataFrame, n_buckets: int, mult: int,
@@ -164,7 +164,7 @@ class SnapshotStore:
             # write at n_buckets tasks. The exchange has at most
             # n_buckets * mult distinct keys, so at corpus scale each
             # write task holds about one bucket.
-            mult = _write_mult()
+            mult = WRITE_TASKS_PER_BUCKET
             keys = (F.col("bucket"),
                     F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
                            F.lit(mult)))
@@ -276,32 +276,27 @@ class Pipeline:
         except Exception:
             return set()
 
-    def run(self, resume: bool = True,
-            max_workers: int | None = None,
-            release_blocks: bool = True) -> dict[str, DataFrame]:
+    def run(self, resume: bool = True) -> dict[str, DataFrame]:
         """Execute the stage DAG CONCURRENTLY: a stage is submitted the
-        moment its dependencies are committed, on a small thread pool.
+        moment its dependencies are committed, on a fixed pool of
+        STAGE_WORKERS threads. When the run ends, committed or not, the
+        blocks it staged are released (_release_stage_blocks).
 
         Why threads on the driver: each stage commit has two serial
         phases — driver-side analysis/optimization/codegen (single
-        JVM thread per plan; the wide entity projection alone costs
-        tens of seconds regardless of cluster size) and cluster
-        execution. Running independent stages on separate submitter
-        threads overlaps stage A's planning with stage B's execution,
-        which is exactly what removed the parallelism-independent
-        serial fraction that capped N->4N scaling efficiency at ~0.5
+        JVM thread per plan) and cluster execution. Running
+        independent stages on separate submitter threads overlaps
+        stage A's planning with stage B's execution, which removed
+        most of the serial, parallelism-independent share of a run
         (BENCH/PLANS.md round-2 final). Spark job submission and
         Catalyst are thread-safe; snapshots land in per-stage dirs.
         """
-        import os as _os
         import threading
         from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
         from concurrent.futures import wait as futures_wait
 
         spark, pages = self.spark, self.pages
         out: dict[str, DataFrame] = {}
-        max_workers = max_workers or int(
-            _os.environ.get("SPARK_GRAFT_PIPELINE_WORKERS", "4"))
 
         # The "mentions" snapshot holds the UNFILTERED parse output
         # (ok + quarantined rows); quarantine and the model derive
@@ -342,7 +337,7 @@ class Pipeline:
                                           out["interactions"],
                                           dedup=False),
                             TRIPLE_COLS, self.store.n_buckets,
-                            _write_mult())),
+                            WRITE_TASKS_PER_BUCKET)),
             "linked": (["nodes"], lambda: link_entities(out["nodes"],
                                                         xd)),
             # bipartite fast path: the iterative CC runs only on the
@@ -362,7 +357,8 @@ class Pipeline:
                 "gpml2pvjson_js_spark.operators.export",
                 fromlist=["jsonld_documents"]).jsonld_documents(
                 {k: out[k] for k in MODEL5},
-                bucketize=(self.store.n_buckets, _write_mult()))),
+                bucketize=(self.store.n_buckets,
+                           WRITE_TASKS_PER_BUCKET))),
             # per-url extracted text (the byte-identical invariant)
             "text": ([], lambda: extracted_text(pages)),
         }
@@ -382,10 +378,9 @@ class Pipeline:
 
         done: set[str] = set()
         futures: dict[str, object] = {}
-        persisted_before = self._persisted_ids() if release_blocks \
-            else set()
+        persisted_before = self._persisted_ids()
         try:
-            with ThreadPoolExecutor(max_workers=max_workers) as ex:
+            with ThreadPoolExecutor(max_workers=STAGE_WORKERS) as ex:
                 while len(done) < len(builds):
                     eligible = sorted(
                         (name for name, (deps, _) in builds.items()
@@ -411,8 +406,7 @@ class Pipeline:
                             done.add(name)
                             del futures[name]
         finally:
-            if release_blocks:
-                self._release_stage_blocks(persisted_before)
+            self._release_stage_blocks(persisted_before)
         return out
 
     def metrics(self) -> dict:

@@ -81,9 +81,7 @@ def get_spark(
     # ~8 tasks per core: small-enough shuffle partitions that a task's
     # working set fits its share of execution memory (measured: 64
     # partitions at 32 cores spilled and ran 2x slower than 256), with
-    # AQE coalescing shrinking them back when data is small. The same
-    # setting works across cluster sizes, which is what makes the
-    # N -> 4N scaling comparison honest.
+    # AQE coalescing shrinking them back when data is small.
     shuffle_partitions = shuffle_partitions or max(8 * parallelism, 64)
 
     builder = (
@@ -109,23 +107,8 @@ def get_spark(
         # data (anti-scaling: N executors pay it once, 4N pay it 4x).
         # At 100 TB no corpus-derived frame is ever broadcastable, so
         # the honest policy is assert-don't-guess.
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_GRAFT_AUTOBROADCAST", "-1"))
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_GRAFT_AUTOBROADCAST", "-1"))
-        # Production defaults match Spark's (128m / 4m): at 100 TB a
-        # 16m packing size would mean ~6M scan partitions per table.
-        # The REPLICATED bench corpora are the special case — they
-        # compress ~1000x in parquet, so byte-based packing at 128 MB
-        # collapses a 64-file stage into ONE map task (a single thread
-        # decoding tens of millions of rows). The scaling bench
-        # therefore sets SPARK_GRAFT_MAX_PARTITION_BYTES=16m in ITS
-        # environment only (bench.py scaling path), keeping the
-        # session factory honest for real data.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-        .config("spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "4m"))
+        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,6 +1,7 @@
-"""The scaling-leg noise protocol (bench.py): legs are min-of-k with
-contention-flagged retries, because identical back-to-back fleet runs
-were measured spreading 2.2x from external hypervisor/disk tenants
+"""bench.py's contention window: hypervisor steal and shared-disk
+busy time sampled around the measured run, and the self-flag that
+marks a contended window, because identical back-to-back runs were
+measured spreading 2.2x from external hypervisor/disk tenants
 (BENCH/PLANS.md round 5). Pure-python — no SparkSession."""
 
 import os
@@ -10,52 +11,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-
-
-def _rep(t: float, steal: float = 0.0, busy: float = 0.0) -> dict:
-    return {"queries": {"kg_pipeline_exec": t},
-            "steal_pct": steal, "disk_busy_pct": busy}
-
-
-def test_leg_needs_min_reps():
-    assert not bench._leg_reps_converged([_rep(100.0)], 2, 4)
-
-
-def test_leg_converges_on_two_agreeing_clean_reps():
-    assert bench._leg_reps_converged([_rep(100.0), _rep(110.0)], 2, 4)
-
-
-def test_leg_retries_on_disagreement():
-    # 2.2x spread: one rep hit contention the telemetry missed —
-    # the disagreement itself forces a third rep
-    assert not bench._leg_reps_converged(
-        [_rep(112.7), _rep(247.4)], 2, 4)
-
-
-def test_leg_retries_when_fastest_rep_was_contended():
-    # both agree but the fastest window saw hypervisor steal: the
-    # true uncontended time could be lower still
-    reps = [_rep(100.0, steal=3.0), _rep(108.0)]
-    assert not bench._leg_reps_converged(reps, 2, 4)
-    # clean fastest + agreement -> done
-    reps = [_rep(100.0), _rep(108.0, steal=3.0)]
-    assert bench._leg_reps_converged(reps, 2, 4)
-
-
-def test_leg_always_stops_at_max_reps():
-    reps = [_rep(100.0, steal=9.0), _rep(240.0), _rep(180.0),
-            _rep(210.0)]
-    assert bench._leg_reps_converged(reps, 2, 4)
-
-
-def test_leg_flags_thresholds():
-    assert bench._leg_flags(_rep(1.0)) == []
-    assert bench._leg_flags(_rep(1.0, steal=1.6)) == ["steal 1.6%"]
-    assert bench._leg_flags(_rep(1.0, busy=20.0)) == [
-        "disk_busy 20.0%"]
-    # a rep from a kernel where /proc sampling failed is unflagged
-    assert bench._leg_flags({"queries": {"kg_pipeline_exec": 1.0}}) \
-        == []
 
 
 def test_contention_pct_window_math():
@@ -73,6 +28,13 @@ def test_flag_window_marks_contaminated_in_place():
     bench._flag_window(dirty)
     assert dirty["contaminated"] is True
     assert dirty["contamination"] == ["steal 13.76%"]
+    # thresholds: steal > 1.5% of CPU, disk busy > 15% of wall
+    busy = {"steal_pct": 1.5, "disk_busy_pct": 20.0}
+    bench._flag_window(busy)
+    assert busy["contamination"] == ["disk_busy 20.0%"]
+    both = {"steal_pct": 1.6, "disk_busy_pct": 15.1}
+    bench._flag_window(both)
+    assert both["contamination"] == ["steal 1.6%", "disk_busy 15.1%"]
     clean = {"steal_pct": 0.05, "disk_busy_pct": 0.9}
     bench._flag_window(clean)
     # a clean window must NOT add the key at all — `contaminated`

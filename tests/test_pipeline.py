@@ -210,7 +210,7 @@ def test_commit_without_aqe_uses_explicit_write_task_count(
     so SnapshotStore.commit asks for n_buckets * mult partitions; with
     AQE on it leaves the count to AQE."""
     from gpml2pvjson_js_spark.plans.pipeline import (
-        SnapshotStore, _write_mult)
+        SnapshotStore, WRITE_TASKS_PER_BUCKET)
 
     counts = []
     cls = type(spark.range(0))
@@ -233,7 +233,7 @@ def test_commit_without_aqe_uses_explicit_write_task_count(
         store.commit(df, "aqe")
     finally:
         spark.conf.set(key, before)
-    assert counts == [3 * _write_mult(), None]
+    assert counts == [3 * WRITE_TASKS_PER_BUCKET, None]
     assert store.read(spark, "no_aqe").count() == 20
 
 

@@ -30,3 +30,30 @@ def test_driver_jvm_gets_the_jit_policy_and_utc(spark):
             "-XX:Tier4CompileThreshold=300000",
             "-XX:Tier4BackEdgeThreshold=800000",
             "-Duser.timezone=UTC"} <= args
+
+
+def test_package_reads_only_the_deployment_env_names():
+    """The package's environment surface is the three deployment
+    settings: host CPUs, driver heap and a generic conf passthrough."""
+    import glob
+    import re
+
+    pkg = os.path.dirname(session.__file__)
+    names = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            names |= set(re.findall(r"SPARK_GRAFT_([A-Z0-9_]+)", f.read()))
+    assert names == {"CPUS", "DRIVER_MEM", "CONF"}
+
+
+def test_session_broadcast_and_scan_packing_settings(spark):
+    """Auto-broadcast is off at both decision points, and scan packing
+    runs at Spark's own defaults (128 MiB per partition, 4 MiB open
+    cost), read back as the session's effective SQLConf values."""
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    entries = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    assert sql_conf.autoBroadcastJoinThreshold() == -1
+    assert sql_conf.getConf(
+        entries.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD()).get() == -1
+    assert sql_conf.filesMaxPartitionBytes() == 128 * 2**20
+    assert sql_conf.filesOpenCostInBytes() == 4 * 2**20

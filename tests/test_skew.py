@@ -83,11 +83,3 @@ def test_salt_column_range(spark, hot_df):
     vals = {r[0] for r in hot_df
             .select(salt_column(["row_id"], 8)).distinct().collect()}
     assert vals <= set(range(8)) and len(vals) == 8
-
-
-def test_salt_column_memoized_for_names_only():
-    assert salt_column(["x", "y"], 8) is salt_column(["x", "y"], 8)
-    assert salt_column(["x", "y"], 8) is not salt_column(["x"], 8)
-    assert salt_column(["x"], 8) is not salt_column(["x"], 4)
-    # Column inputs stay un-cached (identity differs) but still work
-    assert salt_column([F.col("x")], 8) is not salt_column([F.col("x")], 8)
