@@ -58,9 +58,8 @@ def _kg(spark: SparkSession, sf_dir: str, limit: int = 64) -> dict:
         pages = pages_from_documents(spark, sf_dir, limit=limit) \
             .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
         model = build_document_model(spark, pages)
-        inter = classify_interactions(model["edges"], model["nodes"]) \
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        triples = build_triples(model, inter).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        inter = classify_interactions(model)
+        triples = build_triples(model)
         xd = xref_dictionary(spark)
         linked = link_entities(model["nodes"], xd) \
             .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)

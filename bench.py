@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -181,20 +183,25 @@ def _lazy_probe(spark, sf_dir: str) -> tuple[int, float]:
     from gpml2pvjson_js_spark.corpus import pages_from_documents
     import gpml2pvjson_js_spark.operators.assemble as A
     from gpml2pvjson_js_spark.operators.triples import build_triples
-    from gpml2pvjson_js_spark.operators.interactions import (
-        classify_interactions)
     model = A.build_document_model(spark, pages_from_documents(spark, sf_dir))
-    lazy_triples = build_triples(
-        model, classify_interactions(model["edges"], model["nodes"]))
+    lazy_triples = build_triples(model)
     t0 = time.time()
     n_lazy = lazy_triples.count()
     return n_lazy, time.time() - t0
 
 
 def main() -> dict:
+    tmp = tempfile.mkdtemp(prefix="kgbench_")
+    try:
+        return _measure(tmp)
+    finally:
+        # the warmup and measured snapshot stores
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _measure(tmp: str) -> dict:
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, repo_dir)
-    import tempfile
     from gpml2pvjson_js_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -206,7 +213,6 @@ def main() -> dict:
     spark = get_spark(app_name="bench", master=f"local[{CPUS}]",
                       shuffle_partitions=256)
     queries: dict[str, float] = {}
-    tmp = tempfile.mkdtemp(prefix="kgbench_")
 
     # warmup: small corpus through the same plans — compiles codegen,
     # spins up python workers, JITs the hot paths

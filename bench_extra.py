@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -40,9 +41,17 @@ def _spark():
 
 
 def pipeline_reps(k: int) -> None:
+    tmp = tempfile.mkdtemp(prefix="kgbx_")
+    try:
+        _pipeline_reps(k, tmp)
+    finally:
+        # the warmup and per-rep snapshot stores
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _pipeline_reps(k: int, tmp: str) -> None:
     import bench as B
     spark = _spark()
-    tmp = tempfile.mkdtemp(prefix="kgbx_")
     B.run_pipeline_measured(spark, "/root/testdata/sf0.001",
                             f"{tmp}/warmup")
     for i in range(k):
@@ -102,17 +111,16 @@ def stage_noop(name: str, k: int) -> None:
         model = build_document_model(spark, pages)
         if name in model:
             return model[name]
-        inter = classify_interactions(model["edges"], model["nodes"])
         if name == "interactions":
-            return inter
+            return classify_interactions(model)
         if name == "triples":
-            return build_triples(model, inter, dedup=False)
+            return build_triples(model)
         xd = xref_dictionary(spark)
         linked = link_entities(model["nodes"], xd)
         if name == "linked":
             return linked
-        triples = build_triples(model, inter, dedup=False)
-        return rewrite_triples(triples, canonicalize_linked(linked, xd))
+        return rewrite_triples(build_triples(model),
+                               canonicalize_linked(linked, xd))
 
     frame("/root/testdata/sf0.001").write.format("noop") \
         .mode("overwrite").save()  # warmup

@@ -14,8 +14,8 @@ expression it replaced, not those of a Python library:
   ANSI-mode casts (the Spark 4 default) accept, and raise where they
   raise.
 
-`_map_literal` builds a literal map column for the Catalyst operators
-that still look up dialect tables (interactions, linking).
+`_map_literal` builds a literal map column for the Catalyst operator
+that still looks up a dialect table (linking).
 """
 
 from __future__ import annotations

@@ -507,7 +507,7 @@ def spark_triples_by_fixture(spark, pages) -> dict:
     from .operators.triples import build_triples
 
     model = build_document_model(spark, pages)
-    triples = build_triples(model)
+    triples = build_triples(model, with_interactions=False)
     norm = triples.select(
         F.element_at(F.split("url", "/"), -1).alias("fixture"),
         F.when(F.col("subj") == F.col("pathway_id"),

@@ -1,5 +1,7 @@
 """Assemble the full document model: pages -> {nodes, edges, citations,
-vocabularies, pathways, quarantine}.
+vocabularies, pathways, quarantine} and the document compiler's staged
+output, of which the interactions, triples and JSON-LD documents are
+projections.
 
 This is the Spark-first replacement for the reference's one-document
 compiler (src/Processor.ts:88-121) and its dataflow scheduler +
@@ -9,11 +11,12 @@ outputs need (state->parent, group->members, edge->target,
 anchor->edge, burr->host) stays inside one (url, frag). So one grouped
 pass over the ok mention rows (document.py) converts each document's
 elements and resolves its references in memory, and emits the rows of
-all five model frames; each frame is a projection of that one staged
-output. Spark keeps the grouping, the quarantine filter and everything
-that crosses documents. A generic iterative topo-level operator is
-still provided in plans/topo.py for hyperedge-depth diagnostics and
-cycle quarantine.
+all five model frames, the document's interactions, triples and JSON-LD
+text; each is a projection of that one staged output. Spark keeps the
+grouping, the quarantine filter and everything that crosses documents
+(linking, canonicalization, the triple rewrite). A generic iterative
+topo-level operator is still provided in plans/topo.py for
+hyperedge-depth diagnostics and cycle quarantine.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import document as D
+from . import frames
 from .parse import parse_gpml
 
 
@@ -40,12 +44,13 @@ def _stage(df: DataFrame) -> DataFrame:
 
 def build_document_model(spark: SparkSession, pages: DataFrame,
                          mentions: DataFrame | None = None) -> dict:
-    """The model frames of `pages` (or of their parsed `mentions`).
+    """The model frames of `pages` (or of their parsed `mentions`), and
+    under `compiled` the document compiler's staged output.
 
-    The document compiler's output is staged once: the five frames
-    are projections of it, so without the stage each consumer would
-    re-run the Python pass, and a lazy consumer such as the 20-branch
-    triples union would re-inline its plan."""
+    The compiler's output is staged once: the five frames here, and
+    the interactions, triples and documents (`classify_interactions`,
+    `build_triples`, `jsonld_documents`), are projections of it, so
+    without the stage each consumer would re-run the Python pass."""
     if mentions is None:
         mentions = parse_gpml(pages)
 
@@ -55,5 +60,7 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
     return {
         "mentions": ok,
         "quarantine": quarantine,
-        **{role: D.select_frame(compiled, role) for role in D.FRAMES},
+        **{role: frames.select_frame(compiled, role)
+           for role in frames.MODEL_FRAMES},
+        "compiled": compiled,
     }

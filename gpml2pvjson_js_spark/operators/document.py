@@ -1,12 +1,16 @@
 """The document compiler: one document's mention rows -> the finished
-rows of the five model frames, in one grouped-map pass.
+rows of the five model frames, its BioPAX interactions, its triples and
+its JSON-LD document, in one grouped-map pass.
 
 The reference is a one-document compiler: it turns each GPML element
-into its typed pvjson entity and resolves the document's references in
-one in-memory pass (src/Processor.ts:88-121,373-560,
-src/2013a/toPvjson.ts:470-710). Every reference is scoped to its
-(url, frag), so one `groupBy(url, frag).applyInArrow` call hands each
-document's ok mention rows to `assemble_document`, which
+into its typed pvjson entity, resolves the document's references in
+one in-memory pass and emits one `{pathway, entitiesById}` per
+document (src/Processor.ts:88-121,373-560,
+src/2013a/toPvjson.ts:470-710); its BioPAX classification reads only
+that document too (src/pvjsonToBioPAX/Interaction.ts:94-276). Every
+reference is scoped to its (url, frag), so one
+`groupBy(url, frag).applyInArrow` call hands each document's ok
+mention rows to `assemble_document`, which
 
 1. layers the class defaults and the group-style overrides
    (P16, ref: src/2013a/toPvjson.ts:114-156, src/group.ts:153-181);
@@ -28,23 +32,25 @@ document's ok mention rows to `assemble_document`, which
      ref: src/2013a/toPvjson.ts:800-860);
    - burrs on their hosts, group and pathway `contains`, each sorted
      by zIndex with nulls first and ties by id (J8/O1,
-     ref: src/2013a/toPvjson.ts:663-667,680-710,791-798).
+     ref: src/2013a/toPvjson.ts:663-667,680-710,791-798);
+4. from the model rows as their frames commit them (`_committed`):
+   classifies the interactions (interactions.py), flattens the
+   distinct triples (triples.py) and writes the JSON-LD document
+   (export.py).
 
 A GraphId (or GroupId) that repeats inside one document resolves to the
 last element carrying it in document order, like the reference's
 `entitiesById` overwrite.
 
-The output is ONE frame (SCHEMA): a `role` column naming the model
-frame a row belongs to, and the union of the five frames' columns.
-`select_frame` projects one role back to its frame's exact schema
-(FRAMES). The values are those the earlier Catalyst projections
-produced, nulls and NaNs included; the string casts follow Spark's
-ANSI mode, so input that made those projections raise makes the
-kernel raise.
+The output is ONE frame (frames.SCHEMA) with a `role` column; each
+stage is a `frames.select_frame` projection of it. The model values
+are those the earlier Catalyst projections produced, nulls and NaNs
+included; the string casts follow Spark's ANSI mode, so input that
+made those projections raise makes the kernel raise.
 
 The rows cross the Arrow boundary as plain Python values, without
 pandas: most documents are small, and building a pandas frame of some
-80 columns per document cost more than compiling it.
+90 columns per document cost more than compiling it.
 
 Bound: the kernel sees a whole document at once, so one document's
 mention rows must fit in one Python worker's memory; a page with tens
@@ -59,12 +65,15 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import edges as E
 from . import entities as N
+from . import export as X
+from . import frames
+from . import interactions as I
+from . import triples as TR
 from . import waypoints as W
 from .entities import DOC_KEY
 from ..functions import converters as C
@@ -79,117 +88,14 @@ _BURRS = ("State", "Anchor")
 _NODE_NAMES = (*_NODE_LIKE, "Anchor", "Group")
 _ELEMENTS = (*_NODE_NAMES, *E.EDGE_NAMES)
 
-# --- the five frames' schemas ------------------------------------------
-
-_S, _D, _I = T.StringType(), T.DoubleType(), T.IntegerType()
-_STRS, _DOUBLES = T.ArrayType(_S), T.ArrayType(_D)
-
-
-def _struct(*fields, required=()) -> T.StructType:
-    return T.StructType([T.StructField(n, t, n not in required)
-                         for n, t in fields])
-
-
-_COMMENTS = T.ArrayType(_struct(("content", _S), ("source", _S)))
-_POINT = _struct(("x", _D), ("y", _D), ("is_attached_to", _S),
-                 ("attachment_position", _DOUBLES),
-                 ("attachment_offset", _DOUBLES),
-                 ("orientation", _DOUBLES), ("marker", _S))
-_KEY = (("url", _S), ("frag", _I))
-
-NODES = _struct(
-    *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("id", _S),
-    ("gpml_element_name", _S), ("kaavio_type", _S), ("types", _STRS),
-    ("text_content", _S), ("href", _S), ("wp_type", _S),
-    ("state_type", _S), ("x", _D), ("y", _D), ("width", _D),
-    ("height", _D), ("z_index", _D), ("draw_as", _S), ("stroke", _S),
-    ("stroke_width", _D), ("stroke_dasharray", _S), ("stroke_style", _S),
-    ("fill", _S), ("fill_opacity", _D), ("rotation", _D),
-    ("text_rotation", _D), ("font_family", _S), ("font_size", _D),
-    ("font_weight", _S), ("font_style", _S), ("text_align", _S),
-    ("vertical_align", _S), ("text_decoration", _S), ("padding", _D),
-    ("rx", _D), ("ry", _D), ("xref_datasource", _S),
-    ("xref_identifier", _S), ("cellular_component", _S),
-    ("backpage_head", _S), ("citations", _STRS), ("comments", _COMMENTS),
-    ("is_attached_to", _S), ("attachment_position", _DOUBLES),
-    ("attachment_relative_offset", _DOUBLES),
-    ("attachment_offset", _DOUBLES), ("group_id", _S), ("group_ref", _S),
-    ("is_part_of", _S), ("burrs", _STRS), ("gpml_group_id", _S),
-    ("contains", _STRS),
-    required=("url", "frag"))
-EDGES = _struct(
-    *_KEY, ("id", _S), ("pathway_id", _S), ("elem_idx", _I),
-    ("gpml_element_name", _S), ("kaavio_type", _S), ("types", _STRS),
-    ("marker_start", _S), ("marker_end", _S), ("draw_as", _S),
-    ("stroke", _S), ("stroke_width", _D), ("stroke_dasharray", _S),
-    ("fill", _S), ("z_index", _D), ("citations", _STRS),
-    ("comments", _COMMENTS), ("group_ref", _S), ("xref_datasource", _S),
-    ("xref_identifier", _S), ("is_attached_to", _STRS),
-    ("point_targets", T.ArrayType(
-        _struct(("elem", _S), ("point_ref", _S)), containsNull=False)),
-    ("endpoint_first_ref", _S), ("endpoint_last_ref", _S),
-    ("points", T.ArrayType(_POINT, containsNull=False)),
-    ("is_part_of", _S), ("burrs", _STRS),
-    required=("url", "frag", "kaavio_type"))
-CITATIONS = _struct(
-    *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("id", _S),
-    ("gpml_element_name", _S), ("xref_identifier", _S),
-    ("xref_datasource", _S), ("standard_name", _S), ("source", _S),
-    ("year", _I), ("authors", _STRS), ("types", _STRS),
-    ("text_content", _S),
-    required=("url", "frag", "gpml_element_name", "types",
-              "text_content"))
-VOCABULARIES = _struct(
-    *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("ontology", _S),
-    ("term", _S), ("xref_identifier", _S), ("iri_prefix", _S),
-    ("id", _S), ("types", T.ArrayType(_S, containsNull=False)),
-    ("gpml_element_name", _S),
-    required=("url", "frag", "types", "gpml_element_name"))
-PATHWAYS = _struct(
-    *_KEY, ("pathway_id", _S), ("id", _S), ("gpml_element_name", _S),
-    ("kaavio_type", _S), ("name", _S), ("standard_name", _S),
-    ("display_name", _S), ("text_content", _S), ("is_similar_to", _S),
-    ("organism", _S), ("license", _S), ("data_source", _S),
-    ("data_source_version", _S), ("author", _S), ("email", _S),
-    ("maintainer", _S), ("last_modified", _S), ("width", _D),
-    ("height", _D), ("comments", _COMMENTS),
-    ("types", T.ArrayType(_S, containsNull=False)), ("contains", _STRS),
-    required=("url", "frag", "gpml_element_name", "kaavio_type",
-              "text_content", "height", "contains"))
-FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
-          "vocabularies": VOCABULARIES, "pathways": PATHWAYS}
-
-
-def _union_schema() -> tuple[T.StructType, dict]:
-    """The kernel's output schema and, per (role, field), the column
-    that carries it. A field shares a column with every other frame's
-    field of the same name and type; a field whose type differs gets
-    its own column, `{name}_{role}`. Every column but the key and the
-    role is nullable; `select_frame` restores each frame's
-    nullability."""
-    fields = [T.StructField("url", _S, False),
-              T.StructField("frag", _I, False),
-              T.StructField("role", _S, False)]
-    names = {(f.name, f.dataType.json()): f.name for f in fields}
-    column_of = {}
-    for role, schema in FRAMES.items():
-        for f in schema.fields:
-            key = f.name, f.dataType.json()
-            if key not in names:
-                names[key] = f.name if f.name not in {g.name for g in fields} \
-                    else f"{f.name}_{role}"
-                fields.append(T.StructField(names[key], f.dataType))
-            column_of[role, f.name] = names[key]
-    return T.StructType(fields), column_of
-
-
-SCHEMA, COLUMN_OF = _union_schema()
+SCHEMA = frames.SCHEMA
 _ARROW_SCHEMA = to_arrow_schema(SCHEMA)
+_FIELD_OF = {(role, column): name
+             for (role, name), column in frames.COLUMN_OF.items()}
 # the only doubles the converters can make NaN (a rotation of "NaN" or
 # "Infinity"), which Spark's cast makes NaN too; everywhere else NaN
-# only stands for null arithmetic (`_num`) and goes back as null
-_NAN_COLUMNS = ("rotation", "text_rotation")
-_STRUCT = pa.struct([f for f in _ARROW_SCHEMA if f.name not in _NAN_COLUMNS])
+# only stands for null arithmetic (`_num`) and is committed as null
+_NAN_FIELDS = ("rotation", "text_rotation")
 
 
 def resolve_documents(ok: DataFrame) -> DataFrame:
@@ -198,25 +104,55 @@ def resolve_documents(ok: DataFrame) -> DataFrame:
     return ok.groupBy(*DOC_KEY).applyInArrow(assemble_document, SCHEMA)
 
 
-def _non_null(col, dtype: T.DataType):
-    """`col` as a non-nullable column of the same type: it holds no
-    null for its role, so the coalesce only restores the frame's
-    declared nullability."""
-    if isinstance(dtype, T.ArrayType):
-        return F.coalesce(col, F.array())
-    return F.coalesce(col, F.lit(0.0 if dtype == _D else ""))
+def _has_nan(v, t: T.DataType) -> bool:
+    if v is None:
+        return False
+    if isinstance(t, T.DoubleType):
+        return v != v
+    if isinstance(t, T.ArrayType):
+        return any(_has_nan(x, t.elementType) for x in v)
+    if isinstance(t, T.StructType):
+        return any(_has_nan(v.get(f.name), f.dataType) for f in t.fields)
+    return False
 
 
-def select_frame(out: DataFrame, role: str) -> DataFrame:
-    """One model frame (FRAMES[role]) out of the kernel's output."""
-    cols = []
-    for f in FRAMES[role].fields:
-        col = F.col(COLUMN_OF.get((role, f.name), f.name))
-        if f.nullable or f.name in DOC_KEY:
-            cols.append(col.alias(f.name))
-        else:
-            cols.append(_non_null(col, f.dataType).alias(f.name))
-    return out.filter(F.col("role") == role).select(*cols)
+def _nan_to_null(v, t: T.DataType):
+    """v with every NaN null, as the Arrow conversion (`from_pandas`)
+    commits it."""
+    if v is None:
+        return None
+    if isinstance(t, T.DoubleType):
+        return None if v != v else v
+    if isinstance(t, T.ArrayType):
+        return [_nan_to_null(x, t.elementType) for x in v]
+    if isinstance(t, T.StructType):
+        return {f.name: _nan_to_null(v.get(f.name), f.dataType)
+                for f in t.fields}
+    return v
+
+
+# per model frame: each field, and the value a null in it commits as
+# (a non-nullable field's `select_frame` coalesce)
+_COMMIT_PLANS = {
+    role: [(f, None if f.nullable else [] if isinstance(f.dataType,
+                                                          T.ArrayType)
+            else frames.ZERO[f.dataType])
+           for f in frames.FRAMES[role].fields]
+    for role in frames.MODEL_FRAMES}
+
+
+def _committed(role: str, row: dict) -> dict:
+    """A model row as its frame commits it, which is what the
+    interactions, the triples and the JSON-LD read: NaN is null (but
+    in the rotations), and a null in a non-nullable field is what
+    `select_frame` coalesces it to."""
+    out = {}
+    for f, default in _COMMIT_PLANS[role]:
+        v = row.get(f.name)
+        if f.name not in _NAN_FIELDS and _has_nan(v, f.dataType):
+            v = _nan_to_null(v, f.dataType)
+        out[f.name] = default if v is None else v
+    return out
 
 
 # --- reference resolution ----------------------------------------------
@@ -441,23 +377,29 @@ def _records(table: pa.Table) -> list[dict]:
     return [dict(zip(table.column_names, row)) for row in zip(*columns)]
 
 
-def _table(rows: list[tuple[str, dict]]) -> pa.Table:
-    """(role, row) pairs -> the kernel's output table (SCHEMA), in one
-    struct conversion that turns NaN into null (`from_pandas`), except
-    in the columns that keep NaN."""
-    recs, nan_columns = [], {c: [] for c in _NAN_COLUMNS}
-    for role, row in rows:
-        rec = {COLUMN_OF[role, name]: v for name, v in row.items()}
-        rec["role"] = role
-        for c, values in nan_columns.items():
-            values.append(rec.pop(c, None))
-        recs.append(rec)
-    batch = pa.RecordBatch.from_struct_array(
-        pa.array(recs, type=_STRUCT, from_pandas=True))
-    return pa.Table.from_arrays(
-        [pa.array(nan_columns[f.name], type=f.type)
-         if f.name in nan_columns else batch.column(f.name)
-         for f in _ARROW_SCHEMA], schema=_ARROW_SCHEMA)
+def _table(rows: dict[str, list[dict]]) -> pa.Table:
+    """Rows by role -> the kernel's output table (SCHEMA): each role's
+    rows fill its frame's columns and leave the others null. Column by
+    column, a role costs in proportion to its own fields: one struct
+    conversion of every row at the union's width took about 15 us a
+    row (4-vCPU host), and a document has several triples per
+    entity."""
+    tables = []
+    for role, rs in rows.items():
+        if not rs:
+            continue
+        columns = []
+        for f in _ARROW_SCHEMA:
+            name = _FIELD_OF.get((role, f.name))
+            if f.name == "role":
+                columns.append(pa.array([role] * len(rs), f.type))
+            elif name is None:
+                columns.append(pa.nulls(len(rs), f.type))
+            else:
+                columns.append(pa.array([r[name] for r in rs], f.type))
+        tables.append(pa.Table.from_arrays(columns, schema=_ARROW_SCHEMA))
+    return pa.concat_tables(tables) if tables \
+        else _ARROW_SCHEMA.empty_table()
 
 
 def _key_fields(r: dict, *names) -> dict:
@@ -466,7 +408,7 @@ def _key_fields(r: dict, *names) -> dict:
 
 def assemble_document(table: pa.Table) -> pa.Table:
     """One document's ok mention rows (MENTIONS_SCHEMA, as Arrow hands
-    them over) -> its rows of the five model frames (SCHEMA)."""
+    them over) -> its rows of every role (SCHEMA)."""
     recs = _records(table)
     for r in recs:
         if r["attributes"] is not None:  # a map arrives as pairs
@@ -474,9 +416,9 @@ def assemble_document(table: pa.Table) -> pa.Table:
     return _table(compile_document(recs))
 
 
-def compile_document(recs: list[dict]) -> list[tuple[str, dict]]:
-    """One document's ok mention rows, as dicts -> (role, row) pairs,
-    each row keyed by its frame's field names."""
+def compile_document(recs: list[dict]) -> dict[str, list[dict]]:
+    """One document's ok mention rows, as dicts -> its rows by role
+    (frames.FRAMES), each row keyed by its frame's field names."""
     recs = sorted(recs, key=lambda r: r["elem_idx"])
     by_name = defaultdict(list)
     for r in recs:
@@ -500,24 +442,23 @@ def compile_document(recs: list[dict]) -> list[tuple[str, dict]]:
         els.append(e)
     kept, contains = _resolve(els)
 
-    rows = []
+    rows = {role: [] for role in frames.FRAMES}
     for e in els:
-        name = e["gpml_element_name"]
-        if name in E.EDGE_NAMES:
-            rows.append(("edges", {f: e.get(f) for f in EDGES.names}))
-        elif name != "Group" or e["elem_idx"] in kept:
-            rows.append(("nodes", {f: e.get(f) for f in NODES.names}))
+        if e["gpml_element_name"] in E.EDGE_NAMES:
+            rows["edges"].append(_committed("edges", e))
+        elif e["gpml_element_name"] != "Group" or e["elem_idx"] in kept:
+            rows["nodes"].append(_committed("nodes", e))
     for r, row in zip(by_name["PublicationXref"],
                       N.citation_rows(by_name["PublicationXref"])):
         row.update(_key_fields(r, "url", "frag", "pathway_id", "elem_idx",
                                "xref_identifier"))
-        rows.append(("citations", row))
+        rows["citations"].append(_committed("citations", row))
     po_terms = []
     for r in by_name["openControlledVocabulary"]:
         row = N.vocabulary_row(r)
         row.update(_key_fields(r, "url", "frag", "pathway_id", "elem_idx",
                                "ontology", "xref_identifier"))
-        rows.append(("vocabularies", row))
+        rows["vocabularies"].append(_committed("vocabularies", row))
         if r["ontology"] == "Pathway Ontology" and row["id"] is not None:
             po_terms.append(row["id"])
     for r in by_name["Pathway"]:
@@ -525,5 +466,10 @@ def compile_document(recs: list[dict]) -> list[tuple[str, dict]]:
         row.update(_key_fields(r, "url", "frag", "pathway_id", "organism",
                                "license", "last_modified"),
                    comments=r["comments"])
-        rows.append(("pathways", row))
+        rows["pathways"].append(_committed("pathways", row))
+
+    rows["interactions"] = I.classify(rows["nodes"], rows["edges"])
+    rows["model_triples"], rows["interaction_triples"] = \
+        TR.document_triples(rows)
+    rows["documents"] = X.document_rows(rows)
     return rows

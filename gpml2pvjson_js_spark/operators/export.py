@@ -1,20 +1,32 @@
-"""JSON-LD document export (JS1/JS2): reassemble the per-page
-`{pathway, entitiesById}` document the reference emits as NDJSON
+"""JSON-LD document export (JS1/JS2): the per-page `{pathway,
+entitiesById}` document the reference emits as NDJSON
 (ref: src/Processor.ts:88-121, bin/gpml2pvjson:104-120,
 src/2013a/toPvjson.ts:281-309).
 
-Document reassembly is a grouped aggregation per (url, frag):
-each entity serializes to a JSON object string via `to_json`
-(null fields dropped), and `entitiesById` is a string-assembled JSON
-map — all JVM-side.
+The document compiler (document.py) writes each document's JSON text
+itself, from the committed values of its model rows, with
+`document_rows`: one row per Pathway element, its `entitiesById` the
+document's nodes, edges, citations and vocabularies, each kind in
+element order. `jsonld_documents` is the projection of those rows out
+of the compiler's staged output.
+
+The bytes are those Spark's `to_json` (Jackson) wrote for the same
+values: keys in the same order, null fields dropped at every level,
+null array elements kept as `null`, strings escaped as Jackson escapes
+them, doubles spelled by `java_double` (`Double.toString`), and a
+non-finite double quoted ("NaN", "Infinity"). A NaN survives the
+compiler only in `rotation`/`textRotation`; everywhere else it is null.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import math
+import re
+import struct
 
-from .entities import DOC_KEY
+from pyspark.sql import DataFrame
+
+from . import frames
 from ..functions.mappings import (
     FONT_EXTRA_CLASSES,
     FONT_EXTRA_DEFAULTS,
@@ -22,266 +34,385 @@ from ..functions.mappings import (
 )
 
 
-def _named(col: Column, name: str) -> Column:
-    return col.alias(name)
+def jsonld_documents(model: dict) -> DataFrame:
+    """One row per Pathway element: (url, frag, pathway_id, jsonld),
+    the full {pathway, entitiesById} JSON-LD document string
+    (NDJSON-ready, S5)."""
+    return frames.select_frame(model["compiled"], "documents")
 
 
-def _node_json(nodes: DataFrame) -> DataFrame:
-    n = nodes
-    is_fontish = F.col("gpml_element_name").isin(*FONT_EXTRA_CLASSES)
-    fields = [
-        _named(F.col("id"), "id"),
-        _named(F.col("text_content"), "textContent"),
-        _named(F.col("wp_type"), "wpType"),
-        _named(F.col("state_type"), "stateType"),
-        _named(F.col("x"), "x"), _named(F.col("y"), "y"),
-        _named(F.col("width"), "width"),
-        _named(F.col("height"), "height"),
-        _named(F.col("z_index"), "zIndex"),
-        _named(F.col("draw_as"), "drawAs"),
-        _named(F.col("stroke"), "stroke"),
-        _named(F.col("stroke_width"), "strokeWidth"),
-        _named(F.col("stroke_dasharray"), "strokeDasharray"),
-        _named(F.col("stroke_style"), "strokeStyle"),
-        _named(F.col("fill"), "fill"),
-        _named(F.col("fill_opacity"), "fillOpacity"),
-        _named(F.col("rotation"), "rotation"),
-        _named(F.col("text_rotation"), "textRotation"),
-        _named(F.col("font_family"), "fontFamily"),
-        _named(F.col("font_size"), "fontSize"),
-        _named(F.col("font_weight"), "fontWeight"),
-        _named(F.col("font_style"), "fontStyle"),
-        _named(F.col("text_align"), "textAlign"),
-        _named(F.col("vertical_align"), "verticalAlign"),
-        _named(F.col("text_decoration"), "textDecoration"),
-        _named(F.col("padding"), "padding"),
-        _named(F.col("rx"), "rx"), _named(F.col("ry"), "ry"),
-        _named(F.col("xref_datasource"), "xrefDataSource"),
-        _named(F.col("xref_identifier"), "xrefIdentifier"),
-        _named(F.col("cellular_component"), "cellularComponent"),
-        _named(F.col("citations"), "citations"),
-        _named(F.col("comments"), "comments"),
-        _named(F.col("is_attached_to"), "isAttachedTo"),
-        _named(
-            F.when(F.col("attachment_position").isNotNull(), F.struct(
-                F.col("attachment_position").alias("position"),
-                F.col("attachment_offset").alias("offset"))),
-            "attachmentDisplay"),
-        _named(F.col("is_part_of"), "isPartOf"),
-        _named(F.col("contains"), "contains"),
-        _named(F.col("burrs"), "burrs"),
-        _named(F.col("href"), "href"),
-        _named(F.col("types"), "type"),
-        _named(F.col("kaavio_type"), "kaavioType"),
-        _named(F.col("gpml_element_name"), "gpmlElementName"),
-        _named(F.when(is_fontish, F.lit(FONT_EXTRA_DEFAULTS["lineHeight"])),
-               "lineHeight"),
-        _named(F.when(is_fontish, F.lit(FONT_EXTRA_DEFAULTS["overflow"])),
-               "overflow"),
-        _named(F.when(is_fontish, F.lit(FONT_EXTRA_DEFAULTS["textOverflow"])),
-               "textOverflow"),
-        _named(F.when(is_fontish, F.lit(FONT_EXTRA_DEFAULTS["whiteSpace"])),
-               "whiteSpace"),
-    ]
-    return n.select(*DOC_KEY, F.col("id"),
-                    F.to_json(F.struct(*fields)).alias("entity_json"))
+# --- Double.toString ------------------------------------------------------
+# A port of the JDK 17 digit generator (jdk.internal.math.FloatingDecimal,
+# BinaryToASCIIBuffer.dtoa and getChars), which Jackson's writeNumber
+# uses. It is not the shortest round-trip spelling Python's repr gives:
+# 2**60 is 1.15292150460684698E18 there, 1.152921504606847e+18 here.
+
+_N_5_BITS = [(5 ** i).bit_length() for i in range(27)]
+# floor(log10(2**p)) for 1 < p < 64: the decimal digits of a large
+# integer below its 53 significant bits
+_INSIGNIFICANT = [0, 0] + [len(str(1 << p)) - 1 for p in range(2, 64)]
 
 
-def _edge_json(edges: DataFrame) -> DataFrame:
-    pts = F.transform(
-        "points",
-        lambda p: F.struct(
-            p.is_attached_to.alias("isAttachedTo"),
-            F.when(p.attachment_position.isNotNull(), F.struct(
-                p.attachment_position.alias("position"),
-                p.attachment_offset.alias("offset"))).alias(
-                    "attachmentDisplay"),
-            p.x.alias("x"), p.y.alias("y"),
-            p.orientation.alias("orientation"),
-        ))
-    fields = [
-        _named(F.col("id"), "id"),
-        _named(F.col("stroke_width"), "strokeWidth"),
-        _named(F.col("z_index"), "zIndex"),
-        _named(pts, "points"),
-        _named(F.col("stroke"), "stroke"),
-        _named(F.col("stroke_dasharray"), "strokeDasharray"),
-        _named(F.col("draw_as"), "drawAs"),
-        _named(F.col("fill"), "fill"),
-        _named(F.col("types"), "type"),
-        _named(F.col("kaavio_type"), "kaavioType"),
-        _named(F.col("gpml_element_name"), "gpmlElementName"),
-        _named(F.col("marker_start"), "markerStart"),
-        _named(F.col("marker_end"), "markerEnd"),
-        _named(F.col("is_attached_to"), "isAttachedTo"),
-        _named(F.col("citations"), "citations"),
-        _named(F.col("comments"), "comments"),
-        _named(F.col("is_part_of"), "isPartOf"),
-        _named(F.col("burrs"), "burrs"),
-    ]
-    return edges.select(*DOC_KEY, F.col("id"),
-                        F.to_json(F.struct(*fields)).alias("entity_json"))
+def _wrap(v: int, bits: int) -> int:
+    """v as a signed two's-complement integer of `bits` bits."""
+    v &= (1 << bits) - 1
+    return v - (1 << bits) if v >> (bits - 1) else v
 
 
-def _citation_json(citations: DataFrame) -> DataFrame:
-    fields = [
-        _named(F.col("id"), "id"),
-        _named(F.col("xref_identifier"), "xrefIdentifier"),
-        _named(F.col("xref_datasource"), "xrefDataSource"),
-        _named(F.col("standard_name"), "standardName"),
-        _named(F.col("source"), "source"),
-        _named(F.col("year"), "year"),
-        _named(F.col("authors"), "authors"),
-        _named(F.col("types"), "type"),
-        _named(F.col("gpml_element_name"), "gpmlElementName"),
-        _named(F.col("text_content"), "textContent"),
-    ]
-    return citations.select(*DOC_KEY, F.col("id"),
-                            F.to_json(F.struct(*fields))
-                            .alias("entity_json"))
+def _long_digits(dec_exp: int, lvalue: int, insignificant: int
+                 ) -> tuple[list[int], int]:
+    if insignificant:
+        pow10 = 10 ** insignificant
+        residue = lvalue % pow10
+        lvalue //= pow10
+        dec_exp += insignificant
+        if residue >= pow10 >> 1:
+            lvalue += 1
+    text = str(lvalue)
+    return [int(c) for c in text.rstrip("0")], dec_exp + len(text)
 
 
-def _vocab_json(vocabs: DataFrame) -> DataFrame:
-    fields = [
-        _named(F.col("term"), "term"),
-        _named(F.col("xref_identifier"), "xrefIdentifier"),
-        _named(F.col("ontology"), "ontology"),
-        _named(F.col("types"), "type"),
-        _named(F.col("gpml_element_name"), "gpmlElementName"),
-        _named(F.col("id"), "id"),
-    ]
-    return vocabs.select(*DOC_KEY, F.col("id"),
-                         F.to_json(F.struct(*fields)).alias("entity_json"))
+def _estimate_dec_exp(fract: int, bin_exp: int) -> int:
+    d2 = struct.unpack(">d", struct.pack(
+        ">Q", (0x3FF << 52) | (fract & ((1 << 52) - 1))))[0]
+    d = (d2 - 1.5) * 0.289529654 + 0.176091259 + bin_exp * 0.301029995663981
+    return math.floor(d)
 
 
-def _pathway_json(pathways: DataFrame) -> Column:
-    fields = [
-        _named(F.array(F.lit(JSONLD_CONTEXT)), "@context"),
-        _named(F.lit("white"), "fill"),
-        _named(F.lit(0.0), "strokeWidth"),
-        _named(F.lit("black"), "stroke"),
-        _named(F.col("contains"), "contains"),
-        _named(F.lit("rect"), "drawAs"),
-        _named(F.lit("Pathway"), "gpmlElementName"),
-        _named(F.col("height"), "height"),
-        _named(F.lit("Group"), "kaavioType"),
-        _named(F.col("name"), "name"),
-        _named(F.lit(5.0), "padding"),
-        _named(F.col("types"), "type"),
-        _named(F.col("width"), "width"),
-        _named(F.lit(0.0), "x"), _named(F.lit(0.0), "y"),
-        _named(F.lit(0.0), "zIndex"),
-        _named(F.lit(12.0), "fontSize"),
-        _named(F.lit("bold"), "fontWeight"),
-        _named(F.lit("left"), "textAlign"),
-        _named(F.lit("top"), "verticalAlign"),
-        _named(F.col("organism"), "organism"),
-        _named(F.col("license"), "license"),
-        _named(F.col("data_source"), "dataSource"),
-        _named(F.col("data_source_version"), "dataSourceVersion"),
-        _named(F.col("author"), "author"),
-        _named(F.col("email"), "email"),
-        _named(F.col("maintainer"), "maintainer"),
-        _named(F.col("last_modified"), "lastModified"),
-        _named(F.col("comments"), "comments"),
-        _named(F.col("standard_name"), "standardName"),
-        _named(F.col("display_name"), "displayName"),
-        _named(F.col("text_content"), "textContent"),
-        _named(F.col("is_similar_to"), "isSimilarTo"),
-        _named(F.col("id"), "id"),
-    ]
-    return F.to_json(F.struct(*fields))
+def _dtoa(bin_exp: int, fract: int, n_sig: int) -> tuple[list[int], int]:
+    """(digits, decimal exponent) of fract * 2**(bin_exp - 52)."""
+    tail = (fract & -fract).bit_length() - 1
+    n_fract_bits = 53 - tail
+    n_tiny = max(0, n_fract_bits - bin_exp - 1)
+    if -21 <= bin_exp <= 62 and n_tiny < 27 \
+            and n_fract_bits + _N_5_BITS[n_tiny] < 64 and n_tiny == 0:
+        # an integer that fits a long
+        insignificant = 0
+        if bin_exp > n_sig:
+            p2 = bin_exp - n_sig - 1
+            insignificant = _INSIGNIFICANT[p2] if 1 < p2 < 64 else 0
+        v = fract << (bin_exp - 52) if bin_exp >= 52 \
+            else fract >> (52 - bin_exp)
+        return _long_digits(0, v, insignificant)
+
+    dec_exp = _estimate_dec_exp(fract, bin_exp)
+    b5 = max(0, -dec_exp)
+    b2 = b5 + n_tiny + bin_exp
+    s5 = max(0, dec_exp)
+    s2 = s5 + n_tiny
+    m5, m2 = b5, b2 - n_sig
+    fract >>= tail
+    b2 -= n_fract_bits - 1
+    common = min(b2, s2)
+    b2, s2, m2 = b2 - common, s2 - common, m2 - common
+    if n_fract_bits == 1:
+        m2 -= 1
+    if m2 < 0:
+        b2, s2, m2 = b2 - m2, s2 - m2, 0
+
+    b_bits = n_fract_bits + b2 + (_N_5_BITS[b5] if b5 < 27 else b5 * 3)
+    ten_s_bits = s2 + 1 + (_N_5_BITS[s5 + 1] if s5 + 1 < 27
+                           else (s5 + 1) * 3)
+    b = (fract * 5 ** b5) << b2
+    s = 5 ** s5 << s2
+    m = 5 ** m5 << m2
+    tens = s * 10
+    digits: list[int] = []
+    if b_bits < 64 and ten_s_bits < 64:
+        # int or long arithmetic, where m may overflow
+        width = 32 if b_bits < 32 and ten_s_bits < 32 else 64
+        q, b = divmod(b, s)
+        b *= 10
+        m = _wrap(m * 10, width)
+        low, high = b < m, _wrap(b + m, width) > tens
+        if q == 0 and not high:
+            dec_exp -= 1
+        else:
+            digits.append(q)
+        if dec_exp < -3 or dec_exp >= 8:
+            low = high = False
+        while not low and not high:
+            q, b = divmod(b, s)
+            b *= 10
+            m = _wrap(m * 10, width)
+            if m > 0:
+                low, high = b < m, _wrap(b + m, width) > tens
+            else:
+                low = high = True
+            digits.append(q)
+        low_diff = (b << 1) - tens
+    else:
+        m *= 10
+        q, b = divmod(b, s)
+        b *= 10
+        low, high = b < m, b + m >= tens
+        if q == 0 and not high:
+            dec_exp -= 1
+        else:
+            digits.append(q)
+        if dec_exp < -3 or dec_exp >= 8:
+            low = high = False
+        while not low and not high:
+            q, b = divmod(b, s)
+            b *= 10
+            m *= 10
+            low, high = b < m, b + m >= tens
+            digits.append(q)
+        low_diff = (b << 1) - tens if high and low else 0
+    dec_exp += 1
+    if high and (not low or low_diff > 0
+                 or (low_diff == 0 and digits[-1] & 1)):
+        i = len(digits) - 1
+        while digits[i] == 9 and i > 0:
+            digits[i] = 0
+            i -= 1
+        if digits[i] == 9:  # carry out of the first digit
+            digits[0] = 1
+            dec_exp += 1
+        else:
+            digits[i] += 1
+    return digits, dec_exp
 
 
-def _entity_entries(model: dict) -> DataFrame:
-    """(url, frag, entry) — one escaped `"id":{...}` map entry per
-    entity across the four entity frames."""
-    ents = (
-        _node_json(model["nodes"])
-        .unionByName(_edge_json(model["edges"]))
-        .unionByName(_citation_json(model["citations"]))
-        .unionByName(_vocab_json(model["vocabularies"]))
-    )
-    # to_json on the id emits a correctly-escaped JSON string key (a
-    # GraphId may legally contain '"' via &quot;): {"k":"<esc>"} with
-    # the fixed 5-char prefix and 1-char suffix stripped
-    key_json = F.to_json(F.struct(F.col("id").alias("k")))
-    escaped_key = key_json.substr(F.lit(6), F.length(key_json) - 6)
-    # to_json omits null fields ("{}" -> empty key -> ':{...}' corrupt
-    # entry); drop null-id rows instead, matching the pre-to_json
-    # behavior where concat returned NULL and collect_list skipped it
-    return ents.filter(F.col("id").isNotNull()).select(
-        *DOC_KEY,
-        F.concat(escaped_key, F.lit(":"), F.col("entity_json"))
-        .alias("entry"))
+def java_double(d: float) -> str:
+    """`Double.toString(d)` of JDK 17."""
+    if d != d:
+        return "NaN"
+    if math.isinf(d):
+        return "Infinity" if d > 0 else "-Infinity"
+    bits = struct.unpack(">Q", struct.pack(">d", d))[0]
+    sign = "-" if bits >> 63 else ""
+    fract = bits & ((1 << 52) - 1)
+    bin_exp = (bits >> 52) & 0x7FF
+    if bin_exp == 0:
+        if fract == 0:
+            return sign + "0.0"
+        n_sig = fract.bit_length()
+        shift = 53 - n_sig
+        fract <<= shift
+        bin_exp = 1 - shift
+    else:
+        fract |= 1 << 52
+        n_sig = 53
+    digits, e = _dtoa(bin_exp - 1023, fract, n_sig)
+    ds = "".join(map(str, digits))
+    if 0 < e < 8:
+        whole = ds[:e]
+        if len(whole) < e:
+            return f"{sign}{whole}{'0' * (e - len(whole))}.0"
+        return f"{sign}{whole}.{ds[e:] or '0'}"
+    if -3 < e <= 0:
+        return f"{sign}0.{'0' * -e}{ds}"
+    return f"{sign}{ds[0]}.{ds[1:] or '0'}E{e - 1}"
 
 
-def _assemble(pathway_json, entities_body) -> Column:
-    return F.concat(
-        F.lit('{"pathway":'), pathway_json,
-        F.lit(',"entitiesById":{'),
-        F.coalesce(entities_body, F.lit("")),
-        F.lit("}}"))
+# --- to_json ---------------------------------------------------------------
+
+_ESCAPES = {'"': '\\"', "\\": "\\\\", "\b": "\\b", "\t": "\\t",
+            "\n": "\\n", "\f": "\\f", "\r": "\\r"}
+_TO_ESCAPE = re.compile('[\x00-\x1f"\\\\]')
 
 
-def jsonld_documents(model: dict,
-                     bucketize: tuple[int, int] | None = None
-                     ) -> DataFrame:
-    """One row per (url, frag): the full {pathway, entitiesById}
-    JSON-LD document string (NDJSON-ready, S5).
+def _escape(m: re.Match) -> str:
+    c = m.group()
+    return _ESCAPES.get(c) or f"\\u{ord(c):04X}"
 
-    `bucketize=(n_buckets, write_mult)`: the snapshot-pipeline path.
-    The pathway row rides the SAME union as the entity entries
-    (marker columns instead of a join), and the single grouped
-    assembly is keyed by the snapshot's (bucket, __wsalt, url, frag)
-    — its one exchange hash-partitions by (bucket, __wsalt), which
-    simultaneously satisfies the groupBy (subset rule) and the
-    snapshot writer's layout, so the FULL document text is shuffled
-    exactly once instead of twice (grouping + commit repartition).
-    entitiesById map order differs from the join path only in entry
-    arrival order — JSON-object semantics, pinned order-insensitively
-    by the golden tests."""
-    p = model["pathways"].withColumn("pathway_json",
-                                     _pathway_json(model["pathways"]))
-    if bucketize is None:
-        per_doc = _entity_entries(model).groupBy(*DOC_KEY).agg(
-            F.concat_ws(",", F.collect_list("entry"))
-            .alias("entities_body"))
-        p = p.select(*DOC_KEY, "pathway_id", "pathway_json")
-        per_doc = per_doc.select(F.col("url").alias("e_url"),
-                                 F.col("frag").alias("e_frag"),
-                                 "entities_body")
-        out = p.join(
-            per_doc,
-            (p.url == per_doc.e_url) & (p.frag == per_doc.e_frag),
-            "left",
-        ).drop("e_url", "e_frag")
-        return out.select(*DOC_KEY, "pathway_id",
-                          _assemble(F.col("pathway_json"),
-                                    F.col("entities_body"))
-                          .alias("jsonld"))
 
-    from ..plans.pipeline import with_bucket_cols
-    n_buckets, mult = bucketize
-    null_s = F.lit(None).cast("string")
-    e_rows = _entity_entries(model).select(
-        *DOC_KEY, null_s.alias("pid"), null_s.alias("pathway_json"),
-        F.col("entry"))
-    p_rows = p.select(*DOC_KEY, F.col("pathway_id").alias("pid"),
-                      "pathway_json", null_s.alias("entry"))
-    u = with_bucket_cols(e_rows.unionByName(p_rows), n_buckets, mult)
-    # layout keys without a fixed count: AQE sizes the exchange from
-    # runtime bytes (see SnapshotStore.commit) — partitioning on
-    # (bucket, __wsalt) still satisfies the groupBy's clustering AND
-    # the snapshot layout, so the document text is shuffled once.
-    u = u.repartition(F.col("bucket"), F.col("__wsalt"))
-    per_doc = u.groupBy("bucket", "__wsalt", *DOC_KEY).agg(
-        F.max("pid").alias("pathway_id"),
-        F.max("pathway_json").alias("pathway_json"),
-        F.concat_ws(",", F.collect_list("entry")).alias("entities_body"))
-    # docs are DEFINED by their pathway row (the join path keeps all
-    # pathways, drops orphan entity groups) — mirror that exactly
-    return per_doc.filter(F.col("pathway_json").isNotNull()).select(
-        "bucket", "__wsalt", *DOC_KEY, "pathway_id",
-        _assemble(F.col("pathway_json"), F.col("entities_body"))
-        .alias("jsonld"))
+def string(v) -> str | None:
+    return None if v is None else f'"{_TO_ESCAPE.sub(_escape, v)}"'
+
+
+def double(v) -> str | None:
+    if v is None:
+        return None
+    v = float(v)
+    return java_double(v) if math.isfinite(v) else f'"{java_double(v)}"'
+
+
+def integer(v) -> str | None:
+    return None if v is None else str(int(v))
+
+
+def array(encode):
+    """An array encoder whose elements `encode` writes; a null element
+    is `null`."""
+    def write(vals) -> str | None:
+        if vals is None:
+            return None
+        return "[" + ",".join("null" if v is None else encode(v)
+                              for v in vals) + "]"
+    return write
+
+
+def obj(pairs) -> str:
+    """A JSON object of (key, encoded value) pairs, null values
+    dropped."""
+    return "{" + ",".join(f'"{k}":{v}' for k, v in pairs
+                          if v is not None) + "}"
+
+
+_STRINGS, _DOUBLES = array(string), array(double)
+_COMMENTS = array(lambda c: obj([("content", string(c["content"])),
+                                 ("source", string(c["source"]))]))
+
+
+def _attachment(position, offset):
+    if position is None:
+        return None
+    return obj([("position", _DOUBLES(position)),
+                ("offset", _DOUBLES(offset))])
+
+
+def _point(p: dict) -> str:
+    return obj([("isAttachedTo", string(p.get("is_attached_to"))),
+                ("attachmentDisplay", _attachment(
+                    p.get("attachment_position"),
+                    p.get("attachment_offset"))),
+                ("x", double(p.get("x"))), ("y", double(p.get("y"))),
+                ("orientation", _DOUBLES(p.get("orientation")))])
+
+
+_POINTS = array(_point)
+_FONT_EXTRAS = [(k, double(v) if isinstance(v, float) else string(v))
+                for k, v in FONT_EXTRA_DEFAULTS.items()]
+
+
+def _node_json(r: dict) -> str:
+    return obj([
+        ("id", string(r["id"])),
+        ("textContent", string(r["text_content"])),
+        ("wpType", string(r["wp_type"])),
+        ("stateType", string(r["state_type"])),
+        ("x", double(r["x"])), ("y", double(r["y"])),
+        ("width", double(r["width"])), ("height", double(r["height"])),
+        ("zIndex", double(r["z_index"])),
+        ("drawAs", string(r["draw_as"])), ("stroke", string(r["stroke"])),
+        ("strokeWidth", double(r["stroke_width"])),
+        ("strokeDasharray", string(r["stroke_dasharray"])),
+        ("strokeStyle", string(r["stroke_style"])),
+        ("fill", string(r["fill"])),
+        ("fillOpacity", double(r["fill_opacity"])),
+        ("rotation", double(r["rotation"])),
+        ("textRotation", double(r["text_rotation"])),
+        ("fontFamily", string(r["font_family"])),
+        ("fontSize", double(r["font_size"])),
+        ("fontWeight", string(r["font_weight"])),
+        ("fontStyle", string(r["font_style"])),
+        ("textAlign", string(r["text_align"])),
+        ("verticalAlign", string(r["vertical_align"])),
+        ("textDecoration", string(r["text_decoration"])),
+        ("padding", double(r["padding"])),
+        ("rx", double(r["rx"])), ("ry", double(r["ry"])),
+        ("xrefDataSource", string(r["xref_datasource"])),
+        ("xrefIdentifier", string(r["xref_identifier"])),
+        ("cellularComponent", string(r["cellular_component"])),
+        ("citations", _STRINGS(r["citations"])),
+        ("comments", _COMMENTS(r["comments"])),
+        ("isAttachedTo", string(r["is_attached_to"])),
+        ("attachmentDisplay", _attachment(r["attachment_position"],
+                                          r["attachment_offset"])),
+        ("isPartOf", string(r["is_part_of"])),
+        ("contains", _STRINGS(r["contains"])),
+        ("burrs", _STRINGS(r["burrs"])),
+        ("href", string(r["href"])),
+        ("type", _STRINGS(r["types"])),
+        ("kaavioType", string(r["kaavio_type"])),
+        ("gpmlElementName", string(r["gpml_element_name"])),
+        *(_FONT_EXTRAS if r["gpml_element_name"] in FONT_EXTRA_CLASSES
+          else ()),
+    ])
+
+
+def _edge_json(r: dict) -> str:
+    return obj([
+        ("id", string(r["id"])),
+        ("strokeWidth", double(r["stroke_width"])),
+        ("zIndex", double(r["z_index"])),
+        ("points", _POINTS(r["points"])),
+        ("stroke", string(r["stroke"])),
+        ("strokeDasharray", string(r["stroke_dasharray"])),
+        ("drawAs", string(r["draw_as"])), ("fill", string(r["fill"])),
+        ("type", _STRINGS(r["types"])),
+        ("kaavioType", string(r["kaavio_type"])),
+        ("gpmlElementName", string(r["gpml_element_name"])),
+        ("markerStart", string(r["marker_start"])),
+        ("markerEnd", string(r["marker_end"])),
+        ("isAttachedTo", _STRINGS(r["is_attached_to"])),
+        ("citations", _STRINGS(r["citations"])),
+        ("comments", _COMMENTS(r["comments"])),
+        ("isPartOf", string(r["is_part_of"])),
+        ("burrs", _STRINGS(r["burrs"])),
+    ])
+
+
+def _citation_json(r: dict) -> str:
+    return obj([
+        ("id", string(r["id"])),
+        ("xrefIdentifier", string(r["xref_identifier"])),
+        ("xrefDataSource", string(r["xref_datasource"])),
+        ("standardName", string(r["standard_name"])),
+        ("source", string(r["source"])), ("year", integer(r["year"])),
+        ("authors", _STRINGS(r["authors"])),
+        ("type", _STRINGS(r["types"])),
+        ("gpmlElementName", string(r["gpml_element_name"])),
+        ("textContent", string(r["text_content"])),
+    ])
+
+
+def _vocabulary_json(r: dict) -> str:
+    return obj([
+        ("term", string(r["term"])),
+        ("xrefIdentifier", string(r["xref_identifier"])),
+        ("ontology", string(r["ontology"])),
+        ("type", _STRINGS(r["types"])),
+        ("gpmlElementName", string(r["gpml_element_name"])),
+        ("id", string(r["id"])),
+    ])
+
+
+def _pathway_json(r: dict) -> str:
+    return obj([
+        ("@context", _STRINGS([JSONLD_CONTEXT])),
+        ("fill", string("white")), ("strokeWidth", double(0.0)),
+        ("stroke", string("black")),
+        ("contains", _STRINGS(r["contains"])),
+        ("drawAs", string("rect")), ("gpmlElementName", string("Pathway")),
+        ("height", double(r["height"])), ("kaavioType", string("Group")),
+        ("name", string(r["name"])), ("padding", double(5.0)),
+        ("type", _STRINGS(r["types"])), ("width", double(r["width"])),
+        ("x", double(0.0)), ("y", double(0.0)), ("zIndex", double(0.0)),
+        ("fontSize", double(12.0)), ("fontWeight", string("bold")),
+        ("textAlign", string("left")), ("verticalAlign", string("top")),
+        ("organism", string(r["organism"])),
+        ("license", string(r["license"])),
+        ("dataSource", string(r["data_source"])),
+        ("dataSourceVersion", string(r["data_source_version"])),
+        ("author", string(r["author"])), ("email", string(r["email"])),
+        ("maintainer", string(r["maintainer"])),
+        ("lastModified", string(r["last_modified"])),
+        ("comments", _COMMENTS(r["comments"])),
+        ("standardName", string(r["standard_name"])),
+        ("displayName", string(r["display_name"])),
+        ("textContent", string(r["text_content"])),
+        ("isSimilarTo", string(r["is_similar_to"])),
+        ("id", string(r["id"])),
+    ])
+
+
+_ENTITY_JSON = {"nodes": _node_json, "edges": _edge_json,
+                "citations": _citation_json,
+                "vocabularies": _vocabulary_json}
+
+
+def document_rows(rows: dict) -> list[dict]:
+    """One document's committed rows by role -> its documents rows, one
+    per Pathway element. An entity without an id has no entry."""
+    body = ",".join(
+        f"{string(r['id'])}:{_ENTITY_JSON[role](r)}"
+        for role in _ENTITY_JSON for r in rows.get(role, ())
+        if r["id"] is not None)
+    return [{"url": p["url"], "frag": p["frag"],
+             "pathway_id": p["pathway_id"],
+             "jsonld": f'{{"pathway":{_pathway_json(p)},'
+                       f'"entitiesById":{{{body}}}}}'}
+            for p in rows.get("pathways", ())]

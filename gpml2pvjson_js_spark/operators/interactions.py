@@ -1,26 +1,40 @@
 """BioPAX interaction classification (J12): marker + endpoint entity
-types -> biopaxType / controlType / role assignment.
+types -> biopaxType / controlType / role assignment, and BioPAX group
+typing (J13).
 
-Spark-first re-expression of
-/root/reference/src/pvjsonToBioPAX/Interaction.ts:94-276 (+ the
-ArrowHead->BioPAX tables): two equi joins fetch endpoint entity types,
-a F.when cascade assigns roles, and a second (self-join) pass applies
-the Catalysis fix-ups:
+A port of the reference's per-document classification
+(src/pvjsonToBioPAX/Interaction.ts:94-276, src/pvjsonToBioPAX/Group.ts
+:16-42, and the ArrowHead->BioPAX tables) to plain Python over one
+document's committed node and edge rows; the document compiler
+(document.py) calls `classify` and stages the rows, and
+`classify_interactions` projects them. For each Interaction edge:
 
+- the graphical source/target follow the marker direction
+  (Interaction.ts:104-118);
+- each endpoint's entity type facts come from its node or edge; a
+  GraphId that repeats resolves to the last element carrying it;
+- an Arrow between two physical entities is re-disambiguated as a
+  conversion, and between an edge and a physical entity or pathway as
+  a stimulation (Interaction.ts:128-165);
+- the marker table (`_marker_tables`) gives biopaxType and
+  controlType; an unmatched marker leaves the edge unclassified;
+- roles: controller/controlled, left/right or participants
+  (Interaction.ts:203-232);
 - a Catalysis whose controller is not a BioPAX node type is demoted to
-  a generic Interaction (Interaction.ts:240-253)
-- a Catalysis whose controlled is a generic Interaction upgrades the
-  controlled edge to a Conversion with left/right from its
-  participants; if that fails both demote (Interaction.ts:255-271)
+  a generic Interaction (Interaction.ts:240-253);
+- a generic Interaction that a Catalysis controls is upgraded to a
+  Conversion with left/right from its participants
+  (Interaction.ts:255-271).
+
+An edge GraphId that repeats keeps the classification of its last
+edge. A Group containing at least one edge is a Pathway, else a Complex.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from .entities import DOC_KEY
-from ..functions import converters as C
+from . import frames
 from ..functions.mappings import (
     BIOPAX_NODE_TYPES,
     BIOPAX_PHYSICAL_ENTITY_TYPES,
@@ -28,34 +42,24 @@ from ..functions.mappings import (
     PVJSON_TO_BIOPAX,
 )
 
-
-def _to_biopax(types: Column) -> Column:
-    m = C._map_literal(PVJSON_TO_BIOPAX)
-    return F.filter(
-        F.transform(types, lambda t: F.element_at(m, t)),
-        lambda t: t.isNotNull(),
-    )
-
-
-def entity_type_facts(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """(url, frag, id, is_edge, is_physical, is_pathway, is_biopax_node)
-    for every referenceable entity."""
-    n = nodes.select(*DOC_KEY, "id", "types", F.lit(False).alias("is_edge"))
-    e = edges.select(*DOC_KEY, "id", "types", F.lit(True).alias("is_edge"))
-    ents = n.unionByName(e)
-    bp = _to_biopax(F.col("types"))
-    phys = F.array(*[F.lit(t) for t in BIOPAX_PHYSICAL_ENTITY_TYPES])
-    node_types = F.array(*[F.lit(t) for t in BIOPAX_NODE_TYPES])
-    return ents.select(
-        *DOC_KEY, "id", "is_edge",
-        F.arrays_overlap(bp, phys).alias("is_physical"),
-        F.array_contains("types", "Pathway").alias("is_pathway"),
-        F.arrays_overlap(bp, node_types).alias("is_biopax_node"),
-    )
+_PHYSICAL = frozenset(BIOPAX_PHYSICAL_ENTITY_TYPES)
+_NODE_TYPES = frozenset(BIOPAX_NODE_TYPES)
+_CONTROL = ("Control", "Catalysis")
+_CONVERSION = ("Conversion", "BiochemicalReaction", "Degradation")
+_GENERIC = ("Interaction", "MolecularInteraction")
+_NO_FACTS = (False, False, False, False)
 
 
-def _marker_bp_maps(strict_reference: bool):
-    """The reference's classification table (ArrowHeadMappings.json)
+def classify_interactions(model: dict) -> DataFrame:
+    """The interactions frame (frames.INTERACTIONS) of the model: one
+    row per classified Interaction edge and per kept Group."""
+    return frames.select_frame(model["compiled"], "interactions")
+
+
+def _marker_tables(strict_reference: bool) -> tuple[dict, dict, bool]:
+    """(marker -> biopaxType, marker -> controlType, lowercase lookup).
+
+    The reference's classification table (ArrowHeadMappings.json)
     keys raw 'mim-*' strings while converted pvjson markers are
     'Mim*'-cased, so the reference NEVER classifies direct mim-*
     markers — only 'Arrow'/'TBar'/'none' plus the two values its Arrow
@@ -63,210 +67,107 @@ def _marker_bp_maps(strict_reference: bool):
     Interaction.ts:128-165 + :167).
 
     strict_reference=True (default) reproduces that exactly: a
-    case-SENSITIVE map containing only the reachable keys, so
+    case-SENSITIVE table holding only the reachable keys, so
     'MimCatalysis' misses while the synthesized 'MIMConversion' hits.
     strict_reference=False is the intent-fulfilling mode (lowercased
     keys — every mim-* marker classifies per the table)."""
     if strict_reference:
-        reachable = {"Arrow": "Arrow", "TBar": "TBar", "none": "none",
-                     "MIMConversion": "MIMConversion",
-                     "MIMStimulation": "MIMStimulation"}
-        bp = {k: MARKER_MAPPINGS[v]["bp"] for k, v in reachable.items()}
-        ct = {k: MARKER_MAPPINGS[v]["control_type"]
-              for k, v in reachable.items()
-              if MARKER_MAPPINGS[v]["control_type"]}
-        return C._map_literal(bp), C._map_literal(ct), False
-    bp = {m.lower(): v["bp"] for m, v in MARKER_MAPPINGS.items()}
-    ct = {m.lower(): v["control_type"] for m, v in MARKER_MAPPINGS.items()
-          if v["control_type"]}
-    return C._map_literal(bp), C._map_literal(ct), True
+        keys = {k: k for k in ("Arrow", "TBar", "none", "MIMConversion",
+                               "MIMStimulation")}
+    else:
+        keys = {m.lower(): m for m in MARKER_MAPPINGS}
+    bp = {k: MARKER_MAPPINGS[m]["bp"] for k, m in keys.items()}
+    ct = {k: MARKER_MAPPINGS[m]["control_type"] for k, m in keys.items()
+          if MARKER_MAPPINGS[m]["control_type"]}
+    return bp, ct, not strict_reference
 
 
-def classify_group_types(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """J13: BioPAX group typing — a Group containing at least one edge
-    is a Pathway, else a Complex
-    (ref: src/pvjsonToBioPAX/Group.ts:16-42). Emitted in the
-    interactions frame shape so group-type triples materialize through
-    the same generator."""
-    g = nodes.filter(F.col("kaavio_type") == "Group").select(
-        *DOC_KEY, "pathway_id", "id",
-        F.explode_outer("contains").alias("member"))
-    e = edges.select(
-        F.col("url").alias("e_url"), F.col("frag").alias("e_frag"),
-        F.col("id").alias("e_id"))
-    j = g.join(
-        e, (g.url == e.e_url) & (g.frag == e.e_frag)
-        & (g.member == e.e_id), "left")
-    agg = j.groupBy(*DOC_KEY, "pathway_id", "id").agg(
-        F.max(F.col("e_id").isNotNull()).alias("contains_edge"))
-    ns = F.lit(None).cast("string")
-    return agg.select(
-        *DOC_KEY, "pathway_id", "id",
-        ns.alias("marker_eff"),
-        F.when(F.col("contains_edge"), F.lit("Pathway"))
-        .otherwise(F.lit("Complex")).alias("biopax_type"),
-        ns.alias("control_type"), ns.alias("controller"),
-        ns.alias("controlled"), ns.alias("left"), ns.alias("right"),
-        F.lit(None).cast("array<string>").alias("participants"),
-        ns.alias("conversion_direction"),
-    )
+def _facts(entity: dict, is_edge: bool) -> tuple:
+    """(is_edge, is_physical, is_pathway, is_biopax_node)."""
+    types = entity["types"] or ()
+    bp = {PVJSON_TO_BIOPAX[t] for t in types if t in PVJSON_TO_BIOPAX}
+    return (is_edge, not bp.isdisjoint(_PHYSICAL), "Pathway" in types,
+            not bp.isdisjoint(_NODE_TYPES))
 
 
-def classify_interactions(edges: DataFrame, nodes: DataFrame,
-                          strict_reference: bool = True,
-                          include_groups: bool = True) -> DataFrame:
-    """edges must carry endpoint_first_ref / endpoint_last_ref (edge-
-    level resolved attachment, anchor hop applied).
+def _classify_edge(e: dict, facts: dict, tables: tuple) -> dict | None:
+    bp_of, ct_of, lower = tables
+    start, end = e["marker_start"], e["marker_end"]
+    has_start = start is not None and start != "none"
+    has_end = end is not None and end != "none"
+    marker = start if has_start else end if has_end else "none"
+    first, last = e["endpoint_first_ref"], e["endpoint_last_ref"]
+    source, target = (last, first) if has_start else (first, last)
+    if source is None or target is None:
+        return None
+    s_edge, s_phys, s_pw, s_node = facts.get(source, _NO_FACTS)
+    t_edge, t_phys, t_pw, _ = facts.get(target, _NO_FACTS)
+    if marker == "Arrow":
+        if s_phys and t_phys:
+            marker = "MIMConversion"
+        elif (s_edge and (t_phys or t_pw)) or ((s_phys or s_pw) and t_edge):
+            marker = "MIMStimulation"
+    key = marker.lower() if lower else marker
+    bt = bp_of.get(key)
+    if bt is None:
+        return None
+    is_ctrl, is_conv = bt in _CONTROL, bt in _CONVERSION
+    row = {
+        "url": e["url"], "frag": e["frag"], "pathway_id": e["pathway_id"],
+        "id": e["id"], "marker_eff": marker, "biopax_type": bt,
+        "control_type": ct_of.get(key),
+        "controller": source if is_ctrl else None,
+        "controlled": target if is_ctrl else None,
+        "left": source if is_conv else None,
+        "right": target if is_conv else None,
+        "participants": [source, target]
+        if bt in _GENERIC or not (is_ctrl or is_conv) else None,
+        "conversion_direction": None if not is_conv else
+        "REVERSIBLE" if has_start and has_end else "LEFT-TO-RIGHT",
+    }
+    if bt == "Catalysis" and not s_node:
+        row.update(biopax_type="Interaction", control_type=None,
+                   controller=None, controlled=None,
+                   participants=[target, source])
+    return row
 
-    strict_reference: see _marker_bp_maps — default reproduces the
-    reference's marker-key casing behavior exactly, so no extra
-    classification triples vs reference-derived ground truth.
-    include_groups: union the J13 BioPAX group-typing rows."""
-    inter = edges.filter(F.col("gpml_element_name") == "Interaction")
 
-    # graphical source/target vs marker direction
-    # (ref: Interaction.ts:104-118)
-    has_start = F.col("marker_start").isNotNull() \
-        & (F.col("marker_start") != "none")
-    has_end = F.col("marker_end").isNotNull() & (F.col("marker_end") != "none")
-    marker = F.when(has_start, F.col("marker_start")) \
-        .when(has_end, F.col("marker_end")).otherwise(F.lit("none"))
-    source_id = F.when(has_start, F.col("endpoint_last_ref")) \
-        .otherwise(F.col("endpoint_first_ref"))
-    target_id = F.when(has_start, F.col("endpoint_first_ref")) \
-        .otherwise(F.col("endpoint_last_ref"))
+def classify(nodes: list[dict], edges: list[dict],
+             strict_reference: bool = True) -> list[dict]:
+    """One document's committed node and edge rows, each kind in
+    element order -> its interactions rows: the classified Interaction
+    edges, then one BioPAX type per kept Group."""
+    facts = {}
+    entities = [(n, False) for n in nodes] + [(e, True) for e in edges]
+    for entity, is_edge in sorted(entities, key=lambda x: x[0]["elem_idx"]):
+        if entity["id"] is not None:
+            facts[entity["id"]] = _facts(entity, is_edge)
+    tables = _marker_tables(strict_reference)
+    classified = [r for r in (
+        _classify_edge(e, facts, tables) for e in edges
+        if e["gpml_element_name"] == "Interaction") if r is not None]
+    catalysed = {r["controlled"] for r in classified
+                 if r["biopax_type"] == "Catalysis"}
+    by_id = {}
+    for r in classified:
+        parts = r["participants"] or []
+        if r["id"] in catalysed and r["biopax_type"] == "Interaction" \
+                and len(parts) >= 2:
+            r.update(biopax_type="Conversion", left=parts[0],
+                     right=parts[1], participants=None,
+                     conversion_direction="LEFT-TO-RIGHT")
+        by_id[r["id"]] = r
 
-    base = inter.select(
-        *DOC_KEY, "pathway_id", "id",
-        marker.alias("marker"),
-        source_id.alias("source_id"), target_id.alias("target_id"),
-        has_start.alias("has_start"), has_end.alias("has_end"),
-    ).filter(F.col("source_id").isNotNull() & F.col("target_id").isNotNull())
-
-    facts = entity_type_facts(nodes, edges)
-    fs = facts.select(F.col("url").alias("s_url"), F.col("frag").alias("s_frag"),
-                      F.col("id").alias("s_id"),
-                      F.col("is_edge").alias("s_is_edge"),
-                      F.col("is_physical").alias("s_is_phys"),
-                      F.col("is_pathway").alias("s_is_pw"),
-                      F.col("is_biopax_node").alias("s_is_node"))
-    ft = facts.select(F.col("url").alias("t_url"), F.col("frag").alias("t_frag"),
-                      F.col("id").alias("t_id"),
-                      F.col("is_edge").alias("t_is_edge"),
-                      F.col("is_physical").alias("t_is_phys"),
-                      F.col("is_pathway").alias("t_is_pw"))
-    j = base.join(fs, (base.url == fs.s_url) & (base.frag == fs.s_frag)
-                  & (base.source_id == fs.s_id), "left") \
-        .join(ft, (base.url == ft.t_url) & (base.frag == ft.t_frag)
-              & (base.target_id == ft.t_id), "left") \
-        .drop("s_url", "s_frag", "t_url", "t_frag", "s_id", "t_id")
-
-    # Arrow re-disambiguation (ref: Interaction.ts:128-165)
-    s_pe_or_pw = F.coalesce(F.col("s_is_phys"), F.lit(False)) \
-        | F.coalesce(F.col("s_is_pw"), F.lit(False))
-    t_pe_or_pw = F.coalesce(F.col("t_is_phys"), F.lit(False)) \
-        | F.coalesce(F.col("t_is_pw"), F.lit(False))
-    marker2 = (
-        F.when(
-            (F.col("marker") == "Arrow")
-            & F.coalesce(F.col("s_is_phys"), F.lit(False))
-            & F.coalesce(F.col("t_is_phys"), F.lit(False)),
-            F.lit("MIMConversion"))
-        .when(
-            (F.col("marker") == "Arrow")
-            & ((F.coalesce(F.col("s_is_edge"), F.lit(False)) & t_pe_or_pw)
-               | (s_pe_or_pw & F.coalesce(F.col("t_is_edge"), F.lit(False)))),
-            F.lit("MIMStimulation"))
-        .otherwise(F.col("marker"))
-    )
-    bp_map, ct_map, lower_keys = _marker_bp_maps(strict_reference)
-    lookup = (F.lower(marker2) if lower_keys else marker2)
-    j = j.withColumn("marker_eff", marker2)
-    j = j.withColumn("biopax_type", F.element_at(bp_map, lookup))
-    j = j.withColumn("control_type", F.element_at(ct_map, lookup))
-    # unmatched marker (reference behavior for direct Mim* markers):
-    # the edge stays unclassified — drop it before role assignment
-    j = j.filter(F.col("biopax_type").isNotNull())
-
-    # role assignment (ref: Interaction.ts:203-232)
-    is_part = F.col("biopax_type").isin("Interaction", "MolecularInteraction") \
-        | ~F.col("biopax_type").isin(
-            "Interaction", "MolecularInteraction", "Control", "Catalysis",
-            "Conversion", "BiochemicalReaction", "Degradation")
-    is_ctrl = F.col("biopax_type").isin("Control", "Catalysis")
-    is_conv = F.col("biopax_type").isin("Conversion", "BiochemicalReaction",
-                                        "Degradation")
-    first = j.select(
-        *DOC_KEY, "pathway_id", "id", "marker_eff", "biopax_type",
-        "control_type",
-        F.when(is_ctrl, F.col("source_id")).alias("controller"),
-        F.when(is_ctrl, F.col("target_id")).alias("controlled"),
-        F.when(is_conv, F.col("source_id")).alias("left"),
-        F.when(is_conv, F.col("target_id")).alias("right"),
-        F.when(is_part,
-               F.array("source_id", "target_id")).alias("participants"),
-        F.when(is_conv,
-               F.when(F.col("has_start") & F.col("has_end"),
-                      F.lit("REVERSIBLE")).otherwise(F.lit("LEFT-TO-RIGHT"))
-               ).alias("conversion_direction"),
-        F.col("s_is_node"),
-    )
-
-    # Catalysis fix-up 1: invalid controller -> generic Interaction
-    demote = (F.col("biopax_type") == "Catalysis") \
-        & ~F.coalesce(F.col("s_is_node"), F.lit(False))
-    first = first.select(
-        *DOC_KEY, "pathway_id", "id", "marker_eff",
-        F.when(demote, F.lit("Interaction"))
-        .otherwise(F.col("biopax_type")).alias("biopax_type"),
-        F.when(demote, F.lit(None)).otherwise(F.col("control_type"))
-        .alias("control_type"),
-        F.when(demote, F.lit(None)).otherwise(F.col("controller"))
-        .alias("controller"),
-        F.when(demote, F.lit(None)).otherwise(F.col("controlled"))
-        .alias("controlled"),
-        "left", "right",
-        F.when(demote, F.array("controlled", "controller"))
-        .otherwise(F.col("participants")).alias("participants"),
-        "conversion_direction",
-    )
-
-    # Catalysis fix-up 2: controlled generic Interaction -> Conversion.
-    # `first` (the whole classification join DAG) feeds both the self-
-    # join probe and the output; a lazy checkpoint computes it once
-    # instead of re-executing its two endpoint-facts joins per
-    # reference (same single-evaluation pattern as the model build).
-    from pyspark.storagelevel import StorageLevel
-    first = first.localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    cat = first.filter(F.col("biopax_type") == "Catalysis").select(
-        F.col("url").alias("c_url"), F.col("frag").alias("c_frag"),
-        F.col("controlled").alias("c_controlled"))
-    upgraded = first.join(
-        cat,
-        (first.url == cat.c_url) & (first.frag == cat.c_frag)
-        & (first.id == cat.c_controlled),
-        "left",
-    ).drop("c_url", "c_frag")
-    upgrade = F.col("c_controlled").isNotNull() \
-        & (F.col("biopax_type") == "Interaction") \
-        & (F.size(F.coalesce(F.col("participants"),
-                             F.array().cast("array<string>"))) >= 2)
-    out = upgraded.select(
-        *DOC_KEY, "pathway_id", "id", "marker_eff",
-        F.when(upgrade, F.lit("Conversion")).otherwise(F.col("biopax_type"))
-        .alias("biopax_type"),
-        "control_type", "controller", "controlled",
-        F.when(upgrade, F.element_at("participants", 1))
-        .otherwise(F.col("left")).alias("left"),
-        F.when(upgrade, F.element_at("participants", 2))
-        .otherwise(F.col("right")).alias("right"),
-        F.when(upgrade, F.lit(None).cast("array<string>"))
-        .otherwise(F.col("participants")).alias("participants"),
-        F.when(upgrade, F.lit("LEFT-TO-RIGHT"))
-        .otherwise(F.col("conversion_direction"))
-        .alias("conversion_direction"),
-    ).dropDuplicates([*DOC_KEY, "id"])
-    if include_groups:
-        out = out.unionByName(classify_group_types(nodes, edges))
-    return out
+    edge_ids = {e["id"] for e in edges if e["id"] is not None}
+    groups = {}
+    for g in nodes:
+        if g["kaavio_type"] != "Group":
+            continue
+        row = groups.setdefault((g["pathway_id"], g["id"]), {
+            **dict.fromkeys(frames.INTERACTIONS.names),
+            "url": g["url"], "frag": g["frag"],
+            "pathway_id": g["pathway_id"], "id": g["id"],
+            "biopax_type": "Complex"})
+        if not edge_ids.isdisjoint(g["contains"] or ()):
+            row["biopax_type"] = "Pathway"
+    return [*by_id.values(), *groups.values()]

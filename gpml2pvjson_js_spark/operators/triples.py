@@ -1,177 +1,118 @@
-"""Materialize (url, subj, pred, obj) triples from the document model.
+"""Materialize (url, frag, pathway_id, subj, pred, obj) triples from
+the document model.
 
 This is the north-star output (BASELINE.json north_rule): the flattened
 knowledge-graph form of the reference's `{pathway, entitiesById}`
 JSON-LD document (src/Processor.ts:88-121). Predicate vocabulary per
 FIXTURES.md §3.3.
 
-Plan shape (optimization round 6): each source frame emits ALL of its
-triples in ONE pass — an array of candidate (pred, obj) structs built
-per row, null-valued candidates filtered, then a single explode —
-instead of the previous one-branch-per-predicate union (20+ branches,
-each re-scanning its source frame). The row multiset is identical
-(each branch's (subj, pred, obj) appears exactly once per source row);
-what changes is the physical plan: 6 union branches instead of 20+,
-one scan per source frame instead of one per predicate, and — the
-case that motivated the rewrite — an un-checkpointed `interactions`
-input is inlined ONCE rather than 8x (the lazy single-DAG probe's
-580k-char megaplan came almost entirely from those 8 copies of the
-classification join DAG; see guide §3.3 on very wide unions).
+Every triple is a function of one entity row of one document, so the
+document compiler (document.py) flattens each document's committed
+rows with `document_triples` and stages the distinct triples under two
+roles: `model_triples` (the entity frames) and `interaction_triples`
+(the BioPAX roles not already among them). The distinct key holds
+`url` and `frag`, so a distinct per document is the corpus-wide
+distinct. `build_triples` projects them.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from pyspark.sql import DataFrame
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from .entities import DOC_KEY
+from . import frames
 from ..functions import mappings as M
 
 TRIPLE_COLS = ["url", "frag", "pathway_id", "subj", "pred", "obj"]
 
-def _empty_po() -> Column:
-    # built lazily: column construction needs an active SparkContext
-    return F.array().cast("array<struct<pred:string,obj:string>>")
+
+def build_triples(model: dict, with_interactions: bool = True
+                  ) -> DataFrame:
+    """The distinct triples of the model (frames.TRIPLES); without the
+    interaction triples when `with_interactions` is false."""
+    roles = ["model_triples"]
+    if with_interactions:
+        roles.append("interaction_triples")
+    return frames.select_frame(model["compiled"], *roles)
 
 
-def _po(pred: str, obj: Column) -> Column:
-    return F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))
+def _xref(r: dict):
+    ds, ident = r["xref_datasource"], r["xref_identifier"]
+    return None if ds is None or ident is None else f"{ds}:{ident}"
 
 
-def _po_arr(pred: str, arr: Column) -> Column:
-    """array column -> one (pred, obj) per element (null-safe: a NULL
-    array contributes nothing, matching the old explode_outer branch
-    whose null rows were filtered)."""
-    return F.coalesce(
-        F.transform(arr, lambda o: _po(pred, o)), _empty_po())
+def _node(r: dict) -> list:
+    return [*((M.PRED_TYPE, t) for t in r["types"] or ()),
+            (M.PRED_LABEL, r["text_content"]), (M.PRED_XREF, _xref(r)),
+            (M.PRED_IS_PART_OF, r["is_part_of"]),
+            *((M.PRED_CITATION, c) for c in r["citations"] or ()),
+            *((M.PRED_CONTAINS, c) for c in r["contains"] or ()),
+            # burrs (States/Anchors) attach to a host entity
+            ("wp:attachedTo", r["is_attached_to"])]
 
 
-def _emit(df: DataFrame, subj: Column, candidates: list[Column]
-          ) -> DataFrame:
-    """One-pass triple emission: concat the candidate (pred, obj)
-    arrays, drop null objs, explode. Emits exactly the rows the old
-    per-predicate union emitted (obj/subj null filters included)."""
-    arr = F.filter(
-        F.concat(*candidates) if len(candidates) > 1 else candidates[0],
-        lambda x: x.obj.isNotNull())
-    return (
-        df.filter(subj.isNotNull())
-        .select(*DOC_KEY, "pathway_id", subj.alias("subj"),
-                F.explode(arr).alias("_po"))
-        .select(*DOC_KEY, "pathway_id",
-                "subj", F.col("_po.pred").alias("pred"),
-                F.col("_po.obj").alias("obj"))
-    )
+def _edge(r: dict) -> list:
+    return [*((M.PRED_TYPE, t) for t in r["types"] or ()),
+            (M.PRED_SOURCE, r["endpoint_first_ref"]),
+            (M.PRED_TARGET, r["endpoint_last_ref"]),
+            (M.PRED_IS_PART_OF, r["is_part_of"]),
+            *((M.PRED_CITATION, c) for c in r["citations"] or ())]
 
 
-def entity_triples(nodes: DataFrame) -> list[DataFrame]:
-    sid = F.col("id")
-    cands = [
-        _po_arr(M.PRED_TYPE, F.col("types")),
-        F.array(
-            _po(M.PRED_LABEL, F.col("text_content")),
-            _po(M.PRED_XREF,
-                F.when(F.col("xref_datasource").isNotNull()
-                       & F.col("xref_identifier").isNotNull(),
-                       F.concat_ws(":", "xref_datasource",
-                                   "xref_identifier"))),
-            _po(M.PRED_IS_PART_OF, F.col("is_part_of")),
-        ),
-        _po_arr(M.PRED_CITATION, F.col("citations")),
-    ]
-    if "contains" in nodes.columns:
-        cands.append(_po_arr(M.PRED_CONTAINS, F.col("contains")))
-    if "is_attached_to" in nodes.columns:
-        # burrs (States/Anchors) attach to a host entity
-        cands.append(F.array(_po("wp:attachedTo",
-                                 F.col("is_attached_to"))))
-    return [_emit(nodes, sid, cands)]
+def _citation(r: dict) -> list:
+    return [*((M.PRED_TYPE, t) for t in r["types"] or ()),
+            (M.PRED_XREF, _xref(r)), (M.PRED_LABEL, r["standard_name"])]
 
 
-def edge_triples(edges: DataFrame) -> list[DataFrame]:
-    sid = F.col("id")
-    return [_emit(edges, sid, [
-        _po_arr(M.PRED_TYPE, F.col("types")),
-        F.array(
-            _po(M.PRED_SOURCE, F.col("endpoint_first_ref")),
-            _po(M.PRED_TARGET, F.col("endpoint_last_ref")),
-            _po(M.PRED_IS_PART_OF, F.col("is_part_of")),
-        ),
-        _po_arr(M.PRED_CITATION, F.col("citations")),
-    ])]
-
-
-def interaction_triples(interactions: DataFrame) -> list[DataFrame]:
-    sid = F.col("id")
-    return [_emit(interactions, sid, [
-        F.array(
-            _po(M.PRED_TYPE, F.col("biopax_type")),
-            _po(M.PRED_CONTROLLER, F.col("controller")),
-            _po(M.PRED_CONTROLLED, F.col("controlled")),
-            _po(M.PRED_LEFT, F.col("left")),
-            _po(M.PRED_RIGHT, F.col("right")),
-            _po(M.PRED_CONTROL_TYPE, F.col("control_type")),
-            _po(M.PRED_CONVERSION_DIRECTION,
-                F.col("conversion_direction")),
-        ),
-        _po_arr(M.PRED_PARTICIPANT, F.col("participants")),
-    ])]
-
-
-def citation_triples(citations: DataFrame) -> list[DataFrame]:
-    sid = F.col("id")
-    return [_emit(citations, sid, [
-        _po_arr(M.PRED_TYPE, F.col("types")),
-        F.array(
-            _po(M.PRED_XREF,
-                F.when(F.col("xref_datasource").isNotNull()
-                       & F.col("xref_identifier").isNotNull(),
-                       F.concat_ws(":", "xref_datasource",
-                                   "xref_identifier"))),
-            _po(M.PRED_LABEL, F.col("standard_name")),
-        ),
-    ])]
-
-
-def vocabulary_triples(vocabularies: DataFrame) -> list[DataFrame]:
+def _vocabulary(r: dict) -> list:
     """openControlledVocabulary entities: IRI subject, type + term
     (ref entity shape: golden openControlledVocabulary entries)."""
-    sid = F.col("id")
-    return [_emit(vocabularies, sid, [
-        _po_arr(M.PRED_TYPE, F.col("types")),
-        F.array(_po(M.PRED_TERM, F.col("term"))),
-    ])]
+    return [*((M.PRED_TYPE, t) for t in r["types"] or ()),
+            (M.PRED_TERM, r["term"])]
 
 
-def pathway_triples(pathways: DataFrame) -> list[DataFrame]:
-    sid = F.col("id")
-    return [_emit(pathways, sid, [
-        _po_arr(M.PRED_TYPE, F.col("types")),
-        F.array(_po(M.PRED_LABEL, F.col("name"))),
-        _po_arr(M.PRED_CONTAINS, F.col("contains")),
-        # wp:ontologyTag for every vocab IRI in types beyond "Pathway"
-        _po_arr(M.PRED_ONTOLOGY_TAG,
-                F.filter(F.col("types"),
-                         lambda t: t.startswith("http"))),
-    ])]
+def _pathway(r: dict) -> list:
+    types = r["types"] or ()
+    return [*((M.PRED_TYPE, t) for t in types),
+            (M.PRED_LABEL, r["name"]),
+            *((M.PRED_CONTAINS, c) for c in r["contains"] or ()),
+            # wp:ontologyTag for every vocab IRI in types beyond "Pathway"
+            *((M.PRED_ONTOLOGY_TAG, t) for t in types
+              if t is not None and t.startswith("http"))]
 
 
-def build_triples(model: dict, interactions: DataFrame | None = None,
-                  dedup: bool = True) -> DataFrame:
-    """`dedup=False` returns the raw union and leaves the distinct to
-    the caller — the snapshot pipeline folds it into its bucket
-    shuffle (one full-corpus exchange instead of two, see
-    plans/pipeline.py bucketed_distinct)."""
-    parts: list[DataFrame] = []
-    parts += entity_triples(model["nodes"])
-    parts += edge_triples(model["edges"])
-    parts += citation_triples(model["citations"])
-    parts += pathway_triples(model["pathways"])
-    if "vocabularies" in model:
-        parts += vocabulary_triples(model["vocabularies"])
-    if interactions is not None:
-        parts += interaction_triples(interactions)
-    out = reduce(lambda a, b: a.unionByName(b), parts)
-    return out.dropDuplicates(TRIPLE_COLS) if dedup else out
+def _interaction(r: dict) -> list:
+    return [(M.PRED_TYPE, r["biopax_type"]),
+            (M.PRED_CONTROLLER, r["controller"]),
+            (M.PRED_CONTROLLED, r["controlled"]),
+            (M.PRED_LEFT, r["left"]), (M.PRED_RIGHT, r["right"]),
+            (M.PRED_CONTROL_TYPE, r["control_type"]),
+            (M.PRED_CONVERSION_DIRECTION, r["conversion_direction"]),
+            *((M.PRED_PARTICIPANT, p) for p in r["participants"] or ())]
+
+
+_FLATTEN = {"nodes": _node, "edges": _edge, "citations": _citation,
+            "vocabularies": _vocabulary, "pathways": _pathway,
+            "interactions": _interaction}
+
+
+def _flatten(rows: dict, roles, seen: set) -> list[dict]:
+    out = []
+    for role in roles:
+        for r in rows.get(role, ()):
+            if r["id"] is None:
+                continue
+            for pred, obj in _FLATTEN[role](r):
+                key = (r["url"], r["frag"], r["pathway_id"], r["id"], pred,
+                       obj)
+                if obj is not None and key not in seen:
+                    seen.add(key)
+                    out.append(dict(zip(TRIPLE_COLS, key)))
+    return out
+
+
+def document_triples(rows: dict) -> tuple[list[dict], list[dict]]:
+    """One document's committed rows by role -> its distinct model
+    triples, and its distinct interaction triples not among them."""
+    seen: set = set()
+    return (_flatten(rows, frames.MODEL_FRAMES, seen),
+            _flatten(rows, ["interactions"], seen))

@@ -3,6 +3,21 @@ interactions -> triples -> linked/canonical triples -> JSON-LD docs,
 with parquet-snapshot checkpointing, per-partition lineage manifests,
 and resume-from-last-committed-snapshot (BASELINE.json north_rule).
 
+The stage DAG (`Pipeline.run`):
+
+    text
+    mentions ── quarantine
+        └── document compiler, staged once
+              ├── nodes ── linked ──┐
+              ├── triples ──────────┴── canonical_triples
+              ├── edges, citations, vocabularies, pathways
+              ├── interactions
+              └── documents
+
+Every stage under the compiler is a projection of its staged output,
+so each waits only for `mentions`; linking and canonicalization cross
+documents and stay Spark joins.
+
 Snapshot layout (Iceberg-style commit protocol on plain parquet — the
 same code works against real Iceberg by swapping `_write`/`_read` for
 `writeTo(...).append()` / `read.table(...)`):
@@ -27,53 +42,20 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import export
 from ..operators.assemble import build_document_model
 from ..operators.canonicalize import canonicalize_linked, rewrite_triples
+from ..operators.frames import MODEL_FRAMES
 from ..operators.interactions import classify_interactions
 from ..operators.linking import link_entities, xref_dictionary
 from ..operators.parse import extracted_text, parse_gpml
-from ..operators.triples import TRIPLE_COLS, build_triples
+from ..operators.triples import build_triples
 
 N_BUCKETS_DEFAULT = 32
 # write tasks per snapshot bucket (see SnapshotStore.commit)
 WRITE_TASKS_PER_BUCKET = 2
 # submitter threads of Pipeline.run's stage pool
 STAGE_WORKERS = 4
-
-
-def with_bucket_cols(df: DataFrame, n_buckets: int, mult: int,
-                     key: str = "url") -> DataFrame:
-    """Materialize the snapshot layout keys (bucket, __wsalt) as
-    columns — MUST stay expression-identical to SnapshotStore.commit's
-    repartition keys so a pre-bucketed frame lands in the same layout
-    the store would produce itself."""
-    return (df.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col(key)),
-                       F.lit(n_buckets)).cast("int"))
-              .withColumn(
-                "__wsalt",
-                F.pmod(F.xxhash64(F.col(key), F.lit(1)),
-                       F.lit(mult)).cast("int")))
-
-
-def bucketed_distinct(df: DataFrame, cols: list[str],
-                      n_buckets: int, mult: int) -> DataFrame:
-    """Distinct-on-`cols` fused with the snapshot layout: ONE full
-    exchange hash-partitioned on (bucket, __wsalt) — which satisfies
-    the dedup aggregate's ClusteredDistribution (subset rule; bucket
-    and __wsalt are url functions, so a triple's duplicates all land
-    in one partition) AND the snapshot layout SnapshotStore.commit
-    writes, one file per task, where dropDuplicates +
-    commit-repartition would shuffle the full corpus twice."""
-    b = with_bucket_cols(df, n_buckets, mult)
-    # no explicit partition count: hash keys fix the LAYOUT (which
-    # rows co-locate), while AQE sizes the task count from runtime
-    # bytes — coalescePartitions.parallelismFirst keeps corpus-scale
-    # frames at full parallelism and shrinks near-empty ones to a
-    # handful of write tasks instead of a fixed n_buckets * mult.
-    b = b.repartition(F.col("bucket"), F.col("__wsalt"))
-    return b.dropDuplicates(["bucket", "__wsalt"] + cols)
 
 
 class SnapshotStore:
@@ -144,17 +126,7 @@ class SnapshotStore:
         data_path, manifest_path = self._paths(stage)
         t0 = time.time()
         out = df
-        if "bucket" in df.columns and "__wsalt" in df.columns:
-            # PRE-BUCKETED frame (with_bucket_cols layout keys carried
-            # by the operator's own exchange — bucketed_distinct /
-            # jsonld_documents(bucketize=...)): the data is already
-            # hash-partitioned on (bucket, __wsalt), so writing here
-            # without the repartition keeps the layout while skipping
-            # a second full-corpus shuffle. `bucket` goes last, where
-            # every other stage has it.
-            out = df.select(*[c for c in df.columns
-                              if c not in ("bucket", "__wsalt")], "bucket")
-        elif bucket_col in df.columns:
+        if bucket_col in df.columns:
             out = df.withColumn(
                 "bucket",
                 F.pmod(F.xxhash64(F.col(bucket_col)),
@@ -311,33 +283,29 @@ class Pipeline:
                 if not model_cache:
                     # the model's one staging runs the document
                     # compiler inside the first commit that reads it;
-                    # the five commits then only read its blocks
+                    # the other projections' commits then only read
+                    # its blocks
                     model_cache.update(build_document_model(
                         spark, pages, mentions=parsed_holder["df"]))
                 return model_cache
 
         xd = xref_dictionary(spark)
-        MODEL5 = ["nodes", "edges", "citations", "vocabularies",
-                  "pathways"]
+
+        def projection(build):
+            """A stage that projects the staged model: it waits only
+            for the mentions."""
+            return ["mentions"], lambda: build(model())
 
         builds: dict[str, tuple[list, object]] = {
             "mentions": ([], lambda: parse_gpml(pages)),
             "quarantine": (["mentions"], lambda: parsed_holder["df"]
                            .filter(F.col("gpml_element_name") == "_error")),
-            **{name: (["mentions"], lambda n=name: model()[n])
-               for name in MODEL5},
-            "interactions": (["edges", "nodes"], lambda:
-                             classify_interactions(out["edges"],
-                                                   out["nodes"])),
-            # distinct fused with the snapshot layout: one full-corpus
-            # exchange instead of dropDuplicates + commit repartition
-            "triples": (MODEL5 + ["interactions"], lambda:
-                        bucketed_distinct(
-                            build_triples({k: out[k] for k in MODEL5},
-                                          out["interactions"],
-                                          dedup=False),
-                            TRIPLE_COLS, self.store.n_buckets,
-                            WRITE_TASKS_PER_BUCKET)),
+            **{name: projection(lambda m, n=name: m[n])
+               for name in MODEL_FRAMES},
+            "interactions": projection(classify_interactions),
+            "triples": projection(build_triples),
+            # JSON-LD documents (NDJSON-ready, S5/JS1/JS2)
+            "documents": projection(export.jsonld_documents),
             "linked": (["nodes"], lambda: link_entities(out["nodes"],
                                                         xd)),
             # bipartite fast path: the iterative CC runs only on the
@@ -350,15 +318,6 @@ class Pipeline:
                                       out["triples"],
                                       canonicalize_linked(out["linked"],
                                                           xd))),
-            # JSON-LD documents (NDJSON-ready, S5/JS1/JS2); bucketize
-            # folds the grouped assembly into the snapshot layout so
-            # the full document text is shuffled once, not twice
-            "documents": (list(MODEL5), lambda: __import__(
-                "gpml2pvjson_js_spark.operators.export",
-                fromlist=["jsonld_documents"]).jsonld_documents(
-                {k: out[k] for k in MODEL5},
-                bucketize=(self.store.n_buckets,
-                           WRITE_TASKS_PER_BUCKET))),
             # per-url extracted text (the byte-identical invariant)
             "text": ([], lambda: extracted_text(pages)),
         }
@@ -366,14 +325,13 @@ class Pipeline:
         # Submission priority among SIMULTANEOUSLY-eligible stages
         # (ThreadPoolExecutor runs queued work FIFO, so submission
         # order is execution priority once workers are saturated).
-        # Longest critical-path stages first: `documents` was the
-        # single longest late stage in the 2048x decomposition
-        # (BENCH/PLANS.md round 4) and it becomes eligible the moment
-        # MODEL5 commits — it must not queue behind shorter work.
-        priority = ["mentions", "text", "nodes", "edges", "pathways",
-                    "citations", "vocabularies", "documents",
-                    "interactions", "linked", "triples",
-                    "canonical_triples", "quarantine"]
+        # Critical path first: `triples` feeds `canonical_triples`,
+        # `nodes` feeds `linked`, and `documents` writes the most
+        # bytes; all of them become eligible when `mentions` commits.
+        priority = ["mentions", "text", "nodes", "triples", "documents",
+                    "edges", "interactions", "pathways", "citations",
+                    "vocabularies", "linked", "canonical_triples",
+                    "quarantine"]
         rank = {n: i for i, n in enumerate(priority)}
 
         done: set[str] = set()

@@ -2,7 +2,6 @@ import json
 import os
 
 import pytest
-from pyspark.storagelevel import StorageLevel
 
 from gpml2pvjson_js_spark.corpus import pages_df
 from gpml2pvjson_js_spark.golden import EXPECTED_DIR
@@ -31,14 +30,13 @@ def model(spark, pages):
 
 
 @pytest.fixture(scope="session")
-def interactions(spark, model):
-    return classify_interactions(model["edges"], model["nodes"]) \
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+def interactions(model):
+    return classify_interactions(model)
 
 
 @pytest.fixture(scope="session")
-def triples(model, interactions):
-    return build_triples(model, interactions).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+def triples(model):
+    return build_triples(model)
 
 
 @pytest.fixture(scope="session")
@@ -51,6 +49,16 @@ def golden():
         with open(f"{EXPECTED_DIR}/{name}.json") as f:
             return json.load(f)
     return load
+
+
+def compiled_rows(gpml: str, url: str = "https://t.example/doc") -> dict:
+    """The document compiler's rows by role for one GPML document,
+    parsed and compiled in plain Python."""
+    from gpml2pvjson_js_spark.operators.document import compile_document
+    from gpml2pvjson_js_spark.operators.parse import (
+        MENTIONS_SCHEMA, _parse_fragment)
+    return compile_document([{**dict.fromkeys(MENTIONS_SCHEMA.names), **r}
+                             for r in _parse_fragment(url, 0, gpml)])
 
 
 def rows_by_id(df, url_part):

@@ -13,7 +13,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators.assemble import build_document_model
 from gpml2pvjson_js_spark.operators.document import (
-    FRAMES, SCHEMA, assemble_document, compile_document)
+    SCHEMA, assemble_document, compile_document)
+from gpml2pvjson_js_spark.operators.frames import FRAMES
 from gpml2pvjson_js_spark.operators.parse import MENTIONS_SCHEMA
 
 
@@ -47,15 +48,13 @@ def _pathway(idx, **kw):
                height=None, graph_id_explicit=None, zorder=None, **kw)
 
 
-def _roles(pairs) -> dict:
-    """The compiler's (role, row) pairs by role, keeping each row's
-    fields in its frame's order."""
-    by_role = {}
-    for role, row in pairs:
-        assert set(row) <= set(FRAMES[role].names)
-        by_role.setdefault(role, []).append(
-            {f: row.get(f) for f in FRAMES[role].names})
-    return by_role
+def _roles(rows) -> dict:
+    """The compiler's rows by role, each row keyed by exactly its
+    frame's fields, in their order; roles without rows left out."""
+    for role, rs in rows.items():
+        for row in rs:
+            assert list(row) == FRAMES[role].names
+    return {role: rs for role, rs in rows.items() if rs}
 
 
 def _run(*rows):

@@ -1,27 +1,30 @@
 """Interaction classification, triple materialization (P/R vs curated
 expected triples), linking, canonicalization, topo levels."""
 
-import pytest
 from pyspark.sql import functions as F
 
+from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators.canonicalize import (
     canonical_map, canonicalize_linked, connected_components,
     rewrite_triples)
+from gpml2pvjson_js_spark.operators.interactions import classify
 from gpml2pvjson_js_spark.operators.linking import (
     link_entities, same_as_edges, xref_dictionary)
 from gpml2pvjson_js_spark.plans.topo import dependency_edges, topo_levels
+from tests.conftest import compiled_rows
 
 
-def _inter_by_id(interactions, url_part):
-    return {r["id"]: r.asDict() for r in interactions.filter(
-        F.col("url").contains(url_part)).collect()}
+def _classified(gpml: str, strict_reference: bool = True) -> dict:
+    rows = compiled_rows(gpml)
+    return {r["id"]: r for r in classify(
+        rows["nodes"], rows["edges"], strict_reference=strict_reference)}
 
 
-def test_classification_roles_strict(interactions):
+def test_classification_roles_strict():
     """Default strict_reference=True reproduces the reference's marker
     key-casing behavior (ArrowHeadMappings keys 'mim-*' never match
     converted 'Mim*' markers, Interaction.ts:167)."""
-    i = _inter_by_id(interactions, "/interactions/")
+    i = _classified(C.gpml_interactions())
     # Arrow between two physical entities -> Conversion: the
     # re-disambiguation synthesizes 'MIMConversion' which DOES match
     assert i["ie001"]["biopax_type"] == "Conversion"
@@ -39,18 +42,10 @@ def test_classification_roles_strict(interactions):
     assert "ie005" not in i
 
 
-@pytest.fixture(scope="module")
-def interactions_intent(spark, model):
-    from gpml2pvjson_js_spark.operators.interactions import (
-        classify_interactions)
-    return classify_interactions(model["edges"], model["nodes"],
-                                 strict_reference=False)
-
-
-def test_classification_roles_intent(interactions_intent):
+def test_classification_roles_intent():
     """strict_reference=False fulfils the classification table's
     intent: every mim-* marker classifies."""
-    i = _inter_by_id(interactions_intent, "/interactions/")
+    i = _classified(C.gpml_interactions(), strict_reference=False)
     # mim-conversion
     assert i["ie002"]["biopax_type"] == "Conversion"
     # catalysis via anchor: controller HK1, controlled the conversion edge
@@ -59,11 +54,76 @@ def test_classification_roles_intent(interactions_intent):
     assert i["ie003"]["controlled"] == "ie002"
 
 
-def test_classification_hyperedge_depth(interactions_intent):
-    i = _inter_by_id(interactions_intent, "/hyperedge/")
+def test_classification_hyperedge_depth():
+    i = _classified(C.gpml_hyperedge(), strict_reference=False)
     assert i["he002"]["controlled"] == "he001"
     assert i["he003"]["controlled"] == "he002"
     assert i["he003"]["control_type"] == "INHIBITION"
+
+
+def _node(idx, nid, types, kaavio="SingleFreeNode", contains=None):
+    return {"url": "u", "frag": 0, "pathway_id": "p", "elem_idx": idx,
+            "id": nid, "types": types, "kaavio_type": kaavio,
+            "contains": contains}
+
+
+def _line(idx, eid, source, target, marker_end=None):
+    return {"url": "u", "frag": 0, "pathway_id": "p", "elem_idx": idx,
+            "id": eid, "types": ["Interaction", "Edge"],
+            "gpml_element_name": "Interaction", "marker_start": None,
+            "marker_end": marker_end, "endpoint_first_ref": source,
+            "endpoint_last_ref": target}
+
+
+def test_catalysis_fix_ups_and_group_typing():
+    nodes = [_node(0, "p1", ["Protein"]), _node(1, "p2", ["Protein"]),
+             _node(2, "lab", ["Label"]),
+             _node(3, "g1", ["Group"], "Group", contains=["e1", "p1"]),
+             _node(4, "g2", ["Group"], "Group", contains=["p2"])]
+    edges = [_line(5, "e1", "p1", "p2"),
+             # a protein catalyses the plain line: it becomes a Conversion
+             _line(6, "c1", "p1", "e1", "MimCatalysis"),
+             # a Label is no BioPAX node: the Catalysis is demoted
+             _line(7, "c2", "lab", "p2", "MimCatalysis")]
+    i = {r["id"]: r for r in classify(nodes, edges, strict_reference=False)}
+    assert (i["e1"]["biopax_type"], i["e1"]["left"], i["e1"]["right"],
+            i["e1"]["participants"], i["e1"]["conversion_direction"]) == (
+        "Conversion", "p1", "p2", None, "LEFT-TO-RIGHT")
+    assert (i["c1"]["biopax_type"], i["c1"]["controller"],
+            i["c1"]["controlled"]) == ("Catalysis", "p1", "e1")
+    assert (i["c2"]["biopax_type"], i["c2"]["controller"],
+            i["c2"]["controlled"], i["c2"]["participants"]) == (
+        "Interaction", None, None, ["p2", "lab"])
+    # a Group containing an edge is a Pathway, else a Complex
+    assert i["g1"]["biopax_type"] == "Pathway"
+    assert i["g2"]["biopax_type"] == "Complex"
+    # the default strict mode never reaches the mim-* markers
+    strict = {r["id"] for r in classify(nodes, edges)}
+    assert strict == {"e1", "g1", "g2"}
+
+
+def test_repeated_graph_id_resolves_to_the_last_element():
+    nodes = [_node(0, "x", ["Protein"]), _node(1, "p2", ["Protein"]),
+             _node(2, "x", ["Label"])]
+    edges = [_line(3, "dup", "p2", "x", "TBar"),
+             _line(4, "dup", "x", "p2", "MimCatalysis")]
+    i = classify(nodes, edges, strict_reference=False)
+    # one row per id, the last edge's; its controller `x` is the Label
+    assert [(r["id"], r["biopax_type"], r["participants"]) for r in i] \
+        == [("dup", "Interaction", ["p2", "x"])]
+
+
+def test_interactions_stage_is_the_classifier_per_document(interactions):
+    """The staged interactions frame holds, per document, the rows of
+    the Python classifier."""
+    from gpml2pvjson_js_spark.operators.frames import INTERACTIONS
+    staged = sorted(
+        tuple(r.asDict()[f] for f in INTERACTIONS.names[3:])
+        for r in interactions.filter(
+            F.col("url").contains("/interactions/")).collect())
+    pure = sorted(tuple(r[f] for f in INTERACTIONS.names[3:])
+                  for r in _classified(C.gpml_interactions()).values())
+    assert staged == pure and pure
 
 
 # Curated expected triples for the `interactions` fixture, derived by

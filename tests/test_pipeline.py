@@ -46,6 +46,8 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
     bounded operator tree; the round-5 canonicalize_linked rewrite
     removed the 6-round CC join tree from the corpus path. Measured
     at sf0.01: max executed-plan string 99k."""
+    from gpml2pvjson_js_spark.operators.assemble import (
+        build_document_model)
     from gpml2pvjson_js_spark.operators.canonicalize import (
         canonicalize_linked, rewrite_triples)
     from gpml2pvjson_js_spark.operators.export import jsonld_documents
@@ -67,16 +69,17 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
         }
         # the two build shapes that used to carry the 574k trees,
         # rebuilt exactly as the pipeline's stage lambdas build them
-        # (pre-commit)
-        model5 = {k: out[k] for k in ["nodes", "edges", "citations",
-                                      "vocabularies", "pathways"]}
+        # (pre-commit): the documents are a projection of the model
+        # staged from the committed mentions
         sizes["canonical_build"] = len(
             rewrite_triples(out["triples"],
                             canonicalize_linked(out["linked"],
                                                 xref_dictionary(spark)))
             ._jdf.queryExecution().optimizedPlan().toString())
+        model = build_document_model(
+            spark, pages, mentions=p.store.read(spark, "mentions"))
         sizes["documents_build"] = len(
-            jsonld_documents(model5, bucketize=(4, 2))
+            jsonld_documents(model)
             ._jdf.queryExecution().optimizedPlan().toString())
     finally:
         spark.conf.set("spark.sql.maxPlanStringLength", old_cap)
@@ -237,52 +240,57 @@ def test_commit_without_aqe_uses_explicit_write_task_count(
     assert store.read(spark, "no_aqe").count() == 20
 
 
-def test_bucketed_distinct_fuses_dedup_into_one_exchange(spark):
-    """bucketed_distinct == dropDuplicates relationally, with exactly
-    ONE Exchange in the plan: the (bucket, __wsalt) hash partitioning
-    is a subset of the dedup aggregate's grouping keys, so Catalyst
-    must not insert a second shuffle (the whole point of fusing the
-    distinct with the snapshot layout)."""
-    from gpml2pvjson_js_spark.plans.pipeline import bucketed_distinct
-
-    df = spark.range(500).select(
-        F.concat(F.lit("https://d/"), (F.col("id") % 40)).alias("url"),
-        (F.col("id") % 7).alias("frag"),
-        (F.col("id") % 11).cast("string").alias("subj"),
-        F.lit("p").alias("pred"),
-        (F.col("id") % 3).cast("string").alias("obj"))
-    cols = ["url", "frag", "subj", "pred", "obj"]
-    got = bucketed_distinct(df, cols, n_buckets=4, mult=2)
-    expect = {tuple(r) for r in df.dropDuplicates(cols)
-              .select(*cols).collect()}
-    assert {tuple(r) for r in got.select(*cols).collect()} == expect
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges == 1, plan[:2000]
-    assert "bucket" in got.columns and "__wsalt" in got.columns
+def _fields(*fields) -> str:
+    """A manifest schema: every field nullable, as the stages commit
+    them."""
+    return json.dumps({"type": "struct", "fields": [
+        {"name": n, "type": t, "nullable": True, "metadata": {}}
+        for n, t in fields]})
 
 
-def test_jsonld_bucketize_matches_join_path(spark):
-    """jsonld_documents(bucketize=...) must produce the SAME documents
-    as the join path — same (url, frag, pathway_id) keys, same parsed
-    pathway and entitiesById objects (map entry ORDER may differ; JSON
-    object semantics) — while carrying the snapshot layout columns."""
-    from gpml2pvjson_js_spark.operators.assemble import (
-        build_document_model)
-    from gpml2pvjson_js_spark.operators.export import jsonld_documents
+_STRS = {"type": "array", "elementType": "string", "containsNull": True}
+_KEY = (("url", "string"), ("frag", "integer"), ("pathway_id", "string"))
+# what the interactions, triples and documents stages committed for
+# `pages_df(spark, 7, giant_every=0)` when each was its own Catalyst
+# plan over the model frames: the manifest schema, the row count and
+# the SHA-256 of the sorted rows, each a JSON object with sorted keys
+# (a document parsed, so its entitiesById order does not count)
+PROJECTION_STAGES = {
+    "interactions": (
+        _fields(*_KEY, ("id", "string"), ("marker_eff", "string"),
+                ("biopax_type", "string"), ("control_type", "string"),
+                ("controller", "string"), ("controlled", "string"),
+                ("left", "string"), ("right", "string"),
+                ("participants", _STRS),
+                ("conversion_direction", "string"), ("bucket", "integer")),
+        6, "0fb879b8ebadacd63ca515eda60ab453ff9713aeb70c94546cd8580adba2c65c"),
+    "triples": (
+        _fields(*_KEY, ("subj", "string"), ("pred", "string"),
+                ("obj", "string"), ("bucket", "integer")),
+        292, "1cef08f45395e1b2a51a1e6a19708eb86c9f370fadb62f9fcd8ecfde71ee385d"),
+    "documents": (
+        _fields(*_KEY, ("jsonld", "string"), ("bucket", "integer")),
+        7, "ddb2644b3f172756140a732b36c366afdd4f72f1488cb4592b7fa22e2058649b"),
+}
 
-    pages = pages_df(spark, 6, giant_every=0)
-    model = build_document_model(spark, pages)
-    base = {(r["url"], r["frag"]): r
-            for r in jsonld_documents(model).collect()}
-    buck = {(r["url"], r["frag"]): r
-            for r in jsonld_documents(model, bucketize=(4, 2)).collect()}
-    assert set(base) == set(buck) and base
-    for k in base:
-        b, g = json.loads(base[k]["jsonld"]), json.loads(buck[k]["jsonld"])
-        assert base[k]["pathway_id"] == buck[k]["pathway_id"]
-        assert b["pathway"] == g["pathway"]
-        assert b["entitiesById"] == g["entitiesById"]
+
+def test_projection_stages_commit_the_pinned_schema_and_rows(
+        spark, tmp_path_factory):
+    import hashlib
+
+    root = str(tmp_path_factory.mktemp("kgout_pins"))
+    p = Pipeline(spark, pages_df(spark, 7, giant_every=0), root,
+                 n_buckets=4)
+    out = p.run(resume=False)
+    for stage, (schema, n_rows, digest) in PROJECTION_STAGES.items():
+        assert p.store.manifest(stage)["schema"] == schema, stage
+        rows = [r.asDict(recursive=True) for r in out[stage].collect()]
+        if stage == "documents":
+            rows = [{**r, "jsonld": json.loads(r["jsonld"])} for r in rows]
+        canon = sorted(json.dumps(r, sort_keys=True) for r in rows)
+        assert len(canon) == n_rows, stage
+        assert hashlib.sha256("\n".join(canon).encode()).hexdigest() \
+            == digest, stage
 
 
 def _persistent_rdd_ids(spark) -> set:

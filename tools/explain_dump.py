@@ -74,10 +74,10 @@ def main() -> None:
 
         pages = pages_from_documents(spark, SF_DIR)
         model = build_document_model(spark, pages)
-        inter = classify_interactions(model["edges"], model["nodes"])
+        inter = classify_interactions(model)
         xd = xref_dictionary(spark)
         linked = link_entities(model["nodes"], xd)
-        triples = build_triples(model, inter, dedup=False)
+        triples = build_triples(model)
         canon = rewrite_triples(triples, canonicalize_linked(linked, xd))
         for s in ("nodes", "edges", "citations", "vocabularies",
                   "pathways"):
@@ -89,10 +89,7 @@ def main() -> None:
 
         # the lazy probe DAG (bench.py _lazy_probe)
         lazy_model = build_document_model(spark, pages)
-        lazy = build_triples(
-            lazy_model,
-            classify_interactions(lazy_model["edges"],
-                                  lazy_model["nodes"]))
+        lazy = build_triples(lazy_model)
         dump("lazy_dag", lazy)
 
     spark.stop()
