@@ -14,7 +14,7 @@ elements and resolves its references in memory, and emits the rows of
 all five model frames, the document's interactions, triples and JSON-LD
 text; each is a projection of that one staged output. Spark keeps the
 grouping, the quarantine filter and everything that crosses documents
-(linking, canonicalization, the triple rewrite). A generic iterative
+(linking, canonicalization, the triple rewrite). A per-document
 topo-level operator is still provided in plans/topo.py for
 hyperedge-depth diagnostics and cycle quarantine.
 """

@@ -1,270 +1,77 @@
-"""Canonicalization: connected components over sameAs edges via
-iterative DataFrame joins, then triple subj/obj rewrite to canonical
-ids.
+"""Canonicalization: every linked mention maps to the representative
+of its owl:sameAs component, then triple subj/obj are rewritten to
+those canonical ids.
 
 The reference has no distributed analog — its nearest mechanism is the
 promise-cache forward-reference resolution (src/Processor.ts:278-318);
 this stage is mandated by the north rule.
 
-Algorithm: min-label propagation with POINTER DOUBLING. Each round
-does (a) a neighbor-min hop and (b) a label-of-label shortcut, so the
-label frontier at round k covers component diameter ~2^k, not k.
-Labels are rank-prefixed ("0" + id for IRIs, "1" + id for
-url#frag#id mention keys) so the elected representative is always the
-lexicographically-smallest IRI when the component contains one —
-a component of mentions linked to http://identifiers.org/... always
-canonicalizes to the identifiers.org IRI, never to a page-dependent
-mention key.
-
-Production default is check_convergence=False: exactly max_rounds
-lazy rounds, NO driver-side actions, so the whole pipeline stays one
-deferred DAG (a blocking per-round count() was measured to serialize
-the pipeline at high parallelism). Each round localCheckpoints with
-SERIALIZED storage to cut the iterative lineage without the
-deserialized-row GC thrash.
-
-Scaling structure (round 5): real sameAs graphs are dominated by
-size-1/size-2 components and leaf-heavy stars (every corpus mention is
-a degree-1 leaf hanging off its linked IRI), so the iterative loop is
-the wrong tool for ~all of the data. `connected_components` therefore
-LEAF-PEELS first — exactly, for arbitrary graphs:
-
-  1. degree-1 nodes and size-2 components resolve in ONE pass
-     (a leaf's component is its unique neighbor's component; an
-     isolated pair keys itself by its min member);
-  2. the pointer-doubling loop runs only on the 2-core subgraph
-     (edges whose BOTH endpoints have degree >= 2) — empty or tiny on
-     realistic sameAs distributions, so the per-round barrier latency
-     that held N->4N scaling at ~1.2x applies to a near-empty frame;
-  3. a final per-component min over ALL members (core + leaves)
-     restores the exact representative semantics (a leaf that is the
-     min-ranked member still wins).
-
-`canonicalize_linked` goes one step further for the pipeline's OWN
-edge shape: `link_entities` emits at most ONE link edge per mention
-(the exact and similarity paths partition mentions disjointly and each
-keeps a single best match), so mentions can never merge two IRI
-components. Components of the full sameAs graph are exactly the
-components of the DICTIONARY-scale alias graph plus mention leaves —
-the iterative CC never touches a corpus-sized frame at all, and the
-mention->component assignment is one broadcastable join. Exactness vs
-the generic path is pinned by test_canonicalize_linked_matches_generic.
+The sameAs graph (`linking.same_as_edges`) is the dictionary's alias
+pairs plus one link edge per linked mention. `link_entities` keeps at
+most ONE link per mention (the exact and similarity paths partition
+mentions disjointly and each keeps a single best match), so a mention
+is a leaf of its link target and never merges two IRI components: the
+components of the full graph are the components of the DICTIONARY-
+scale alias graph with mention leaves attached. `canonicalize_linked`
+therefore collects the alias pairs, finds their components with a
+union-find on the driver (`alias_components`), and assigns mentions
+with one broadcast join. Exactness against the full graph is pinned by
+test_canonicalize_linked_matches_generic.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-
-# pointer doubling: 6 rounds cover component diameters beyond 2^6,
-# far past any sameAs chain the linker emits (mention-IRI stars have
-# diameter <= 4)
-MAX_ROUNDS = 6
 
 _SER = StorageLevel.MEMORY_AND_DISK
 
 
-def _ranked(col: Column) -> Column:
-    """Rank-prefix an id so canonical IRIs sort before mention keys.
+def _rank_key(node: str) -> tuple[bool, str]:
+    """Representative order: IRIs before other ids, then lexicographic.
 
     A scheme prefix alone does NOT discriminate: mention keys are
-    concat_ws('#', url, frag, id) and so start with http(s) too, and
-    on a low-sorting page domain a bare lexicographic min would make
-    the mention key the component representative. Mention keys always
-    contain '#'; BridgeDb-style canonical xref IRIs (identifiers.org)
-    never carry a fragment."""
-    is_iri = (col.startswith("http://") | col.startswith("https://")) \
-        & ~col.contains("#")
-    return F.concat(F.when(is_iri, F.lit("0")).otherwise(F.lit("1")), col)
+    url#frag#id and so start with http(s) too, and on a low-sorting
+    page domain a bare lexicographic min would make the mention key the
+    component representative. Mention keys always contain '#';
+    BridgeDb-style canonical xref IRIs (identifiers.org) never carry a
+    fragment."""
+    is_iri = node.startswith(("http://", "https://")) and "#" not in node
+    return not is_iri, node
 
 
-def _unranked(col: Column) -> Column:
-    return F.substring(col, 2, 2147483647)
+def alias_components(pairs) -> dict[str, str]:
+    """Undirected (a, b) pairs -> {node: representative}, the
+    representative being the min-`_rank_key` member of the node's
+    connected component. Union-find with path halving."""
+    parent: dict[str, str] = {}
 
+    def find(x: str) -> str:
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
 
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    return edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-
-
-def _cc_iterative(sym: DataFrame, max_rounds: int,
-                  check_convergence: bool) -> DataFrame:
-    """Pointer-doubling min-label propagation over a SYMMETRIC,
-    distinct edge frame -> (id, lbl) with lbl still RANK-PREFIXED.
-
-    check_convergence=True adds a driver-side changed-row count per
-    round (early exit) — useful in tests, NOT in the production DAG.
-    """
-    labels = sym.select(F.col("src").alias("id")).distinct() \
-        .withColumn("lbl", _ranked(F.col("id")))
-
-    for rnd in range(max_rounds):
-        # (a) hop: min label among neighbors
-        nbr = sym.join(labels.select(F.col("id").alias("dst2"),
-                                     F.col("lbl").alias("nbr_lbl")),
-                       sym.dst == F.col("dst2")) \
-            .groupBy("src").agg(F.min("nbr_lbl").alias("nbr_min"))
-        hopped = labels.join(
-            nbr.withColumnRenamed("src", "id2"),
-            labels.id == F.col("id2"), "left",
-        ).select(
-            "id",
-            F.least(F.col("lbl"),
-                    F.coalesce(F.col("nbr_min"), F.col("lbl"))).alias("lbl"),
-        )
-        # (b) double: label of my label's node (path shortcut).
-        # The lookup MUST be keyed by node id (id -> lbl is unique, no
-        # groupBy needed): joining unranked(lbl) == id returns
-        # lbl[lbl[i]] — true pointer doubling. Keying by unranked(lbl)
-        # instead would return the row's own label (a no-op shortcut).
-        parent = hopped.select(F.col("id").alias("p_id"),
-                               F.col("lbl").alias("p_min"))
-        new_labels = hopped.join(
-            parent, _unranked(hopped.lbl) == parent.p_id, "left",
-        ).select(
-            "id",
-            F.least(F.col("lbl"),
-                    F.coalesce(F.col("p_min"), F.col("lbl"))).alias("lbl"),
-        )
-        # checkpoint every OTHER round (and the last): the checkpoint
-        # only cuts lineage — letting it span two rounds halves the
-        # per-round Catalyst planning passes (each lazy checkpoint's
-        # toRdd plans AND materializes its subtree synchronously)
-        # while keeping plan depth bounded at two rounds' joins.
-        if rnd % 2 == 1 or rnd == max_rounds - 1:
-            new_labels = new_labels.localCheckpoint(
-                eager=False, storageLevel=_SER)
-
-        if check_convergence:
-            changed = labels.withColumnRenamed("lbl", "old").join(
-                new_labels.withColumnRenamed("id", "id3"),
-                F.col("id") == F.col("id3"),
-            ).filter(F.col("old") != F.col("lbl")).count()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels = new_labels
-    return labels
-
-
-def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS,
-                         check_convergence: bool = False) -> DataFrame:
-    """edges(src, dst) undirected -> (id, component); component is the
-    min-ranked member (IRIs preferred over mention keys).
-
-    Exact leaf-peeling (see module docstring): the iterative loop runs
-    only on the 2-core (edges whose both endpoints have degree >= 2);
-    degree-1 leaves, isolated pairs, and star centers resolve without
-    iteration. The decomposition is exact for arbitrary graphs:
-
-    - removing a degree-1 node never disconnects a component, so 2-core
-      components are components of the residual graph;
-    - a degree->=2 node with NO 2-core edge has only leaf neighbors, so
-      its component is exactly itself + its leaves (a leaf cannot
-      connect two such centers — it has one edge);
-    - a leaf whose unique neighbor is also a leaf forms an isolated
-      pair (keyed by its min-ranked member, the same key from both
-      sides);
-    - the final per-key min over ALL members restores the exact
-      representative (a leaf that is the component's min still wins).
-    """
-    sym = _symmetrize(edges).localCheckpoint(eager=False,
-                                             storageLevel=_SER)
-    # node degree (sym is distinct, so count == degree)
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-
-    deg_s = deg.select(F.col("src").alias("id_s"),
-                       F.col("deg").alias("deg_s"))
-    deg_d = deg.select(F.col("src").alias("id_d"),
-                       F.col("deg").alias("deg_d"))
-    core_sym = sym.join(deg_s, sym.src == F.col("id_s")) \
-        .join(deg_d, sym.dst == F.col("id_d")) \
-        .filter((F.col("deg_s") >= 2) & (F.col("deg_d") >= 2)) \
-        .select("src", "dst") \
-        .localCheckpoint(eager=False, storageLevel=_SER)
-    core_lbl = _cc_iterative(core_sym, max_rounds, check_convergence) \
-        .select(F.col("id").alias("c_id"), F.col("lbl").alias("c_lbl"))
-
-    # provisional component KEY per node — equal across a component:
-    #   core node            -> its core label
-    #   non-core center      -> its own ranked id (anchors its star)
-    #   leaf on a center     -> coalesce(core label, ranked(center))
-    #   leaf on a leaf       -> min ranked of the pair
-    centers = deg.filter(F.col("deg") >= 2) \
-        .select(F.col("src").alias("id"))
-    center_key = centers.join(core_lbl, centers.id == F.col("c_id"),
-                              "left") \
-        .select("id",
-                F.coalesce("c_lbl", _ranked(F.col("id"))).alias("key"))
-
-    leaves = sym.join(
-        deg.filter(F.col("deg") == 1).select(F.col("src").alias("leaf")),
-        sym.src == F.col("leaf"),
-    ).select(F.col("src").alias("id"), F.col("dst").alias("nbr"))
-    nbr_deg = deg.select(F.col("src").alias("n_id"),
-                         F.col("deg").alias("n_deg"))
-    leaf_key = leaves.join(nbr_deg, leaves.nbr == F.col("n_id")) \
-        .join(core_lbl, leaves.nbr == F.col("c_id"), "left") \
-        .select(
-            "id",
-            F.when(F.col("n_deg") == 1,
-                   F.least(_ranked(F.col("id")), _ranked(F.col("nbr"))))
-             .otherwise(F.coalesce(F.col("c_lbl"),
-                                   _ranked(F.col("nbr"))))
-             .alias("key"))
-
-    keyed = center_key.unionByName(leaf_key)
-    rep = keyed.groupBy("key").agg(
-        F.min(_ranked(F.col("id"))).alias("rep"))
-    return keyed.join(rep, "key") \
-        .select("id", _unranked(F.col("rep")).alias("component"))
-
-
-def canonical_map(linked: DataFrame, same_as: DataFrame,
-                  check_convergence: bool = False) -> DataFrame:
-    """(url, frag, id, canonical): every linked mention mapped to the
-    component representative (min IRI) of its sameAs component."""
-    comp = connected_components(same_as,
-                                check_convergence=check_convergence)
-    mention_key = F.concat_ws("#", "url", F.col("frag").cast("string"), "id")
-    m = linked.filter(F.col("canonical_iri").isNotNull()) \
-        .withColumn("mkey", mention_key)
-    return m.join(comp.withColumnRenamed("id", "mkey2"),
-                  m.mkey == F.col("mkey2"), "left") \
-        .select("url", "frag", "id",
-                F.coalesce("component", "canonical_iri").alias("canonical")) \
-        .dropDuplicates(["url", "frag", "id"])
+    for a, b in pairs:
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            # the root is always its set's representative
+            if _rank_key(rb) < _rank_key(ra):
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {x: find(x) for x in parent}
 
 
 def canonicalize_linked(linked: DataFrame,
                         xref_dict: DataFrame) -> DataFrame:
-    """Pipeline fast path for `canonical_map(linked,
-    same_as_edges(linked, xref_dict))` — identical output (pinned by
-    test_canonicalize_linked_matches_generic), different plan shape.
-
-    Why it is exact: link edges attach each mention to AT MOST one IRI
-    (see `same_as_edges`), so every mention is a degree-1 leaf of the
-    sameAs graph and components of the full graph are exactly the
-    components of the dictionary-internal alias graph with mention
-    leaves attached. Mention keys rank below IRIs, and every component
-    containing a mention contains an IRI (its link target), so the
-    representative is always the alias-component's min IRI.
-
-    Why it scales: the iterative CC runs ONLY on the alias graph
-    (dictionary-scale, corpus-size-independent — BridgeDb-sized at
-    worst), and the mention->component assignment is a single equi
-    join of `linked` against that small component map (explicitly
-    broadcast — auto-broadcast is off session-wide, see session.py).
-    The generic path instead symmetrized + iterated
-    over a corpus-sized node set; its per-round barriers were the
-    named non-scaling tail in the N->4N series (BENCH/PLANS.md
-    round-4 final)."""
+    """(url, frag, id, canonical): every linked mention mapped to the
+    representative of its sameAs component (module docstring), or to
+    its own link target when that IRI has no alias."""
     from .linking import alias_edges
-    comp = connected_components(alias_edges(xref_dict)) \
-        .withColumnRenamed("id", "c_iri")
+    pairs = alias_edges(xref_dict).dropna().collect()
+    comp = linked.sparkSession.createDataFrame(
+        list(alias_components(pairs).items()),
+        "c_iri string, component string")
     m = linked.filter(F.col("canonical_iri").isNotNull())
     # explicit hint: auto-broadcast is disabled session-wide (see
     # session.py — corpus frames must never be size-guessed into a

@@ -198,7 +198,7 @@ def link_entities(nodes: DataFrame, xref_dict: DataFrame,
 def alias_edges(xref_dict: DataFrame) -> DataFrame:
     """Dictionary-internal owl:sameAs pairs (IRI -> IRI). DICTIONARY-
     scale — independent of corpus size — which is what lets
-    `canonicalize_linked` keep the iterative CC off corpus frames."""
+    `canonicalize_linked` find their components on the driver."""
     return xref_dict.filter(F.col("alias_of_iri").isNotNull()) \
         .select(F.col("canonical_iri").alias("src"),
                 F.col("alias_of_iri").alias("dst"))
@@ -206,7 +206,8 @@ def alias_edges(xref_dict: DataFrame) -> DataFrame:
 
 def same_as_edges(linked: DataFrame, xref_dict: DataFrame) -> DataFrame:
     """owl:sameAs pairs: dictionary aliases plus entity->canonical
-    links; input to connected-components canonicalization.
+    links: the graph whose connected components canonicalization
+    resolves.
 
     Structural invariant consumed by `canonicalize_linked`: the link
     edges attach each mention key to AT MOST ONE IRI — `link_entities`

@@ -5,8 +5,9 @@ Spark-first layout of the reference's streaming SAX parse
 src/2013a/toPvjson.ts:169-198): each page row is parsed inside an
 Arrow-batched ``mapInPandas`` stage, emitting a *flat typed mention
 row* per GPML element.  All conversion semantics (key mapping,
-defaults, value converters, joins) happen later as declarative
-DataFrame operations — this stage is pure extraction plus the two
+defaults, value converters, reference resolution) happen later, in
+Python, one document at a time, in the document compiler
+(document.py) — this stage is pure extraction plus the
 order-sensitive jobs that genuinely need document order:
 
 - multi-fragment splitting (ref: bin/gpml2pvjson:61-96)

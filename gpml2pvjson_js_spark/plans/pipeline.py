@@ -308,11 +308,9 @@ class Pipeline:
             "documents": projection(export.jsonld_documents),
             "linked": (["nodes"], lambda: link_entities(out["nodes"],
                                                         xd)),
-            # bipartite fast path: the iterative CC runs only on the
-            # dictionary-scale alias graph (canonicalize_linked
-            # docstring) — the generic canonical_map's per-round
-            # corpus-frame barriers were the non-scaling tail in the
-            # N->4N series (BENCH/PLANS.md round-4 final)
+            # the sameAs components come from the dictionary-scale
+            # alias graph alone, found on the driver and broadcast to
+            # the mentions (canonicalize module docstring)
             "canonical_triples": (["triples", "linked"], lambda:
                                   rewrite_triples(
                                       out["triples"],

@@ -63,15 +63,9 @@ def get_spark(
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     master = master or f"local[{cpus}]"
-    # local[N] / local[*] / local-cluster[n,cores,mem]
+    # local[N] / local[*]
     n = master.rstrip("]").rsplit("[", 1)[-1]
-    if "," in n:  # local-cluster: n_workers * cores_per_worker
-        try:
-            workers, cores = n.split(",")[:2]
-            parallelism = int(workers) * int(cores)
-        except ValueError:
-            parallelism = os.cpu_count()
-    elif n in ("*", ""):
+    if n in ("*", ""):
         parallelism = os.cpu_count()
     else:
         try:

@@ -68,3 +68,39 @@ def rows_by_id(df, url_part):
         d = {k: v for k, v in r.asDict().items() if v is not None}
         out[d["id"]] = d
     return out
+
+
+def _rank_key(node: str) -> str:
+    """Representative order of a sameAs component: IRIs (http(s), no
+    '#') sort before mention keys / plain ids."""
+    is_iri = (node.startswith("http://") or node.startswith("https://")) \
+        and "#" not in node
+    return ("0" if is_iri else "1") + node
+
+
+def _uf_components(edges: list[tuple[str, str]]) -> dict[str, str]:
+    """Brute-force oracle: undirected edges -> {node: min-`_rank_key`
+    member of its component}."""
+    parent: dict[str, str] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    groups: dict[str, list[str]] = {}
+    for n in parent:
+        groups.setdefault(find(n), []).append(n)
+    out = {}
+    for members in groups.values():
+        rep = min(members, key=_rank_key)
+        for n in members:
+            out[n] = rep
+    return out

@@ -5,13 +5,12 @@ from pyspark.sql import functions as F
 
 from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators.canonicalize import (
-    canonical_map, canonicalize_linked, connected_components,
-    rewrite_triples)
+    alias_components, canonicalize_linked, rewrite_triples)
 from gpml2pvjson_js_spark.operators.interactions import classify
 from gpml2pvjson_js_spark.operators.linking import (
     link_entities, same_as_edges, xref_dictionary)
 from gpml2pvjson_js_spark.plans.topo import dependency_edges, topo_levels
-from tests.conftest import compiled_rows
+from tests.conftest import _uf_components, compiled_rows
 
 
 def _classified(gpml: str, strict_reference: bool = True) -> dict:
@@ -219,76 +218,59 @@ def test_linking_salted_fallback_at_dictionary_scale(spark, model):
     assert "__salt" in plan  # the exact join shuffles on (key, salt)
 
 
-def test_connected_components_merges_alias(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string")
-    comp = {r["id"]: r["component"]
-            for r in connected_components(edges).collect()}
-    assert comp["a"] == comp["b"] == comp["c"] == "a"
-    assert comp["x"] == comp["y"] == "x"
+def test_alias_components_merges_alias():
+    comp = alias_components([("a", "b"), ("b", "c"), ("x", "y")])
+    assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_connected_components_long_chain_pointer_doubling(spark):
-    """A 101-node chain (diameter 100 >> MAX_ROUNDS=6) converges only
-    if the label-of-label shortcut is true pointer doubling
-    (reach after k rounds of hop+double: r_k = 2*(r_{k-1}+1) -> 126 at
-    k=6). Guards the ADVICE-flagged regression where the parent lookup
-    keyed by labels made the shortcut a no-op."""
-    ids = [f"n{i:03d}" for i in range(101)]
-    edges = spark.createDataFrame(
-        [(ids[i], ids[i + 1]) for i in range(100)], "src string, dst string")
-    comp = {r["id"]: r["component"]
-            for r in connected_components(edges).collect()}
-    assert set(comp.values()) == {"n000"}
-    assert len(comp) == 101
+def test_alias_components_chain_of_200_has_one_representative():
+    """A 200-node chain, its pairs in reverse order, is one component
+    whatever its diameter: nothing caps the number of hops."""
+    ids = [f"n{i:03d}" for i in range(200)]
+    comp = alias_components([(ids[i + 1], ids[i])
+                             for i in reversed(range(199))])
+    assert comp == dict.fromkeys(ids, "n000")
 
 
-def test_component_rep_prefers_iri_over_hot_domain_mention(spark):
+def test_component_rep_prefers_iri_over_hot_domain_mention():
     """A mention key on a domain that sorts BEFORE identifiers.org
     (e.g. a.example) must still lose to the canonical IRI: mention
     keys (url#frag#id) start with https too, so the representative
     choice cannot be a bare lexicographic min."""
     mention = "https://a.example/page#0#m1"
     iri = "https://identifiers.org/ncbigene/207"
-    edges = spark.createDataFrame(
-        [(mention, iri)], "src string, dst string")
-    comp = {r["id"]: r["component"]
-            for r in connected_components(edges).collect()}
-    assert comp[mention] == iri
-    assert comp[iri] == iri
+    assert alias_components([(mention, iri)]) == {mention: iri, iri: iri}
 
 
-def test_connected_components_isolated_pair_and_core_mix(spark):
-    """Leaf-peeling edge cases: an isolated pair (both endpoints
-    degree 1 — neither enters the 2-core), a square core with pendant
-    leaves (leaves inherit the core component; the final min still
-    scans them), and a pendant leaf that IS the component min."""
-    edges = spark.createDataFrame(
-        [
-            ("p1", "p2"),                    # isolated pair
-            ("q2", "q3"), ("q3", "q4"), ("q4", "q5"), ("q5", "q2"),
-            ("q2", "q1"),                    # pendant leaf, is the min
-            ("q5", "q9"),                    # pendant leaf, not the min
-        ],
-        "src string, dst string")
-    comp = {r["id"]: r["component"]
-            for r in connected_components(edges).collect()}
+def test_alias_components_isolated_pair_and_cycle_mix():
+    """An isolated pair, a square with pendant leaves, and a pendant
+    leaf that is the component's min and so its representative."""
+    comp = alias_components([
+        ("p1", "p2"),                    # isolated pair
+        ("q2", "q3"), ("q3", "q4"), ("q4", "q5"), ("q5", "q2"),
+        ("q2", "q1"),                    # pendant leaf, is the min
+        ("q5", "q9"),                    # pendant leaf, not the min
+    ])
     assert comp["p1"] == comp["p2"] == "p1"
-    assert all(comp[f"q{i}"] == "q1" for i in range(1, 6))
-    assert comp["q9"] == "q1"
+    assert all(comp[f"q{i}"] == "q1" for i in (1, 2, 3, 4, 5, 9))
     assert len(comp) == 8
 
 
 def test_canonicalize_linked_matches_generic(spark, model):
-    """The pipeline's bipartite fast path must equal the generic
-    CC-over-full-sameAs-graph result row for row (the invariant that
-    lets the iterative CC stay off corpus-sized frames)."""
+    """The pipeline's alias-graph path must equal the components of
+    the FULL sameAs graph, mention leaves included, row for row (the
+    invariant that keeps corpus-sized frames out of the component
+    search)."""
     xd = xref_dictionary(spark)
     linked = link_entities(model["nodes"], xd)
-    generic = canonical_map(linked, same_as_edges(linked, xd))
+    comp = _uf_components([tuple(r) for r in
+                           same_as_edges(linked, xd).collect()])
+    generic = {(r["url"], r["frag"], r["id"],
+                comp[f"{r['url']}#{r['frag']}#{r['id']}"])
+               for r in linked.filter(
+                   F.col("canonical_iri").isNotNull()).collect()}
     fast = canonicalize_linked(linked, xd)
-    assert sorted(map(tuple, generic.collect())) == \
-        sorted(map(tuple, fast.collect()))
+    assert sorted(generic) == sorted(map(tuple, fast.collect()))
     # and the fast path actually exercises the alias merge: the
     # Uniprot alias row maps some mention to the Entrez IRI
     assert fast.filter(
@@ -299,8 +281,7 @@ def test_canonicalize_linked_matches_generic(spark, model):
 def test_canonical_rewrite_preserves_counts(spark, model, triples):
     xd = xref_dictionary(spark)
     linked = link_entities(model["nodes"], xd)
-    cmap = canonical_map(linked, same_as_edges(linked, xd))
-    out = rewrite_triples(triples, cmap)
+    out = rewrite_triples(triples, canonicalize_linked(linked, xd))
     assert out.count() == triples.count()
     # AKT1 mention rewritten to its canonical IRI
     akt = out.filter((F.col("pred") == "rdfs:label")
@@ -322,3 +303,28 @@ def test_topo_levels(model):
     assert lv["hanch2"] == 4
     assert lv["he003"] == 5
     assert -1 not in lv.values()
+
+
+def test_topo_levels_have_no_depth_cap(spark):
+    """Per document (frag): a 12-deep chain gets levels 0-11; a 2-cycle
+    gets -1, and so does an entity whose dependency names an entity of
+    another document only; a repeated id takes the dependencies of all
+    its rows, and each of its rows gets the level."""
+    chain = [f"c{i:02d}" for i in range(12)]
+    ents = [(0, i) for i in chain] + [(1, "a"), (1, "b"), (2, "m"),
+                                       (3, "r"), (3, "r"), (3, "x"),
+                                       (3, "y")]
+    deps = [(0, chain[i + 1], chain[i]) for i in range(11)] + [
+        (1, "a", "b"), (1, "b", "a"), (2, "m", "c00"),
+        (3, "r", "x"), (3, "r", "y"), (3, "y", "x")]
+    e = spark.createDataFrame([("u", f, i) for f, i in ents],
+                              "url string, frag int, id string")
+    d = spark.createDataFrame([("u", f, i, di) for f, i, di in deps],
+                              "url string, frag int, id string, "
+                              "dep_id string")
+    got = sorted((r["frag"], r["id"], r["topo_level"])
+                 for r in topo_levels(e, d).collect())
+    assert got == sorted(
+        [(0, c, n) for n, c in enumerate(chain)]
+        + [(1, "a", -1), (1, "b", -1), (2, "m", -1), (3, "r", 2),
+           (3, "r", 2), (3, "x", 0), (3, "y", 1)])

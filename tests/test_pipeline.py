@@ -43,9 +43,9 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
     574k-char trees on canonical/documents used to dominate plan
     stringification). Structural, not data-dependent: committed
     stages read back from parquet, so stage plans are scan + a
-    bounded operator tree; the round-5 canonicalize_linked rewrite
-    removed the 6-round CC join tree from the corpus path. Measured
-    at sf0.01: max executed-plan string 99k."""
+    bounded operator tree; canonicalization joins the mentions to a
+    broadcast component map found on the driver, so it plans no join
+    loop. Measured at sf0.01: max executed-plan string 99k."""
     from gpml2pvjson_js_spark.operators.assemble import (
         build_document_model)
     from gpml2pvjson_js_spark.operators.canonicalize import (

@@ -10,10 +10,10 @@ retries, the job. The reference pins this with hand-picked fixtures
 These run the pure Python functions directly — the same code the
 mapInPandas stages execute per batch — so they are fast and shrinkable.
 
-The connected-components property packs many random graphs into ONE
-Spark call (node ids namespaced per graph, so components never cross
-graphs) and compares against a brute-force union-find with the same
-rank-prefixed representative semantics (canonicalize.py:_ranked).
+The sameAs-components property packs many random graphs into one
+`alias_components` call (node ids namespaced per graph, so components
+never cross graphs) and compares against the brute-force union-find
+oracle of conftest.py.
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ from gpml2pvjson_js_spark.operators.parse import (
     extract_fragments,
     extract_page_text,
 )
+from tests.conftest import _uf_components
 
 # pure-python kernels: plenty of examples, they run in microseconds
 # derandomize: fixed per-test seed so CI/driver runs are
@@ -155,42 +156,8 @@ def test_parse_int_js_nan_on_nonhex(s):
 
 
 # ---------------------------------------------------------------------------
-# connected_components vs union-find oracle on random graphs
+# alias_components vs union-find oracle on random graphs
 # ---------------------------------------------------------------------------
-
-def _rank_key(node: str) -> str:
-    """Python mirror of canonicalize._ranked: IRIs (http(s), no '#')
-    sort before mention keys / plain ids."""
-    is_iri = (node.startswith("http://") or node.startswith("https://")) \
-        and "#" not in node
-    return ("0" if is_iri else "1") + node
-
-
-def _uf_components(edges: list[tuple[str, str]]) -> dict[str, str]:
-    parent: dict[str, str] = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    groups: dict[str, list[str]] = {}
-    for n in parent:
-        groups.setdefault(find(n), []).append(n)
-    out = {}
-    for members in groups.values():
-        rep = min(members, key=_rank_key)
-        for n in members:
-            out[n] = rep
-    return out
-
 
 _NODE_STYLES = (
     "http://z{g}.example.org/e{n}",          # canonical-IRI shape
@@ -214,18 +181,17 @@ def _graph(draw):
     return edges
 
 
-@settings(max_examples=5, deadline=None, derandomize=True,
-          suppress_health_check=[HealthCheck.too_slow,
-                                 HealthCheck.data_too_large])
+@settings(max_examples=200, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.data_too_large])
 @given(graphs=st.lists(_graph(), min_size=1, max_size=12))
-def test_connected_components_matches_union_find(spark, graphs):
+def test_alias_components_matches_union_find(graphs):
     """Random graphs (chains, stars, cycles, multi-edges, every node
-    naming style) packed into one edge frame with per-graph node
-    namespaces: the leaf-peeled + pointer-doubling CC must equal a
-    brute-force union-find with identical rank-prefixed representative
-    election, for every node of every graph."""
+    naming style) packed into one pair list with per-graph node
+    namespaces: `alias_components` must equal a brute-force union-find
+    with the same representative order, for every node of every
+    graph."""
     from gpml2pvjson_js_spark.operators.canonicalize import (
-        connected_components)
+        alias_components)
 
     all_edges: list[tuple[str, str]] = []
     for g, edges in enumerate(graphs):
@@ -233,14 +199,7 @@ def test_connected_components_matches_union_find(spark, graphs):
             na = _NODE_STYLES[style_of[a]].format(g=g, n=a)
             nb = _NODE_STYLES[style_of[b]].format(g=g, n=b)
             all_edges.append((na, nb))
-    if not all_edges:
-        return
-    expected = _uf_components(all_edges)
-
-    df = spark.createDataFrame(all_edges, "src string, dst string")
-    got = {r["id"]: r["component"]
-           for r in connected_components(df).collect()}
-    assert got == expected
+    assert alias_components(all_edges) == _uf_components(all_edges)
 
 
 # ---------------------------------------------------------------------------
