@@ -652,6 +652,7 @@ def kg_golden_pr(spark, sf_dir):
     without the goldens the aggregate is the only row, with null P/R
     and `ok` false."""
     from gpml2pvjson_js_spark.golden import pr_report
+    from gpml2pvjson_js_spark.session import local_frame
     rep = pr_report(spark)
 
     def ok(p, r):
@@ -664,9 +665,9 @@ def kg_golden_pr(spark, sf_dir):
     rows.append(("__aggregate__", agg["precision"], agg["recall"],
                  agg["n_ours"], agg["n_gold"],
                  ok(agg["precision"], agg["recall"])))
-    return spark.createDataFrame(
-        rows, "fixture string, precision double, recall double, "
-              "n_ours long, n_gold long, ok boolean")
+    return local_frame(
+        spark, rows, "fixture string, precision double, recall double, "
+                     "n_ours long, n_gold long, ok boolean")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -50,9 +50,10 @@ def convert_bytes(spark, gpml: bytes, pathway_iri: str,
     from gpml2pvjson_js_spark.operators.assemble import (
         build_document_model)
     from gpml2pvjson_js_spark.operators.export import jsonld_documents
+    from gpml2pvjson_js_spark.session import local_frame
 
-    pages = spark.createDataFrame(
-        [(pathway_iri, _EPOCH, gpml, "", "en")], schema=PAGES_SCHEMA)
+    pages = local_frame(spark, [(pathway_iri, _EPOCH, gpml, "", "en")],
+                        PAGES_SCHEMA)
     model = build_document_model(spark, pages)
     rows = jsonld_documents(model).select("frag", "jsonld").collect()
     docs = [r["jsonld"] for r in sorted(rows, key=lambda r: r["frag"])]

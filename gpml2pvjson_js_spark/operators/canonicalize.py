@@ -15,8 +15,9 @@ components of the full graph are the components of the DICTIONARY-
 scale alias graph with mention leaves attached. `canonicalize_linked`
 therefore collects the alias pairs, finds their components with a
 union-find on the driver (`alias_components`), and assigns mentions
-with one broadcast join. Exactness against the full graph is pinned by
-test_canonicalize_linked_matches_generic.
+with one broadcast join of that component map, a local relation
+(`session.local_frame`) that runs no Python task. Exactness against
+the full graph is pinned by test_canonicalize_linked_matches_generic.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from ..session import local_frame
 
 _SER = StorageLevel.MEMORY_AND_DISK
 
@@ -69,9 +72,9 @@ def canonicalize_linked(linked: DataFrame,
     its own link target when that IRI has no alias."""
     from .linking import alias_edges
     pairs = alias_edges(xref_dict).dropna().collect()
-    comp = linked.sparkSession.createDataFrame(
-        list(alias_components(pairs).items()),
-        "c_iri string, component string")
+    comp = local_frame(linked.sparkSession,
+                       list(alias_components(pairs).items()),
+                       "c_iri string, component string")
     m = linked.filter(F.col("canonical_iri").isNotNull())
     # explicit hint: auto-broadcast is disabled session-wide (see
     # session.py — corpus frames must never be size-guessed into a

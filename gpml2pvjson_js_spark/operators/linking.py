@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .entities import DOC_KEY
 
 # datasource -> identifiers.org prefix (public registry prefixes)
@@ -48,7 +49,11 @@ def canonical_iri(datasource_col, identifier_col):
 def xref_dictionary(spark: SparkSession) -> DataFrame:
     """Deterministic BridgeDb-style dictionary (FIXTURES.md §4):
     covers the fixture xrefs, adds label rows for similarity linking
-    and alias_of rows that induce sameAs edges."""
+    and alias_of rows that induce sameAs edges.
+
+    A local relation (`session.local_frame`): the `canonical_iri`
+    projection folds into its `LocalTableScan`, so broadcasting it or
+    collecting its alias pairs runs no Python task."""
     rows = [
         # (datasource, identifier, label, alias_of_identifier)
         ("Entrez Gene", "7157", "TP53", None),
@@ -74,9 +79,9 @@ def xref_dictionary(spark: SparkSession) -> DataFrame:
         ("Entrez Gene", "3091", "HIF1A", None),
         ("CAS", "64-17-5", "Ethanol", None),
     ] + [("Entrez Gene", str(900000 + i), f"G{i}", None) for i in range(120)]
-    df = spark.createDataFrame(
-        rows, "datasource string, identifier string, label string, "
-              "alias_of string")
+    df = local_frame(
+        spark, rows, "datasource string, identifier string, label string, "
+                     "alias_of string")
     alias_target = canonical_iri(
         F.lit("Entrez Gene"), F.col("alias_of"))
     return df.select(

@@ -249,10 +249,11 @@ class Pipeline:
             return set()
 
     def run(self, resume: bool = True) -> dict[str, DataFrame]:
-        """Execute the stage DAG CONCURRENTLY: a stage is submitted the
-        moment its dependencies are committed, on a fixed pool of
-        STAGE_WORKERS threads. When the run ends, committed or not, the
-        blocks it staged are released (_release_stage_blocks).
+        """Execute the stage DAG CONCURRENTLY on a fixed pool of
+        STAGE_WORKERS threads: whenever a worker is free, the
+        highest-ranked stage whose dependencies are committed starts on
+        it. When the run ends, committed or not, the blocks it staged
+        are released (_release_stage_blocks).
 
         Why threads on the driver: each stage commit has two serial
         phases — driver-side analysis/optimization/codegen (single
@@ -320,16 +321,18 @@ class Pipeline:
             "text": ([], lambda: extracted_text(pages)),
         }
 
-        # Submission priority among SIMULTANEOUSLY-eligible stages
-        # (ThreadPoolExecutor runs queued work FIFO, so submission
-        # order is execution priority once workers are saturated).
-        # Critical path first: `triples` feeds `canonical_triples`,
-        # `nodes` feeds `linked`, and `documents` writes the most
-        # bytes; all of them become eligible when `mentions` commits.
-        priority = ["mentions", "text", "nodes", "triples", "documents",
-                    "edges", "interactions", "pathways", "citations",
-                    "vocabularies", "linked", "canonical_triples",
-                    "quarantine"]
+        # Start priority among eligible stages. At most STAGE_WORKERS
+        # stages are in flight, and each freed worker takes the
+        # highest-ranked eligible stage, so a stage that becomes
+        # eligible late (`linked`, when `nodes` commits) still starts
+        # before ones that have waited since `mentions` committed.
+        # Critical path first: `nodes` feeds `linked`, which with
+        # `triples` feeds `canonical_triples`; `documents` writes the
+        # most bytes.
+        priority = ["mentions", "text", "nodes", "triples", "linked",
+                    "canonical_triples", "documents", "edges",
+                    "interactions", "pathways", "citations",
+                    "vocabularies", "quarantine"]
         rank = {n: i for i, n in enumerate(priority)}
 
         done: set[str] = set()
@@ -343,7 +346,7 @@ class Pipeline:
                          if name not in done and name not in futures
                          and all(d in done for d in deps)),
                         key=lambda n: rank.get(n, len(rank)))
-                    for name in eligible:
+                    for name in eligible[:STAGE_WORKERS - len(futures)]:
                         futures[name] = ex.submit(
                             self._stage, name, builds[name][1], resume)
                     if not futures:

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 MAX_DRIVER_MEMORY_MB = 24 * 1024
 # tier-4 thresholds at 20x HotSpot's defaults (5000/600/15000/40000)
@@ -134,3 +135,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) \
+        -> DataFrame:
+    """A small frame built on the driver from a list of tuples, as a
+    JVM-local relation (`LocalTableScan`).
+
+    `spark.createDataFrame(rows)` would turn the list into a Python RDD
+    that re-pickles its rows: every job reading the frame (a broadcast,
+    a collect) then runs one Python task per `defaultParallelism`
+    slice, on a Python daemon of its own. A pyarrow table reaches the
+    JVM as Arrow batches instead and is planned as a `LocalTableScan`,
+    empty or not (an empty pandas frame or list silently falls back to
+    the Python RDD). The schema's nullability is kept; a null in a
+    non-nullable column raises."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    for f, c in zip(arrow_schema, table.columns):
+        if not f.nullable and c.null_count:
+            raise ValueError(f"null in non-nullable column {f.name!r}")
+    return spark.createDataFrame(table, schema)

@@ -278,6 +278,50 @@ def test_canonicalize_linked_matches_generic(spark, model):
         "https://identifiers.org/ncbigene/207").count() > 0
 
 
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dictionary_and_component_map_are_local_relations(spark):
+    """The dictionary, its alias pairs and canonicalization's component
+    map (with aliases and without) plan as `LocalTableScan`s: no Python
+    RDD (`ExistingRDD`), so reading them runs no Python task."""
+    from gpml2pvjson_js_spark.operators.linking import alias_edges
+    from gpml2pvjson_js_spark.session import local_frame
+
+    xd = xref_dictionary(spark)
+    no_alias = xd.filter(F.col("alias_of_iri").isNull())
+    linked = local_frame(spark, [
+        ("https://p.example/a", 0, "n1",
+         "https://identifiers.org/uniprot/P31749"),
+        ("https://p.example/a", 0, "n2",
+         "https://identifiers.org/ncbigene/3098"),
+    ], "url string, frag int, id string, canonical_iri string")
+    for df in (xd, alias_edges(xd), canonicalize_linked(linked, xd),
+               canonicalize_linked(linked, no_alias)):
+        plan = _executed_plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert sorted(canonicalize_linked(linked, xd).collect()) == [
+        ("https://p.example/a", 0, "n1",
+         "https://identifiers.org/ncbigene/207"),
+        ("https://p.example/a", 0, "n2",
+         "https://identifiers.org/ncbigene/3098")]
+
+
+def test_dictionary_without_aliases_keeps_link_targets(spark, model):
+    """With no alias_of rows the component map is empty, and every
+    linked mention canonicalizes to its own link target."""
+    xd = xref_dictionary(spark).filter(F.col("alias_of_iri").isNull())
+    linked = link_entities(model["nodes"], xd)
+    targets = {(r["url"], r["frag"], r["id"], r["canonical_iri"])
+               for r in linked.filter(
+                   F.col("canonical_iri").isNotNull()).collect()}
+    assert targets
+    canonical = canonicalize_linked(linked, xd).collect()
+    assert sorted(map(tuple, canonical)) == sorted(targets)
+
+
 def test_canonical_rewrite_preserves_counts(spark, model, triples):
     xd = xref_dictionary(spark)
     linked = link_entities(model["nodes"], xd)

@@ -319,3 +319,43 @@ def test_pipeline_releases_the_rdds_it_persisted(
     p.run(resume=False)
     assert staged  # the run did stage something
     assert not staged & _persistent_rdd_ids(spark)
+
+
+def test_scheduler_starts_linked_first_and_bounds_stages_in_flight(
+        spark, tmp_path_factory, monkeypatch):
+    """With every worker busy, the worker that `nodes` frees starts
+    `linked`, not one of the lower-ranked stages eligible since
+    `mentions` committed, and no more than STAGE_WORKERS stages ever
+    run at once. `_stage` is stubbed: it sleeps and records events."""
+    import threading
+    import time
+
+    from gpml2pvjson_js_spark.plans.pipeline import STAGE_WORKERS
+
+    seconds = {"mentions": 0.05, "nodes": 0.2}
+    events, running, most = [], set(), [0]
+    lock = threading.Lock()
+
+    class Committed:
+        def filter(self, _):
+            return self
+
+    def stage(self, name, build, resume):
+        with lock:
+            events.append(("start", name))
+            running.add(name)
+            most[0] = max(most[0], len(running))
+        time.sleep(seconds.get(name, 0.6))
+        with lock:
+            events.append(("end", name))
+            running.discard(name)
+        return Committed()
+
+    monkeypatch.setattr(Pipeline, "_stage", stage)
+    root = str(tmp_path_factory.mktemp("kgout_schedule"))
+    Pipeline(spark, None, root).run(resume=False)
+
+    assert {n for kind, n in events if kind == "start"} == set(STAGES)
+    assert most[0] == STAGE_WORKERS
+    after_nodes = events[events.index(("end", "nodes")) + 1:]
+    assert next(n for kind, n in after_nodes if kind == "start") == "linked"

@@ -2,6 +2,9 @@
 
 import os
 
+import pytest
+from pyspark.sql import types as T
+
 from gpml2pvjson_js_spark import session
 
 
@@ -57,3 +60,22 @@ def test_session_broadcast_and_scan_packing_settings(spark):
         entries.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD()).get() == -1
     assert sql_conf.filesMaxPartitionBytes() == 128 * 2**20
     assert sql_conf.filesOpenCostInBytes() == 4 * 2**20
+
+
+def test_local_frame_is_a_local_relation_even_when_empty(spark):
+    """No rows still plans a `LocalTableScan`: an empty list or pandas
+    frame would silently fall back to a Python RDD (`ExistingRDD`)."""
+    df = session.local_frame(spark, [], "a string, b long")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert df.collect() == []
+
+
+def test_local_frame_keeps_the_schema_nullability(spark):
+    schema = T.StructType([T.StructField("a", T.StringType(), False),
+                           T.StructField("b", T.LongType(), True)])
+    df = session.local_frame(spark, [("x", None), ("y", 2)], schema)
+    assert df.schema == schema
+    assert df.collect() == [("x", None), ("y", 2)]
+    with pytest.raises(ValueError):
+        session.local_frame(spark, [(None, 1)], schema)

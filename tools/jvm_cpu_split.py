@@ -11,7 +11,8 @@ CPU seconds, read from /proc, for the set-up (JVM start to the batch's
 start) and for the batch:
 - the driver JVM, split by thread name into the JIT compilers (C2,
   C1), executor task threads, GC and the rest;
-- the Python workers: the daemon the JVM forks and its workers;
+- the Python daemons the JVM forks, and the workers they fork (with
+  the CPU of workers they reaped), each with how many were seen;
 - JVM child commands: the JVM's own reaped children, such as the
   `chmod` Hadoop's local file system forks for each file and directory
   it creates when the native Hadoop library is missing;
@@ -19,9 +20,10 @@ start) and for the batch:
 
 perfbench's trace times layers and stages, not threads, so it cannot
 show where a change to the JVM's JIT work lands; this tool can. JVM
-threads are sampled every 0.2 s and a thread that exits keeps the CPU
-of its last sample; what exiting threads used after that is printed
-as `exited threads`.
+threads and Python processes are sampled every 0.2 s. A thread that
+exits keeps the CPU of its last sample; what exiting threads used
+after that is printed as `exited threads`. A Python process that lives
+less than 0.2 s may go uncounted.
 """
 
 from __future__ import annotations
@@ -74,11 +76,18 @@ def cpu_ticks(pid: int | str, children: bool = False) -> int:
     return sum(int(x) for x in fields[11:15 if children else 13])
 
 
-def process_name(pid: int) -> str:
-    try:
-        return read_stat(f"/proc/{pid}/stat")[0]
-    except FileNotFoundError:
-        return ""
+def python_processes(jvm: int) -> dict[int, str]:
+    """The JVM's live Python descendants: pid -> "daemon" for those
+    the JVM forked itself, "worker" for those a daemon forked."""
+    out = {}
+    for pid in process_tree(jvm):
+        try:
+            name, fields = read_stat(f"/proc/{pid}/stat")
+        except FileNotFoundError:
+            continue
+        if pid != jvm and name.startswith("python"):
+            out[pid] = "daemon" if int(fields[1]) == jvm else "worker"
+    return out
 
 
 class JvmThreads:
@@ -87,6 +96,8 @@ class JvmThreads:
     def __init__(self, pid: int):
         self.pid = pid
         self.last: dict[str, tuple[str, int]] = {}  # tid -> (kind, ticks)
+        # Python pids seen since the last snapshot, by role
+        self.seen: dict[str, set] = {"daemon": set(), "worker": set()}
         self.lock = threading.Lock()
         self.done = threading.Event()
         self.thread = threading.Thread(target=self._loop, daemon=True)
@@ -99,48 +110,58 @@ class JvmThreads:
             except OSError:
                 continue  # the thread exited
             seen[tid] = (kind_of(comm), int(fields[11]) + int(fields[12]))
+        python = python_processes(self.pid)
         with self.lock:
             self.last.update(seen)
+            for pid, role in python.items():
+                self.seen[role].add(pid)
 
     def _loop(self) -> None:
         while not self.done.wait(SAMPLE_S):
             self.sample()
 
-    def snapshot(self) -> dict[str, float]:
+    def snapshot(self) -> tuple[dict[str, float], dict[str, int]]:
         """CPU seconds so far: per thread kind, the JVM's threads that
-        exited unsampled, the Python workers, the JVM's reaped child
-        commands."""
+        exited unsampled, the Python daemons and workers, the JVM's
+        reaped child commands. With them, how many Python daemons and
+        workers were seen since the last snapshot."""
         self.sample()
         out = {kind: 0 for kind, _ in KINDS} | {"rest": 0}
         with self.lock:
             for kind, ticks in self.last.values():
                 out[kind] += ticks
+            seen = {role: len(pids) for role, pids in self.seen.items()}
+            self.seen = {role: set() for role in self.seen}
         out["exited threads"] = cpu_ticks(self.pid) - sum(out.values())
-        # the daemon tree: live Python descendants, with what the
-        # workers they reaped used
-        out["python workers"] = sum(
-            cpu_ticks(p, children=True)
-            for p in process_tree(self.pid) if p != self.pid
-            and process_name(p).startswith("python"))
+        # a daemon's reaped children were its workers
+        out["python daemons"] = out["python workers"] = 0
+        for pid, role in python_processes(self.pid).items():
+            own = cpu_ticks(pid)
+            out[f"python {role}s"] += own
+            out["python workers"] += cpu_ticks(pid, children=True) - own
         out["JVM child commands"] = cpu_ticks(self.pid, children=True) \
             - cpu_ticks(self.pid)
         out["python driver"] = cpu_ticks("self")
-        return {k: v / TICK for k, v in out.items()}
+        return {k: v / TICK for k, v in out.items()}, seen
 
 
-def report(setup: dict, batch: dict, wall: tuple[float, float]) -> None:
+def report(setup: dict, batch: dict, wall: tuple[float, float],
+           seen: tuple[dict, dict]) -> None:
     jvm = [kind for kind, _ in KINDS] + ["rest", "exited threads"]
     rows = [("driver JVM", sum(setup[k] for k in jvm),
              sum(batch[k] for k in jvm))]
     rows += [(f"  {k}", setup[k], batch[k]) for k in jvm]
     rows += [(k, setup[k], batch[k])
-             for k in ("python workers", "JVM child commands",
-                       "python driver")]
+             for k in ("python daemons", "python workers",
+                       "JVM child commands", "python driver")]
     rows.append(("all", sum(setup.values()), sum(batch.values())))
     print(f"{'CPU s':<20}{'set-up':>9}{'batch':>9}{'total':>9}")
     for name, s, b in rows:
         print(f"{name:<20}{s:9.1f}{b:9.1f}{s + b:9.1f}")
     print(f"{'wall s':<20}{wall[0]:9.1f}{wall[1]:9.1f}{sum(wall):9.1f}")
+    print(f"{'python seen':<20}{'set-up':>9}{'batch':>9}")
+    for role in ("daemon", "worker"):
+        print(f"{'  ' + role + 's':<20}{seen[0][role]:9d}{seen[1][role]:9d}")
 
 
 def main(argv=None) -> int:
@@ -171,9 +192,9 @@ def main(argv=None) -> int:
         pipe = Pipeline(spark,
                         spark.read.schema(workloads.PAGES_DDL).parquet(path),
                         os.path.join(tmp, "out"))
-        setup, t1 = threads.snapshot(), time.monotonic()
+        (setup, setup_seen), t1 = threads.snapshot(), time.monotonic()
         pipe.run(resume=False)
-        end, t2 = threads.snapshot(), time.monotonic()
+        (end, batch_seen), t2 = threads.snapshot(), time.monotonic()
     finally:
         if threads is not None:
             threads.done.set()
@@ -183,7 +204,8 @@ def main(argv=None) -> int:
         shutil.rmtree(tmp, ignore_errors=True)
     print(f"pipeline batch 0 of seed {args.seed}: {len(pages)} pages, "
           f"cold driver JVM")
-    report(setup, {k: end[k] - setup[k] for k in end}, (t1 - t0, t2 - t1))
+    report(setup, {k: end[k] - setup[k] for k in end}, (t1 - t0, t2 - t1),
+           (setup_seen, batch_seen))
     return 0
 
 
