@@ -41,35 +41,29 @@ _MODEL_CACHE: dict = {}
 
 def _kg(spark: SparkSession, sf_dir: str, limit: int = 64) -> dict:
     """Build (and cache per sf_dir) the KG document model over pages
-    synthesized from the documents table."""
+    synthesized from the documents table: one staging of the document
+    compiler, and its role projections."""
     key = (sf_dir, limit)
     if key not in _MODEL_CACHE:
         from gpml2pvjson_js_spark.corpus import pages_from_documents
         from gpml2pvjson_js_spark.operators.assemble import (
             build_document_model)
+        from gpml2pvjson_js_spark.operators.canonicalize import (
+            canonical_triples)
         from gpml2pvjson_js_spark.operators.interactions import (
             classify_interactions)
+        from gpml2pvjson_js_spark.operators.linking import link_entities
         from gpml2pvjson_js_spark.operators.triples import build_triples
-        from gpml2pvjson_js_spark.operators.linking import (
-            link_entities, xref_dictionary)
-        from gpml2pvjson_js_spark.operators.canonicalize import (
-            canonicalize_linked, rewrite_triples)
 
         pages = pages_from_documents(spark, sf_dir, limit=limit) \
             .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
         model = build_document_model(spark, pages)
-        inter = classify_interactions(model)
-        triples = build_triples(model)
-        xd = xref_dictionary(spark)
-        linked = link_entities(model["nodes"], xd) \
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        canon = rewrite_triples(
-            triples, canonicalize_linked(linked, xd)
-        ).localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
         _MODEL_CACHE[key] = {
-            "pages": pages, "model": model, "interactions": inter,
-            "triples": triples, "linked": linked,
-            "canonical_triples": canon,
+            "pages": pages, "model": model,
+            "interactions": classify_interactions(model),
+            "triples": build_triples(model),
+            "linked": link_entities(model),
+            "canonical_triples": canonical_triples(model),
         }
     return _MODEL_CACHE[key]
 

@@ -94,11 +94,10 @@ def stage_noop(name: str, k: int) -> None:
     from gpml2pvjson_js_spark.operators.assemble import (
         build_document_model)
     from gpml2pvjson_js_spark.operators.canonicalize import (
-        canonicalize_linked, rewrite_triples)
+        canonical_triples)
     from gpml2pvjson_js_spark.operators.interactions import (
         classify_interactions)
-    from gpml2pvjson_js_spark.operators.linking import (
-        link_entities, xref_dictionary)
+    from gpml2pvjson_js_spark.operators.linking import link_entities
     from gpml2pvjson_js_spark.operators.parse import parse_gpml
     from gpml2pvjson_js_spark.operators.triples import build_triples
 
@@ -115,12 +114,9 @@ def stage_noop(name: str, k: int) -> None:
             return classify_interactions(model)
         if name == "triples":
             return build_triples(model)
-        xd = xref_dictionary(spark)
-        linked = link_entities(model["nodes"], xd)
         if name == "linked":
-            return linked
-        return rewrite_triples(build_triples(model),
-                               canonicalize_linked(linked, xd))
+            return link_entities(model)
+        return canonical_triples(model)
 
     frame("/root/testdata/sf0.001").write.format("noop") \
         .mode("overwrite").save()  # warmup

@@ -13,9 +13,6 @@ expression it replaced, not those of a Python library:
 - the string casts (`cast_double`, `cast_int`) accept what Spark's
   ANSI-mode casts (the Spark 4 default) accept, and raise where they
   raise.
-
-`_map_literal` builds a literal map column for the Catalyst operator
-that still looks up a dialect table (linking).
 """
 
 from __future__ import annotations
@@ -23,23 +20,7 @@ from __future__ import annotations
 import math
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .mappings import NAMED_COLORS, VALUE_MAPPINGS
-
-_PAIR_SEP = "\x1e"
-_KV_SEP = "\x1f"
-
-
-def _map_literal(d: dict) -> Column:
-    """Literal map column. Encoded as ONE string literal through
-    str_to_map (constant-folded to a map literal by Catalyst) instead
-    of create_map(2N literal expressions) — keeps plan trees, plan
-    strings, and codegen units small for the 40+-entry dialect maps."""
-    flat = _PAIR_SEP.join(f"{k}{_KV_SEP}{v}" for k, v in d.items())
-    return F.str_to_map(F.lit(flat), F.lit(_PAIR_SEP), F.lit(_KV_SEP))
-
 
 # java.util.regex's `$` without MULTILINE: the end of input, or before
 # a line terminator that ends it

@@ -6,29 +6,24 @@ The reference has no distributed analog — its nearest mechanism is the
 promise-cache forward-reference resolution (src/Processor.ts:278-318);
 this stage is mandated by the north rule.
 
-The sameAs graph (`linking.same_as_edges`) is the dictionary's alias
-pairs plus one link edge per linked mention. `link_entities` keeps at
-most ONE link per mention (the exact and similarity paths partition
-mentions disjointly and each keeps a single best match), so a mention
-is a leaf of its link target and never merges two IRI components: the
-components of the full graph are the components of the DICTIONARY-
-scale alias graph with mention leaves attached. `canonicalize_linked`
-therefore collects the alias pairs, finds their components with a
-union-find on the driver (`alias_components`), and assigns mentions
-with one broadcast join of that component map, a local relation
-(`session.local_frame`) that runs no Python task. Exactness against
-the full graph is pinned by test_canonicalize_linked_matches_generic.
+The sameAs graph is the dictionary's alias pairs plus one link edge per
+linked mention. Linking keeps at most ONE link per mention (the exact
+and similarity paths partition mentions disjointly and each keeps a
+single best match), so a mention is a leaf of its link target and never
+merges two IRI components: the components of the full graph are the
+components of the DICTIONARY-scale alias graph with mention leaves
+attached. So `alias_components` finds them once on the driver, for the
+linking index (linking.link_index), and the document compiler
+(document.py) rewrites each document's triples through them
+(`canonicalize_document`). Exactness against the full graph is pinned
+by test_canonicalize_linked_matches_generic.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..session import local_frame
-
-_SER = StorageLevel.MEMORY_AND_DISK
+from . import frames
 
 
 def _rank_key(node: str) -> tuple[bool, str]:
@@ -65,51 +60,21 @@ def alias_components(pairs) -> dict[str, str]:
     return {x: find(x) for x in parent}
 
 
-def canonicalize_linked(linked: DataFrame,
-                        xref_dict: DataFrame) -> DataFrame:
-    """(url, frag, id, canonical): every linked mention mapped to the
-    representative of its sameAs component (module docstring), or to
-    its own link target when that IRI has no alias."""
-    from .linking import alias_edges
-    pairs = alias_edges(xref_dict).dropna().collect()
-    comp = local_frame(linked.sparkSession,
-                       list(alias_components(pairs).items()),
-                       "c_iri string, component string")
-    m = linked.filter(F.col("canonical_iri").isNotNull())
-    # explicit hint: auto-broadcast is disabled session-wide (see
-    # session.py — corpus frames must never be size-guessed into a
-    # broadcast), and comp is dictionary-scale by construction
-    return m.join(F.broadcast(comp), m.canonical_iri == F.col("c_iri"),
-                  "left") \
-        .select("url", "frag", "id",
-                F.coalesce("component", "canonical_iri")
-                .alias("canonical")) \
-        .dropDuplicates(["url", "frag", "id"])
+def canonicalize_document(linked: list[dict], triples: list[dict],
+                          components: dict) -> list[dict]:
+    """One document's triples with subj and obj rewritten to the
+    canonical id of the mention they name: the representative of its
+    link target's component, or the target itself when that IRI has no
+    alias. Where a GraphId has several linked rows, the last in
+    document order wins."""
+    canonical = {r["id"]: components.get(r["canonical_iri"],
+                                         r["canonical_iri"])
+                 for r in linked if r["canonical_iri"] is not None}
+    return [{**t, "subj": canonical.get(t["subj"], t["subj"]),
+             "obj": canonical.get(t["obj"], t["obj"])} for t in triples]
 
 
-def rewrite_triples(triples: DataFrame, cmap: DataFrame) -> DataFrame:
-    """Rewrite subj/obj to canonical ids where a mapping exists (two
-    equi joins on (url, frag, local id)). The canonical map feeds both
-    the subj and obj joins — a lazy checkpoint computes it once
-    instead of inlining its build (broadcast join + dedup exchange)
-    twice."""
-    cmap = cmap.localCheckpoint(eager=False, storageLevel=_SER)
-    s = cmap.select(F.col("url").alias("s_url"), F.col("frag").alias("s_frag"),
-                    F.col("id").alias("s_id"),
-                    F.col("canonical").alias("s_canon"))
-    o = cmap.select(F.col("url").alias("o_url"), F.col("frag").alias("o_frag"),
-                    F.col("id").alias("o_id"),
-                    F.col("canonical").alias("o_canon"))
-    t = triples.join(
-        s, (triples.url == s.s_url) & (triples.frag == s.s_frag)
-        & (triples.subj == s.s_id), "left",
-    ).join(
-        o, (triples.url == o.o_url) & (triples.frag == o.o_frag)
-        & (triples.obj == o.o_id), "left",
-    )
-    return t.select(
-        "url", "frag", "pathway_id",
-        F.coalesce("s_canon", "subj").alias("subj"),
-        "pred",
-        F.coalesce("o_canon", "obj").alias("obj"),
-    )
+def canonical_triples(model: dict) -> DataFrame:
+    """(url, frag, pathway_id, subj, pred, obj): the `canonical_triples`
+    role of the model's compiled output."""
+    return frames.select_frame(model["compiled"], "canonical_triples")

@@ -1,6 +1,7 @@
 """The document compiler: one document's mention rows -> the finished
-rows of the five model frames, its BioPAX interactions, its triples and
-its JSON-LD document, in one grouped-map pass.
+rows of the five model frames, its BioPAX interactions, its triples,
+its JSON-LD document, its linked mentions and its canonical triples, in
+one grouped-map pass.
 
 The reference is a one-document compiler: it turns each GPML element
 into its typed pvjson entity, resolves the document's references in
@@ -36,7 +37,11 @@ mention rows to `assemble_document`, which
 4. from the model rows as their frames commit them (`_committed`):
    classifies the interactions (interactions.py), flattens the
    distinct triples (triples.py) and writes the JSON-LD document
-   (export.py).
+   (export.py);
+5. links the node rows against the linking index (linking.py), and
+   rewrites the triples through the sameAs components
+   (canonicalize.py). The index is built once on the driver and handed
+   to every call, so neither crosses documents.
 
 A GraphId (or GroupId) that repeats inside one document resolves to the
 last element carrying it in document order, like the reference's
@@ -73,8 +78,10 @@ from . import entities as N
 from . import export as X
 from . import frames
 from . import interactions as I
+from . import linking as L
 from . import triples as TR
 from . import waypoints as W
+from .canonicalize import canonicalize_document
 from .entities import DOC_KEY
 from ..functions import converters as C
 
@@ -98,10 +105,13 @@ _FIELD_OF = {(role, column): name
 _NAN_FIELDS = ("rotation", "text_rotation")
 
 
-def resolve_documents(ok: DataFrame) -> DataFrame:
-    """The compiler over every document of the ok mention rows: lazy,
-    the caller stages it."""
-    return ok.groupBy(*DOC_KEY).applyInArrow(assemble_document, SCHEMA)
+def resolve_documents(ok: DataFrame, index: L.LinkIndex) -> DataFrame:
+    """The compiler over every document of the ok mention rows, linking
+    against `index`: lazy, the caller stages it."""
+    def kernel(table: pa.Table) -> pa.Table:
+        return assemble_document(table, index)
+
+    return ok.groupBy(*DOC_KEY).applyInArrow(kernel, SCHEMA)
 
 
 def _has_nan(v, t: T.DataType) -> bool:
@@ -406,19 +416,21 @@ def _key_fields(r: dict, *names) -> dict:
     return {n: r[n] for n in names}
 
 
-def assemble_document(table: pa.Table) -> pa.Table:
+def assemble_document(table: pa.Table, index: L.LinkIndex) -> pa.Table:
     """One document's ok mention rows (MENTIONS_SCHEMA, as Arrow hands
     them over) -> its rows of every role (SCHEMA)."""
     recs = _records(table)
     for r in recs:
         if r["attributes"] is not None:  # a map arrives as pairs
             r["attributes"] = dict(r["attributes"])
-    return _table(compile_document(recs))
+    return _table(compile_document(recs, index))
 
 
-def compile_document(recs: list[dict]) -> dict[str, list[dict]]:
+def compile_document(recs: list[dict], index: L.LinkIndex
+                     ) -> dict[str, list[dict]]:
     """One document's ok mention rows, as dicts -> its rows by role
-    (frames.FRAMES), each row keyed by its frame's field names."""
+    (frames.FRAMES), each row keyed by its frame's field names, the
+    mentions linked against `index` (linking.link_index)."""
     recs = sorted(recs, key=lambda r: r["elem_idx"])
     by_name = defaultdict(list)
     for r in recs:
@@ -472,4 +484,9 @@ def compile_document(recs: list[dict]) -> dict[str, list[dict]]:
     rows["model_triples"], rows["interaction_triples"] = \
         TR.document_triples(rows)
     rows["documents"] = X.document_rows(rows)
+    rows["linked"] = L.link_document(rows["nodes"], index)
+    rows["canonical_triples"] = canonicalize_document(
+        rows["linked"],
+        rows["model_triples"] + rows["interaction_triples"],
+        index.components)
     return rows

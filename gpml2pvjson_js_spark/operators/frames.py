@@ -5,8 +5,8 @@ The compiler's output is ONE frame (SCHEMA): a `role` column naming the
 frame a row belongs to, and the union of the frames' columns. The roles
 are the five model frames (nodes, edges, citations, vocabularies,
 pathways), the BioPAX `interactions`, the triples (`model_triples`, and
-the `interaction_triples` that are not among them) and the JSON-LD
-`documents`. `select_frame` projects roles back to their frame's exact
+the `interaction_triples` that are not among them), the JSON-LD
+`documents`, the `linked` mentions and the `canonical_triples`. `select_frame` projects roles back to their frame's exact
 schema (FRAMES).
 """
 
@@ -99,11 +99,14 @@ INTERACTIONS = _struct(
 TRIPLES = _struct(*_KEY, ("pathway_id", _S), ("subj", _S), ("pred", _S),
                   ("obj", _S))
 DOCUMENTS = _struct(*_KEY, ("pathway_id", _S), ("jsonld", _S))
+LINKED = _struct(*_KEY, ("id", _S), ("canonical_iri", _S),
+                 ("link_method", _S), ("link_score", _D))
 MODEL_FRAMES = ("nodes", "edges", "citations", "vocabularies", "pathways")
 FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
           "vocabularies": VOCABULARIES, "pathways": PATHWAYS,
           "interactions": INTERACTIONS, "model_triples": TRIPLES,
-          "interaction_triples": TRIPLES, "documents": DOCUMENTS}
+          "interaction_triples": TRIPLES, "documents": DOCUMENTS,
+          "linked": LINKED, "canonical_triples": TRIPLES}
 
 
 def _union_schema() -> tuple[T.StructType, dict]:

@@ -4,22 +4,34 @@ North-rule stage with no reference counterpart (the reference's CURIE
 `<xrefDataSource>:<xrefIdentifier>` type entries,
 src/Processor.ts:381-386, are the linking keys).
 
-Two paths:
-1. exact: broadcast dictionary join on (datasource, identifier)
-2. blocked similarity join for xref-less mentions: block on
-   (lang-agnostic) normalized-label first token, score with token-set
-   Jaccard computed by Catalyst array functions, keep the best match
-   per mention above a threshold (window row_number) — the standard
-   distributed blocked-similarity-join shape.
+PAPER.md maps linking to a broadcast dictionary join. The dictionary
+(`XREF_ROWS`, 141 rows) is that broadcast's small side, so it is a
+Python index: `link_index` builds it once on the driver, with no Spark
+call, and the document compiler (document.py) links each document's
+node rows with it (`link_document`). Every linked row is keyed on its
+own mention, so linking never crosses documents. Two paths, per
+mention:
+
+1. exact: the `(datasource, identifier)` lookup;
+2. blocked similarity for xref-less mentions: block on the first
+   normalized label token, score token-set Jaccard, and keep the best
+   candidate at or above SIM_THRESHOLD, ties to the smallest IRI — the
+   blocked similarity join of "Distributed Similarity Joins over Top-K
+   Rankings" (EDBT 2020), its dictionary side in memory.
+
+`label_tokens` normalizes labels exactly as the Spark expression that
+linking used before, so the linked rows stay the same.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import re
+from typing import NamedTuple
 
-from ..session import local_frame
-from .entities import DOC_KEY
+from pyspark.sql import DataFrame
+
+from . import frames
+from .canonicalize import alias_components
 
 # datasource -> identifiers.org prefix (public registry prefixes)
 DATASOURCE_PREFIX = {
@@ -35,193 +47,139 @@ DATASOURCE_PREFIX = {
 
 SIM_THRESHOLD = 0.5
 
-
-def canonical_iri(datasource_col, identifier_col):
-    from ..functions.converters import _map_literal
-    prefix = F.element_at(_map_literal(DATASOURCE_PREFIX), datasource_col)
-    return F.when(
-        prefix.isNotNull() & identifier_col.isNotNull(),
-        F.concat(F.lit("https://identifiers.org/"), prefix, F.lit("/"),
-                 identifier_col),
-    )
-
-
-def xref_dictionary(spark: SparkSession) -> DataFrame:
-    """Deterministic BridgeDb-style dictionary (FIXTURES.md §4):
-    covers the fixture xrefs, adds label rows for similarity linking
-    and alias_of rows that induce sameAs edges.
-
-    A local relation (`session.local_frame`): the `canonical_iri`
-    projection folds into its `LocalTableScan`, so broadcasting it or
-    collecting its alias pairs runs no Python task."""
-    rows = [
-        # (datasource, identifier, label, alias_of_identifier)
-        ("Entrez Gene", "7157", "TP53", None),
-        ("Entrez Gene", "1950", "EGF", None),
-        ("Entrez Gene", "1956", "EGFR", None),
-        ("Entrez Gene", "3098", "HK1", None),
-        ("Entrez Gene", "581", "BAX", None),
-        ("Entrez Gene", "596", "BCL2", None),
-        ("Entrez Gene", "1019", "CDK4", None),
-        ("Entrez Gene", "595", "CCND1", None),
-        ("Entrez Gene", "5925", "RB1", None),
-        ("Entrez Gene", "1869", "E2F1", None),
-        ("Entrez Gene", "7027", "TFDP1", None),
-        ("Entrez Gene", "207", "AKT1", None),
-        ("Entrez Gene", "3845", "KRAS", None),
-        ("CAS", "56-65-5", "ATP", None),
-        ("CAS", "50-99-7", "Glucose", None),
-        ("CAS", "56-73-5", "Glucose-6-phosphate", None),
-        ("Uniprot-TrEMBL", "P31749", "AKT1", "207"),   # sameAs Entrez 207
-        ("Ensembl", "ENSG00000284190", "MIR21", None),
-        ("WikiPathways", "WP254", "Apoptosis", None),
-        # label-only entries for similarity linking
-        ("Entrez Gene", "3091", "HIF1A", None),
-        ("CAS", "64-17-5", "Ethanol", None),
-    ] + [("Entrez Gene", str(900000 + i), f"G{i}", None) for i in range(120)]
-    df = local_frame(
-        spark, rows, "datasource string, identifier string, label string, "
-                     "alias_of string")
-    alias_target = canonical_iri(
-        F.lit("Entrez Gene"), F.col("alias_of"))
-    return df.select(
-        "datasource", "identifier", "label",
-        canonical_iri(F.col("datasource"), F.col("identifier"))
-        .alias("canonical_iri"),
-        alias_target.alias("alias_of_iri"),
-    )
+# Deterministic BridgeDb-style dictionary (FIXTURES.md §4): covers the
+# fixture xrefs, adds label rows for similarity linking and alias_of
+# rows that induce sameAs edges.
+# (datasource, identifier, label, alias_of Entrez Gene identifier)
+XREF_ROWS = [
+    ("Entrez Gene", "7157", "TP53", None),
+    ("Entrez Gene", "1950", "EGF", None),
+    ("Entrez Gene", "1956", "EGFR", None),
+    ("Entrez Gene", "3098", "HK1", None),
+    ("Entrez Gene", "581", "BAX", None),
+    ("Entrez Gene", "596", "BCL2", None),
+    ("Entrez Gene", "1019", "CDK4", None),
+    ("Entrez Gene", "595", "CCND1", None),
+    ("Entrez Gene", "5925", "RB1", None),
+    ("Entrez Gene", "1869", "E2F1", None),
+    ("Entrez Gene", "7027", "TFDP1", None),
+    ("Entrez Gene", "207", "AKT1", None),
+    ("Entrez Gene", "3845", "KRAS", None),
+    ("CAS", "56-65-5", "ATP", None),
+    ("CAS", "50-99-7", "Glucose", None),
+    ("CAS", "56-73-5", "Glucose-6-phosphate", None),
+    ("Uniprot-TrEMBL", "P31749", "AKT1", "207"),   # sameAs Entrez 207
+    ("Ensembl", "ENSG00000284190", "MIR21", None),
+    ("WikiPathways", "WP254", "Apoptosis", None),
+    # label-only entries for similarity linking
+    ("Entrez Gene", "3091", "HIF1A", None),
+    ("CAS", "64-17-5", "Ethanol", None),
+] + [("Entrez Gene", str(900000 + i), f"G{i}", None) for i in range(120)]
 
 
-def synthetic_xref_dictionary(spark: SparkSession,
-                              n_rows: int = 1_000_000) -> DataFrame:
-    """The toy dictionary plus n_rows deterministic filler xrefs —
-    a dictionary-scale stand-in (BridgeDb ships ~60M xrefs) for
-    exercising the above-broadcast-threshold linking path. Filler
-    labels are zz-prefixed so the similarity blocking never collides
-    with fixture labels: linking results on fixture corpora are
-    IDENTICAL to the toy dictionary's."""
-    extra_id = (F.col("id") + 10_000_000).cast("string")
-    extra = spark.range(n_rows).select(
-        F.lit("Entrez Gene").alias("datasource"),
-        extra_id.alias("identifier"),
-        F.concat(F.lit("zz"), F.col("id").cast("string")).alias("label"),
-        canonical_iri(F.lit("Entrez Gene"), extra_id)
-        .alias("canonical_iri"),
-        F.lit(None).cast("string").alias("alias_of_iri"),
-    )
-    return xref_dictionary(spark).unionByName(extra)
+def canonical_iri(datasource, identifier):
+    """The identifiers.org IRI of an xref; None for an unknown
+    datasource or a missing identifier."""
+    prefix = DATASOURCE_PREFIX.get(datasource)
+    if prefix is None or identifier is None:
+        return None
+    return f"https://identifiers.org/{prefix}/{identifier}"
 
 
-def _norm_label(col):
-    return F.regexp_replace(F.lower(F.trim(col)), r"[^a-z0-9 ]", "")
+_STRIPPED = re.compile("[^a-z0-9 ]")
+_SPACES = re.compile(" +")
 
 
-def _tokens(col):
-    return F.array_distinct(F.split(_norm_label(col), r"\s+"))
+def label_tokens(label: str) -> list[str]:
+    """The distinct tokens of a normalized label, in order: Spark's
+    `array_distinct(split(regexp_replace(lower(trim(label)),
+    '[^a-z0-9 ]', ''), '\\s+'))`. `trim` strips only U+0020, so a label
+    that starts with another blank keeps an empty first token; after
+    the replace only spaces separate tokens, and a label with nothing
+    left is the one token ''."""
+    norm = _STRIPPED.sub("", label.strip(" ").lower())
+    return list(dict.fromkeys(_SPACES.split(norm)))
 
 
-def link_entities(nodes: DataFrame, xref_dict: DataFrame,
-                  dict_broadcastable: bool = True) -> DataFrame:
-    """-> (url, frag, id, canonical_iri, link_method, link_score).
-
-    Only linkable mentions participate (DataNodes & friends with an
-    xref or a text label).
-
-    dict_broadcastable=False is the dictionary-scale path (a real
-    BridgeDb dump exceeds any broadcast threshold): the exact join
-    becomes a SALTED shuffle join — hot xrefs (TP53 on millions of
-    pages) spread over n_salts reducers instead of one — with
-    identical results."""
-    linkable = nodes.filter(
-        F.col("xref_identifier").isNotNull()
-        | F.col("text_content").isNotNull()
-    ).select(*DOC_KEY, "id", "xref_datasource", "xref_identifier",
-             "text_content")
-
-    d = xref_dict.select(
-        F.col("datasource").alias("d_ds"),
-        F.col("identifier").alias("d_id"),
-        F.col("label").alias("d_label"),
-        F.col("canonical_iri").alias("d_iri"),
-    )
-
-    # path 1: exact CURIE join (broadcast dim, or salted shuffle join
-    # when the dictionary is too big to broadcast)
-    big = linkable.filter(F.col("xref_identifier").isNotNull()).select(
-        *DOC_KEY, "id",
-        F.col("xref_datasource").alias("ds"),
-        F.col("xref_identifier").alias("ident"))
-    dd = d.select(F.col("d_ds").alias("ds"), F.col("d_id").alias("ident"),
-                  "d_iri")
-    if dict_broadcastable:
-        joined = big.join(F.broadcast(dd), ["ds", "ident"], "left")
-    else:
-        from ..functions.skew import salted_join
-        joined = salted_join(big, dd, ["ds", "ident"], how="left",
-                             broadcast_small=False)
-    exact = joined.select(
-        *DOC_KEY, "id",
-        F.col("d_iri").alias("canonical_iri"),
-        F.when(F.col("d_iri").isNotNull(),
-               F.lit("exact")).alias("link_method"),
-        F.when(F.col("d_iri").isNotNull(), F.lit(1.0)).alias("link_score"),
-    )
-
-    # path 2: blocked similarity join on normalized label
-    unref = linkable.filter(F.col("xref_identifier").isNull()
-                            & F.col("text_content").isNotNull())
-    unref = unref.withColumn("toks", _tokens(F.col("text_content"))) \
-        .withColumn("block", F.element_at("toks", 1))
-    db = d.withColumn("d_toks", _tokens(F.col("d_label"))) \
-          .withColumn("d_block", F.element_at("d_toks", 1))
-    if dict_broadcastable:
-        db = F.broadcast(db)
-    # (above threshold the block join shuffles both sides on the
-    # block token; AQE skew splitting handles hot blocks)
-    cand = unref.join(db, F.col("block") == F.col("d_block"), "left")
-    inter = F.size(F.array_intersect("toks", "d_toks"))
-    union = F.size(F.array_union("toks", "d_toks"))
-    cand = cand.withColumn(
-        "score",
-        F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0)))
-    w = Window.partitionBy(*DOC_KEY, "id").orderBy(
-        F.desc("score"), F.asc("d_iri"))
-    best = cand.withColumn("rn", F.row_number().over(w)) \
-        .filter(F.col("rn") == 1)
-    sim = best.select(
-        *DOC_KEY, "id",
-        F.when(F.col("score") >= SIM_THRESHOLD,
-               F.col("d_iri")).alias("canonical_iri"),
-        F.when(F.col("score") >= SIM_THRESHOLD,
-               F.lit("similarity")).alias("link_method"),
-        F.when(F.col("score") >= SIM_THRESHOLD,
-               F.col("score")).alias("link_score"),
-    )
-    return exact.unionByName(sim)
+class LinkIndex(NamedTuple):
+    """The dictionary as the kernel reads it."""
+    # (datasource, identifier) -> IRI
+    exact: dict
+    # first label token -> [(label token set, IRI)]
+    blocks: dict
+    # IRI -> representative of its sameAs component (aliased IRIs only)
+    components: dict
 
 
-def alias_edges(xref_dict: DataFrame) -> DataFrame:
-    """Dictionary-internal owl:sameAs pairs (IRI -> IRI). DICTIONARY-
-    scale — independent of corpus size — which is what lets
-    `canonicalize_linked` find their components on the driver."""
-    return xref_dict.filter(F.col("alias_of_iri").isNotNull()) \
-        .select(F.col("canonical_iri").alias("src"),
-                F.col("alias_of_iri").alias("dst"))
+def link_index(rows=XREF_ROWS) -> LinkIndex:
+    """The linking index of dictionary rows `(datasource, identifier,
+    label, alias_of)`."""
+    exact, blocks, aliases = {}, {}, []
+    for ds, ident, label, alias_of in rows:
+        iri = canonical_iri(ds, ident)
+        exact[ds, ident] = iri
+        toks = label_tokens(label)
+        blocks.setdefault(toks[0], []).append((frozenset(toks), iri))
+        alias = canonical_iri("Entrez Gene", alias_of)
+        if iri is not None and alias is not None:
+            aliases.append((iri, alias))
+    return LinkIndex(exact, blocks, alias_components(aliases))
 
 
-def same_as_edges(linked: DataFrame, xref_dict: DataFrame) -> DataFrame:
-    """owl:sameAs pairs: dictionary aliases plus entity->canonical
-    links: the graph whose connected components canonicalization
-    resolves.
+# no candidate: the score the similarity path gives a mention whose
+# block is empty
+_NO_MATCH = (0.0, None)
 
-    Structural invariant consumed by `canonicalize_linked`: the link
-    edges attach each mention key to AT MOST ONE IRI — `link_entities`
-    partitions mentions disjointly between the exact and similarity
-    paths and each path keeps a single best match — so mention nodes
-    are always degree-1 leaves and never merge two IRI components."""
-    link_edges = linked.filter(F.col("canonical_iri").isNotNull()).select(
-        F.concat_ws("#", "url", F.col("frag").cast("string"),
-                    "id").alias("src"),
-        F.col("canonical_iri").alias("dst"),
-    )
-    return alias_edges(xref_dict).unionByName(link_edges).distinct()
+
+def _rank(match: tuple) -> tuple:
+    """Best first: the higher score, then the smaller IRI, a null IRI
+    before any."""
+    score, iri = match
+    return -score, iri is not None, iri or ""
+
+
+def best_match(label: str, index: LinkIndex) -> tuple:
+    """(score, IRI) of the best dictionary label in the label's block."""
+    toks = label_tokens(label)
+    mine = set(toks)
+    return min(((len(mine & theirs) / len(mine | theirs), iri)
+                for theirs, iri in index.blocks.get(toks[0], ())),
+               key=_rank, default=_NO_MATCH)
+
+
+def _row(r: dict, iri=None, method=None, score=None) -> dict:
+    return {"url": r["url"], "frag": r["frag"], "id": r["id"],
+            "canonical_iri": iri, "link_method": method,
+            "link_score": score}
+
+
+def link_document(nodes: list[dict], index: LinkIndex) -> list[dict]:
+    """One document's node rows -> its linked rows (frames.LINKED), in
+    document order: one per node with an xref, and one per id among
+    the xref-less labelled nodes, at its last row, linked to the best
+    candidate of all that id's labels."""
+    best: dict = {}
+    for r in nodes:
+        if r["xref_identifier"] is None and r["text_content"] is not None:
+            best[r["id"]] = min(best.get(r["id"], _NO_MATCH),
+                                best_match(r["text_content"], index),
+                                key=_rank)
+    out = []
+    for r in reversed(nodes):
+        if r["xref_identifier"] is not None:
+            iri = index.exact.get((r["xref_datasource"],
+                                   r["xref_identifier"]))
+            out.append(_row(r) if iri is None
+                       else _row(r, iri, "exact", 1.0))
+        elif r["text_content"] is not None and r["id"] in best:
+            score, iri = best.pop(r["id"])
+            out.append(_row(r) if score < SIM_THRESHOLD
+                       else _row(r, iri, "similarity", score))
+    out.reverse()
+    return out
+
+
+def link_entities(model: dict) -> DataFrame:
+    """(url, frag, id, canonical_iri, link_method, link_score): the
+    `linked` role of the model's compiled output."""
+    return frames.select_frame(model["compiled"], "linked")

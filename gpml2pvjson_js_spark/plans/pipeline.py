@@ -8,15 +8,14 @@ The stage DAG (`Pipeline.run`):
     text
     mentions ── quarantine
         └── document compiler, staged once
-              ├── nodes ── linked ──┐
-              ├── triples ──────────┴── canonical_triples
-              ├── edges, citations, vocabularies, pathways
-              ├── interactions
-              └── documents
+              ├── nodes, edges, citations, vocabularies, pathways
+              ├── interactions, triples, documents
+              └── linked, canonical_triples
 
 Every stage under the compiler is a projection of its staged output,
-so each waits only for `mentions`; linking and canonicalization cross
-documents and stay Spark joins.
+so each waits only for `mentions`. Linking and canonicalization read
+nothing beyond the document but the dictionary, which the compiler
+holds as a Python index (operators/linking.py).
 
 Snapshot layout (Iceberg-style commit protocol on plain parquet — the
 same code works against real Iceberg by swapping `_write`/`_read` for
@@ -44,12 +43,19 @@ from pyspark.sql import functions as F
 
 from ..operators import export
 from ..operators.assemble import build_document_model
-from ..operators.canonicalize import canonicalize_linked, rewrite_triples
+from ..operators.canonicalize import canonical_triples
 from ..operators.frames import MODEL_FRAMES
 from ..operators.interactions import classify_interactions
-from ..operators.linking import link_entities, xref_dictionary
+from ..operators.linking import link_entities, link_index
 from ..operators.parse import extracted_text, parse_gpml
 from ..operators.triples import build_triples
+
+# perfbench/layers.py times its `linking` and `canonicalize` layers by
+# wrapping these names in this module. Linking and canonicalization
+# run inside the document compiler, so the names stand for its index
+# build and the canonical projection; Pipeline.run calls neither.
+xref_dictionary = link_index
+canonicalize_linked = rewrite_triples = canonical_triples
 
 N_BUCKETS_DEFAULT = 32
 # write tasks per snapshot bucket (see SnapshotStore.commit)
@@ -219,14 +225,14 @@ class Pipeline:
     def _release_stage_blocks(self, persisted_before: set) -> None:
         """Unpersist the lazily-localCheckpointed RDDs this run staged.
 
-        The fan-out checkpoints (assemble/waypoints/topo/canonicalize)
-        are plan-cutting scaffolding; once every stage is committed to
-        parquet nobody reads them again — but their serialized blocks
-        stay pinned in the block manager until the JVM happens to GC
-        the RDD handles. On a long-lived driver submitting repeated
-        jobs that accumulation is a cliff, not a slope (measured: the
-        same sf0.1 job in one JVM ran 61.5 s -> 40.4 s -> 152.8 s as
-        persistent RDDs grew 24 -> 41 -> 57; with release, flat).
+        The model staging (assemble._stage) is plan-cutting
+        scaffolding; once every stage is committed to parquet nobody
+        reads it again — but its serialized blocks stay pinned in the
+        block manager until the JVM happens to GC the RDD handles. On
+        a long-lived driver submitting repeated jobs that accumulation
+        is a cliff, not a slope (measured: the same sf0.1 job in one
+        JVM ran 61.5 s -> 40.4 s -> 152.8 s as persistent RDDs grew
+        24 -> 41 -> 57; with release, flat).
         Only RDDs persisted DURING this run are touched."""
         try:
             sc = self.spark.sparkContext._jsc.sc()
@@ -290,8 +296,6 @@ class Pipeline:
                         spark, pages, mentions=parsed_holder["df"]))
                 return model_cache
 
-        xd = xref_dictionary(spark)
-
         def projection(build):
             """A stage that projects the staged model: it waits only
             for the mentions."""
@@ -307,30 +311,20 @@ class Pipeline:
             "triples": projection(build_triples),
             # JSON-LD documents (NDJSON-ready, S5/JS1/JS2)
             "documents": projection(export.jsonld_documents),
-            "linked": (["nodes"], lambda: link_entities(out["nodes"],
-                                                        xd)),
-            # the sameAs components come from the dictionary-scale
-            # alias graph alone, found on the driver and broadcast to
-            # the mentions (canonicalize module docstring)
-            "canonical_triples": (["triples", "linked"], lambda:
-                                  rewrite_triples(
-                                      out["triples"],
-                                      canonicalize_linked(out["linked"],
-                                                          xd))),
+            "linked": projection(link_entities),
+            "canonical_triples": projection(canonical_triples),
             # per-url extracted text (the byte-identical invariant)
             "text": ([], lambda: extracted_text(pages)),
         }
 
         # Start priority among eligible stages. At most STAGE_WORKERS
         # stages are in flight, and each freed worker takes the
-        # highest-ranked eligible stage, so a stage that becomes
-        # eligible late (`linked`, when `nodes` commits) still starts
-        # before ones that have waited since `mentions` committed.
-        # Critical path first: `nodes` feeds `linked`, which with
-        # `triples` feeds `canonical_triples`; `documents` writes the
-        # most bytes.
-        priority = ["mentions", "text", "nodes", "triples", "linked",
-                    "canonical_triples", "documents", "edges",
+        # highest-ranked eligible stage. `text` waits for nothing and
+        # every other stage only for `mentions`. The first stages to
+        # start after `mentions` compute the compiler's staging inside
+        # their commits, and the ones after them only read its blocks.
+        priority = ["mentions", "text", "nodes", "triples", "documents",
+                    "edges", "linked", "canonical_triples",
                     "interactions", "pathways", "citations",
                     "vocabularies", "quarantine"]
         rank = {n: i for i, n in enumerate(priority)}

@@ -51,14 +51,18 @@ def golden():
     return load
 
 
-def compiled_rows(gpml: str, url: str = "https://t.example/doc") -> dict:
+def compiled_rows(gpml: str, url: str = "https://t.example/doc",
+                  index=None) -> dict:
     """The document compiler's rows by role for one GPML document,
-    parsed and compiled in plain Python."""
+    parsed and compiled in plain Python, linked against `index` (the
+    dictionary's by default)."""
     from gpml2pvjson_js_spark.operators.document import compile_document
+    from gpml2pvjson_js_spark.operators.linking import link_index
     from gpml2pvjson_js_spark.operators.parse import (
         MENTIONS_SCHEMA, _parse_fragment)
     return compile_document([{**dict.fromkeys(MENTIONS_SCHEMA.names), **r}
-                             for r in _parse_fragment(url, 0, gpml)])
+                             for r in _parse_fragment(url, 0, gpml)],
+                            index or link_index())
 
 
 def rows_by_id(df, url_part):

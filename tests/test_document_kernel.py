@@ -15,6 +15,7 @@ from gpml2pvjson_js_spark.operators.assemble import build_document_model
 from gpml2pvjson_js_spark.operators.document import (
     SCHEMA, assemble_document, compile_document)
 from gpml2pvjson_js_spark.operators.frames import FRAMES
+from gpml2pvjson_js_spark.operators.linking import link_index
 from gpml2pvjson_js_spark.operators.parse import MENTIONS_SCHEMA
 
 
@@ -61,7 +62,8 @@ def _run(*rows):
     """Kernel output: element rows by id, and the document's pathway
     row."""
     last = max(r["elem_idx"] for r in rows)
-    by_role = _roles(compile_document([*rows, _pathway(last + 1)]))
+    by_role = _roles(compile_document([*rows, _pathway(last + 1)],
+                                      link_index()))
     assert len(by_role["pathways"]) == 1
     els = by_role.get("nodes", []) + by_role.get("edges", [])
     return {r["id"]: r for r in els}, by_role["pathways"][0]
@@ -234,7 +236,7 @@ def test_repeated_graph_id_resolves_to_the_last_element():
             rel_x=3.0, rel_y=0.0),
         _edge(4, "e1", [_pt(0, 0.0, 0.0, "dup", (3.0, 0.0)),
                         _pt(1, 9.0, 9.0)]),
-    ]))
+    ], link_index()))
     by_idx = {r["elem_idx"]: r for r in got["nodes"] + got["edges"]}
     # the rows arrive out of order; document order is elem_idx
     assert by_idx[2]["burrs"] == ["st"] and _null(by_idx[0]["burrs"])
@@ -247,7 +249,7 @@ def _compiled(*rows, **pathway):
     """Kernel output rows by role, with the document's Pathway row."""
     last = max(r["elem_idx"] for r in rows)
     return _roles(compile_document(
-        [*rows, _pathway(last + 1, **pathway)]))
+        [*rows, _pathway(last + 1, **pathway)], link_index()))
 
 
 def _by_id(rows):
@@ -388,7 +390,7 @@ def test_arrow_boundary_keeps_nan_rotations_and_nulls_other_nans():
                 rel_y=0.0),
             _pathway(2)]
     out = assemble_document(pa.Table.from_pylist(
-        rows, schema=to_arrow_schema(MENTIONS_SCHEMA)))
+        rows, schema=to_arrow_schema(MENTIONS_SCHEMA)), link_index())
     assert out.schema == to_arrow_schema(SCHEMA)
     got = {r["id"]: r for r in out.to_pylist()}
     # a NaN rotation goes back as NaN, as the Catalyst cast gave it

@@ -1,14 +1,16 @@
 """Interaction classification, triple materialization (P/R vs curated
 expected triples), linking, canonicalization, topo levels."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators.canonicalize import (
-    alias_components, canonicalize_linked, rewrite_triples)
+    alias_components, canonical_triples)
 from gpml2pvjson_js_spark.operators.interactions import classify
 from gpml2pvjson_js_spark.operators.linking import (
-    link_entities, same_as_edges, xref_dictionary)
+    XREF_ROWS, canonical_iri, label_tokens, link_document, link_entities,
+    link_index)
 from gpml2pvjson_js_spark.plans.topo import dependency_edges, topo_levels
 from tests.conftest import _uf_components, compiled_rows
 
@@ -169,9 +171,8 @@ def test_triple_precision_recall(triples):
     assert precision >= 0.95, sorted(extra)
 
 
-def test_linking_exact_and_similarity(spark, model):
-    xd = xref_dictionary(spark)
-    linked = link_entities(model["nodes"], xd)
+def test_linking_exact_and_similarity(model):
+    linked = link_entities(model)
     by_id = {(r["url"].split("/")[-2], r["id"]): r.asDict()
              for r in linked.collect()}
     akt = by_id[("states", "sa001")]
@@ -182,9 +183,8 @@ def test_linking_exact_and_similarity(spark, model):
         .filter("count > 1").count() == 0
 
 
-def test_similarity_link_blocked_join(spark, model):
-    xd = xref_dictionary(spark)
-    linked = link_entities(model["nodes"], xd)
+def test_similarity_link_blocked_join(model):
+    linked = link_entities(model)
     # label-only DataNode "Glucose"-like: the data-nodes fixture has
     # xrefs; the shapes-labels Label "a label" must stay unlinked
     lab = linked.filter(F.col("url").contains("/shapes-labels/")
@@ -192,30 +192,65 @@ def test_similarity_link_blocked_join(spark, model):
     assert lab and lab[0]["link_method"] is None
 
 
-def test_linking_salted_fallback_at_dictionary_scale(spark, model):
-    """Above the broadcast threshold the exact-linking join must use
-    the salted shuffle path with IDENTICAL results: same links from
-    the toy dictionary and from a 200k-row dictionary-scale superset
-    (filler labels never collide), and the executed plan salts the
-    hot datasource key instead of hash-partitioning on it alone."""
-    from gpml2pvjson_js_spark.operators.linking import (
-        synthetic_xref_dictionary)
+# Label normalization, as Spark's `array_distinct(split(regexp_replace(
+# lower(trim(label)), '[^a-z0-9 ]', ''), '\\s+'))` gave it: `trim`
+# strips only U+0020.
+@pytest.mark.parametrize("label, tokens", [
+    ("TP53", ["tp53"]),
+    (" TP53 ", ["tp53"]),
+    ("\n TP53", ["", "tp53"]),
+    ("\tTP53", ["tp53"]),
+    ("TP53\t", ["tp53"]),
+    ("\u00a0TP53", ["tp53"]),
+    ("TP\u00a0 53", ["tp", "53"]),
+    ("a  b", ["a", "b"]),
+    ("Tp53 TP53", ["tp53"]),
+    ("x\r\ny", ["xy"]),
+    ("Glucose-6-phosphate", ["glucose6phosphate"]),
+    ("!!!", [""]),
+    ("--", [""]),
+    ("", [""]),
+    (" ", [""]),
+    ("\u0130", ["i"]),
+    ("\u0130stanbul", ["istanbul"]),
+    ("\u00df", [""]),
+    ("stra\u00dfe", ["strae"]),
+    ("\u039f\u0394\u039f\u03a3", [""]),
+    ("\u212a", ["k"]),
+])
+def test_label_tokens_follow_spark_normalization(label, tokens):
+    assert label_tokens(label) == tokens
 
-    def snap(df):
-        return sorted(
-            (r["url"], r["frag"], r["id"], r["canonical_iri"],
-             r["link_method"],
-             round(r["link_score"], 4) if r["link_score"] is not None
-             else None)
-            for r in df.collect())
 
-    toy = snap(link_entities(model["nodes"], xref_dictionary(spark)))
-    big_dict = synthetic_xref_dictionary(spark, 200_000)
-    big_df = link_entities(model["nodes"], big_dict,
-                           dict_broadcastable=False)
-    assert snap(big_df) == toy
-    plan = big_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "__salt" in plan  # the exact join shuffles on (key, salt)
+def _mention(mid, text=None, xref=(None, None)):
+    return {"url": "u", "frag": 0, "id": mid, "xref_datasource": xref[0],
+            "xref_identifier": xref[1], "text_content": text}
+
+
+def test_similarity_tie_goes_to_the_smallest_iri():
+    """Equal scores go to the smallest IRI as a string (ncbigene/10
+    before ncbigene/2); below SIM_THRESHOLD or with an empty block the
+    mention stays unlinked; a repeated id links once, to the best
+    candidate of all its labels, at its last row."""
+    index = link_index([("Entrez Gene", "2", "foo bar", None),
+                        ("Entrez Gene", "10", "foo baz", None),
+                        ("Entrez Gene", "3", "qux", None)])
+    got = link_document([
+        _mention("m1", "Foo"), _mention("m2", "foo bar baz qux"),
+        _mention("m3", "qux qux"), _mention("m4", "zzz"),
+        _mention("m5", "foo a b c d"), _mention("m6", "qux zzz"),
+        _mention("m6", "zzz"), _mention("m7", xref=("CAS", "1")),
+    ], index)
+    iri = "https://identifiers.org/ncbigene/"
+    assert [(r["id"], r["canonical_iri"], r["link_method"],
+             r["link_score"]) for r in got] == [
+        ("m1", iri + "10", "similarity", 0.5),
+        ("m2", iri + "10", "similarity", 0.5),
+        ("m3", iri + "3", "similarity", 1.0),
+        ("m4", None, None, None),
+        ("m5", None, None, None),
+        ("m6", iri + "3", "similarity", 0.5),
+        ("m7", None, None, None)]
 
 
 def test_alias_components_merges_alias():
@@ -256,76 +291,74 @@ def test_alias_components_isolated_pair_and_cycle_mix():
     assert len(comp) == 8
 
 
-def test_canonicalize_linked_matches_generic(spark, model):
-    """The pipeline's alias-graph path must equal the components of
-    the FULL sameAs graph, mention leaves included, row for row (the
-    invariant that keeps corpus-sized frames out of the component
+def _rewritten(rows, cmap) -> list[tuple]:
+    """The triples of `rows`, subj and obj mapped through `cmap`."""
+    return sorted((t["url"], t["frag"], t["pathway_id"],
+                   cmap.get((t["url"], t["frag"], t["subj"]), t["subj"]),
+                   t["pred"],
+                   cmap.get((t["url"], t["frag"], t["obj"]), t["obj"]))
+                  for t in rows)
+
+
+def test_canonicalize_linked_matches_generic(model, triples):
+    """The canonical triples equal the triples rewritten through the
+    components of the FULL sameAs graph, found by brute force: the
+    dictionary's alias pairs plus one edge from each linked mention to
+    its IRI (the invariant that keeps mentions out of the component
     search)."""
-    xd = xref_dictionary(spark)
-    linked = link_entities(model["nodes"], xd)
-    comp = _uf_components([tuple(r) for r in
-                           same_as_edges(linked, xd).collect()])
-    generic = {(r["url"], r["frag"], r["id"],
-                comp[f"{r['url']}#{r['frag']}#{r['id']}"])
-               for r in linked.filter(
-                   F.col("canonical_iri").isNotNull()).collect()}
-    fast = canonicalize_linked(linked, xd)
-    assert sorted(generic) == sorted(map(tuple, fast.collect()))
-    # and the fast path actually exercises the alias merge: the
-    # Uniprot alias row maps some mention to the Entrez IRI
-    assert fast.filter(
-        F.col("canonical") ==
-        "https://identifiers.org/ncbigene/207").count() > 0
+    linked = [r for r in link_entities(model).collect()
+              if r["canonical_iri"] is not None]
+    aliases = [(canonical_iri(ds, ident),
+                canonical_iri("Entrez Gene", alias_of))
+               for ds, ident, _, alias_of in XREF_ROWS if alias_of]
+    comp = _uf_components(aliases + [
+        (f"{r['url']}#{r['frag']}#{r['id']}", r["canonical_iri"])
+        for r in linked])
+    keys = [(r["url"], r["frag"], r["id"]) for r in linked]
+    assert len(set(keys)) == len(keys)  # one linked row per mention
+    cmap = {k: comp["#".join(map(str, k))] for k in keys}
+    got = sorted(map(tuple, canonical_triples(model).collect()))
+    assert got == _rewritten(triples.collect(), cmap)
+    # the alias merge is exercised: the Uniprot AKT1 mention takes the
+    # Entrez IRI
+    akt = ("/data-nodes/", "dn003")
+    assert [v for k, v in cmap.items() if akt[0] in k[0]
+            and k[2] == akt[1]] == ["https://identifiers.org/ncbigene/207"]
 
 
-def _executed_plan(df) -> str:
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
+def test_link_index_holds_exact_map_blocks_and_components():
+    """The index is plain Python, built from the dictionary rows: the
+    exact map holds every row, each block lists its labels' token sets,
+    and the component map holds only the aliased IRIs."""
+    index = link_index()
+    assert len(index.exact) == len(XREF_ROWS) == 141
+    assert index.exact["Uniprot-TrEMBL", "P31749"] == \
+        "https://identifiers.org/uniprot/P31749"
+    assert sorted(index.blocks["akt1"]) == [
+        (frozenset({"akt1"}), "https://identifiers.org/ncbigene/207"),
+        (frozenset({"akt1"}), "https://identifiers.org/uniprot/P31749")]
+    assert index.components == dict.fromkeys(
+        ["https://identifiers.org/uniprot/P31749",
+         "https://identifiers.org/ncbigene/207"],
+        "https://identifiers.org/ncbigene/207")
 
 
-def test_dictionary_and_component_map_are_local_relations(spark):
-    """The dictionary, its alias pairs and canonicalization's component
-    map (with aliases and without) plan as `LocalTableScan`s: no Python
-    RDD (`ExistingRDD`), so reading them runs no Python task."""
-    from gpml2pvjson_js_spark.operators.linking import alias_edges
-    from gpml2pvjson_js_spark.session import local_frame
-
-    xd = xref_dictionary(spark)
-    no_alias = xd.filter(F.col("alias_of_iri").isNull())
-    linked = local_frame(spark, [
-        ("https://p.example/a", 0, "n1",
-         "https://identifiers.org/uniprot/P31749"),
-        ("https://p.example/a", 0, "n2",
-         "https://identifiers.org/ncbigene/3098"),
-    ], "url string, frag int, id string, canonical_iri string")
-    for df in (xd, alias_edges(xd), canonicalize_linked(linked, xd),
-               canonicalize_linked(linked, no_alias)):
-        plan = _executed_plan(df)
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
-    assert sorted(canonicalize_linked(linked, xd).collect()) == [
-        ("https://p.example/a", 0, "n1",
-         "https://identifiers.org/ncbigene/207"),
-        ("https://p.example/a", 0, "n2",
-         "https://identifiers.org/ncbigene/3098")]
-
-
-def test_dictionary_without_aliases_keeps_link_targets(spark, model):
+def test_dictionary_without_aliases_keeps_link_targets():
     """With no alias_of rows the component map is empty, and every
     linked mention canonicalizes to its own link target."""
-    xd = xref_dictionary(spark).filter(F.col("alias_of_iri").isNull())
-    linked = link_entities(model["nodes"], xd)
-    targets = {(r["url"], r["frag"], r["id"], r["canonical_iri"])
-               for r in linked.filter(
-                   F.col("canonical_iri").isNotNull()).collect()}
-    assert targets
-    canonical = canonicalize_linked(linked, xd).collect()
-    assert sorted(map(tuple, canonical)) == sorted(targets)
+    no_alias = link_index([r[:3] + (None,) for r in XREF_ROWS])
+    assert no_alias.components == {}
+    rows = compiled_rows(C.gpml_data_nodes(), index=no_alias)
+    targets = {(r["url"], r["frag"], r["id"]): r["canonical_iri"]
+               for r in rows["linked"] if r["canonical_iri"] is not None}
+    assert "https://identifiers.org/uniprot/P31749" in targets.values()
+    assert sorted(map(lambda t: tuple(t.values()),
+                      rows["canonical_triples"])) == _rewritten(
+        rows["model_triples"] + rows["interaction_triples"], targets)
 
 
-def test_canonical_rewrite_preserves_counts(spark, model, triples):
-    xd = xref_dictionary(spark)
-    linked = link_entities(model["nodes"], xd)
-    out = rewrite_triples(triples, canonicalize_linked(linked, xd))
+def test_canonical_rewrite_preserves_counts(model, triples):
+    out = canonical_triples(model)
     assert out.count() == triples.count()
     # AKT1 mention rewritten to its canonical IRI
     akt = out.filter((F.col("pred") == "rdfs:label")

@@ -43,15 +43,14 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
     574k-char trees on canonical/documents used to dominate plan
     stringification). Structural, not data-dependent: committed
     stages read back from parquet, so stage plans are scan + a
-    bounded operator tree; canonicalization joins the mentions to a
-    broadcast component map found on the driver, so it plans no join
-    loop. Measured at sf0.01: max executed-plan string 99k."""
+    bounded operator tree, and every stage under the compiler is a
+    projection of its one staging. Measured at sf0.01: max
+    executed-plan string 99k."""
     from gpml2pvjson_js_spark.operators.assemble import (
         build_document_model)
     from gpml2pvjson_js_spark.operators.canonicalize import (
-        canonicalize_linked, rewrite_triples)
+        canonical_triples)
     from gpml2pvjson_js_spark.operators.export import jsonld_documents
-    from gpml2pvjson_js_spark.operators.linking import xref_dictionary
 
     root = str(tmp_path_factory.mktemp("kgplan"))
     pages = pages_df(spark, 7, giant_every=0)
@@ -69,18 +68,15 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
         }
         # the two build shapes that used to carry the 574k trees,
         # rebuilt exactly as the pipeline's stage lambdas build them
-        # (pre-commit): the documents are a projection of the model
-        # staged from the committed mentions
-        sizes["canonical_build"] = len(
-            rewrite_triples(out["triples"],
-                            canonicalize_linked(out["linked"],
-                                                xref_dictionary(spark)))
-            ._jdf.queryExecution().optimizedPlan().toString())
+        # (pre-commit): projections of the model staged from the
+        # committed mentions
         model = build_document_model(
             spark, pages, mentions=p.store.read(spark, "mentions"))
-        sizes["documents_build"] = len(
-            jsonld_documents(model)
-            ._jdf.queryExecution().optimizedPlan().toString())
+        for name, build in (("canonical_build", canonical_triples),
+                            ("documents_build", jsonld_documents)):
+            sizes[name] = len(
+                build(model)._jdf.queryExecution().optimizedPlan()
+                .toString())
     finally:
         spark.conf.set("spark.sql.maxPlanStringLength", old_cap)
     worst = max(sizes, key=sizes.get)
@@ -250,11 +246,13 @@ def _fields(*fields) -> str:
 
 _STRS = {"type": "array", "elementType": "string", "containsNull": True}
 _KEY = (("url", "string"), ("frag", "integer"), ("pathway_id", "string"))
-# what the interactions, triples and documents stages committed for
-# `pages_df(spark, 7, giant_every=0)` when each was its own Catalyst
-# plan over the model frames: the manifest schema, the row count and
-# the SHA-256 of the sorted rows, each a JSON object with sorted keys
-# (a document parsed, so its entitiesById order does not count)
+# what the interactions, triples, documents, linked and
+# canonical_triples stages committed for `pages_df(spark, 7,
+# giant_every=0)` when each was its own Catalyst plan (linking a
+# broadcast dictionary join, canonicalization a join of the triples to
+# the component map): the manifest schema, the row count and the
+# SHA-256 of the sorted rows, each a JSON object with sorted keys (a
+# document parsed, so its entitiesById order does not count)
 PROJECTION_STAGES = {
     "interactions": (
         _fields(*_KEY, ("id", "string"), ("marker_eff", "string"),
@@ -271,6 +269,15 @@ PROJECTION_STAGES = {
     "documents": (
         _fields(*_KEY, ("jsonld", "string"), ("bucket", "integer")),
         7, "ddb2644b3f172756140a732b36c366afdd4f72f1488cb4592b7fa22e2058649b"),
+    "linked": (
+        _fields(("url", "string"), ("frag", "integer"), ("id", "string"),
+                ("canonical_iri", "string"), ("link_method", "string"),
+                ("link_score", "double"), ("bucket", "integer")),
+        27, "6194f0d0716755e12451eba87d566c7102db37ed577753d98ae1e144239ed85f"),
+    "canonical_triples": (
+        _fields(*_KEY, ("subj", "string"), ("pred", "string"),
+                ("obj", "string"), ("bucket", "integer")),
+        292, "55c4606e617a13dc90872415ed356736bf4102c58bcaf701829e365215371332"),
 }
 
 
@@ -321,41 +328,53 @@ def test_pipeline_releases_the_rdds_it_persisted(
     assert not staged & _persistent_rdd_ids(spark)
 
 
-def test_scheduler_starts_linked_first_and_bounds_stages_in_flight(
+def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
         spark, tmp_path_factory, monkeypatch):
-    """With every worker busy, the worker that `nodes` frees starts
-    `linked`, not one of the lower-ranked stages eligible since
-    `mentions` committed, and no more than STAGE_WORKERS stages ever
-    run at once. `_stage` is stubbed: it sleeps and records events."""
+    """Every stage under the compiler, `linked` and `canonical_triples`
+    included, depends only on `mentions`: with a worker for every
+    stage, each starts once `mentions` ends, before any other stage
+    ends. With STAGE_WORKERS workers, no more than that many stages
+    ever run at once. `_stage` is stubbed: it sleeps and records
+    events."""
     import threading
     import time
 
-    from gpml2pvjson_js_spark.plans.pipeline import STAGE_WORKERS
+    from gpml2pvjson_js_spark.plans import pipeline
 
-    seconds = {"mentions": 0.05, "nodes": 0.2}
-    events, running, most = [], set(), [0]
-    lock = threading.Lock()
+    seconds = {"mentions": 0.05, "text": 1.0}
+    bound = pipeline.STAGE_WORKERS
 
     class Committed:
         def filter(self, _):
             return self
 
-    def stage(self, name, build, resume):
-        with lock:
-            events.append(("start", name))
-            running.add(name)
-            most[0] = max(most[0], len(running))
-        time.sleep(seconds.get(name, 0.6))
-        with lock:
-            events.append(("end", name))
-            running.discard(name)
-        return Committed()
+    def schedule(workers: int):
+        events, running, most = [], set(), [0]
+        lock = threading.Lock()
 
-    monkeypatch.setattr(Pipeline, "_stage", stage)
-    root = str(tmp_path_factory.mktemp("kgout_schedule"))
-    Pipeline(spark, None, root).run(resume=False)
+        def stage(self, name, build, resume):
+            with lock:
+                events.append(("start", name))
+                running.add(name)
+                most[0] = max(most[0], len(running))
+            time.sleep(seconds.get(name, 0.4))
+            with lock:
+                events.append(("end", name))
+                running.discard(name)
+            return Committed()
 
-    assert {n for kind, n in events if kind == "start"} == set(STAGES)
-    assert most[0] == STAGE_WORKERS
-    after_nodes = events[events.index(("end", "nodes")) + 1:]
-    assert next(n for kind, n in after_nodes if kind == "start") == "linked"
+        monkeypatch.setattr(Pipeline, "_stage", stage)
+        monkeypatch.setattr(pipeline, "STAGE_WORKERS", workers)
+        root = str(tmp_path_factory.mktemp("kgout_schedule"))
+        Pipeline(spark, None, root).run(resume=False)
+        assert {n for kind, n in events if kind == "start"} == set(STAGES)
+        return events, most[0]
+
+    events, _ = schedule(len(STAGES))
+    for name in set(STAGES) - {"mentions", "text"}:
+        before = events[:events.index(("start", name))]
+        assert [n for kind, n in before if kind == "end"] == ["mentions"], \
+            name
+
+    _, most = schedule(bound)
+    assert most == bound

@@ -65,27 +65,21 @@ def main() -> None:
         from gpml2pvjson_js_spark.operators.assemble import (
             build_document_model)
         from gpml2pvjson_js_spark.operators.canonicalize import (
-            canonicalize_linked, rewrite_triples)
+            canonical_triples)
         from gpml2pvjson_js_spark.operators.interactions import (
             classify_interactions)
-        from gpml2pvjson_js_spark.operators.linking import (
-            link_entities, xref_dictionary)
+        from gpml2pvjson_js_spark.operators.linking import link_entities
         from gpml2pvjson_js_spark.operators.triples import build_triples
 
         pages = pages_from_documents(spark, SF_DIR)
         model = build_document_model(spark, pages)
-        inter = classify_interactions(model)
-        xd = xref_dictionary(spark)
-        linked = link_entities(model["nodes"], xd)
-        triples = build_triples(model)
-        canon = rewrite_triples(triples, canonicalize_linked(linked, xd))
         for s in ("nodes", "edges", "citations", "vocabularies",
                   "pathways"):
             dump(f"stage_{s}", model[s])
-        dump("stage_interactions", inter)
-        dump("stage_linked", linked)
-        dump("stage_triples", triples)
-        dump("stage_canonical_triples", canon)
+        dump("stage_interactions", classify_interactions(model))
+        dump("stage_linked", link_entities(model))
+        dump("stage_triples", build_triples(model))
+        dump("stage_canonical_triples", canonical_triples(model))
 
         # the lazy probe DAG (bench.py _lazy_probe)
         lazy_model = build_document_model(spark, pages)
