@@ -34,14 +34,21 @@ from .parse import parse_gpml
 
 
 def _stage(df: DataFrame) -> DataFrame:
-    """Lazy SERIALIZED localCheckpoint: cuts the logical plan, so each
+    """Eager SERIALIZED localCheckpoint: cuts the logical plan, so each
     consumer's analysis sees a tiny RDD scan instead of re-walking the
     plan behind it, and the execution lineage, so the consumers read
-    blocks instead of re-running the Python pass. Serialized storage
+    blocks instead of re-running the Python pass.
+
+    Eager, because the consumers commit concurrently (Pipeline.run),
+    and over a lazy checkpoint the first commits race to compute the
+    same blocks (Spark's "Block rdd_N_0 already exists" WARN). The
+    eager form computes the compiler exactly once, through an
+    RDD-level count, with no extra SQL plan to optimize and codegen (a
+    `DataFrame.count()` would add one). Serialized storage
     matters as much: DESERIALIZED blocks kept whole stages as Java
     objects in a fixed heap and anti-scaled from GC thrash (4x the
     cores ran 1.4x slower)."""
-    return df.localCheckpoint(eager=False,
+    return df.localCheckpoint(eager=True,
                               storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
@@ -50,11 +57,12 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
     """The model frames of `pages` (or of their parsed `mentions`), and
     under `compiled` the document compiler's staged output.
 
-    The compiler's output is staged once: the five frames here, and
-    the interactions, triples, documents, linked mentions and canonical
-    triples (`classify_interactions`, `build_triples`,
-    `jsonld_documents`, `link_entities`, `canonical_triples`), are
-    projections of it, so without the stage each consumer would re-run
+    The compiler's output is staged once, and the staging is computed
+    before this returns: the five frames here, and the interactions,
+    triples, documents, linked mentions and canonical triples
+    (`classify_interactions`, `build_triples`, `jsonld_documents`,
+    `link_entities`, `canonical_triples`), are projections of it that
+    only read its blocks. Without the stage each consumer would re-run
     the Python pass."""
     if mentions is None:
         mentions = parse_gpml(pages)

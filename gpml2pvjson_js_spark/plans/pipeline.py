@@ -3,19 +3,21 @@ interactions -> triples -> linked/canonical triples -> JSON-LD docs,
 with parquet-snapshot checkpointing, per-partition lineage manifests,
 and resume-from-last-committed-snapshot (BASELINE.json north_rule).
 
-The stage DAG (`Pipeline.run`):
+The stages run in two waves (`Pipeline.run`):
 
-    text
-    mentions ── quarantine
-        └── document compiler, staged once
-              ├── nodes, edges, citations, vocabularies, pathways
-              ├── interactions, triples, documents
-              └── linked, canonical_triples
+    1. mentions, text                        (read the pages)
+    2. quarantine                            (filters the mentions)
+       document compiler, staged eagerly once
+         ├── nodes, edges, citations, vocabularies, pathways
+         ├── interactions, triples, documents
+         └── linked, canonical_triples
 
 Every stage under the compiler is a projection of its staged output,
-so each waits only for `mentions`. Linking and canonicalization read
-nothing beyond the document but the dictionary, which the compiler
-holds as a Python index (operators/linking.py).
+so each waits only for `mentions`. The staging is computed before the
+second wave starts, so the projections' commits only read its blocks.
+Linking and canonicalization read nothing beyond the document but the
+dictionary, which the compiler holds as a Python index
+(operators/linking.py).
 
 Snapshot layout (Iceberg-style commit protocol on plain parquet — the
 same code works against real Iceberg by swapping `_write`/`_read` for
@@ -223,7 +225,7 @@ class Pipeline:
         return self.store.commit(build(), name)
 
     def _release_stage_blocks(self, persisted_before: set) -> None:
-        """Unpersist the lazily-localCheckpointed RDDs this run staged.
+        """Unpersist the localCheckpointed RDDs this run staged.
 
         The model staging (assemble._stage) is plan-cutting
         scaffolding; once every stage is committed to parquet nobody
@@ -255,11 +257,21 @@ class Pipeline:
             return set()
 
     def run(self, resume: bool = True) -> dict[str, DataFrame]:
-        """Execute the stage DAG CONCURRENTLY on a fixed pool of
-        STAGE_WORKERS threads: whenever a worker is free, the
-        highest-ranked stage whose dependencies are committed starts on
-        it. When the run ends, committed or not, the blocks it staged
-        are released (_release_stage_blocks).
+        """Execute the stages in two waves on one pool of STAGE_WORKERS
+        threads:
+
+        1. `mentions` and `text`, which read only the pages;
+        2. once `mentions` has committed, the other eleven, in STAGES
+           order. `quarantine` filters the committed mentions; the
+           rest project the model, built first on the calling thread
+           (unless a resumed run finds them all committed). Its
+           staging is eager, so the compiler runs exactly once before
+           any projection starts, and no two commits race to compute
+           the same lazy block.
+
+        A failed stage cancels the stages still queued, and its
+        exception is re-raised. Committed or not, the blocks the run
+        staged are released (_release_stage_blocks).
 
         Why threads on the driver: each stage commit has two serial
         phases — driver-side analysis/optimization/codegen (single
@@ -270,96 +282,67 @@ class Pipeline:
         (BENCH/PLANS.md round-2 final). Spark job submission and
         Catalyst are thread-safe; snapshots land in per-stage dirs.
         """
-        import threading
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
-        from concurrent.futures import wait as futures_wait
+        from concurrent.futures import ThreadPoolExecutor, as_completed
 
         spark, pages = self.spark, self.pages
-        out: dict[str, DataFrame] = {}
+        parsed = model = None
 
         # The "mentions" snapshot holds the UNFILTERED parse output
         # (ok + quarantined rows); quarantine and the model derive
         # from the committed snapshot by filters (pushed down to the
         # parquet scan), so a run never re-parses raw pages.
-        parsed_holder: dict = {}
-        model_cache: dict = {}
-        model_lock = threading.Lock()
-
-        def model() -> dict:
-            with model_lock:
-                if not model_cache:
-                    # the model's one staging runs the document
-                    # compiler inside the first commit that reads it;
-                    # the other projections' commits then only read
-                    # its blocks
-                    model_cache.update(build_document_model(
-                        spark, pages, mentions=parsed_holder["df"]))
-                return model_cache
-
-        def projection(build):
-            """A stage that projects the staged model: it waits only
-            for the mentions."""
-            return ["mentions"], lambda: build(model())
-
-        builds: dict[str, tuple[list, object]] = {
-            "mentions": ([], lambda: parse_gpml(pages)),
-            "quarantine": (["mentions"], lambda: parsed_holder["df"]
-                           .filter(F.col("gpml_element_name") == "_error")),
-            **{name: projection(lambda m, n=name: m[n])
-               for name in MODEL_FRAMES},
-            "interactions": projection(classify_interactions),
-            "triples": projection(build_triples),
-            # JSON-LD documents (NDJSON-ready, S5/JS1/JS2)
-            "documents": projection(export.jsonld_documents),
-            "linked": projection(link_entities),
-            "canonical_triples": projection(canonical_triples),
+        builds = {
+            "mentions": lambda: parse_gpml(pages),
             # per-url extracted text (the byte-identical invariant)
-            "text": ([], lambda: extracted_text(pages)),
+            "text": lambda: extracted_text(pages),
+            "quarantine": lambda: parsed.filter(
+                F.col("gpml_element_name") == "_error"),
+            **{name: lambda n=name: model[n] for name in MODEL_FRAMES},
+            "interactions": lambda: classify_interactions(model),
+            "triples": lambda: build_triples(model),
+            # JSON-LD documents (NDJSON-ready, S5/JS1/JS2)
+            "documents": lambda: export.jsonld_documents(model),
+            "linked": lambda: link_entities(model),
+            "canonical_triples": lambda: canonical_triples(model),
         }
+        projections = [n for n in STAGES
+                       if n not in ("mentions", "text", "quarantine")]
 
-        # Start priority among eligible stages. At most STAGE_WORKERS
-        # stages are in flight, and each freed worker takes the
-        # highest-ranked eligible stage. `text` waits for nothing and
-        # every other stage only for `mentions`. The first stages to
-        # start after `mentions` compute the compiler's staging inside
-        # their commits, and the ones after them only read its blocks.
-        priority = ["mentions", "text", "nodes", "triples", "documents",
-                    "edges", "linked", "canonical_triples",
-                    "interactions", "pathways", "citations",
-                    "vocabularies", "quarantine"]
-        rank = {n: i for i, n in enumerate(priority)}
+        futures: dict = {}
 
-        done: set[str] = set()
-        futures: dict[str, object] = {}
+        def cancel_queued(fut) -> None:
+            # runs on a failed stage's worker before it can take the
+            # next stage, so the stages still queued never start
+            if not fut.cancelled() and fut.exception() is not None:
+                for queued in list(futures.values()):
+                    queued.cancel()
+
+        def submit(name: str) -> None:
+            futures[name] = ex.submit(self._stage, name, builds[name],
+                                      resume)
+            futures[name].add_done_callback(cancel_queued)
+
         persisted_before = self._persisted_ids()
+        ex = ThreadPoolExecutor(max_workers=STAGE_WORKERS)
         try:
-            with ThreadPoolExecutor(max_workers=STAGE_WORKERS) as ex:
-                while len(done) < len(builds):
-                    eligible = sorted(
-                        (name for name, (deps, _) in builds.items()
-                         if name not in done and name not in futures
-                         and all(d in done for d in deps)),
-                        key=lambda n: rank.get(n, len(rank)))
-                    for name in eligible[:STAGE_WORKERS - len(futures)]:
-                        futures[name] = ex.submit(
-                            self._stage, name, builds[name][1], resume)
-                    if not futures:
-                        raise RuntimeError("pipeline stage deadlock")
-                    futures_wait(list(futures.values()),
-                                 return_when=FIRST_COMPLETED)
-                    for name, fut in list(futures.items()):
-                        if fut.done():
-                            df = fut.result()  # re-raises stage failures
-                            if name == "mentions":
-                                parsed_holder["df"] = df
-                                out["mentions"] = df.filter(
-                                    F.col("gpml_element_name") != "_error")
-                            else:
-                                out[name] = df
-                            done.add(name)
-                            del futures[name]
+            submit("mentions")
+            submit("text")
+            parsed = futures["mentions"].result()
+            if not resume or not all(map(self.store.is_committed,
+                                         projections)):
+                model = build_document_model(spark, pages,
+                                             mentions=parsed)
+            for name in STAGES:
+                if name not in futures:
+                    submit(name)
+            names = {fut: name for name, fut in futures.items()}
+            # in completion order, so a failure re-raises at once
+            out = {names[fut]: fut.result() for fut in as_completed(names)}
         finally:
+            ex.shutdown(cancel_futures=True)
             self._release_stage_blocks(persisted_before)
+        out["mentions"] = parsed.filter(
+            F.col("gpml_element_name") != "_error")
         return out
 
     def metrics(self) -> dict:

@@ -334,8 +334,9 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
     included, depends only on `mentions`: with a worker for every
     stage, each starts once `mentions` ends, before any other stage
     ends. With STAGE_WORKERS workers, no more than that many stages
-    ever run at once. `_stage` is stubbed: it sleeps and records
-    events."""
+    ever run at once. With one worker, the stages under the compiler
+    start in STAGES order. `_stage` is stubbed: it sleeps and records
+    events; so is the model build, which the stub stages never read."""
     import threading
     import time
 
@@ -348,7 +349,7 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
         def filter(self, _):
             return self
 
-    def schedule(workers: int):
+    def schedule(workers: int, default: float = 0.4):
         events, running, most = [], set(), [0]
         lock = threading.Lock()
 
@@ -357,13 +358,15 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
                 events.append(("start", name))
                 running.add(name)
                 most[0] = max(most[0], len(running))
-            time.sleep(seconds.get(name, 0.4))
+            time.sleep(seconds.get(name, default))
             with lock:
                 events.append(("end", name))
                 running.discard(name)
             return Committed()
 
         monkeypatch.setattr(Pipeline, "_stage", stage)
+        monkeypatch.setattr(pipeline, "build_document_model",
+                            lambda *a, **kw: {})
         monkeypatch.setattr(pipeline, "STAGE_WORKERS", workers)
         root = str(tmp_path_factory.mktemp("kgout_schedule"))
         Pipeline(spark, None, root).run(resume=False)
@@ -378,3 +381,93 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
 
     _, most = schedule(bound)
     assert most == bound
+
+    events, _ = schedule(1, default=0.01)
+    wave2 = [n for n in STAGES if n not in ("mentions", "text")]
+    assert [n for kind, n in events if kind == "start"][2:] == wave2
+
+
+def test_stage_failure_cancels_queued_stages_and_releases_blocks(
+        spark, tmp_path_factory, monkeypatch):
+    """A failing stage fails the run with its own exception. The stages
+    still queued when it fails never start, and the run still releases
+    the blocks it staged."""
+    import threading
+    import time
+
+    import pytest
+
+    from gpml2pvjson_js_spark.plans import pipeline
+
+    events, released = [], []
+    lock = threading.Lock()
+
+    class Committed:
+        def filter(self, _):
+            return self
+
+    def stage(self, name, build, resume):
+        with lock:
+            events.append(("start", name))
+        if name == "nodes":
+            time.sleep(0.05)
+            with lock:
+                events.append(("fail", name))
+            raise ValueError("nodes failed")
+        time.sleep({"mentions": 0.05, "text": 0.01}.get(name, 0.3))
+        return Committed()
+
+    release = Pipeline._release_stage_blocks
+
+    def spy(self, persisted_before):
+        released.append(True)
+        release(self, persisted_before)
+
+    monkeypatch.setattr(Pipeline, "_stage", stage)
+    monkeypatch.setattr(Pipeline, "_release_stage_blocks", spy)
+    monkeypatch.setattr(pipeline, "build_document_model",
+                        lambda *a, **kw: {})
+    monkeypatch.setattr(pipeline, "STAGE_WORKERS", 2)
+    root = str(tmp_path_factory.mktemp("kgout_failure"))
+    with pytest.raises(ValueError, match="nodes failed"):
+        Pipeline(spark, None, root).run(resume=False)
+    assert released == [True]
+    # `quarantine` ran beside `nodes`; every stage after them was
+    # still queued when `nodes` failed
+    started = [n for kind, n in events if kind == "start"]
+    assert set(started) == {"mentions", "text", "quarantine", "nodes"}
+
+
+def test_resume_with_every_compiler_stage_committed_skips_the_model(
+        spark, tmp_path_factory, monkeypatch):
+    """A resumed run whose stages under the compiler are all committed
+    never builds the model, and still recommits what is missing: here
+    `quarantine`, a filter of the committed mentions."""
+    from gpml2pvjson_js_spark.plans import pipeline
+
+    root = str(tmp_path_factory.mktemp("kgout_resume_no_model"))
+    pages = pages_df(spark, 4, giant_every=0)
+    p = Pipeline(spark, pages, root, n_buckets=4)
+    p.run(resume=False)
+    before = {s: m["committed_at_unix_ms"] for s, m in p.metrics().items()}
+    quarantined = p.metrics()["quarantine"]["rows"]
+    os.remove(os.path.join(root, "quarantine", "manifest.json"))
+
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        raise AssertionError("the model was built")
+
+    monkeypatch.setattr(pipeline, "build_document_model", spy)
+    p2 = Pipeline(spark, pages, root, n_buckets=4)
+    out = p2.run(resume=True)
+    assert calls == []
+    after = {s: m["committed_at_unix_ms"] for s, m in p2.metrics().items()}
+    assert set(after) == set(STAGES)
+    for s, ts in before.items():
+        if s == "quarantine":
+            assert after[s] > ts
+        else:
+            assert after[s] == ts, s
+    assert out["quarantine"].count() == quarantined

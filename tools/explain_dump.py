@@ -6,8 +6,9 @@ Usage:
     python tools/explain_dump.py OUTDIR [SUFFIX] [--only name1,name2]
 
 Writes OUTDIR/<name>_<SUFFIX>.txt (SUFFIX default "before").
-Plans only — nothing is executed, so this is safe to run alongside
-nothing else in a few seconds and does not perturb bench numbers.
+Plans only, apart from the document compiler's staging: the KG frames
+project it, and `build_document_model` computes it eagerly, once per
+model. Do not run it alongside a bench.
 """
 
 from __future__ import annotations
@@ -82,9 +83,7 @@ def main() -> None:
         dump("stage_canonical_triples", canonical_triples(model))
 
         # the lazy probe DAG (bench.py _lazy_probe)
-        lazy_model = build_document_model(spark, pages)
-        lazy = build_triples(lazy_model)
-        dump("lazy_dag", lazy)
+        dump("lazy_dag", build_triples(model))
 
     spark.stop()
 
