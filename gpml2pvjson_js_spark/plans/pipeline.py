@@ -262,12 +262,13 @@ class Pipeline:
 
         1. `mentions` and `text`, which read only the pages;
         2. once `mentions` has committed, the other eleven, in STAGES
-           order. `quarantine` filters the committed mentions; the
-           rest project the model, built first on the calling thread
-           (unless a resumed run finds them all committed). Its
-           staging is eager, so the compiler runs exactly once before
-           any projection starts, and no two commits race to compute
-           the same lazy block.
+           order. `quarantine` filters the committed mentions, so it
+           is submitted first and runs while the model builds. The
+           rest project the model, built on the calling thread (unless
+           a resumed run finds them all committed). Its staging is
+           eager, so the compiler runs exactly once before any
+           projection starts, and no two commits race to compute the
+           same lazy block.
 
         A failed stage cancels the stages still queued, and its
         exception is re-raised. Committed or not, the blocks the run
@@ -328,6 +329,7 @@ class Pipeline:
             submit("mentions")
             submit("text")
             parsed = futures["mentions"].result()
+            submit("quarantine")
             if not resume or not all(map(self.store.is_committed,
                                          projections)):
                 model = build_document_model(spark, pages,

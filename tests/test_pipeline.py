@@ -335,10 +335,13 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
     stage, each starts once `mentions` ends, before any other stage
     ends. With STAGE_WORKERS workers, no more than that many stages
     ever run at once. With one worker, the stages under the compiler
-    start in STAGES order. `_stage` is stubbed: it sleeps and records
-    events; so is the model build, which the stub stages never read."""
+    start in STAGES order, and `quarantine`, which needs only the
+    committed mentions, is submitted before the model build starts.
+    `_stage` is stubbed: it sleeps and records events; so is the model
+    build, which the stub stages never read."""
     import threading
     import time
+    from concurrent.futures import ThreadPoolExecutor
 
     from gpml2pvjson_js_spark.plans import pipeline
 
@@ -352,6 +355,17 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
     def schedule(workers: int, default: float = 0.4):
         events, running, most = [], set(), [0]
         lock = threading.Lock()
+        submit = ThreadPoolExecutor.submit
+
+        def submitted(ex, fn, name, *args):
+            with lock:
+                events.append(("submit", name))
+            return submit(ex, fn, name, *args)
+
+        def build(*args, **kwargs):
+            with lock:
+                events.append(("build", None))
+            return {}
 
         def stage(self, name, build, resume):
             with lock:
@@ -365,8 +379,8 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
             return Committed()
 
         monkeypatch.setattr(Pipeline, "_stage", stage)
-        monkeypatch.setattr(pipeline, "build_document_model",
-                            lambda *a, **kw: {})
+        monkeypatch.setattr(ThreadPoolExecutor, "submit", submitted)
+        monkeypatch.setattr(pipeline, "build_document_model", build)
         monkeypatch.setattr(pipeline, "STAGE_WORKERS", workers)
         root = str(tmp_path_factory.mktemp("kgout_schedule"))
         Pipeline(spark, None, root).run(resume=False)
@@ -385,6 +399,9 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
     events, _ = schedule(1, default=0.01)
     wave2 = [n for n in STAGES if n not in ("mentions", "text")]
     assert [n for kind, n in events if kind == "start"][2:] == wave2
+    built = events.index(("build", None))
+    assert ("submit", "quarantine") in events[:built]
+    assert ("submit", "nodes") in events[built:]
 
 
 def test_stage_failure_cancels_queued_stages_and_releases_blocks(

@@ -17,6 +17,9 @@ start) and for the batch:
   `chmod` Hadoop's local file system forks for each file and directory
   it creates when the native Hadoop library is missing;
 - this process, the Python driver.
+Under the title, one line gives the driver JVM's class-data sharing
+(`session.class_data_sharing()`): `use` or `dump` with the archive, or
+`off` with the reason.
 
 perfbench's trace times layers and stages, not threads, so it cannot
 show where a change to the JVM's JIT work lands; this tool can. JVM
@@ -172,7 +175,7 @@ def main(argv=None) -> int:
     import run as bench_run
     import workloads
     from gpml2pvjson_js_spark.plans.pipeline import Pipeline
-    from gpml2pvjson_js_spark.session import get_spark
+    from gpml2pvjson_js_spark.session import class_data_sharing, get_spark
 
     os.environ["PYTHONPATH"] = os.pathsep.join(
         filter(None, [REPO, os.environ.get("PYTHONPATH")]))
@@ -204,6 +207,7 @@ def main(argv=None) -> int:
         shutil.rmtree(tmp, ignore_errors=True)
     print(f"pipeline batch 0 of seed {args.seed}: {len(pages)} pages, "
           f"cold driver JVM")
+    print(f"class-data sharing: {class_data_sharing()}")
     report(setup, {k: end[k] - setup[k] for k in end}, (t1 - t0, t2 - t1),
            (setup_seen, batch_seen))
     return 0

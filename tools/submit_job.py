@@ -13,6 +13,20 @@ on the SparkSession spark-submit hands it — no repo checkout needed
 on executors. Output is the resumable snapshot store: per-stage
 parquet + lineage manifests; rerunning with --resume picks up from
 the last committed snapshot.
+
+spark-submit starts the driver JVM itself, so `session.get_spark`'s
+driver options do not reach it; pass them with `--driver-java-options`.
+Class-data sharing takes an archive made by a `get_spark` session on
+the same JDK and Spark installation (`session.class_data_sharing()`
+names it), or one dumped with `-XX:ArchiveClassesAtExit=<file>`:
+
+    spark-submit --driver-java-options \
+        "-XX:SharedArchiveFile=<archive> -Xshare:auto -Xlog:cds*=off" ...
+
+CDS refuses a non-empty directory on the class path, and the launcher
+puts the conf directory there: run with `SPARK_CONF_DIR` set to an
+empty directory (the one the archive was made with), or the JVM falls
+back to starting without the archive.
 """
 
 from __future__ import annotations
