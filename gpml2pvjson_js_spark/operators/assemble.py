@@ -12,11 +12,16 @@ anchor->edge, burr->host) stays inside one (url, frag). So one grouped
 pass over the ok mention rows (document.py) converts each document's
 elements and resolves its references in memory, and emits the rows of
 all five model frames, the document's interactions, triples, JSON-LD
-text, linked mentions and canonical triples; each is a projection of
-that one staged output. Linking and canonicalization read only the
-dictionary beyond the document, and the dictionary is a driver-built
-Python index (linking.link_index) handed to the compiler. Spark keeps
-the grouping and the quarantine filter. A per-document topo-level
+text and linked mentions; each is a projection of that one staged
+output, and so are the canonical triples: the canonical ids are
+columns of the staged triple rows, so each triple is staged once.
+Linking and canonicalization read only the dictionary beyond the
+document, and the dictionary is a driver-built Python index
+(linking.link_index) handed to the compiler. Spark keeps the grouping
+and the quarantine filter. Given a snapshot store, the mentions are
+laid out as it commits them before the pass, which groups on that
+layout, so neither the pass nor any projection's commit plans an
+exchange of its own. A per-document topo-level
 operator is still provided in plans/topo.py for hyperedge-depth
 diagnostics and cycle quarantine.
 """
@@ -53,7 +58,8 @@ def _stage(df: DataFrame) -> DataFrame:
 
 
 def build_document_model(spark: SparkSession, pages: DataFrame,
-                         mentions: DataFrame | None = None) -> dict:
+                         mentions: DataFrame | None = None,
+                         store=None) -> dict:
     """The model frames of `pages` (or of their parsed `mentions`), and
     under `compiled` the document compiler's staged output.
 
@@ -63,13 +69,21 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
     (`classify_interactions`, `build_triples`, `jsonld_documents`,
     `link_entities`, `canonical_triples`), are projections of it that
     only read its blocks. Without the stage each consumer would re-run
-    the Python pass."""
+    the Python pass.
+
+    With a snapshot `store` (plans/pipeline.py, SnapshotStore), the
+    ok mentions are laid out as the store commits (`store.layout`) and
+    the compiler groups on the layout's keys (`store.layout_keys`), so
+    every projection carries them and commits with no exchange."""
     if mentions is None:
         mentions = parse_gpml(pages)
 
     quarantine = mentions.filter(F.col("gpml_element_name") == "_error")
     ok = mentions.filter(F.col("gpml_element_name") != "_error")
-    compiled = _stage(D.resolve_documents(ok, link_index()))
+    keys = None
+    if store is not None:
+        ok, keys = store.layout(ok), store.layout_keys()
+    compiled = _stage(D.resolve_documents(ok, link_index(), keys))
     return {
         "mentions": ok,
         "quarantine": quarantine,

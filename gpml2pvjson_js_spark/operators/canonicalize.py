@@ -15,8 +15,11 @@ components of the DICTIONARY-scale alias graph with mention leaves
 attached. So `alias_components` finds them once on the driver, for the
 linking index (linking.link_index), and the document compiler
 (document.py) rewrites each document's triples through them
-(`canonicalize_document`). Exactness against the full graph is pinned
-by test_canonicalize_linked_matches_generic.
+(`canonicalize_document`). The canonical ids are columns of the staged
+triple rows (`canonical_subj`, `canonical_obj`): each triple is staged
+once, and `canonical_triples` projects its canonical pair where
+`build_triples` projects the plain one. Exactness against the full
+graph is pinned by test_canonicalize_linked_matches_generic.
 """
 
 from __future__ import annotations
@@ -75,6 +78,8 @@ def canonicalize_document(linked: list[dict], triples: list[dict],
 
 
 def canonical_triples(model: dict) -> DataFrame:
-    """(url, frag, pathway_id, subj, pred, obj): the `canonical_triples`
-    role of the model's compiled output."""
-    return frames.select_frame(model["compiled"], "canonical_triples")
+    """(url, frag, pathway_id, subj, pred, obj): the model's triples,
+    their subject and object read from the staged canonical ids."""
+    return frames.select_frame(model["compiled"], "model_triples",
+                               "interaction_triples", frame=frames.TRIPLES,
+                               read=frames.CANONICAL)

@@ -1,7 +1,7 @@
 """The document compiler: one document's mention rows -> the finished
-rows of the five model frames, its BioPAX interactions, its triples,
-its JSON-LD document, its linked mentions and its canonical triples, in
-one grouped-map pass.
+rows of the five model frames, its BioPAX interactions, its triples
+with their canonical ids, its JSON-LD document and its linked
+mentions, in one grouped-map pass.
 
 The reference is a one-document compiler: it turns each GPML element
 into its typed pvjson entity, resolves the document's references in
@@ -40,15 +40,20 @@ mention rows to `assemble_document`, which
    (export.py);
 5. links the node rows against the linking index (linking.py), and
    rewrites the triples through the sameAs components
-   (canonicalize.py). The index is built once on the driver and handed
-   to every call, so neither crosses documents.
+   (canonicalize.py) into columns of the triple rows themselves
+   (`canonical_subj`, `canonical_obj`), so each triple is staged once.
+   The index is built once on the driver and handed to every call, so
+   neither crosses documents.
 
 A GraphId (or GroupId) that repeats inside one document resolves to the
 last element carrying it in document order, like the reference's
 `entitiesById` overwrite.
 
 The output is ONE frame (frames.SCHEMA) with a `role` column; each
-stage is a `frames.select_frame` projection of it. The model values
+stage is a `frames.select_frame` projection of it. Over mentions laid
+out for the snapshots (`SnapshotStore.layout`), the pass groups on the
+layout's keys too, so Spark plans no exchange of its own, and every
+output row carries its document's key values. The model values
 are those the earlier Catalyst projections produced, nulls and NaNs
 included; the string casts follow Spark's ANSI mode, so input that
 made those projections raise makes the kernel raise.
@@ -105,13 +110,27 @@ _FIELD_OF = {(role, column): name
 _NAN_FIELDS = ("rotation", "text_rotation")
 
 
-def resolve_documents(ok: DataFrame, index: L.LinkIndex) -> DataFrame:
+def resolve_documents(ok: DataFrame, index: L.LinkIndex,
+                      keys: dict | None = None) -> DataFrame:
     """The compiler over every document of the ok mention rows, linking
-    against `index`: lazy, the caller stages it."""
-    def kernel(table: pa.Table) -> pa.Table:
-        return assemble_document(table, index)
+    against `index`: lazy, the caller stages it. `keys` (name ->
+    Column) are the expressions `ok` is hash-partitioned on: grouped
+    on them before (url, frag), the pass reuses that partitioning, and
+    it appends their values to its output (SCHEMA) as columns of those
+    names, each row with its document's values."""
+    keys = keys or {}
+    fields = ok.select(*(c.alias(n) for n, c in keys.items())) \
+        .schema.fields if keys else []
+    names = list(keys)  # the kernel ships without the Columns
 
-    return ok.groupBy(*DOC_KEY).applyInArrow(kernel, SCHEMA)
+    def kernel(key: tuple, table: pa.Table) -> pa.Table:
+        out = assemble_document(table, index)
+        for name, value in zip(names, key):
+            out = out.append_column(name, pa.repeat(value, out.num_rows))
+        return out
+
+    return ok.groupBy(*keys.values(), *DOC_KEY).applyInArrow(
+        kernel, T.StructType([*SCHEMA.fields, *fields]))
 
 
 def _has_nan(v, t: T.DataType) -> bool:
@@ -485,8 +504,8 @@ def compile_document(recs: list[dict], index: L.LinkIndex
         TR.document_triples(rows)
     rows["documents"] = X.document_rows(rows)
     rows["linked"] = L.link_document(rows["nodes"], index)
-    rows["canonical_triples"] = canonicalize_document(
-        rows["linked"],
-        rows["model_triples"] + rows["interaction_triples"],
-        index.components)
+    triples = rows["model_triples"] + rows["interaction_triples"]
+    for t, c in zip(triples, canonicalize_document(
+            rows["linked"], triples, index.components)):
+        t["canonical_subj"], t["canonical_obj"] = c["subj"], c["obj"]
     return rows

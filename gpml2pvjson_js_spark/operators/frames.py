@@ -6,8 +6,17 @@ frame a row belongs to, and the union of the frames' columns. The roles
 are the five model frames (nodes, edges, citations, vocabularies,
 pathways), the BioPAX `interactions`, the triples (`model_triples`, and
 the `interaction_triples` that are not among them), the JSON-LD
-`documents`, the `linked` mentions and the `canonical_triples`. `select_frame` projects roles back to their frame's exact
-schema (FRAMES).
+`documents` and the `linked` mentions. Each distinct triple is staged
+once: its row also carries its subject and object rewritten to their
+canonical ids (`canonical_subj`, `canonical_obj`, canonicalize.py), so
+the triples and the canonical triples are two projections of the same
+rows. `select_frame` projects roles back to a frame's exact schema
+(FRAMES by default).
+
+A staging laid out for the snapshots (plans/pipeline.py,
+`SnapshotStore.layout`) also carries the layout's key columns, `bucket`
+and the write salt, after SCHEMA's; every projection keeps them last,
+so its commit needs no exchange of its own.
 """
 
 from __future__ import annotations
@@ -96,17 +105,25 @@ INTERACTIONS = _struct(
     ("biopax_type", _S), ("control_type", _S), ("controller", _S),
     ("controlled", _S), ("left", _S), ("right", _S),
     ("participants", _STRS), ("conversion_direction", _S))
-TRIPLES = _struct(*_KEY, ("pathway_id", _S), ("subj", _S), ("pred", _S),
-                  ("obj", _S))
+_TRIPLE = (*_KEY, ("pathway_id", _S), ("subj", _S), ("pred", _S),
+           ("obj", _S))
+TRIPLES = _struct(*_TRIPLE)
+# a staged triple: the triple, then its subject and object as
+# canonicalize_document rewrites them
+STAGED_TRIPLES = _struct(*_TRIPLE, ("canonical_subj", _S),
+                         ("canonical_obj", _S))
+# the staged field each TRIPLES field of a canonical triple reads
+CANONICAL = {"subj": "canonical_subj", "obj": "canonical_obj"}
 DOCUMENTS = _struct(*_KEY, ("pathway_id", _S), ("jsonld", _S))
 LINKED = _struct(*_KEY, ("id", _S), ("canonical_iri", _S),
                  ("link_method", _S), ("link_score", _D))
 MODEL_FRAMES = ("nodes", "edges", "citations", "vocabularies", "pathways")
+# each role's rows as the compiler stages them
 FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
           "vocabularies": VOCABULARIES, "pathways": PATHWAYS,
-          "interactions": INTERACTIONS, "model_triples": TRIPLES,
-          "interaction_triples": TRIPLES, "documents": DOCUMENTS,
-          "linked": LINKED, "canonical_triples": TRIPLES}
+          "interactions": INTERACTIONS, "model_triples": STAGED_TRIPLES,
+          "interaction_triples": STAGED_TRIPLES, "documents": DOCUMENTS,
+          "linked": LINKED}
 
 
 def _union_schema() -> tuple[T.StructType, dict]:
@@ -142,14 +159,21 @@ def _non_null(col, dtype: T.DataType):
     return F.coalesce(col, F.lit(ZERO[dtype]))
 
 
-def select_frame(out: DataFrame, role: str, *more: str) -> DataFrame:
-    """The rows of one role, or of several roles of the same frame
-    schema, out of the compiler's output, as that frame (FRAMES[role])."""
+def select_frame(out: DataFrame, role: str, *more: str,
+                 frame: T.StructType | None = None,
+                 read: dict | None = None) -> DataFrame:
+    """The rows of one role, or of several roles of the same staged
+    schema, out of the compiler's output, as `frame` (FRAMES[role] by
+    default): each of its fields read from the staged field `read`
+    names for it (the field of the same name by default), then the
+    layout's key columns when `out` carries them."""
+    frame, read = frame or FRAMES[role], read or {}
     cols = []
-    for f in FRAMES[role].fields:
-        col = F.col(COLUMN_OF[role, f.name])
+    for f in frame.fields:
+        col = F.col(COLUMN_OF[role, read.get(f.name, f.name)])
         cols.append((col if f.nullable else _non_null(col, f.dataType))
                     .alias(f.name))
+    cols += [c for c in out.columns if c not in SCHEMA.names]
     roles = F.col("role")
     keep = roles.isin(role, *more) if more else roles == role
     return out.filter(keep).select(*cols)

@@ -12,7 +12,10 @@ rows with `document_triples` and stages the distinct triples under two
 roles: `model_triples` (the entity frames) and `interaction_triples`
 (the BioPAX roles not already among them). The distinct key holds
 `url` and `frag`, so a distinct per document is the corpus-wide
-distinct. `build_triples` projects them.
+distinct. Each triple is staged once: its row also carries the
+canonical ids of its subject and object as columns
+(`canonical_subj`, `canonical_obj`), which the canonical triples
+project (canonicalize.py). `build_triples` projects the plain pair.
 """
 
 from __future__ import annotations
@@ -32,7 +35,8 @@ def build_triples(model: dict, with_interactions: bool = True
     roles = ["model_triples"]
     if with_interactions:
         roles.append("interaction_triples")
-    return frames.select_frame(model["compiled"], *roles)
+    return frames.select_frame(model["compiled"], *roles,
+                               frame=frames.TRIPLES)
 
 
 def _xref(r: dict):

@@ -19,6 +19,15 @@ Linking and canonicalization read nothing beyond the document but the
 dictionary, which the compiler holds as a Python index
 (operators/linking.py).
 
+Exchanges: the compiler reads the committed mentions laid out once on
+the snapshots' own keys (`SnapshotStore.layout`: url-hash bucket and
+write salt) and groups on those keys, so the ten stages under it
+commit with no exchange: each writes over the staging's partitions.
+`mentions`, `text` and `quarantine` keep one exchange each, their
+commit's layout: the first two read the pages, and `quarantine`
+filters a scan of the mentions snapshot, which does not keep a url in
+one task. A batch plans four exchanges.
+
 Snapshot layout (Iceberg-style commit protocol on plain parquet — the
 same code works against real Iceberg by swapping `_write`/`_read` for
 `writeTo(...).append()` / `read.table(...)`):
@@ -121,6 +130,40 @@ class SnapshotStore:
                           "bucket_min": lo, "bucket_max": hi})
         return files
 
+    def layout_keys(self, key: str = "url") -> dict:
+        """The columns a laid-out frame is hash-partitioned on, by name:
+        its url-hash `bucket`, and the write salt, an independent hash
+        of `key` mod WRITE_TASKS_PER_BUCKET that splits each bucket
+        (partitioning by bucket alone would cap the write at n_buckets
+        tasks). The exchange has at most n_buckets * mult distinct
+        keys, so at corpus scale each write task holds about one
+        bucket."""
+        return {"bucket": F.col("bucket"),
+                "write_salt": F.pmod(F.xxhash64(F.col(key), F.lit(1)),
+                                     F.lit(WRITE_TASKS_PER_BUCKET))}
+
+    def layout(self, df: DataFrame, key: str = "url") -> DataFrame:
+        """`df` with its url-hash `bucket`, hash-partitioned on
+        `layout_keys`: the layout a snapshot is written in."""
+        out = df.withColumn(
+            "bucket", F.pmod(F.xxhash64(F.col(key)),
+                             F.lit(self.n_buckets)).cast("int"))
+        keys = self.layout_keys(key).values()
+        # scale-adaptive write parallelism: the hash keys fix which
+        # rows co-locate, while AQE sizes the task count, so
+        # corpus-scale frames keep full parallelism (parallelismFirst
+        # coalescing never drops a frame >= ~cores x
+        # minPartitionSize below default parallelism) and near-empty
+        # stages (quarantine, vocabularies) coalesce to a few tasks,
+        # and so a few files. Without AQE (a session not built by
+        # session.py) nothing would size the count-less exchange: it
+        # would get spark.sql.shuffle.partitions tasks, so the count is
+        # explicit then.
+        aqe = df.sparkSession.conf.get(
+            "spark.sql.adaptive.enabled", "true").lower() == "true"
+        return out.repartition(*keys) if aqe else \
+            out.repartition(self.n_buckets * WRITE_TASKS_PER_BUCKET, *keys)
+
     def commit(self, df: DataFrame, stage: str,
                bucket_col: str = "url") -> DataFrame:
         """Write a stage snapshot, one parquet file per write task, its
@@ -129,40 +172,25 @@ class SnapshotStore:
         manifest that lists the data files with their row counts and
         bucket bounds.
 
+        A frame that carries the write salt is laid out already: it
+        projects a staging that grouped a laid-out frame on
+        `layout_keys` and kept their values, like every stage under the
+        document compiler. Its write runs over its own partitions with
+        no exchange, and the salt is not written. Any other frame with
+        a `bucket_col` is laid out here, which costs one exchange: the
+        `mentions` and `text` stages, which read the pages, and
+        `quarantine`, a filter of the committed mentions (a snapshot
+        scan may split a file, so it does not keep a url in one task).
+
         The manifest is the commit marker, so no `_SUCCESS` file is
         written (pyarrow and Spark skip `_` files either way)."""
         data_path, manifest_path = self._paths(stage)
         t0 = time.time()
         out = df
-        if bucket_col in df.columns:
-            out = df.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col(bucket_col)),
-                       F.lit(self.n_buckets)).cast("int"))
-            # mult tasks per bucket (an independent seeded hash splits
-            # each bucket): partitioning by bucket alone would cap the
-            # write at n_buckets tasks. The exchange has at most
-            # n_buckets * mult distinct keys, so at corpus scale each
-            # write task holds about one bucket.
-            mult = WRITE_TASKS_PER_BUCKET
-            keys = (F.col("bucket"),
-                    F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
-                           F.lit(mult)))
-            # scale-adaptive write parallelism: the hash keys fix which
-            # rows co-locate, while AQE sizes the task count, so
-            # corpus-scale frames keep full parallelism (parallelismFirst
-            # coalescing never drops a frame >= ~cores x
-            # minPartitionSize below default parallelism) and
-            # near-empty stages (quarantine, vocabularies) coalesce to
-            # a few tasks, and so a few files. Without AQE (a session
-            # not built by session.py) nothing would size the
-            # count-less exchange: it would get
-            # spark.sql.shuffle.partitions tasks, so the count is
-            # explicit then.
-            aqe = df.sparkSession.conf.get(
-                "spark.sql.adaptive.enabled", "true").lower() == "true"
-            out = out.repartition(*keys) if aqe else \
-                out.repartition(self.n_buckets * mult, *keys)
+        if "write_salt" in df.columns:
+            out = df.drop("write_salt")
+        elif bucket_col in df.columns:
+            out = self.layout(df, bucket_col)
         if "bucket" in out.columns:
             # the sort the partitioned writer used to insert: a task
             # AQE coalesced holds several buckets, each then one run
@@ -268,7 +296,9 @@ class Pipeline:
            a resumed run finds them all committed). Its staging is
            eager, so the compiler runs exactly once before any
            projection starts, and no two commits race to compute the
-           same lazy block.
+           same lazy block. The model reads the committed mentions
+           laid out as the store commits, so the projections commit
+           with no exchange (SnapshotStore.commit).
 
         A failed stage cancels the stages still queued, and its
         exception is re-raised. Committed or not, the blocks the run
@@ -333,7 +363,8 @@ class Pipeline:
             if not resume or not all(map(self.store.is_committed,
                                          projections)):
                 model = build_document_model(spark, pages,
-                                             mentions=parsed)
+                                             mentions=parsed,
+                                             store=self.store)
             for name in STAGES:
                 if name not in futures:
                     submit(name)

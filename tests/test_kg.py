@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators.canonicalize import (
-    alias_components, canonical_triples)
+    alias_components, canonical_triples, canonicalize_document)
 from gpml2pvjson_js_spark.operators.interactions import classify
 from gpml2pvjson_js_spark.operators.linking import (
     XREF_ROWS, canonical_iri, label_tokens, link_document, link_entities,
@@ -345,16 +345,40 @@ def test_link_index_holds_exact_map_blocks_and_components():
 
 def test_dictionary_without_aliases_keeps_link_targets():
     """With no alias_of rows the component map is empty, and every
-    linked mention canonicalizes to its own link target."""
+    linked mention canonicalizes to its own link target: the staged
+    triple rows' canonical ids are their subject and object mapped
+    through the link targets."""
     no_alias = link_index([r[:3] + (None,) for r in XREF_ROWS])
     assert no_alias.components == {}
     rows = compiled_rows(C.gpml_data_nodes(), index=no_alias)
     targets = {(r["url"], r["frag"], r["id"]): r["canonical_iri"]
                for r in rows["linked"] if r["canonical_iri"] is not None}
     assert "https://identifiers.org/uniprot/P31749" in targets.values()
-    assert sorted(map(lambda t: tuple(t.values()),
-                      rows["canonical_triples"])) == _rewritten(
-        rows["model_triples"] + rows["interaction_triples"], targets)
+    staged = rows["model_triples"] + rows["interaction_triples"]
+    assert sorted((t["url"], t["frag"], t["pathway_id"],
+                   t["canonical_subj"], t["pred"], t["canonical_obj"])
+                  for t in staged) == _rewritten(staged, targets)
+
+
+@pytest.mark.parametrize("gpml", [C.gpml_data_nodes, C.gpml_interactions])
+def test_compiler_stages_each_distinct_triple_once(gpml):
+    """The compiler has no `canonical_triples` role: each distinct
+    triple is one staged row, under `model_triples` or
+    `interaction_triples`, and its canonical columns are
+    canonicalize_document's rewrite of its subject and object."""
+    index = link_index()
+    rows = compiled_rows(gpml(), index=index)
+    assert "canonical_triples" not in rows
+    staged = rows["model_triples"] + rows["interaction_triples"]
+    plain = [{k: t[k] for k in ("url", "frag", "pathway_id", "subj",
+                                "pred", "obj")} for t in staged]
+    assert plain and len({tuple(t.values()) for t in plain}) == len(plain)
+    rewritten = canonicalize_document(rows["linked"], plain,
+                                      index.components)
+    assert [(t["canonical_subj"], t["canonical_obj"]) for t in staged] \
+        == [(t["subj"], t["obj"]) for t in rewritten]
+    # the rewrite is exercised: the linked mentions' triples differ
+    assert any(t["canonical_subj"] != t["subj"] for t in staged)
 
 
 def test_canonical_rewrite_preserves_counts(model, triples):

@@ -2,6 +2,7 @@
 
 import json
 import os
+import re
 import shutil
 
 from pyspark.sql import functions as F
@@ -201,6 +202,79 @@ def test_empty_stage_round_trip(spark, tmp_path_factory):
     q = p.store.read(spark, "quarantine")
     assert q.count() == 0
     assert "error" in q.columns  # schema preserved for empty snapshot
+
+
+def _written_plans(monkeypatch) -> dict:
+    """Stage -> the executed plan of the frame its commit writes, taken
+    just before the write, for every write from here on."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        stage = os.path.basename(os.path.dirname(path))
+        plans[stage] = self._df._jdf.queryExecution().executedPlan() \
+            .toString()
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return plans
+
+
+def test_compiler_stages_commit_with_no_exchange(
+        spark, tmp_path_factory, monkeypatch):
+    """The compiler reads the mentions laid out once on the snapshots'
+    keys, so each of the ten stages under it writes over the staging's
+    own partitions: no Exchange in its plan. `mentions`, `text` and
+    `quarantine` each plan exactly one, their commit's layout."""
+    plans = _written_plans(monkeypatch)
+    root = str(tmp_path_factory.mktemp("kgout_exchanges"))
+    Pipeline(spark, pages_df(spark, 7, giant_every=0), root,
+             n_buckets=4).run(resume=False)
+    exchanges = {stage: len(re.findall(r"\bExchange\b", plan))
+                 for stage, plan in plans.items()}
+    assert exchanges == {
+        stage: int(stage in ("mentions", "text", "quarantine"))
+        for stage in STAGES}, plans
+
+
+def test_empty_role_commits_with_no_exchange(
+        spark, tmp_path_factory, monkeypatch):
+    """A batch with no PublicationXref commits an empty `citations`
+    snapshot over the staging's partitions: it reads back with the
+    frame's schema and the layout's `bucket`, and its manifest sums to
+    0 rows."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from gpml2pvjson_js_spark import corpus as C
+    from gpml2pvjson_js_spark.operators.frames import CITATIONS
+
+    ts = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
+    pages = spark.createDataFrame(
+        [(f"https://e.example/{i}", ts,
+          ('<html><body><script type="application/gpml+xml">\n'
+           + gpml + "\n</script></body></html>").encode(), "", "en")
+         for i, gpml in enumerate((C.gpml_data_nodes(),
+                                   C.gpml_interactions()))],
+        C.PAGES_SCHEMA)
+    plans = _written_plans(monkeypatch)
+    root = str(tmp_path_factory.mktemp("kgout_no_citations"))
+    p = Pipeline(spark, pages, root, n_buckets=4)
+    p.run(resume=False)
+    assert not re.search(r"\bExchange\b", plans["citations"])
+    schema = T.StructType([*CITATIONS.fields,
+                           T.StructField("bucket", T.IntegerType())])
+    m = p.store.manifest("citations")
+    assert m["schema"] == json.dumps(schema.jsonValue())
+    assert m["rows"] == sum(f["rows"] for f in m["files"]) == 0
+    got = p.store.read(spark, "citations")
+    assert got.dtypes == [(f.name, f.dataType.simpleString())
+                          for f in schema.fields]
+    assert got.count() == 0
+    assert p.store.manifest("nodes")["rows"] > 0
 
 
 def test_commit_without_aqe_uses_explicit_write_task_count(

@@ -19,7 +19,10 @@ start) and for the batch:
 - this process, the Python driver.
 Under the title, one line gives the driver JVM's class-data sharing
 (`session.class_data_sharing()`): `use` or `dump` with the archive, or
-`off` with the reason.
+`off` with the reason. Under the CPU table, one line gives the batch's
+Spark jobs, their tasks and their shuffle MB (read and written), from
+the Spark status store, so the exchanges a change removes show beside
+the CPU it saves.
 
 perfbench's trace times layers and stages, not threads, so it cannot
 show where a change to the JVM's JIT work lands; this tool can. JVM
@@ -42,6 +45,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [REPO, os.path.join(REPO, "perfbench")]
 
+from layers import _max_job_id, _seq  # noqa: E402  (perfbench/layers.py)
 from metrics import process_tree  # noqa: E402  (perfbench/metrics.py)
 
 TICK = os.sysconf("SC_CLK_TCK")
@@ -148,8 +152,32 @@ class JvmThreads:
         return {k: v / TICK for k, v in out.items()}, seen
 
 
+def spark_work(spark, first_job: int) -> tuple[int, int, float]:
+    """(jobs, tasks, shuffle MB) of the jobs from `first_job` on, from
+    the status store: completed tasks and shuffle bytes read plus
+    written, summed over those jobs' stages."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    jobs = [j for j in _seq(store.jobsList(None)) if j.jobId() >= first_job]
+    stage_ids = {sid for j in jobs for sid in _seq(j.stageIds())}
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    tasks = shuffle = 0
+    # stageList(statuses, details, withSummaries, quantiles,
+    # taskStatus): every stage, no per-task detail
+    for st in _seq(store.stageList(None, False, False, no_quantiles,
+                                   None)):
+        if st.stageId() in stage_ids:
+            tasks += st.numCompleteTasks()
+            shuffle += st.shuffleReadBytes() + st.shuffleWriteBytes()
+    return len(jobs), tasks, shuffle / 2**20
+
+
+def next_job_id(spark) -> int:
+    return _max_job_id(spark.sparkContext._jsc.sc().statusStore()) + 1
+
+
 def report(setup: dict, batch: dict, wall: tuple[float, float],
-           seen: tuple[dict, dict]) -> None:
+           seen: tuple[dict, dict], work: tuple[int, int, float]) -> None:
     jvm = [kind for kind, _ in KINDS] + ["rest", "exited threads"]
     rows = [("driver JVM", sum(setup[k] for k in jvm),
              sum(batch[k] for k in jvm))]
@@ -162,6 +190,8 @@ def report(setup: dict, batch: dict, wall: tuple[float, float],
     for name, s, b in rows:
         print(f"{name:<20}{s:9.1f}{b:9.1f}{s + b:9.1f}")
     print(f"{'wall s':<20}{wall[0]:9.1f}{wall[1]:9.1f}{sum(wall):9.1f}")
+    print(f"batch Spark work: {work[0]} jobs, {work[1]} tasks, "
+          f"{work[2]:.2f} MB shuffled")
     print(f"{'python seen':<20}{'set-up':>9}{'batch':>9}")
     for role in ("daemon", "worker"):
         print(f"{'  ' + role + 's':<20}{seen[0][role]:9d}{seen[1][role]:9d}")
@@ -195,9 +225,11 @@ def main(argv=None) -> int:
         pipe = Pipeline(spark,
                         spark.read.schema(workloads.PAGES_DDL).parquet(path),
                         os.path.join(tmp, "out"))
+        first_job = next_job_id(spark)
         (setup, setup_seen), t1 = threads.snapshot(), time.monotonic()
         pipe.run(resume=False)
         (end, batch_seen), t2 = threads.snapshot(), time.monotonic()
+        work = spark_work(spark, first_job)
     finally:
         if threads is not None:
             threads.done.set()
@@ -209,7 +241,7 @@ def main(argv=None) -> int:
           f"cold driver JVM")
     print(f"class-data sharing: {class_data_sharing()}")
     report(setup, {k: end[k] - setup[k] for k in end}, (t1 - t0, t2 - t1),
-           (setup_seen, batch_seen))
+           (setup_seen, batch_seen), work)
     return 0
 
 
