@@ -1,17 +1,23 @@
-"""The document compiler: one document's mention rows -> the finished
-rows of the five model frames, its BioPAX interactions, its triples
-with their canonical ids, its JSON-LD document and its linked
-mentions, in one grouped-map pass.
+"""The one pass per page: each page's mention rows, its text, and
+what the document compiler makes of each of its documents, in one
+grouped Arrow pass over the pages; and the compiler itself, one
+document's mention rows -> the finished rows of the five model frames,
+its BioPAX interactions, its triples with their canonical ids, its
+JSON-LD document and its linked mentions.
 
 The reference is a one-document compiler: it turns each GPML element
 into its typed pvjson entity, resolves the document's references in
 one in-memory pass and emits one `{pathway, entitiesById}` per
 document (src/Processor.ts:88-121,373-560,
 src/2013a/toPvjson.ts:470-710); its BioPAX classification reads only
-that document too (src/pvjsonToBioPAX/Interaction.ts:94-276). Every
-reference is scoped to its (url, frag), so one
-`groupBy(url, frag).applyInArrow` call hands each document's ok
-mention rows to `assemble_document`, which
+that document too (src/pvjsonToBioPAX/Interaction.ts:94-276); and
+the reference's CLI splits its input into pathway chunks and compiles
+each one (bin/gpml2pvjson:61-96). Every reference is scoped to its
+(url, frag), and a document never spans two pages, so one
+`groupBy(url).applyInArrow` call (`compile_pages`) hands each page to
+`compile_page_group`, which parses it (parse.page_mentions), extracts
+its text (parse.extract_page_text) and hands each document's ok
+mention rows to `compile_document`, which
 
 1. layers the class defaults and the group-style overrides
    (P16, ref: src/2013a/toPvjson.ts:114-156, src/group.ts:153-181);
@@ -50,19 +56,23 @@ last element carrying it in document order, like the reference's
 `entitiesById` overwrite.
 
 The output is ONE frame (frames.SCHEMA) with a `role` column; each
-stage is a `frames.select_frame` projection of it. Over mentions laid
-out for the snapshots (`SnapshotStore.layout`), the pass groups on the
-layout's keys too, so Spark plans no exchange of its own, and every
-output row carries its document's key values. The model values
-are those the earlier Catalyst projections produced, nulls and NaNs
-included; the string casts follow Spark's ANSI mode, so input that
-made those projections raise makes the kernel raise.
+of the pipeline's stages is a `frames.select_frame` projection of it:
+the mention rows (`mentions`, and `quarantine` for the `_error` rows),
+the `text` and the compiler's roles. Over pages laid out for the
+snapshots (`SnapshotStore.layout`), the pass groups on the layout's
+keys too, so Spark plans no exchange of its own, and every output row
+carries its page's key values. The model values are those the earlier
+Catalyst projections produced, nulls and NaNs included; the string
+casts follow Spark's ANSI mode, so input that made those projections
+raise makes the kernel raise.
 
 The rows cross the Arrow boundary as plain Python values, without
 pandas: most documents are small, and building a pandas frame of some
-90 columns per document cost more than compiling it.
+90 columns per document cost more than compiling it. The compiler
+reads the mention rows as they commit (NaN null), so it compiles what
+the mentions snapshot holds.
 
-Bound: the kernel sees a whole document at once, so one document's
+Bound: the kernel sees a whole page at once, so one page's html and
 mention rows must fit in one Python worker's memory; a page with tens
 of thousands of elements is still a few MB.
 """
@@ -87,7 +97,7 @@ from . import linking as L
 from . import triples as TR
 from . import waypoints as W
 from .canonicalize import canonicalize_document
-from .entities import DOC_KEY
+from .parse import _nan_to_null, extract_page_text, page_mentions
 from ..functions import converters as C
 
 _NAN = float("nan")
@@ -110,26 +120,26 @@ _FIELD_OF = {(role, column): name
 _NAN_FIELDS = ("rotation", "text_rotation")
 
 
-def resolve_documents(ok: DataFrame, index: L.LinkIndex,
-                      keys: dict | None = None) -> DataFrame:
-    """The compiler over every document of the ok mention rows, linking
+def compile_pages(pages: DataFrame, index: L.LinkIndex,
+                  keys: dict | None = None) -> DataFrame:
+    """The pass over every page of `pages(url, html)`, linking
     against `index`: lazy, the caller stages it. `keys` (name ->
-    Column) are the expressions `ok` is hash-partitioned on: grouped
-    on them before (url, frag), the pass reuses that partitioning, and
-    it appends their values to its output (SCHEMA) as columns of those
-    names, each row with its document's values."""
+    Column) are the expressions `pages` is hash-partitioned on:
+    grouped on them before `url`, the pass reuses that partitioning,
+    and it appends their values to its output (SCHEMA) as columns of
+    those names, each row with its page's values."""
     keys = keys or {}
-    fields = ok.select(*(c.alias(n) for n, c in keys.items())) \
+    fields = pages.select(*(c.alias(n) for n, c in keys.items())) \
         .schema.fields if keys else []
     names = list(keys)  # the kernel ships without the Columns
 
     def kernel(key: tuple, table: pa.Table) -> pa.Table:
-        out = assemble_document(table, index)
+        out = compile_page_group(table, index)
         for name, value in zip(names, key):
             out = out.append_column(name, pa.repeat(value, out.num_rows))
         return out
 
-    return ok.groupBy(*keys.values(), *DOC_KEY).applyInArrow(
+    return pages.groupBy(*keys.values(), "url").applyInArrow(
         kernel, T.StructType([*SCHEMA.fields, *fields]))
 
 
@@ -143,21 +153,6 @@ def _has_nan(v, t: T.DataType) -> bool:
     if isinstance(t, T.StructType):
         return any(_has_nan(v.get(f.name), f.dataType) for f in t.fields)
     return False
-
-
-def _nan_to_null(v, t: T.DataType):
-    """v with every NaN null, as the Arrow conversion (`from_pandas`)
-    commits it."""
-    if v is None:
-        return None
-    if isinstance(t, T.DoubleType):
-        return None if v != v else v
-    if isinstance(t, T.ArrayType):
-        return [_nan_to_null(x, t.elementType) for x in v]
-    if isinstance(t, T.StructType):
-        return {f.name: _nan_to_null(v.get(f.name), f.dataType)
-                for f in t.fields}
-    return v
 
 
 # per model frame: each field, and the value a null in it commits as
@@ -396,18 +391,8 @@ def _resolve(els: list[dict]) -> tuple[set, list]:
 
 # --- the kernel ----------------------------------------------------------
 
-def _records(table: pa.Table) -> list[dict]:
-    """The rows as dicts. Most columns are null for a whole document
-    (a DataNode has no pub_year), and skipping their conversion halves
-    its cost."""
-    n = table.num_rows
-    columns = [[None] * n if c.null_count == n else c.to_pylist()
-               for c in table.columns]
-    return [dict(zip(table.column_names, row)) for row in zip(*columns)]
-
-
 def _table(rows: dict[str, list[dict]]) -> pa.Table:
-    """Rows by role -> the kernel's output table (SCHEMA): each role's
+    """Rows by role -> the pass's output table (SCHEMA): each role's
     rows fill its frame's columns and leave the others null. Column by
     column, a role costs in proportion to its own fields: one struct
     conversion of every row at the union's width took about 15 us a
@@ -435,14 +420,28 @@ def _key_fields(r: dict, *names) -> dict:
     return {n: r[n] for n in names}
 
 
-def assemble_document(table: pa.Table, index: L.LinkIndex) -> pa.Table:
-    """One document's ok mention rows (MENTIONS_SCHEMA, as Arrow hands
-    them over) -> its rows of every role (SCHEMA)."""
-    recs = _records(table)
-    for r in recs:
-        if r["attributes"] is not None:  # a map arrives as pairs
-            r["attributes"] = dict(r["attributes"])
-    return _table(compile_document(recs, index))
+def compile_page_group(table: pa.Table, index: L.LinkIndex) -> pa.Table:
+    """The pages of one url (`url`, `html`; two when a batch holds the
+    url twice) -> their rows of every role (SCHEMA): each page's
+    mention rows and text, and the compiled rows of each of their
+    documents. The ok mention rows of one (url, frag) compile as one
+    document, whichever page they came from."""
+    rows = defaultdict(list)
+    docs = defaultdict(list)
+    for url, html in zip(table["url"].to_pylist(),
+                         table["html"].to_pylist()):
+        for r in page_mentions(url, html):
+            if r["gpml_element_name"] == "_error":
+                rows["quarantine"].append(r)
+            else:
+                rows["mentions"].append(r)
+                docs[r["frag"]].append(r)
+        rows["text"].append({"url": url,
+                             "extracted_text": extract_page_text(html)})
+    for recs in docs.values():
+        for role, rs in compile_document(recs, index).items():
+            rows[role].extend(rs)
+    return _table(rows)
 
 
 def compile_document(recs: list[dict], index: L.LinkIndex

@@ -1,17 +1,19 @@
-"""The frames the document compiler (document.py) emits, and their
+"""The frames the one pass per page (document.py) emits, and their
 projection out of its one staged output.
 
-The compiler's output is ONE frame (SCHEMA): a `role` column naming the
+The pass's output is ONE frame (SCHEMA): a `role` column naming the
 frame a row belongs to, and the union of the frames' columns. The roles
-are the five model frames (nodes, edges, citations, vocabularies,
-pathways), the BioPAX `interactions`, the triples (`model_triples`, and
-the `interaction_triples` that are not among them), the JSON-LD
-`documents` and the `linked` mentions. Each distinct triple is staged
-once: its row also carries its subject and object rewritten to their
-canonical ids (`canonical_subj`, `canonical_obj`, canonicalize.py), so
-the triples and the canonical triples are two projections of the same
-rows. `select_frame` projects roles back to a frame's exact schema
-(FRAMES by default).
+are the page's `mentions` (MENTIONS_SCHEMA; the `_error` rows are the
+`quarantine` role), its `text`, and what the document compiler makes
+of the ok mentions: the five model frames (nodes, edges, citations,
+vocabularies, pathways), the BioPAX `interactions`, the triples
+(`model_triples`, and the `interaction_triples` that are not among
+them), the JSON-LD `documents` and the `linked` mentions. Each
+distinct triple is staged once: its row also carries its subject and
+object rewritten to their canonical ids (`canonical_subj`,
+`canonical_obj`, canonicalize.py), so the triples and the canonical
+triples are two projections of the same rows. `select_frame` projects
+roles back to a frame's exact schema (FRAMES by default).
 
 A staging laid out for the snapshots (plans/pipeline.py,
 `SnapshotStore.layout`) also carries the layout's key columns, `bucket`
@@ -22,8 +24,9 @@ so its commit needs no exchange of its own.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .parse import MENTIONS_SCHEMA
 
 _S, _D, _I = T.StringType(), T.DoubleType(), T.IntegerType()
 _STRS, _DOUBLES = T.ArrayType(_S), T.ArrayType(_D)
@@ -117,13 +120,21 @@ CANONICAL = {"subj": "canonical_subj", "obj": "canonical_obj"}
 DOCUMENTS = _struct(*_KEY, ("pathway_id", _S), ("jsonld", _S))
 LINKED = _struct(*_KEY, ("id", _S), ("canonical_iri", _S),
                  ("link_method", _S), ("link_score", _D))
+# the quarantined mentions, every field nullable, as a filter of the
+# committed mentions gave them
+QUARANTINE = T.StructType([T.StructField(f.name, f.dataType)
+                           for f in MENTIONS_SCHEMA.fields])
+# a page's text (parse.text_schema gives the nullability of a pages
+# frame's own)
+TEXT = _struct(("url", _S), ("extracted_text", _S))
 MODEL_FRAMES = ("nodes", "edges", "citations", "vocabularies", "pathways")
-# each role's rows as the compiler stages them
+# each role's rows as the pass stages them
 FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
           "vocabularies": VOCABULARIES, "pathways": PATHWAYS,
           "interactions": INTERACTIONS, "model_triples": STAGED_TRIPLES,
           "interaction_triples": STAGED_TRIPLES, "documents": DOCUMENTS,
-          "linked": LINKED}
+          "linked": LINKED, "mentions": MENTIONS_SCHEMA,
+          "quarantine": QUARANTINE, "text": TEXT}
 
 
 def _union_schema() -> tuple[T.StructType, dict]:
@@ -147,33 +158,37 @@ def _union_schema() -> tuple[T.StructType, dict]:
 
 
 SCHEMA, COLUMN_OF = _union_schema()
+# a null in a non-nullable field commits as this literal
 ZERO = {_D: 0.0, _I: 0, _S: ""}
+_ZERO_SQL = {_D: "0.0D", _I: "0", _S: "''"}
 
 
-def _non_null(col, dtype: T.DataType):
-    """`col` as a non-nullable column of the same type: it holds no
-    null for its role, so the coalesce only restores the frame's
-    declared nullability."""
-    if isinstance(dtype, T.ArrayType):
-        return F.coalesce(col, F.array())
-    return F.coalesce(col, F.lit(ZERO[dtype]))
+def _sql(name: str, f: T.StructField) -> str:
+    """The expression that reads field `f` from column `name`: the
+    column itself, or, for a non-nullable field, the column with its
+    nulls coalesced, which only restores the frame's declared
+    nullability (the role holds no null there)."""
+    col = f"`{name}`"
+    if f.nullable:
+        return col
+    zero = "array()" if isinstance(f.dataType, T.ArrayType) \
+        else _ZERO_SQL[f.dataType]
+    return f"coalesce({col}, {zero})"
 
 
 def select_frame(out: DataFrame, role: str, *more: str,
                  frame: T.StructType | None = None,
                  read: dict | None = None) -> DataFrame:
     """The rows of one role, or of several roles of the same staged
-    schema, out of the compiler's output, as `frame` (FRAMES[role] by
+    schema, out of the pass's output, as `frame` (FRAMES[role] by
     default): each of its fields read from the staged field `read`
     names for it (the field of the same name by default), then the
-    layout's key columns when `out` carries them."""
+    layout's key columns when `out` carries them. One filter and one
+    `selectExpr` of SQL strings, so a projection costs a few py4j
+    calls per field rather than a Column object per operator."""
     frame, read = frame or FRAMES[role], read or {}
-    cols = []
-    for f in frame.fields:
-        col = F.col(COLUMN_OF[role, read.get(f.name, f.name)])
-        cols.append((col if f.nullable else _non_null(col, f.dataType))
-                    .alias(f.name))
-    cols += [c for c in out.columns if c not in SCHEMA.names]
-    roles = F.col("role")
-    keep = roles.isin(role, *more) if more else roles == role
-    return out.filter(keep).select(*cols)
+    exprs = [f"{_sql(COLUMN_OF[role, read.get(f.name, f.name)], f)} "
+             f"AS `{f.name}`" for f in frame.fields]
+    exprs += [f"`{c}`" for c in out.columns if c not in SCHEMA.names]
+    roles = ", ".join(f"'{r}'" for r in (role, *more))
+    return out.filter(f"role IN ({roles})").selectExpr(*exprs)

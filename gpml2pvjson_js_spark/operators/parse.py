@@ -1,14 +1,16 @@
-"""Vectorized GPML extraction: pages -> one row per GPML element.
+"""GPML extraction: pages -> one row per GPML element, and each page's
+canonical text.
 
-Spark-first layout of the reference's streaming SAX parse
+The row kernels of the reference's streaming SAX parse
 (ref: src/spinoffs/cxml-xpath.ts:61-213 + selector table
-src/2013a/toPvjson.ts:169-198): each page row is parsed inside an
-Arrow-batched ``mapInPandas`` stage, emitting a *flat typed mention
-row* per GPML element.  All conversion semantics (key mapping,
+src/2013a/toPvjson.ts:169-198): `page_mentions` turns one page into a
+*flat typed mention row* per GPML element, and `extract_page_text`
+into its canonical text. All conversion semantics (key mapping,
 defaults, value converters, reference resolution) happen later, in
 Python, one document at a time, in the document compiler
-(document.py) — this stage is pure extraction plus the
-order-sensitive jobs that genuinely need document order:
+(document.py), which calls both kernels inside its one pass per page.
+This module is pure extraction plus the order-sensitive jobs that
+genuinely need document order:
 
 - multi-fragment splitting (ref: bin/gpml2pvjson:61-96)
 - ``rdf:id`` -> ``rdf:ID`` fixup (ref: src/2013a/toPvjson.ts:163-167)
@@ -16,8 +18,8 @@ order-sensitive jobs that genuinely need document order:
   (ref: src/GraphIdManager.ts:31-53) which depends on the document
   order of elements and on existing hex-parsable ids.
 
-The per-url canonical text extraction (byte-identical invariant,
-BASELINE.json input_hint) lives here too so one scan serves both.
+`parse_gpml` and `extracted_text` are the same kernels as Spark
+frames of their own, one Arrow pass over the pages each.
 """
 
 from __future__ import annotations
@@ -27,11 +29,11 @@ import re
 import xml.etree.ElementTree as ET
 from typing import Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.mappings import SUPPORTED_NAMESPACES
 
@@ -132,7 +134,12 @@ MENTIONS_SCHEMA = T.StructType([
     T.StructField("error", T.StringType()),
 ])
 
-_COLUMNS = [f.name for f in MENTIONS_SCHEMA.fields]
+_ARROW_MENTIONS = to_arrow_schema(MENTIONS_SCHEMA)
+
+
+# the fields a NaN can reach: doubles, and the points' doubles
+_DOUBLE_FIELDS = [(f.name, f.dataType) for f in MENTIONS_SCHEMA.fields
+                  if "double" in f.dataType.simpleString()]
 
 # Elements that may carry a GraphId (ref: Processor.ts:212-249 is applied
 # to exactly the element streams below plus nested Anchors).
@@ -195,10 +202,13 @@ def extract_fragments(html: bytes) -> list[str]:
     return []
 
 
-def extract_page_text(html: bytes) -> str:
+def extract_page_text(html: bytes | None) -> str | None:
     """Canonical extracted text: the contents of every top-level
-    ``<p>`` element, joined by newline. Byte-identical per url is the
-    pipeline invariant (BASELINE.json input_hint)."""
+    ``<p>`` element, joined by newline; none for a page with no html.
+    Byte-identical per url is the pipeline invariant (BASELINE.json
+    input_hint)."""
+    if html is None:
+        return None
     try:
         text = html.decode("utf-8")
     except UnicodeDecodeError:
@@ -459,45 +469,75 @@ def _rows_for_page(url: str, html: bytes) -> list[dict]:
     return rows
 
 
+def _nan_to_null(v, t: T.DataType):
+    """v with every NaN null, at every nesting level, as the Arrow
+    conversion of a pandas frame (`from_pandas`) commits it."""
+    if v is None:
+        return None
+    if isinstance(t, T.DoubleType):
+        return None if v != v else v
+    if isinstance(t, T.ArrayType):
+        return [_nan_to_null(x, t.elementType) for x in v]
+    if isinstance(t, T.StructType):
+        return {f.name: _nan_to_null(v.get(f.name), f.dataType)
+                for f in t.fields}
+    return v
+
+
+def page_mentions(url: str, html: bytes | None) -> list[dict]:
+    """One page's mention rows (`_error` rows included), each with
+    every MENTIONS_SCHEMA field, as they commit: a NaN (a "NaN"
+    coordinate) is null at every nesting level. A page with no html
+    has none."""
+    if html is None:
+        return []
+    rows = []
+    for r in _rows_for_page(url, html):
+        row = dict.fromkeys(MENTIONS_SCHEMA.names)
+        row.update(r)
+        for name, t in _DOUBLE_FIELDS:
+            if row[name] is not None:
+                row[name] = _nan_to_null(row[name], t)
+        rows.append(row)
+    return rows
+
+
+def text_schema(pages: DataFrame) -> T.StructType:
+    """(url, extracted_text), each as nullable as the pages' url and
+    html."""
+    return T.StructType([
+        T.StructField("url", T.StringType(), pages.schema["url"].nullable),
+        T.StructField("extracted_text", T.StringType(),
+                      pages.schema["html"].nullable)])
+
+
 def parse_gpml(pages: DataFrame) -> DataFrame:
-    """pages(url, html, ...) -> mentions (one row per GPML element).
+    """pages(url, html, ...) -> mentions (one row per GPML element,
+    `page_mentions`), one Arrow pass over the pages; only
+    ``url``/``html`` are read (column pruning keeps the scan
+    narrow)."""
 
-    Arrow-batched; only ``url``/``html`` are read (column pruning keeps
-    the scan narrow)."""
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [r for url, html in zip(batch["url"].to_pylist(),
+                                           batch["html"].to_pylist())
+                    for r in page_mentions(url, html)]
+            yield pa.RecordBatch.from_pylist(rows, schema=_ARROW_MENTIONS)
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                out.extend(_rows_for_page(url, bytes(html)))
-            # column-wise with explicit None (pandas would otherwise
-            # coerce missing values to NaN, breaking array/map columns)
-            yield pd.DataFrame(
-                {c: pd.Series([r.get(c) for r in out], dtype=object)
-                 for c in _COLUMNS}
-            )
-
-    return pages.select("url", "html").mapInPandas(run, MENTIONS_SCHEMA)
+    return pages.select("url", "html").mapInArrow(run, MENTIONS_SCHEMA)
 
 
 def extracted_text(pages: DataFrame) -> DataFrame:
-    """(url, text) re-extracted from html — must match the corpus `text`
-    column byte-for-byte (the pytest invariant).
+    """(url, extracted_text) re-extracted from html by
+    `extract_page_text`, one Arrow pass over the pages: must match the
+    corpus `text` column byte-for-byte (the pytest invariant)."""
 
-    Pure Catalyst: ``extract_page_text``'s regex findall + join is
-    expressed as regexp_extract_all + array_join on the JVM, removing
-    a second full-corpus Python/Arrow boundary (the first one is the
-    page synthesis itself). Java and Python regex agree exactly on
-    this pattern (literal delimiters, lazy dot-all group). The
-    binary→string cast matches the Python kernel's UTF-8 decode, also
-    on malformed bytes, which both replace with U+FFFD (pinned by
-    test_parse_and_text), with one known exception: an encoded
-    surrogate (ED A0..BF xx) is one U+FFFD here and three there.
-    F.decode is no way out: in Spark 4 it raises on malformed
-    input."""
-    return pages.select(
-        "url",
-        F.array_join(
-            F.regexp_extract_all(F.col("html").cast("string"),
-                                 F.lit(r"(?s)<p>(.*?)</p>"), F.lit(1)),
-            "\n").alias("extracted_text"))
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(
+                [batch["url"], pa.array(
+                    [extract_page_text(h) for h in batch["html"].to_pylist()],
+                    pa.string())],
+                ["url", "extracted_text"])
+
+    return pages.select("url", "html").mapInArrow(run, text_schema(pages))

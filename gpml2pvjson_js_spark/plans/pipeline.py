@@ -1,32 +1,28 @@
-"""Production pipeline: pages -> mentions -> document model ->
-interactions -> triples -> linked/canonical triples -> JSON-LD docs,
+"""Production pipeline: pages -> mentions, text and the document model
+-> interactions -> triples -> linked/canonical triples -> JSON-LD docs,
 with parquet-snapshot checkpointing, per-partition lineage manifests,
 and resume-from-last-committed-snapshot (BASELINE.json north_rule).
 
-The stages run in two waves (`Pipeline.run`):
+The stages run in one wave (`Pipeline.run`):
 
-    1. mentions, text                        (read the pages)
-    2. quarantine                            (filters the mentions)
-       document compiler, staged eagerly once
-         ├── nodes, edges, citations, vocabularies, pathways
-         ├── interactions, triples, documents
-         └── linked, canonical_triples
+    one pass per page (parse, text, document compiler), staged
+    eagerly once
+      ├── mentions, quarantine, text
+      ├── nodes, edges, citations, vocabularies, pathways
+      ├── interactions, triples, documents
+      └── linked, canonical_triples
 
-Every stage under the compiler is a projection of its staged output,
-so each waits only for `mentions`. The staging is computed before the
-second wave starts, so the projections' commits only read its blocks.
-Linking and canonicalization read nothing beyond the document but the
-dictionary, which the compiler holds as a Python index
-(operators/linking.py).
+Every stage is a projection of the pass's staged output, so none
+waits for another. The staging is computed before any stage starts,
+so the projections' commits only read its blocks. Linking and
+canonicalization read nothing beyond the document but the dictionary,
+which the compiler holds as a Python index (operators/linking.py).
 
-Exchanges: the compiler reads the committed mentions laid out once on
-the snapshots' own keys (`SnapshotStore.layout`: url-hash bucket and
-write salt) and groups on those keys, so the ten stages under it
-commit with no exchange: each writes over the staging's partitions.
-`mentions`, `text` and `quarantine` keep one exchange each, their
-commit's layout: the first two read the pages, and `quarantine`
-filters a scan of the mentions snapshot, which does not keep a url in
-one task. A batch plans four exchanges.
+Exchanges: the pass reads the pages laid out once on the snapshots'
+own keys (`SnapshotStore.layout`: url-hash bucket and write salt) and
+groups on those keys plus the url, so every stage commits with no
+exchange: each writes over the staging's partitions. A batch plans one
+exchange, the pages' layout.
 
 Snapshot layout (Iceberg-style commit protocol on plain parquet — the
 same code works against real Iceberg by swapping `_write`/`_read` for
@@ -55,16 +51,19 @@ from pyspark.sql import functions as F
 from ..operators import export
 from ..operators.assemble import build_document_model
 from ..operators.canonicalize import canonical_triples
-from ..operators.frames import MODEL_FRAMES
+from ..operators.frames import MODEL_FRAMES, select_frame
 from ..operators.interactions import classify_interactions
 from ..operators.linking import link_entities, link_index
-from ..operators.parse import extracted_text, parse_gpml
+from ..operators.parse import extracted_text, parse_gpml  # noqa: F401
 from ..operators.triples import build_triples
 
 # perfbench/layers.py times its `linking` and `canonicalize` layers by
 # wrapping these names in this module. Linking and canonicalization
 # run inside the document compiler, so the names stand for its index
-# build and the canonical projection; Pipeline.run calls neither.
+# build and the canonical projection; Pipeline.run calls neither. Its
+# `parse` and `text` layers wrap `parse_gpml` and `extracted_text`
+# here, which its `bulk` workload commits; Pipeline.run calls neither
+# either, since the pass parses and extracts the text itself.
 xref_dictionary = link_index
 canonicalize_linked = rewrite_triples = canonical_triples
 
@@ -174,13 +173,13 @@ class SnapshotStore:
 
         A frame that carries the write salt is laid out already: it
         projects a staging that grouped a laid-out frame on
-        `layout_keys` and kept their values, like every stage under the
-        document compiler. Its write runs over its own partitions with
-        no exchange, and the salt is not written. Any other frame with
-        a `bucket_col` is laid out here, which costs one exchange: the
-        `mentions` and `text` stages, which read the pages, and
-        `quarantine`, a filter of the committed mentions (a snapshot
-        scan may split a file, so it does not keep a url in one task).
+        `layout_keys` and kept their values, like every stage of
+        `Pipeline.run`. Its write runs over its own partitions with no
+        exchange, and the salt is not written. Any other frame with a
+        `bucket_col` is laid out here, which costs one exchange: a
+        frame read straight from the pages, or a filter of a committed
+        snapshot (a snapshot scan may split a file, so it does not
+        keep a url in one task).
 
         The manifest is the commit marker, so no `_SUCCESS` file is
         written (pyarrow and Spark skip `_` files either way)."""
@@ -285,20 +284,18 @@ class Pipeline:
             return set()
 
     def run(self, resume: bool = True) -> dict[str, DataFrame]:
-        """Execute the stages in two waves on one pool of STAGE_WORKERS
-        threads:
+        """Build the staging, then execute the stages in STAGES order
+        on one pool of STAGE_WORKERS threads.
 
-        1. `mentions` and `text`, which read only the pages;
-        2. once `mentions` has committed, the other eleven, in STAGES
-           order. `quarantine` filters the committed mentions, so it
-           is submitted first and runs while the model builds. The
-           rest project the model, built on the calling thread (unless
-           a resumed run finds them all committed). Its staging is
-           eager, so the compiler runs exactly once before any
-           projection starts, and no two commits race to compute the
-           same lazy block. The model reads the committed mentions
-           laid out as the store commits, so the projections commit
-           with no exchange (SnapshotStore.commit).
+        The staging is one pass per page (build_document_model), laid
+        out as the store commits, built on the calling thread unless a
+        resumed run finds every stage committed. It is eager, so the
+        pass runs exactly once before any stage starts, and no two
+        commits race to compute the same lazy block. Every stage
+        projects it, so none waits for another, and each commits with
+        no exchange (SnapshotStore.commit). A resumed run with any
+        stage uncommitted re-runs the pass over the pages, which is
+        deterministic.
 
         A failed stage cancels the stages still queued, and its
         exception is re-raised. Committed or not, the blocks the run
@@ -315,20 +312,16 @@ class Pipeline:
         """
         from concurrent.futures import ThreadPoolExecutor, as_completed
 
-        spark, pages = self.spark, self.pages
-        parsed = model = None
-
-        # The "mentions" snapshot holds the UNFILTERED parse output
-        # (ok + quarantined rows); quarantine and the model derive
-        # from the committed snapshot by filters (pushed down to the
-        # parquet scan), so a run never re-parses raw pages.
+        model = None
+        # The "mentions" snapshot holds the UNFILTERED parse output (ok
+        # + quarantined rows); the run returns its ok rows.
         builds = {
-            "mentions": lambda: parse_gpml(pages),
-            # per-url extracted text (the byte-identical invariant)
-            "text": lambda: extracted_text(pages),
-            "quarantine": lambda: parsed.filter(
-                F.col("gpml_element_name") == "_error"),
-            **{name: lambda n=name: model[n] for name in MODEL_FRAMES},
+            "mentions": lambda: select_frame(model["compiled"],
+                                             "mentions", "quarantine"),
+            # the quarantined mentions, the per-url extracted text (the
+            # byte-identical invariant) and the model frames
+            **{name: lambda n=name: model[n]
+               for name in ("quarantine", "text", *MODEL_FRAMES)},
             "interactions": lambda: classify_interactions(model),
             "triples": lambda: build_triples(model),
             # JSON-LD documents (NDJSON-ready, S5/JS1/JS2)
@@ -336,8 +329,6 @@ class Pipeline:
             "linked": lambda: link_entities(model),
             "canonical_triples": lambda: canonical_triples(model),
         }
-        projections = [n for n in STAGES
-                       if n not in ("mentions", "text", "quarantine")]
 
         futures: dict = {}
 
@@ -348,33 +339,23 @@ class Pipeline:
                 for queued in list(futures.values()):
                     queued.cancel()
 
-        def submit(name: str) -> None:
-            futures[name] = ex.submit(self._stage, name, builds[name],
-                                      resume)
-            futures[name].add_done_callback(cancel_queued)
-
         persisted_before = self._persisted_ids()
         ex = ThreadPoolExecutor(max_workers=STAGE_WORKERS)
         try:
-            submit("mentions")
-            submit("text")
-            parsed = futures["mentions"].result()
-            submit("quarantine")
-            if not resume or not all(map(self.store.is_committed,
-                                         projections)):
-                model = build_document_model(spark, pages,
-                                             mentions=parsed,
+            if not resume or not all(map(self.store.is_committed, STAGES)):
+                model = build_document_model(self.spark, self.pages,
                                              store=self.store)
             for name in STAGES:
-                if name not in futures:
-                    submit(name)
+                futures[name] = ex.submit(self._stage, name, builds[name],
+                                          resume)
+                futures[name].add_done_callback(cancel_queued)
             names = {fut: name for name, fut in futures.items()}
             # in completion order, so a failure re-raises at once
             out = {names[fut]: fut.result() for fut in as_completed(names)}
         finally:
             ex.shutdown(cancel_futures=True)
             self._release_stage_blocks(persisted_before)
-        out["mentions"] = parsed.filter(
+        out["mentions"] = out["mentions"].filter(
             F.col("gpml_element_name") != "_error")
         return out
 

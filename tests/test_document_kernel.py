@@ -1,6 +1,7 @@
-"""The document compiler (operators/document.py): pure-pandas cases
-for `assemble_document` on hand-built mention rows, and Spark cases
-through `build_document_model`."""
+"""The document compiler (operators/document.py): plain-Python cases
+for `compile_document` on hand-built mention rows, the pass's Arrow
+boundary (`compile_page_group`) on pages, and Spark cases through
+`build_document_model`."""
 
 import datetime as dt
 import math
@@ -13,8 +14,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators.assemble import build_document_model
 from gpml2pvjson_js_spark.operators.document import (
-    SCHEMA, assemble_document, compile_document)
-from gpml2pvjson_js_spark.operators.frames import FRAMES
+    SCHEMA, compile_document, compile_page_group)
+from gpml2pvjson_js_spark.operators.frames import COLUMN_OF, FRAMES
 from gpml2pvjson_js_spark.operators.linking import link_index
 from gpml2pvjson_js_spark.operators.parse import MENTIONS_SCHEMA
 
@@ -385,19 +386,37 @@ def test_pathway_name_split_and_search_link():
 
 
 def test_arrow_boundary_keeps_nan_rotations_and_nulls_other_nans():
-    rows = [_el(0, "Shape", "sh", rotation="NaN"),
-            _el(1, "State", "st", graph_ref="nobody", rel_x=2.0,
-                rel_y=0.0),
-            _pathway(2)]
-    out = assemble_document(pa.Table.from_pylist(
-        rows, schema=to_arrow_schema(MENTIONS_SCHEMA)), link_index())
+    """Through the pass's Arrow boundary: a NaN rotation is committed
+    as NaN, as the Catalyst cast gave it; every other NaN is null, in
+    the compiled rows and in the mention rows, at every nesting
+    level, as the Arrow conversion of the old pandas parse committed
+    it."""
+    gpml = C._doc(
+        C._pathway_open(),
+        C._shape("sh", 50.0, 50.0, 20.0, 20.0, rotation="NaN"),
+        C._state("st", "nobody", rel_x=2.0, rel_y=0.0),
+        C._datanode("nan", "N", cx="NaN"),
+        C._interaction("e1", [C._point("NaN", 1.0), C._point(5.0, 1.0)]))
+    html = ('<html><body><script type="application/gpml+xml">\n'
+            + gpml + "\n</script></body></html>").encode()
+    out = compile_page_group(pa.table({"url": ["u"], "html": [html]}),
+                             link_index())
     assert out.schema == to_arrow_schema(SCHEMA)
-    got = {r["id"]: r for r in out.to_pylist()}
+    got = {(r["role"], r["id"]): r for r in out.to_pylist()
+           if r["role"] in ("nodes", "edges")}
     # a NaN rotation goes back as NaN, as the Catalyst cast gave it
-    assert math.isnan(got["sh"]["rotation"])
-    assert math.isnan(got["sh"]["text_rotation"])
+    assert math.isnan(got["nodes", "sh"]["rotation"])
+    assert math.isnan(got["nodes", "sh"]["text_rotation"])
     # an offset against a missing parent is null, not NaN
-    assert got["st"]["attachment_offset"] == [None, None]
+    assert got["nodes", "st"]["attachment_offset"] == [None, None]
+    assert got["nodes", "nan"]["x"] is None
+    mentions = {r["graph_id"]: r for r in out.to_pylist()
+                if r["role"] == "mentions"}
+    assert mentions["nan"]["center_x"] is None
+    assert mentions["nan"]["center_y"] == 165.0
+    points = mentions["e1"][COLUMN_OF["mentions", "points"]]
+    assert [(p["x"], p["y"]) for p in points] == [(None, 1.0), (5.0, 1.0)]
+    assert mentions["sh"][COLUMN_OF["mentions", "rotation"]] == "NaN"
 
 
 # --- Spark --------------------------------------------------------------
@@ -452,3 +471,35 @@ def test_giant_page_builds_with_expected_row_counts(spark):
     assert edges.filter("size(is_attached_to) = 2").count() == n - 1
     pathway = model["pathways"].collect()
     assert len(pathway) == 1 and len(pathway[0].contains) == 2 * n - 1
+
+
+def test_duplicate_url_keeps_both_pages_and_compiles_one_document(spark):
+    """Two page rows with one url: both pages' mention and text rows
+    are kept, and the fragments that share a (url, frag) compile as
+    one document, whose JSON-LD each of its two Pathway elements
+    carries."""
+    import json
+
+    from gpml2pvjson_js_spark.operators.export import jsonld_documents
+
+    url = "https://dup.example/p"
+    model = build_document_model(spark, _pages(spark, [
+        (url, C._doc(C._pathway_open(name="a"),
+                     C._datanode("n1", "A", cx=100.0))),
+        (url, C._doc(C._pathway_open(name="b"),
+                     C._datanode("n2", "B", cx=300.0),
+                     C._datanode("n3", "C", cx=500.0)))]))
+    mentions = model["mentions"].collect()
+    assert sorted(r.graph_id for r in mentions
+                  if r.gpml_element_name == "DataNode") == ["n1", "n2", "n3"]
+    assert sorted(r.name for r in mentions
+                  if r.gpml_element_name == "Pathway") == ["a", "b"]
+    assert model["text"].count() == 2
+    assert {(r.url, r.frag) for r in mentions} == {(url, 0)}
+    assert sorted(r.id for r in model["nodes"].collect()) == \
+        ["n1", "n2", "n3"]
+    docs = jsonld_documents(model).collect()
+    assert [(r.url, r.frag) for r in docs] == [(url, 0)] * 2
+    for r in docs:
+        assert {"n1", "n2", "n3"} <= set(json.loads(r.jsonld)
+                                         ["entitiesById"])

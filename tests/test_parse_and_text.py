@@ -4,7 +4,6 @@ src/spinoffs/cxml-xpath.ts)."""
 
 import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from gpml2pvjson_js_spark.corpus import PAGES_SCHEMA, pages_df
@@ -66,9 +65,9 @@ def test_quarantine_and_bare_gpml(spark):
 
 
 def test_extracted_text_matches_python_kernel_adversarial(spark):
-    """The Catalyst regexp_extract_all/array_join form of
-    extracted_text must agree with the row-at-a-time Python kernel
-    (extract_page_text) on adversarial html shapes: newlines inside
+    """extracted_text, as a Spark frame, must agree with the
+    row-at-a-time Python kernel (extract_page_text) on adversarial
+    html shapes: newlines inside
     <p> (DOTALL), literal '</p>'-free truncation, nested/unclosed
     tags, empty bodies, no matches, multi-byte UTF-8, malformed UTF-8
     (one U+FFFD per maximal invalid subpart on both sides)."""
@@ -99,11 +98,10 @@ def test_extracted_text_matches_python_kernel_adversarial(spark):
     assert got == want
 
 
-@pytest.mark.xfail(strict=True, reason=(
-    "known divergence: Spark's binary->string cast turns an encoded "
-    "surrogate (ED A0 80) into one U+FFFD, Python's errors='replace' "
-    "into three; F.decode raises on it in Spark 4"))
 def test_extracted_text_encoded_surrogate_matches_python_kernel(spark):
+    """An encoded surrogate (ED A0 80) is three U+FFFD, as Python's
+    errors='replace' decodes it (Spark's binary->string cast makes
+    one)."""
     from gpml2pvjson_js_spark.operators.parse import extract_page_text
     html = b"<p>\xed\xa0\x80 surrogate</p>"
     pages = spark.createDataFrame([("u", html)], "url string, html binary")

@@ -68,11 +68,9 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
             for name, df in out.items()
         }
         # the two build shapes that used to carry the 574k trees,
-        # rebuilt exactly as the pipeline's stage lambdas build them
-        # (pre-commit): projections of the model staged from the
-        # committed mentions
-        model = build_document_model(
-            spark, pages, mentions=p.store.read(spark, "mentions"))
+        # rebuilt as the pipeline's stage lambdas build them
+        # (pre-commit): projections of the model staged from the pages
+        model = build_document_model(spark, pages)
         for name, build in (("canonical_build", canonical_triples),
                             ("documents_build", jsonld_documents)):
             sizes[name] = len(
@@ -222,21 +220,41 @@ def _written_plans(monkeypatch) -> dict:
     return plans
 
 
+# the physical nodes that run Python
+_PYTHON_NODES = re.compile(r"\b(?:FlatMapGroupsIn\w+|FlatMapCoGroupsIn\w+"
+                           r"|MapIn\w+|\w*EvalPython\w*)\b")
+
+
 def test_compiler_stages_commit_with_no_exchange(
         spark, tmp_path_factory, monkeypatch):
-    """The compiler reads the mentions laid out once on the snapshots'
-    keys, so each of the ten stages under it writes over the staging's
-    own partitions: no Exchange in its plan. `mentions`, `text` and
-    `quarantine` each plan exactly one, their commit's layout."""
-    plans = _written_plans(monkeypatch)
+    """The pass reads the pages laid out once on the snapshots' keys,
+    so each of the 13 stages writes over the staging's own
+    partitions: no Exchange in its plan. The staging's own plan holds
+    the batch's one Exchange, the layout, and its one Python node, the
+    grouped Arrow pass. The pages are read from parquet, as a
+    production batch reads them (the corpus generator is a Python
+    node of its own)."""
+    from gpml2pvjson_js_spark.operators import assemble
+
     root = str(tmp_path_factory.mktemp("kgout_exchanges"))
-    Pipeline(spark, pages_df(spark, 7, giant_every=0), root,
+    pages_df(spark, 7, giant_every=0).write.parquet(root + "/pages")
+    plans = _written_plans(monkeypatch)
+    staged = []
+    stage = assemble._stage
+
+    def spy(df):
+        staged.append(df._jdf.queryExecution().executedPlan().toString())
+        return stage(df)
+
+    monkeypatch.setattr(assemble, "_stage", spy)
+    Pipeline(spark, spark.read.parquet(root + "/pages"), root + "/out",
              n_buckets=4).run(resume=False)
     exchanges = {stage: len(re.findall(r"\bExchange\b", plan))
                  for stage, plan in plans.items()}
-    assert exchanges == {
-        stage: int(stage in ("mentions", "text", "quarantine"))
-        for stage in STAGES}, plans
+    assert exchanges == dict.fromkeys(STAGES, 0), plans
+    [plan] = staged
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert _PYTHON_NODES.findall(plan) == ["FlatMapGroupsInArrow"], plan
 
 
 def test_empty_role_commits_with_no_exchange(
@@ -374,6 +392,29 @@ def test_projection_stages_commit_the_pinned_schema_and_rows(
             == digest, stage
 
 
+def test_projection_is_a_few_py4j_commands_per_field(spark, monkeypatch):
+    """`select_frame` builds a projection as one filter and one
+    `selectExpr`: projecting the 52 `nodes` fields out of a staging
+    sends a few py4j commands per field (2,023 when every field was a
+    tree of Column objects)."""
+    from gpml2pvjson_js_spark.operators.frames import (
+        NODES, SCHEMA, select_frame)
+
+    staged = spark.createDataFrame([], SCHEMA)
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send, calls = client.send_command, []
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", spy)
+    nodes = select_frame(staged, "nodes")
+    monkeypatch.undo()
+    assert nodes.columns == NODES.names
+    assert len(calls) < 3 * len(NODES.fields), len(calls)
+
+
 def _persistent_rdd_ids(spark) -> set:
     it = spark.sparkContext._jsc.sc().getPersistentRDDs().toList() \
         .iterator()
@@ -402,39 +443,29 @@ def test_pipeline_releases_the_rdds_it_persisted(
     assert not staged & _persistent_rdd_ids(spark)
 
 
-def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
+def test_stages_start_in_order_and_stay_bounded(
         spark, tmp_path_factory, monkeypatch):
-    """Every stage under the compiler, `linked` and `canonical_triples`
-    included, depends only on `mentions`: with a worker for every
-    stage, each starts once `mentions` ends, before any other stage
-    ends. With STAGE_WORKERS workers, no more than that many stages
-    ever run at once. With one worker, the stages under the compiler
-    start in STAGES order, and `quarantine`, which needs only the
-    committed mentions, is submitted before the model build starts.
-    `_stage` is stubbed: it sleeps and records events; so is the model
-    build, which the stub stages never read."""
+    """Every stage projects the one staging, so none waits for
+    another: the model is built once, before any stage starts, and
+    with a worker for every stage each starts before any ends. With
+    STAGE_WORKERS workers, no more than that many ever run at once;
+    with one, the stages start in STAGES order. `_stage` is stubbed:
+    it sleeps and records events; so is the model build, which the
+    stub stages never read."""
     import threading
     import time
-    from concurrent.futures import ThreadPoolExecutor
 
     from gpml2pvjson_js_spark.plans import pipeline
 
-    seconds = {"mentions": 0.05, "text": 1.0}
     bound = pipeline.STAGE_WORKERS
 
     class Committed:
         def filter(self, _):
             return self
 
-    def schedule(workers: int, default: float = 0.4):
+    def schedule(workers: int, seconds: float = 0.4):
         events, running, most = [], set(), [0]
         lock = threading.Lock()
-        submit = ThreadPoolExecutor.submit
-
-        def submitted(ex, fn, name, *args):
-            with lock:
-                events.append(("submit", name))
-            return submit(ex, fn, name, *args)
 
         def build(*args, **kwargs):
             with lock:
@@ -446,36 +477,35 @@ def test_compiler_stages_wait_only_for_mentions_and_stay_bounded(
                 events.append(("start", name))
                 running.add(name)
                 most[0] = max(most[0], len(running))
-            time.sleep(seconds.get(name, default))
+            time.sleep(seconds)
             with lock:
                 events.append(("end", name))
                 running.discard(name)
             return Committed()
 
         monkeypatch.setattr(Pipeline, "_stage", stage)
-        monkeypatch.setattr(ThreadPoolExecutor, "submit", submitted)
         monkeypatch.setattr(pipeline, "build_document_model", build)
         monkeypatch.setattr(pipeline, "STAGE_WORKERS", workers)
         root = str(tmp_path_factory.mktemp("kgout_schedule"))
         Pipeline(spark, None, root).run(resume=False)
-        assert {n for kind, n in events if kind == "start"} == set(STAGES)
+        assert events[0] == ("build", None)
+        assert [n for kind, n in events if kind == "build"] == [None]
+        started = [n for kind, n in events if kind == "start"]
+        # stages that start at once may log in either order
+        assert started == STAGES if workers == 1 \
+            else sorted(started) == sorted(STAGES)
         return events, most[0]
 
     events, _ = schedule(len(STAGES))
-    for name in set(STAGES) - {"mentions", "text"}:
-        before = events[:events.index(("start", name))]
-        assert [n for kind, n in before if kind == "end"] == ["mentions"], \
-            name
+    first_end = events.index(next(e for e in events if e[0] == "end"))
+    assert {n for kind, n in events[:first_end] if kind == "start"} \
+        == set(STAGES)
 
     _, most = schedule(bound)
     assert most == bound
 
-    events, _ = schedule(1, default=0.01)
-    wave2 = [n for n in STAGES if n not in ("mentions", "text")]
-    assert [n for kind, n in events if kind == "start"][2:] == wave2
-    built = events.index(("build", None))
-    assert ("submit", "quarantine") in events[:built]
-    assert ("submit", "nodes") in events[built:]
+    _, most = schedule(1, seconds=0.01)
+    assert most == 1
 
 
 def test_stage_failure_cancels_queued_stages_and_releases_blocks(
@@ -505,7 +535,7 @@ def test_stage_failure_cancels_queued_stages_and_releases_blocks(
             with lock:
                 events.append(("fail", name))
             raise ValueError("nodes failed")
-        time.sleep({"mentions": 0.05, "text": 0.01}.get(name, 0.3))
+        time.sleep({"mentions": 0.05}.get(name, 0.3))
         return Committed()
 
     release = Pipeline._release_stage_blocks
@@ -523,17 +553,18 @@ def test_stage_failure_cancels_queued_stages_and_releases_blocks(
     with pytest.raises(ValueError, match="nodes failed"):
         Pipeline(spark, None, root).run(resume=False)
     assert released == [True]
-    # `quarantine` ran beside `nodes`; every stage after them was
-    # still queued when `nodes` failed
+    # `nodes` took the worker `mentions` freed and `quarantine` ran
+    # beside it; every stage after them was still queued when `nodes`
+    # failed
     started = [n for kind, n in events if kind == "start"]
-    assert set(started) == {"mentions", "text", "quarantine", "nodes"}
+    assert set(started) == {"mentions", "quarantine", "nodes"}
 
 
 def test_resume_with_every_compiler_stage_committed_skips_the_model(
         spark, tmp_path_factory, monkeypatch):
-    """A resumed run whose stages under the compiler are all committed
-    never builds the model, and still recommits what is missing: here
-    `quarantine`, a filter of the committed mentions."""
+    """A resumed run with all 13 stages committed builds no model. With
+    only `quarantine` missing, it builds the model once and recommits
+    only `quarantine`: every other manifest keeps its commit time."""
     from gpml2pvjson_js_spark.plans import pipeline
 
     root = str(tmp_path_factory.mktemp("kgout_resume_no_model"))
@@ -542,18 +573,24 @@ def test_resume_with_every_compiler_stage_committed_skips_the_model(
     p.run(resume=False)
     before = {s: m["committed_at_unix_ms"] for s, m in p.metrics().items()}
     quarantined = p.metrics()["quarantine"]["rows"]
-    os.remove(os.path.join(root, "quarantine", "manifest.json"))
 
     calls = []
+    build = pipeline.build_document_model
 
     def spy(*args, **kwargs):
         calls.append(args)
-        raise AssertionError("the model was built")
+        return build(*args, **kwargs)
 
     monkeypatch.setattr(pipeline, "build_document_model", spy)
+    Pipeline(spark, pages, root, n_buckets=4).run(resume=True)
+    assert calls == []
+    assert {s: m["committed_at_unix_ms"]
+            for s, m in p.metrics().items()} == before
+
+    os.remove(os.path.join(root, "quarantine", "manifest.json"))
     p2 = Pipeline(spark, pages, root, n_buckets=4)
     out = p2.run(resume=True)
-    assert calls == []
+    assert len(calls) == 1
     after = {s: m["committed_at_unix_ms"] for s, m in p2.metrics().items()}
     assert set(after) == set(STAGES)
     for s, ts in before.items():

@@ -8,7 +8,7 @@ uncaught exception in the Arrow UDF kills an executor task and, after
 retries, the job. The reference pins this with hand-picked fixtures
 (test/inputs, SURVEY.md §5); here hypothesis searches the input space.
 These run the pure Python functions directly — the same code the
-mapInPandas stages execute per batch — so they are fast and shrinkable.
+Arrow passes execute per batch — so they are fast and shrinkable.
 
 The sameAs-components property packs many random graphs into one
 `alias_components` call (node ids namespaced per graph, so components

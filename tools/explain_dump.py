@@ -6,9 +6,11 @@ Usage:
     python tools/explain_dump.py OUTDIR [SUFFIX] [--only name1,name2]
 
 Writes OUTDIR/<name>_<SUFFIX>.txt (SUFFIX default "before").
-Plans only, apart from the document compiler's staging: the KG frames
-project it, and `build_document_model` computes it eagerly, once per
-model. Do not run it alongside a bench.
+`stage_pass` is the plan of the one pass per page as `Pipeline.run`
+stages it: the pages laid out on the snapshot keys (the batch's one
+exchange) and grouped into the Arrow pass. Plans only, apart from that
+staging: the KG frames project it, and `build_document_model` computes
+it eagerly, once per model. Do not run it alongside a bench.
 """
 
 from __future__ import annotations
@@ -62,20 +64,30 @@ def main() -> None:
     # way the snapshot pipeline builds them, pre-commit
     if only is None or any(n.startswith("stage_") or n == "lazy_dag"
                            for n in only):
+        import tempfile
+
         from gpml2pvjson_js_spark.corpus import pages_from_documents
         from gpml2pvjson_js_spark.operators.assemble import (
             build_document_model)
         from gpml2pvjson_js_spark.operators.canonicalize import (
             canonical_triples)
+        from gpml2pvjson_js_spark.operators.document import compile_pages
         from gpml2pvjson_js_spark.operators.interactions import (
             classify_interactions)
-        from gpml2pvjson_js_spark.operators.linking import link_entities
+        from gpml2pvjson_js_spark.operators.linking import (
+            link_entities, link_index)
         from gpml2pvjson_js_spark.operators.triples import build_triples
+        from gpml2pvjson_js_spark.plans.pipeline import SnapshotStore
 
         pages = pages_from_documents(spark, SF_DIR)
+        with tempfile.TemporaryDirectory() as root:
+            store = SnapshotStore(root)
+            dump("stage_pass", compile_pages(
+                store.layout(pages.select("url", "html")), link_index(),
+                store.layout_keys()))
         model = build_document_model(spark, pages)
-        for s in ("nodes", "edges", "citations", "vocabularies",
-                  "pathways"):
+        for s in ("mentions", "quarantine", "text", "nodes", "edges",
+                  "citations", "vocabularies", "pathways"):
             dump(f"stage_{s}", model[s])
         dump("stage_interactions", classify_interactions(model))
         dump("stage_linked", link_entities(model))

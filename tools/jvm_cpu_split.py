@@ -12,7 +12,8 @@ start) and for the batch:
 - the driver JVM, split by thread name into the JIT compilers (C2,
   C1), executor task threads, GC and the rest;
 - the Python daemons the JVM forks, and the workers they fork (with
-  the CPU of workers they reaped), each with how many were seen;
+  the CPU of workers they reaped), each with how many were seen and
+  the peak of their summed resident memory;
 - JVM child commands: the JVM's own reaped children, such as the
   `chmod` Hadoop's local file system forks for each file and directory
   it creates when the native Hadoop library is missing;
@@ -49,6 +50,7 @@ from layers import _max_job_id, _seq  # noqa: E402  (perfbench/layers.py)
 from metrics import process_tree  # noqa: E402  (perfbench/metrics.py)
 
 TICK = os.sysconf("SC_CLK_TCK")
+PAGE_MB = os.sysconf("SC_PAGE_SIZE") / 2**20
 SAMPLE_S = 0.2
 # thread-name prefixes as /proc shows them (cut to 15 characters)
 KINDS = (("C2 compiler", ("C2 CompilerThre",)),
@@ -83,6 +85,15 @@ def cpu_ticks(pid: int | str, children: bool = False) -> int:
     return sum(int(x) for x in fields[11:15 if children else 13])
 
 
+def rss_mb(pid: int) -> float:
+    """A process's resident memory; 0 once it is gone."""
+    try:
+        with open(f"/proc/{pid}/statm") as f:
+            return int(f.read().split()[1]) * PAGE_MB
+    except (FileNotFoundError, ProcessLookupError):
+        return 0.0
+
+
 def python_processes(jvm: int) -> dict[int, str]:
     """The JVM's live Python descendants: pid -> "daemon" for those
     the JVM forked itself, "worker" for those a daemon forked."""
@@ -103,8 +114,10 @@ class JvmThreads:
     def __init__(self, pid: int):
         self.pid = pid
         self.last: dict[str, tuple[str, int]] = {}  # tid -> (kind, ticks)
-        # Python pids seen since the last snapshot, by role
+        # Python pids seen since the last snapshot, by role, and the
+        # peak of their summed RSS in MB
         self.seen: dict[str, set] = {"daemon": set(), "worker": set()}
+        self.peak_rss = 0.0
         self.lock = threading.Lock()
         self.done = threading.Event()
         self.thread = threading.Thread(target=self._loop, daemon=True)
@@ -118,27 +131,32 @@ class JvmThreads:
                 continue  # the thread exited
             seen[tid] = (kind_of(comm), int(fields[11]) + int(fields[12]))
         python = python_processes(self.pid)
+        rss = sum(map(rss_mb, python))
         with self.lock:
             self.last.update(seen)
             for pid, role in python.items():
                 self.seen[role].add(pid)
+            self.peak_rss = max(self.peak_rss, rss)
 
     def _loop(self) -> None:
         while not self.done.wait(SAMPLE_S):
             self.sample()
 
-    def snapshot(self) -> tuple[dict[str, float], dict[str, int]]:
+    def snapshot(self) -> tuple[dict[str, float], dict]:
         """CPU seconds so far: per thread kind, the JVM's threads that
         exited unsampled, the Python daemons and workers, the JVM's
         reaped child commands. With them, how many Python daemons and
-        workers were seen since the last snapshot."""
+        workers were seen since the last snapshot, and the peak of
+        their summed RSS (`rss_mb`)."""
         self.sample()
         out = {kind: 0 for kind, _ in KINDS} | {"rest": 0}
         with self.lock:
             for kind, ticks in self.last.values():
                 out[kind] += ticks
             seen = {role: len(pids) for role, pids in self.seen.items()}
+            seen["rss_mb"] = self.peak_rss
             self.seen = {role: set() for role in self.seen}
+            self.peak_rss = 0.0
         out["exited threads"] = cpu_ticks(self.pid) - sum(out.values())
         # a daemon's reaped children were its workers
         out["python daemons"] = out["python workers"] = 0
@@ -195,6 +213,8 @@ def report(setup: dict, batch: dict, wall: tuple[float, float],
     print(f"{'python seen':<20}{'set-up':>9}{'batch':>9}")
     for role in ("daemon", "worker"):
         print(f"{'  ' + role + 's':<20}{seen[0][role]:9d}{seen[1][role]:9d}")
+    print(f"{'  peak RSS MB':<20}{seen[0]['rss_mb']:9.0f}"
+          f"{seen[1]['rss_mb']:9.0f}")
 
 
 def main(argv=None) -> int:
