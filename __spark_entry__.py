@@ -41,8 +41,8 @@ _MODEL_CACHE: dict = {}
 
 def _kg(spark: SparkSession, sf_dir: str, limit: int = 64) -> dict:
     """Build (and cache per sf_dir) the KG document model over pages
-    synthesized from the documents table: one staging of the document
-    compiler, and its role projections."""
+    synthesized from the documents table: one pass of the document
+    compiler, and the snapshots it wrote."""
     key = (sf_dir, limit)
     if key not in _MODEL_CACHE:
         from gpml2pvjson_js_spark.corpus import pages_from_documents

@@ -180,7 +180,8 @@ def run_pipeline_measured(spark, sf_dir: str,
 
 def _lazy_probe(spark, sf_dir: str) -> tuple[int, float]:
     """One model build, one count — pure compute window. The build
-    computes the compiler's staging, so the window starts before it."""
+    runs the compiler's pass and writes its snapshots, so the window
+    starts before it."""
     from gpml2pvjson_js_spark.corpus import pages_from_documents
     import gpml2pvjson_js_spark.operators.assemble as A
     from gpml2pvjson_js_spark.operators.triples import build_triples

@@ -15,18 +15,17 @@ components of the DICTIONARY-scale alias graph with mention leaves
 attached. So `alias_components` finds them once on the driver, for the
 linking index (linking.link_index), and the document compiler
 (document.py) rewrites each document's triples through them
-(`canonicalize_document`). The canonical ids are columns of the staged
-triple rows (`canonical_subj`, `canonical_obj`): each triple is staged
-once, and `canonical_triples` projects its canonical pair where
-`build_triples` projects the plain one. Exactness against the full
-graph is pinned by test_canonicalize_linked_matches_generic.
+(`canonicalize_document`). The canonical ids are columns of the
+compiler's triple rows (`canonical_subj`, `canonical_obj`): each
+triple is one row, which the pass writes to the `triples` snapshot
+with its plain pair and to `canonical_triples` with its canonical one.
+Exactness against the full graph is pinned by
+test_canonicalize_linked_matches_generic.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from . import frames
 
 
 def _rank_key(node: str) -> tuple[bool, str]:
@@ -79,7 +78,6 @@ def canonicalize_document(linked: list[dict], triples: list[dict],
 
 def canonical_triples(model: dict) -> DataFrame:
     """(url, frag, pathway_id, subj, pred, obj): the model's triples,
-    their subject and object read from the staged canonical ids."""
-    return frames.select_frame(model["compiled"], "model_triples",
-                               "interaction_triples", frame=frames.TRIPLES,
-                               read=frames.CANONICAL)
+    their subject and object the canonical ids (the model's
+    `canonical_triples` snapshot)."""
+    return model["canonical_triples"]

@@ -1,6 +1,6 @@
-"""The one pass per page: each page's mention rows, its text, and
-what the document compiler makes of each of its documents, in one
-grouped Arrow pass over the pages; and the compiler itself, one
+"""The kernel of the one pass per page: each page's mention rows, its
+text, and what the document compiler makes of each of its documents;
+and the compiler itself, one
 document's mention rows -> the finished rows of the five model frames,
 its BioPAX interactions, its triples with their canonical ids, its
 JSON-LD document and its linked mentions.
@@ -13,10 +13,10 @@ src/2013a/toPvjson.ts:470-710); its BioPAX classification reads only
 that document too (src/pvjsonToBioPAX/Interaction.ts:94-276); and
 the reference's CLI splits its input into pathway chunks and compiles
 each one (bin/gpml2pvjson:61-96). Every reference is scoped to its
-(url, frag), and a document never spans two pages, so one
-`groupBy(url).applyInArrow` call (`compile_pages`) hands each page to
-`compile_page_group`, which parses it (parse.page_mentions), extracts
-its text (parse.extract_page_text) and hands each document's ok
+(url, frag), and a document never spans two pages, so the pass
+(assemble.py) hands the pages of each url to `compile_page_group`,
+which parses them (parse.page_mentions), extracts their text
+(parse.extract_page_text) and hands each document's ok
 mention rows to `compile_document`, which
 
 1. layers the class defaults and the group-style overrides
@@ -47,7 +47,7 @@ mention rows to `compile_document`, which
 5. links the node rows against the linking index (linking.py), and
    rewrites the triples through the sameAs components
    (canonicalize.py) into columns of the triple rows themselves
-   (`canonical_subj`, `canonical_obj`), so each triple is staged once.
+   (`canonical_subj`, `canonical_obj`), so each triple is one row.
    The index is built once on the driver and handed to every call, so
    neither crosses documents.
 
@@ -55,26 +55,24 @@ A GraphId (or GroupId) that repeats inside one document resolves to the
 last element carrying it in document order, like the reference's
 `entitiesById` overwrite.
 
-The output is ONE frame (frames.SCHEMA) with a `role` column; each
-of the pipeline's stages is a `frames.select_frame` projection of it:
-the mention rows (`mentions`, and `quarantine` for the `_error` rows),
-the `text` and the compiler's roles. Over pages laid out for the
-snapshots (`SnapshotStore.layout`), the pass groups on the layout's
-keys too, so Spark plans no exchange of its own, and every output row
-carries its page's key values. The model values are those the earlier
-Catalyst projections produced, nulls and NaNs included; the string
-casts follow Spark's ANSI mode, so input that made those projections
-raise makes the kernel raise.
+The kernel returns the rows by role (frames.FRAMES) as Python dicts;
+the pass (assemble.py) turns them into one Arrow table per snapshot
+and streams it into that snapshot's file. The model values are those the earlier Catalyst
+projections produced, nulls and NaNs included; the string casts follow
+Spark's ANSI mode, so input that made those projections raise makes
+the kernel raise.
 
-The rows cross the Arrow boundary as plain Python values, without
-pandas: most documents are small, and building a pandas frame of some
-90 columns per document cost more than compiling it. The compiler
-reads the mention rows as they commit (NaN null), so it compiles what
-the mentions snapshot holds.
+The rows stay plain Python values, without pandas: most documents are
+small, and building a pandas frame of some 90 columns per document
+cost more than compiling it. The compiler reads the mention rows as
+they commit (NaN null), so it compiles what the mentions snapshot
+holds.
 
 Bound: the kernel sees a whole page at once, so one page's html and
 mention rows must fit in one Python worker's memory; a page with tens
-of thousands of elements is still a few MB.
+of thousands of elements is still a few MB. Beyond that, the pass
+holds at most a row group per output (assemble.ROW_GROUP_BYTES), so
+a worker's memory does not grow with its partition.
 """
 
 from __future__ import annotations
@@ -82,11 +80,8 @@ from __future__ import annotations
 from collections import defaultdict
 
 import pandas as pd
-import pyarrow as pa
 
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import edges as E
 from . import entities as N
@@ -110,37 +105,10 @@ _BURRS = ("State", "Anchor")
 _NODE_NAMES = (*_NODE_LIKE, "Anchor", "Group")
 _ELEMENTS = (*_NODE_NAMES, *E.EDGE_NAMES)
 
-SCHEMA = frames.SCHEMA
-_ARROW_SCHEMA = to_arrow_schema(SCHEMA)
-_FIELD_OF = {(role, column): name
-             for (role, name), column in frames.COLUMN_OF.items()}
 # the only doubles the converters can make NaN (a rotation of "NaN" or
 # "Infinity"), which Spark's cast makes NaN too; everywhere else NaN
 # only stands for null arithmetic (`_num`) and is committed as null
 _NAN_FIELDS = ("rotation", "text_rotation")
-
-
-def compile_pages(pages: DataFrame, index: L.LinkIndex,
-                  keys: dict | None = None) -> DataFrame:
-    """The pass over every page of `pages(url, html)`, linking
-    against `index`: lazy, the caller stages it. `keys` (name ->
-    Column) are the expressions `pages` is hash-partitioned on:
-    grouped on them before `url`, the pass reuses that partitioning,
-    and it appends their values to its output (SCHEMA) as columns of
-    those names, each row with its page's values."""
-    keys = keys or {}
-    fields = pages.select(*(c.alias(n) for n, c in keys.items())) \
-        .schema.fields if keys else []
-    names = list(keys)  # the kernel ships without the Columns
-
-    def kernel(key: tuple, table: pa.Table) -> pa.Table:
-        out = compile_page_group(table, index)
-        for name, value in zip(names, key):
-            out = out.append_column(name, pa.repeat(value, out.num_rows))
-        return out
-
-    return pages.groupBy(*keys.values(), "url").applyInArrow(
-        kernel, T.StructType([*SCHEMA.fields, *fields]))
 
 
 def _has_nan(v, t: T.DataType) -> bool:
@@ -156,11 +124,9 @@ def _has_nan(v, t: T.DataType) -> bool:
 
 
 # per model frame: each field, and the value a null in it commits as
-# (a non-nullable field's `select_frame` coalesce)
+# (a non-nullable field's `frames.zero`)
 _COMMIT_PLANS = {
-    role: [(f, None if f.nullable else [] if isinstance(f.dataType,
-                                                          T.ArrayType)
-            else frames.ZERO[f.dataType])
+    role: [(f, None if f.nullable else frames.zero(f.dataType))
            for f in frames.FRAMES[role].fields]
     for role in frames.MODEL_FRAMES}
 
@@ -169,7 +135,7 @@ def _committed(role: str, row: dict) -> dict:
     """A model row as its frame commits it, which is what the
     interactions, the triples and the JSON-LD read: NaN is null (but
     in the rotations), and a null in a non-nullable field is what
-    `select_frame` coalesces it to."""
+    its snapshot stores for it (`frames.zero`)."""
     out = {}
     for f, default in _COMMIT_PLANS[role]:
         v = row.get(f.name)
@@ -391,45 +357,19 @@ def _resolve(els: list[dict]) -> tuple[set, list]:
 
 # --- the kernel ----------------------------------------------------------
 
-def _table(rows: dict[str, list[dict]]) -> pa.Table:
-    """Rows by role -> the pass's output table (SCHEMA): each role's
-    rows fill its frame's columns and leave the others null. Column by
-    column, a role costs in proportion to its own fields: one struct
-    conversion of every row at the union's width took about 15 us a
-    row (4-vCPU host), and a document has several triples per
-    entity."""
-    tables = []
-    for role, rs in rows.items():
-        if not rs:
-            continue
-        columns = []
-        for f in _ARROW_SCHEMA:
-            name = _FIELD_OF.get((role, f.name))
-            if f.name == "role":
-                columns.append(pa.array([role] * len(rs), f.type))
-            elif name is None:
-                columns.append(pa.nulls(len(rs), f.type))
-            else:
-                columns.append(pa.array([r[name] for r in rs], f.type))
-        tables.append(pa.Table.from_arrays(columns, schema=_ARROW_SCHEMA))
-    return pa.concat_tables(tables) if tables \
-        else _ARROW_SCHEMA.empty_table()
-
-
 def _key_fields(r: dict, *names) -> dict:
     return {n: r[n] for n in names}
 
 
-def compile_page_group(table: pa.Table, index: L.LinkIndex) -> pa.Table:
-    """The pages of one url (`url`, `html`; two when a batch holds the
-    url twice) -> their rows of every role (SCHEMA): each page's
-    mention rows and text, and the compiled rows of each of their
-    documents. The ok mention rows of one (url, frag) compile as one
-    document, whichever page they came from."""
+def compile_page_group(pages, index: L.LinkIndex) -> dict[str, list[dict]]:
+    """The pages of one url (`(url, html)` pairs; two when a batch
+    holds the url twice) -> their rows by role (frames.FRAMES): each
+    page's mention rows and text, and the compiled rows of each of
+    their documents. The ok mention rows of one (url, frag) compile as
+    one document, whichever page they came from."""
     rows = defaultdict(list)
     docs = defaultdict(list)
-    for url, html in zip(table["url"].to_pylist(),
-                         table["html"].to_pylist()):
+    for url, html in pages:
         for r in page_mentions(url, html):
             if r["gpml_element_name"] == "_error":
                 rows["quarantine"].append(r)
@@ -441,7 +381,7 @@ def compile_page_group(table: pa.Table, index: L.LinkIndex) -> pa.Table:
     for recs in docs.values():
         for role, rs in compile_document(recs, index).items():
             rows[role].extend(rs)
-    return _table(rows)
+    return rows
 
 
 def compile_document(recs: list[dict], index: L.LinkIndex

@@ -7,8 +7,8 @@ The document compiler (document.py) writes each document's JSON text
 itself, from the committed values of its model rows, with
 `document_rows`: one row per Pathway element, its `entitiesById` the
 document's nodes, edges, citations and vocabularies, each kind in
-element order. `jsonld_documents` is the projection of those rows out
-of the compiler's staged output.
+element order; the pass writes them as the `documents` snapshot, which
+`jsonld_documents` reads.
 
 The bytes are those Spark's `to_json` (Jackson) wrote for the same
 values: keys in the same order, null fields dropped at every level,
@@ -26,7 +26,6 @@ import struct
 
 from pyspark.sql import DataFrame
 
-from . import frames
 from ..functions.mappings import (
     FONT_EXTRA_CLASSES,
     FONT_EXTRA_DEFAULTS,
@@ -37,8 +36,8 @@ from ..functions.mappings import (
 def jsonld_documents(model: dict) -> DataFrame:
     """One row per Pathway element: (url, frag, pathway_id, jsonld),
     the full {pathway, entitiesById} JSON-LD document string
-    (NDJSON-ready, S5)."""
-    return frames.select_frame(model["compiled"], "documents")
+    (NDJSON-ready, S5): the model's `documents` snapshot."""
+    return model["documents"]
 
 
 # --- Double.toString ------------------------------------------------------

@@ -1,27 +1,26 @@
-"""The frames the one pass per page (document.py) emits, and their
-projection out of its one staged output.
+"""The frames the one pass per page (document.py) emits, by role, and
+the snapshots it writes of them (OUTPUTS).
 
-The pass's output is ONE frame (SCHEMA): a `role` column naming the
-frame a row belongs to, and the union of the frames' columns. The roles
-are the page's `mentions` (MENTIONS_SCHEMA; the `_error` rows are the
-`quarantine` role), its `text`, and what the document compiler makes
-of the ok mentions: the five model frames (nodes, edges, citations,
-vocabularies, pathways), the BioPAX `interactions`, the triples
-(`model_triples`, and the `interaction_triples` that are not among
-them), the JSON-LD `documents` and the `linked` mentions. Each
-distinct triple is staged once: its row also carries its subject and
-object rewritten to their canonical ids (`canonical_subj`,
-`canonical_obj`, canonicalize.py), so the triples and the canonical
-triples are two projections of the same rows. `select_frame` projects
-roles back to a frame's exact schema (FRAMES by default).
+The roles are the page's `mentions` (MENTIONS_SCHEMA; the `_error` rows
+are the `quarantine` role), its `text`, and what the document compiler
+makes of the ok mentions: the five model frames (nodes, edges,
+citations, vocabularies, pathways), the BioPAX `interactions`, the
+triples (`model_triples`, and the `interaction_triples` that are not
+among them), the JSON-LD `documents` and the `linked` mentions. Each
+distinct triple is one row: it also carries its subject and object
+rewritten to their canonical ids (`canonical_subj`, `canonical_obj`,
+canonicalize.py), so the triples and the canonical triples are two
+outputs of the same rows.
 
-A staging laid out for the snapshots (plans/pipeline.py,
-`SnapshotStore.layout`) also carries the layout's key columns, `bucket`
-and the write salt, after SCHEMA's; every projection keeps them last,
-so its commit needs no exchange of its own.
+Each output is one snapshot: its frame, then the url-hash `bucket`
+of the page its rows came from (operators/assemble.py writes it,
+plans/pipeline.py commits it). `as_frame` reads a snapshot back as its
+frame, nullability included.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -111,11 +110,11 @@ INTERACTIONS = _struct(
 _TRIPLE = (*_KEY, ("pathway_id", _S), ("subj", _S), ("pred", _S),
            ("obj", _S))
 TRIPLES = _struct(*_TRIPLE)
-# a staged triple: the triple, then its subject and object as
-# canonicalize_document rewrites them
+# a triple row of the compiler: the triple, then its subject and object
+# as canonicalize_document rewrites them
 STAGED_TRIPLES = _struct(*_TRIPLE, ("canonical_subj", _S),
                          ("canonical_obj", _S))
-# the staged field each TRIPLES field of a canonical triple reads
+# the field each TRIPLES field of a canonical triple reads
 CANONICAL = {"subj": "canonical_subj", "obj": "canonical_obj"}
 DOCUMENTS = _struct(*_KEY, ("pathway_id", _S), ("jsonld", _S))
 LINKED = _struct(*_KEY, ("id", _S), ("canonical_iri", _S),
@@ -128,7 +127,7 @@ QUARANTINE = T.StructType([T.StructField(f.name, f.dataType)
 # frame's own)
 TEXT = _struct(("url", _S), ("extracted_text", _S))
 MODEL_FRAMES = ("nodes", "edges", "citations", "vocabularies", "pathways")
-# each role's rows as the pass stages them
+# each role's rows as the compiler makes them
 FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
           "vocabularies": VOCABULARIES, "pathways": PATHWAYS,
           "interactions": INTERACTIONS, "model_triples": STAGED_TRIPLES,
@@ -137,58 +136,69 @@ FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
           "quarantine": QUARANTINE, "text": TEXT}
 
 
-def _union_schema() -> tuple[T.StructType, dict]:
-    """The compiler's output schema and, per (role, field), the column
-    that carries it. A field shares a column with every other frame's
-    field of the same name and type; a field whose type differs gets
-    its own column, `{name}_{role}`. Every column but the role is
-    nullable; `select_frame` restores each frame's nullability."""
-    fields = [T.StructField("role", _S, False)]
-    names = {(f.name, f.dataType.json()): f.name for f in fields}
-    column_of = {}
-    for role, schema in FRAMES.items():
-        for f in schema.fields:
-            key = f.name, f.dataType.json()
-            if key not in names:
-                names[key] = f.name if f.name not in {g.name for g in fields} \
-                    else f"{f.name}_{role}"
-                fields.append(T.StructField(names[key], f.dataType))
-            column_of[role, f.name] = names[key]
-    return T.StructType(fields), column_of
-
-
-SCHEMA, COLUMN_OF = _union_schema()
-# a null in a non-nullable field commits as this literal
+# a null in a non-nullable field commits as this literal (`zero`)
 ZERO = {_D: 0.0, _I: 0, _S: ""}
 _ZERO_SQL = {_D: "0.0D", _I: "0", _S: "''"}
 
 
-def _sql(name: str, f: T.StructField) -> str:
-    """The expression that reads field `f` from column `name`: the
-    column itself, or, for a non-nullable field, the column with its
-    nulls coalesced, which only restores the frame's declared
-    nullability (the role holds no null there)."""
-    col = f"`{name}`"
-    if f.nullable:
-        return col
-    zero = "array()" if isinstance(f.dataType, T.ArrayType) \
-        else _ZERO_SQL[f.dataType]
-    return f"coalesce({col}, {zero})"
+def zero(t: T.DataType):
+    """What a null in a non-nullable field of type `t` commits as."""
+    return [] if isinstance(t, T.ArrayType) else ZERO[t]
 
 
-def select_frame(out: DataFrame, role: str, *more: str,
-                 frame: T.StructType | None = None,
-                 read: dict | None = None) -> DataFrame:
-    """The rows of one role, or of several roles of the same staged
-    schema, out of the pass's output, as `frame` (FRAMES[role] by
-    default): each of its fields read from the staged field `read`
-    names for it (the field of the same name by default), then the
-    layout's key columns when `out` carries them. One filter and one
-    `selectExpr` of SQL strings, so a projection costs a few py4j
-    calls per field rather than a Column object per operator."""
-    frame, read = frame or FRAMES[role], read or {}
-    exprs = [f"{_sql(COLUMN_OF[role, read.get(f.name, f.name)], f)} "
-             f"AS `{f.name}`" for f in frame.fields]
-    exprs += [f"`{c}`" for c in out.columns if c not in SCHEMA.names]
-    roles = ", ".join(f"'{r}'" for r in (role, *more))
-    return out.filter(f"role IN ({roles})").selectExpr(*exprs)
+class Output(NamedTuple):
+    """One snapshot the pass writes: its frame, the roles whose rows it
+    holds, and, for each frame field that reads another field of those
+    rows, that field."""
+    frame: T.StructType
+    roles: tuple[str, ...]
+    read: dict = {}
+
+
+_TRIPLE_ROLES = ("model_triples", "interaction_triples")
+# every output of the pass, the pipeline's stages in their order first
+OUTPUTS = {
+    "mentions": Output(MENTIONS_SCHEMA, ("mentions", "quarantine")),
+    "quarantine": Output(QUARANTINE, ("quarantine",)),
+    **{role: Output(FRAMES[role], (role,)) for role in MODEL_FRAMES},
+    "interactions": Output(INTERACTIONS, ("interactions",)),
+    "triples": Output(TRIPLES, _TRIPLE_ROLES),
+    "linked": Output(LINKED, ("linked",)),
+    "canonical_triples": Output(TRIPLES, _TRIPLE_ROLES, CANONICAL),
+    "documents": Output(DOCUMENTS, ("documents",)),
+    "text": Output(TEXT, ("text",)),
+    # the triples without the interactions' (golden.py)
+    "model_triples": Output(TRIPLES, ("model_triples",)),
+}
+
+
+def _zero_sql(t: T.DataType) -> str:
+    if isinstance(t, T.ArrayType):
+        return "array()"
+    if isinstance(t, T.StructType):
+        return "named_struct(" + ", ".join(
+            f"'{f.name}', CAST(NULL AS {f.dataType.simpleString()})"
+            for f in t.fields) + ")"
+    return _ZERO_SQL[t]
+
+
+def _restore_sql(col: str, t: T.DataType, nullable: bool,
+                 depth: int = 0) -> str:
+    """The expression that reads `col`, of type `t` as a file scan
+    gives it, as nullable as `nullable` and `t` declare, at the top
+    level and in array elements. A coalesce only drops the nullable
+    flag: the file stores those values REQUIRED, so it never fires."""
+    if isinstance(t, T.ArrayType) and not t.containsNull:
+        x = f"x{depth}"
+        col = (f"transform({col}, {x} -> "
+               f"{_restore_sql(x, t.elementType, False, depth + 1)})")
+    return col if nullable else f"coalesce({col}, {_zero_sql(t)})"
+
+
+def as_frame(df: DataFrame, frame: T.StructType) -> DataFrame:
+    """A snapshot read back (`SnapshotStore.read`: Spark reads every
+    field of a file as nullable) as `frame`: its fields, in order, each
+    as nullable as `frame` declares. One `selectExpr`."""
+    return df.selectExpr(*(
+        f"{_restore_sql(f'`{f.name}`', f.dataType, f.nullable)} "
+        f"AS `{f.name}`" for f in frame.fields))

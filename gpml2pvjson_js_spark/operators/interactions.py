@@ -6,8 +6,9 @@ A port of the reference's per-document classification
 (src/pvjsonToBioPAX/Interaction.ts:94-276, src/pvjsonToBioPAX/Group.ts
 :16-42, and the ArrowHead->BioPAX tables) to plain Python over one
 document's committed node and edge rows; the document compiler
-(document.py) calls `classify` and stages the rows, and
-`classify_interactions` projects them. For each Interaction edge:
+(document.py) calls `classify`, the pass writes the rows as the
+`interactions` snapshot, and `classify_interactions` reads it. For
+each Interaction edge:
 
 - the graphical source/target follow the marker direction
   (Interaction.ts:104-118);
@@ -52,8 +53,9 @@ _NO_FACTS = (False, False, False, False)
 
 def classify_interactions(model: dict) -> DataFrame:
     """The interactions frame (frames.INTERACTIONS) of the model: one
-    row per classified Interaction edge and per kept Group."""
-    return frames.select_frame(model["compiled"], "interactions")
+    row per classified Interaction edge and per kept Group (the
+    model's `interactions` snapshot)."""
+    return model["interactions"]
 
 
 def _marker_tables(strict_reference: bool) -> tuple[dict, dict, bool]:

@@ -30,7 +30,6 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 
-from . import frames
 from .canonicalize import alias_components
 
 # datasource -> identifiers.org prefix (public registry prefixes)
@@ -181,5 +180,5 @@ def link_document(nodes: list[dict], index: LinkIndex) -> list[dict]:
 
 def link_entities(model: dict) -> DataFrame:
     """(url, frag, id, canonical_iri, link_method, link_score): the
-    `linked` role of the model's compiled output."""
-    return frames.select_frame(model["compiled"], "linked")
+    model's `linked` snapshot (assemble.build_document_model)."""
+    return model["linked"]

@@ -8,14 +8,15 @@ FIXTURES.md §3.3.
 
 Every triple is a function of one entity row of one document, so the
 document compiler (document.py) flattens each document's committed
-rows with `document_triples` and stages the distinct triples under two
+rows with `document_triples` and emits the distinct triples under two
 roles: `model_triples` (the entity frames) and `interaction_triples`
 (the BioPAX roles not already among them). The distinct key holds
 `url` and `frag`, so a distinct per document is the corpus-wide
-distinct. Each triple is staged once: its row also carries the
-canonical ids of its subject and object as columns
-(`canonical_subj`, `canonical_obj`), which the canonical triples
-project (canonicalize.py). `build_triples` projects the plain pair.
+distinct. Each triple is one row: it also carries the canonical ids
+of its subject and object as columns (`canonical_subj`,
+`canonical_obj`), which the canonical triples read
+(canonicalize.py). The pass writes both roles' plain triples as the
+`triples` snapshot, which `build_triples` reads.
 """
 
 from __future__ import annotations
@@ -32,11 +33,7 @@ def build_triples(model: dict, with_interactions: bool = True
                   ) -> DataFrame:
     """The distinct triples of the model (frames.TRIPLES); without the
     interaction triples when `with_interactions` is false."""
-    roles = ["model_triples"]
-    if with_interactions:
-        roles.append("interaction_triples")
-    return frames.select_frame(model["compiled"], *roles,
-                               frame=frames.TRIPLES)
+    return model["triples" if with_interactions else "model_triples"]
 
 
 def _xref(r: dict):

@@ -3,75 +3,74 @@
 with parquet-snapshot checkpointing, per-partition lineage manifests,
 and resume-from-last-committed-snapshot (BASELINE.json north_rule).
 
-The stages run in one wave (`Pipeline.run`):
+A batch is one pass per page (parse, text, document compiler) that
+writes all 13 snapshots itself, then a commit of each on the driver
+(`Pipeline.run`), in the style of Iceberg's writer/committer split:
 
-    one pass per page (parse, text, document compiler), staged
-    eagerly once
-      ├── mentions, quarantine, text
-      ├── nodes, edges, citations, vocabularies, pathways
-      ├── interactions, triples, documents
-      └── linked, canonical_triples
+    one mapInArrow over the laid-out pages: each task writes one file
+    per stage and yields a row per file       (operators/assemble.py)
+      -> collect (the batch's one action: 2 Spark jobs, the layout's
+         map stage and the pass)
+      -> per stage, in STAGES order: delete the files no row names,
+         write the manifest                    (SnapshotStore.commit_files)
+      -> run.json, the batch's record
 
-Every stage is a projection of the pass's staged output, so none
-waits for another. The staging is computed before any stage starts,
-so the projections' commits only read its blocks. Linking and
-canonicalization read nothing beyond the document but the dictionary,
-which the compiler holds as a Python index (operators/linking.py).
+No stage waits for another: each is an output of the same pass, and
+the driver plans one query. Linking and canonicalization read nothing
+beyond the document but the dictionary, which the compiler holds as a
+Python index (operators/linking.py).
 
 Exchanges: the pass reads the pages laid out once on the snapshots'
-own keys (`SnapshotStore.layout`: url-hash bucket and write salt) and
-groups on those keys plus the url, so every stage commits with no
-exchange: each writes over the staging's partitions. A batch plans one
-exchange, the pages' layout.
+own keys (`SnapshotStore.layout`: url-hash bucket and write salt), so
+a batch plans one exchange, the pages' layout.
 
-Snapshot layout (Iceberg-style commit protocol on plain parquet — the
-same code works against real Iceberg by swapping `_write`/`_read` for
-`writeTo(...).append()` / `read.table(...)`):
+Snapshot layout (Iceberg-style commit protocol on plain parquet):
 
     {root}/{stage}/data/part-*.parquet (one file per write task, rows
                                         sorted by url-hash `bucket`)
     {root}/{stage}/manifest.json       (commit marker + lineage)
+    {root}/run.json                    (the last run's record)
 
 A stage is committed iff its manifest exists; `run(resume=True)` skips
 committed stages, which makes any run restartable after a crash.
 Like an Iceberg manifest, it lists the data files with their row
-counts and `bucket` bounds, read from the parquet footers, plus wall
-time (the metrics channel the north rule requires).
+counts and `bucket` bounds, plus wall time (the metrics channel the
+north rule requires). The snapshot root must be a POSIX path that the
+driver and every executor see as one directory (operators/assemble.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import export
+from .. import session
 from ..operators.assemble import build_document_model
+# perfbench/layers.py times its layers by wrapping these names in this
+# module. The pass (build_document_model) compiles every document,
+# links it and writes its interactions, triples, JSON-LD and canonical
+# triples, so Pipeline.run calls none of the others; `xref_dictionary`,
+# `canonicalize_linked` and `rewrite_triples` stand for the linking
+# index and the canonical triples. Its `bulk` workload commits
+# `parse_gpml` and `extracted_text`.
 from ..operators.canonicalize import canonical_triples
-from ..operators.frames import MODEL_FRAMES, select_frame
-from ..operators.interactions import classify_interactions
-from ..operators.linking import link_entities, link_index
+from ..operators.interactions import classify_interactions  # noqa: F401
+from ..operators.linking import link_entities, link_index  # noqa: F401
 from ..operators.parse import extracted_text, parse_gpml  # noqa: F401
-from ..operators.triples import build_triples
+from ..operators.triples import build_triples  # noqa: F401
 
-# perfbench/layers.py times its `linking` and `canonicalize` layers by
-# wrapping these names in this module. Linking and canonicalization
-# run inside the document compiler, so the names stand for its index
-# build and the canonical projection; Pipeline.run calls neither. Its
-# `parse` and `text` layers wrap `parse_gpml` and `extracted_text`
-# here, which its `bulk` workload commits; Pipeline.run calls neither
-# either, since the pass parses and extracts the text itself.
 xref_dictionary = link_index
 canonicalize_linked = rewrite_triples = canonical_triples
 
 N_BUCKETS_DEFAULT = 32
-# write tasks per snapshot bucket (see SnapshotStore.commit)
+# write tasks per snapshot bucket (see SnapshotStore.layout_keys)
 WRITE_TASKS_PER_BUCKET = 2
-# submitter threads of Pipeline.run's stage pool
-STAGE_WORKERS = 4
 
 
 class SnapshotStore:
@@ -86,6 +85,28 @@ class SnapshotStore:
 
     def is_committed(self, stage: str) -> bool:
         return os.path.exists(self._paths(stage)[1])
+
+    def uncommit(self, stage: str) -> str:
+        """Remove the stage's manifest, so it is not committed while it
+        is rewritten; returns its data directory, made if missing."""
+        data_path, manifest_path = self._paths(stage)
+        if os.path.exists(manifest_path):
+            os.remove(manifest_path)
+        os.makedirs(data_path, exist_ok=True)
+        return data_path
+
+    def sweep(self, stage: str, keep=frozenset()) -> None:
+        """Delete every entry of the stage's data directory but the
+        files `keep` names: a failed or speculative task attempt's
+        files, hidden temp files and an earlier run's."""
+        data_path = self._paths(stage)[0]
+        for name in os.listdir(data_path):
+            if name not in keep:
+                path = os.path.join(data_path, name)
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         from pyspark.sql import types as T
@@ -171,24 +192,18 @@ class SnapshotStore:
         manifest that lists the data files with their row counts and
         bucket bounds.
 
-        A frame that carries the write salt is laid out already: it
-        projects a staging that grouped a laid-out frame on
-        `layout_keys` and kept their values, like every stage of
-        `Pipeline.run`. Its write runs over its own partitions with no
-        exchange, and the salt is not written. Any other frame with a
-        `bucket_col` is laid out here, which costs one exchange: a
-        frame read straight from the pages, or a filter of a committed
-        snapshot (a snapshot scan may split a file, so it does not
-        keep a url in one task).
+        A frame with a `bucket_col` is laid out here, which costs one
+        exchange: a frame read straight from the pages, or a filter of
+        a committed snapshot (a snapshot scan may split a file, so it
+        does not keep a url in one task). `Pipeline.run` commits what
+        its pass wrote with `commit_files` instead.
 
         The manifest is the commit marker, so no `_SUCCESS` file is
         written (pyarrow and Spark skip `_` files either way)."""
-        data_path, manifest_path = self._paths(stage)
+        data_path = self._paths(stage)[0]
         t0 = time.time()
         out = df
-        if "write_salt" in df.columns:
-            out = df.drop("write_salt")
-        elif bucket_col in df.columns:
+        if bucket_col in df.columns:
             out = self.layout(df, bucket_col)
         if "bucket" in out.columns:
             # the sort the partitioned writer used to insert: a task
@@ -210,15 +225,58 @@ class SnapshotStore:
         t1 = time.time()
         files = self._footer_files(data_path)
         footer_ms = int((time.time() - t1) * 1000)
-        wall_ms = int((time.time() - t0) * 1000)
+        self._write_manifest(stage, out.schema, files, t0, write_ms,
+                             footer_ms)
+        return committed
+
+    def commit_files(self, spark: SparkSession, stage: str, schema,
+                     files: list[dict], started: float) -> DataFrame:
+        """Commit the files a pass wrote for `stage`
+        (operators/assemble.py, `write_pass`; `files` are its FILE_ROW
+        rows, `started` the pass's start): delete every other entry of
+        the stage's data directory, and write the manifest. A stage
+        with no rows commits the one empty file with its schema that
+        Spark's writer makes of an empty frame. Raises if a file a task
+        reported is not in the data directory as the driver sees it (a
+        root the executors do not share with the driver)."""
+        data_path = self._paths(stage)[0]
+        missing = sorted(f["file"] for f in files if not os.path.isfile(
+            os.path.join(data_path, f["file"])))
+        if missing:
+            raise FileNotFoundError(
+                f"{stage}: the pass reported {len(missing)} file(s) that "
+                f"are not in {data_path} on the driver ({missing[0]}, ...); "
+                "the snapshot root must be a path every executor and the "
+                "driver see")
+        self.sweep(stage, {f["file"] for f in files})
+        write_ms = int(sum(f["write_s"] for f in files) * 1000)
+        if files:
+            files = sorted(({k: f[k] for k in ("file", "rows", "bucket_min",
+                                                "bucket_max")}
+                            for f in files), key=lambda f: f["file"])
+        else:
+            t0 = time.time()
+            (spark.createDataFrame([], schema).write.mode("overwrite")
+                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+                        "false")
+                .parquet(data_path))
+            write_ms = int((time.time() - t0) * 1000)
+            files = self._footer_files(data_path)
+        self._write_manifest(stage, schema, files, started, write_ms, 0)
+        return spark.read.schema(schema).parquet(data_path)
+
+    def _write_manifest(self, stage: str, schema, files: list[dict],
+                        started: float, write_ms: int,
+                        footer_ms: int) -> None:
+        data_path, manifest_path = self._paths(stage)
         manifest = {
             "stage": stage,
             "path": data_path,
-            "schema": json.dumps(out.schema.jsonValue()),
+            "schema": json.dumps(schema.jsonValue()),
             "n_buckets": self.n_buckets,
             "rows": sum(f["rows"] for f in files),
             "files": files,
-            "wall_ms": wall_ms,
+            "wall_ms": int((time.time() - started) * 1000),
             "write_ms": write_ms,
             "footer_ms": footer_ms,
             "committed_at_unix_ms": int(time.time() * 1000),
@@ -227,7 +285,6 @@ class SnapshotStore:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, manifest_path)  # atomic commit marker
-        return committed
 
 
 STAGES = [
@@ -247,117 +304,78 @@ class Pipeline:
         self.store = SnapshotStore(out_root, n_buckets)
 
     def _stage(self, name: str, build, resume: bool) -> DataFrame:
+        """The stage's snapshot: read back if `resume` finds it
+        committed, else committed from what `build()` returns, the
+        (schema, files, pass start) its pass wrote."""
         if resume and self.store.is_committed(name):
             return self.store.read(self.spark, name)
-        return self.store.commit(build(), name)
-
-    def _release_stage_blocks(self, persisted_before: set) -> None:
-        """Unpersist the localCheckpointed RDDs this run staged.
-
-        The model staging (assemble._stage) is plan-cutting
-        scaffolding; once every stage is committed to parquet nobody
-        reads it again — but its serialized blocks stay pinned in the
-        block manager until the JVM happens to GC the RDD handles. On
-        a long-lived driver submitting repeated jobs that accumulation
-        is a cliff, not a slope (measured: the same sf0.1 job in one
-        JVM ran 61.5 s -> 40.4 s -> 152.8 s as persistent RDDs grew
-        24 -> 41 -> 57; with release, flat).
-        Only RDDs persisted DURING this run are touched."""
-        try:
-            sc = self.spark.sparkContext._jsc.sc()
-            for rdd_id in self._persisted_ids() - persisted_before:
-                # SparkContext.unpersistRDD, not RDD.unpersist: the
-                # latter WARNs that a locally checkpointed RDD's lineage
-                # is truncated before releasing the same blocks
-                sc.unpersistRDD(rdd_id, False)
-        except Exception:
-            pass  # cleanup is best-effort; never fail a committed run
-
-    def _persisted_ids(self) -> set:
-        try:
-            jsc = self.spark.sparkContext._jsc.sc()
-            ids, it = set(), jsc.getPersistentRDDs().toList().iterator()
-            while it.hasNext():
-                ids.add(it.next()._1())
-            return ids
-        except Exception:
-            return set()
+        return self.store.commit_files(self.spark, name, *build())
 
     def run(self, resume: bool = True) -> dict[str, DataFrame]:
-        """Build the staging, then execute the stages in STAGES order
-        on one pool of STAGE_WORKERS threads.
+        """Run the pass for the stages not yet committed (all of them
+        unless `resume`), then commit each stage in STAGES order on the
+        calling thread, then write the run's record (`run.json`).
 
-        The staging is one pass per page (build_document_model), laid
-        out as the store commits, built on the calling thread unless a
-        resumed run finds every stage committed. It is eager, so the
-        pass runs exactly once before any stage starts, and no two
-        commits race to compute the same lazy block. Every stage
-        projects it, so none waits for another, and each commits with
-        no exchange (SnapshotStore.commit). A resumed run with any
-        stage uncommitted re-runs the pass over the pages, which is
-        deterministic.
-
-        A failed stage cancels the stages still queued, and its
-        exception is re-raised. Committed or not, the blocks the run
-        staged are released (_release_stage_blocks).
-
-        Why threads on the driver: each stage commit has two serial
-        phases — driver-side analysis/optimization/codegen (single
-        JVM thread per plan) and cluster execution. Running
-        independent stages on separate submitter threads overlaps
-        stage A's planning with stage B's execution, which removed
-        most of the serial, parallelism-independent share of a run
-        (BENCH/PLANS.md round-2 final). Spark job submission and
-        Catalyst are thread-safe; snapshots land in per-stage dirs.
-        """
-        from concurrent.futures import ThreadPoolExecutor, as_completed
-
-        model = None
-        # The "mentions" snapshot holds the UNFILTERED parse output (ok
-        # + quarantined rows); the run returns its ok rows.
-        builds = {
-            "mentions": lambda: select_frame(model["compiled"],
-                                             "mentions", "quarantine"),
-            # the quarantined mentions, the per-url extracted text (the
-            # byte-identical invariant) and the model frames
-            **{name: lambda n=name: model[n]
-               for name in ("quarantine", "text", *MODEL_FRAMES)},
-            "interactions": lambda: classify_interactions(model),
-            "triples": lambda: build_triples(model),
-            # JSON-LD documents (NDJSON-ready, S5/JS1/JS2)
-            "documents": lambda: export.jsonld_documents(model),
-            "linked": lambda: link_entities(model),
-            "canonical_triples": lambda: canonical_triples(model),
-        }
-
-        futures: dict = {}
-
-        def cancel_queued(fut) -> None:
-            # runs on a failed stage's worker before it can take the
-            # next stage, so the stages still queued never start
-            if not fut.cancelled() and fut.exception() is not None:
-                for queued in list(futures.values()):
-                    queued.cancel()
-
-        persisted_before = self._persisted_ids()
-        ex = ThreadPoolExecutor(max_workers=STAGE_WORKERS)
-        try:
-            if not resume or not all(map(self.store.is_committed, STAGES)):
-                model = build_document_model(self.spark, self.pages,
-                                             store=self.store)
-            for name in STAGES:
-                futures[name] = ex.submit(self._stage, name, builds[name],
-                                          resume)
-                futures[name].add_done_callback(cancel_queued)
-            names = {fut: name for name, fut in futures.items()}
-            # in completion order, so a failure re-raises at once
-            out = {names[fut]: fut.result() for fut in as_completed(names)}
-        finally:
-            ex.shutdown(cancel_futures=True)
-            self._release_stage_blocks(persisted_before)
+        The pass (build_document_model) writes every stage it is given
+        in one Spark action, each file under a name unique to its task
+        attempt. A failed pass commits nothing and leaves no file of
+        its stages. A resumed run with any stage uncommitted re-runs
+        the pass over the pages, which is deterministic, for those
+        stages only; a run with all 13 committed builds nothing.
+        Returns each stage's committed snapshot, `mentions` holding
+        only the ok rows."""
+        todo = [s for s in STAGES
+                if not (resume and self.store.is_committed(s))]
+        written, pass_s = None, 0.0
+        if todo:
+            t0 = time.time()
+            written = build_document_model(self.spark, self.pages,
+                                           store=self.store, stages=todo)
+            pass_s = time.time() - t0
+        out = {name: self._stage(
+            name, lambda n=name: (written.schemas[n], written.files[n],
+                                  written.started), resume)
+            for name in STAGES}
+        self._record(todo, written, pass_s)
         out["mentions"] = out["mentions"].filter(
             F.col("gpml_element_name") != "_error")
         return out
+
+    def _record(self, committed: list[str], written, pass_s: float) -> None:
+        """Write `run.json` beside the manifests: the pass's and its
+        collect's wall seconds, its tasks' compile and write seconds,
+        the rows, files and bytes of each stage this run committed, the
+        quarantined rows per `error` prefix, and the driver JVM's
+        class-data sharing (session.class_data_sharing)."""
+        files = [f for fs in (written.files.values() if written else ())
+                 for f in fs]
+        tasks = {f["task"]: f for f in files}
+        quarantined = Counter()
+        for task in tasks.values():
+            quarantined.update(task["quarantined"])
+        stages = {}
+        for name in committed:
+            m = self.store.manifest(name)
+            stages[name] = {
+                "rows": m["rows"], "files": len(m["files"]),
+                "bytes": sum(os.path.getsize(os.path.join(m["path"],
+                                                          f["file"]))
+                             for f in m["files"])}
+        cds = session.class_data_sharing()
+        record = {
+            "pass_s": pass_s,
+            "collect_s": written.collect_s if written else 0.0,
+            "tasks": len(tasks),
+            "compile_s": sum(t["compile_s"] for t in tasks.values()),
+            "write_s": sum(f["write_s"] for f in files),
+            "stages": stages,
+            "quarantined": quarantined,
+            "class_data_sharing": {"mode": cds.mode, "detail": cds.detail},
+        }
+        path = os.path.join(self.store.root, "run.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump(record, f, indent=1)
+        os.replace(path + ".tmp", path)
 
     def metrics(self) -> dict:
         return {s: self.store.manifest(s)

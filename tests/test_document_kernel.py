@@ -1,7 +1,7 @@
 """The document compiler (operators/document.py): plain-Python cases
 for `compile_document` on hand-built mention rows, the pass's Arrow
-boundary (`compile_page_group`) on pages, and Spark cases through
-`build_document_model`."""
+boundary (`compile_page_group`, then each output's table) on pages,
+and Spark cases through `build_document_model`."""
 
 import datetime as dt
 import math
@@ -12,10 +12,11 @@ import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from gpml2pvjson_js_spark import corpus as C
+from gpml2pvjson_js_spark.operators import assemble
 from gpml2pvjson_js_spark.operators.assemble import build_document_model
 from gpml2pvjson_js_spark.operators.document import (
-    SCHEMA, compile_document, compile_page_group)
-from gpml2pvjson_js_spark.operators.frames import COLUMN_OF, FRAMES
+    compile_document, compile_page_group)
+from gpml2pvjson_js_spark.operators.frames import FRAMES, OUTPUTS
 from gpml2pvjson_js_spark.operators.linking import link_index
 from gpml2pvjson_js_spark.operators.parse import MENTIONS_SCHEMA
 
@@ -385,6 +386,18 @@ def test_pathway_name_split_and_search_link():
     assert p["height"] == 500.0
 
 
+def _output_table(rows: dict, stage: str, bucket: int = 3) -> pa.Table:
+    """One output's Arrow table of a url's rows, as the pass writes it."""
+    from pyspark.sql import types as T
+
+    out = OUTPUTS[stage]
+    schema = T.StructType([*out.frame.fields, assemble.BUCKET])
+    table = assemble.stage_table(
+        assemble._sink(stage, "", schema, out, "4.1.2"), rows, bucket)
+    assert table.schema.remove_metadata() == to_arrow_schema(schema)
+    return table
+
+
 def test_arrow_boundary_keeps_nan_rotations_and_nulls_other_nans():
     """Through the pass's Arrow boundary: a NaN rotation is committed
     as NaN, as the Catalyst cast gave it; every other NaN is null, in
@@ -399,24 +412,23 @@ def test_arrow_boundary_keeps_nan_rotations_and_nulls_other_nans():
         C._interaction("e1", [C._point("NaN", 1.0), C._point(5.0, 1.0)]))
     html = ('<html><body><script type="application/gpml+xml">\n'
             + gpml + "\n</script></body></html>").encode()
-    out = compile_page_group(pa.table({"url": ["u"], "html": [html]}),
-                             link_index())
-    assert out.schema == to_arrow_schema(SCHEMA)
-    got = {(r["role"], r["id"]): r for r in out.to_pylist()
-           if r["role"] in ("nodes", "edges")}
+    rows = compile_page_group([("u", html)], link_index())
+    nodes = {r["id"]: r
+             for r in _output_table(rows, "nodes").to_pylist()}
     # a NaN rotation goes back as NaN, as the Catalyst cast gave it
-    assert math.isnan(got["nodes", "sh"]["rotation"])
-    assert math.isnan(got["nodes", "sh"]["text_rotation"])
+    assert math.isnan(nodes["sh"]["rotation"])
+    assert math.isnan(nodes["sh"]["text_rotation"])
     # an offset against a missing parent is null, not NaN
-    assert got["nodes", "st"]["attachment_offset"] == [None, None]
-    assert got["nodes", "nan"]["x"] is None
-    mentions = {r["graph_id"]: r for r in out.to_pylist()
-                if r["role"] == "mentions"}
+    assert nodes["st"]["attachment_offset"] == [None, None]
+    assert nodes["nan"]["x"] is None
+    mentions = {r["graph_id"]: r
+                for r in _output_table(rows, "mentions").to_pylist()}
     assert mentions["nan"]["center_x"] is None
     assert mentions["nan"]["center_y"] == 165.0
-    points = mentions["e1"][COLUMN_OF["mentions", "points"]]
+    points = mentions["e1"]["points"]
     assert [(p["x"], p["y"]) for p in points] == [(None, 1.0), (5.0, 1.0)]
-    assert mentions["sh"][COLUMN_OF["mentions", "rotation"]] == "NaN"
+    assert mentions["sh"]["rotation"] == "NaN"
+    assert {r["bucket"] for r in mentions.values()} == {3}
 
 
 # --- Spark --------------------------------------------------------------

@@ -44,9 +44,9 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
     574k-char trees on canonical/documents used to dominate plan
     stringification). Structural, not data-dependent: committed
     stages read back from parquet, so stage plans are scan + a
-    bounded operator tree, and every stage under the compiler is a
-    projection of its one staging. Measured at sf0.01: max
-    executed-plan string 99k."""
+    bounded operator tree, and so are the model's frames, which read
+    back the snapshots of the one pass. Measured at sf0.01, when the
+    stages projected a staging: max executed-plan string 99k."""
     from gpml2pvjson_js_spark.operators.assemble import (
         build_document_model)
     from gpml2pvjson_js_spark.operators.canonicalize import (
@@ -153,8 +153,7 @@ def test_pipeline_resume_after_mid_commit_crash(spark, tmp_path_factory):
     assert p2.metrics()["canonical_triples"]["rows"] == rows_before
 
 
-def test_snapshot_layout_is_one_sorted_file_per_write_task(
-        spark, tmp_path_factory):
+def _check_layout(root: str, metrics: dict) -> None:
     """Every committed stage is flat parquet, one file per write task:
     no bucket=N/ directory and no _SUCCESS; each file's rows are
     sorted by bucket and each url lives in one file; the manifest
@@ -162,11 +161,6 @@ def test_snapshot_layout_is_one_sorted_file_per_write_task(
     rows and bucket bounds equal to each file's min/max."""
     import pyarrow.parquet as pq
 
-    root = str(tmp_path_factory.mktemp("kgout_layout"))
-    pages = pages_df(spark, 7, giant_every=0)
-    p = Pipeline(spark, pages, root, n_buckets=4)
-    p.run(resume=False)
-    metrics = p.metrics()
     assert set(metrics) == set(STAGES)
     for stage, m in metrics.items():
         data = os.path.join(root, stage, "data")
@@ -192,6 +186,15 @@ def test_snapshot_layout_is_one_sorted_file_per_write_task(
                     (stage, url)
 
 
+def test_snapshot_layout_is_one_sorted_file_per_write_task(
+        spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("kgout_layout"))
+    pages = pages_df(spark, 7, giant_every=0)
+    p = Pipeline(spark, pages, root, n_buckets=4)
+    p.run(resume=False)
+    _check_layout(root, p.metrics())
+
+
 def test_empty_stage_round_trip(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("kgout_empty"))
     pages = pages_df(spark, 7, giant_every=0)
@@ -203,8 +206,8 @@ def test_empty_stage_round_trip(spark, tmp_path_factory):
 
 
 def _written_plans(monkeypatch) -> dict:
-    """Stage -> the executed plan of the frame its commit writes, taken
-    just before the write, for every write from here on."""
+    """Stage -> the executed plan of the frame Spark's writer writes,
+    taken just before the write, for every write from here on."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     plans = {}
@@ -223,38 +226,72 @@ def _written_plans(monkeypatch) -> dict:
 # the physical nodes that run Python
 _PYTHON_NODES = re.compile(r"\b(?:FlatMapGroupsIn\w+|FlatMapCoGroupsIn\w+"
                            r"|MapIn\w+|\w*EvalPython\w*)\b")
+# a page whose GPML does not parse: one `_error` mention row
+_BAD_XML = ('<html><body><script type="application/gpml+xml">\n'
+            '<Pathway xmlns="http://pathvisio.org/GPML/2013a" Name="x">'
+            '<DataNode\n</script></body></html>').encode()
+
+
+def _batch_dir(spark, root: str) -> str:
+    """A batch in parquet, as a production batch reads its pages (the
+    corpus generator is a Python node of its own): nine fixture pages
+    and one page that does not parse, so every stage has rows."""
+    import datetime as dt
+
+    from gpml2pvjson_js_spark import corpus as C
+
+    path = root + "/pages"
+    pages_df(spark, 9, giant_every=0).write.parquet(path)
+    ts = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
+    spark.createDataFrame([("https://bad.example/x", ts, _BAD_XML, "", "en")],
+                          C.PAGES_SCHEMA).write.mode("append").parquet(path)
+    return path
+
+
+def _job_ids(spark) -> set:
+    store = spark.sparkContext._jsc.sc().statusStore()
+    it = store.jobsList(None).iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next().jobId())
+    return ids
 
 
 def test_compiler_stages_commit_with_no_exchange(
         spark, tmp_path_factory, monkeypatch):
-    """The pass reads the pages laid out once on the snapshots' keys,
-    so each of the 13 stages writes over the staging's own
-    partitions: no Exchange in its plan. The staging's own plan holds
-    the batch's one Exchange, the layout, and its one Python node, the
-    grouped Arrow pass. The pages are read from parquet, as a
-    production batch reads them (the corpus generator is a Python
-    node of its own)."""
-    from gpml2pvjson_js_spark.operators import assemble
-
+    """A batch is one pass that writes all 13 stages. Its plan holds
+    the batch's one Exchange, the pages' layout, and its one Python
+    node, the mapInArrow pass; collecting its file rows is the batch's
+    only action, so the batch runs 2 Spark jobs (the layout's map stage
+    and the pass) and checkpoints nothing. Committing a stage runs no
+    job: every stage of this batch has rows."""
     root = str(tmp_path_factory.mktemp("kgout_exchanges"))
-    pages_df(spark, 7, giant_every=0).write.parquet(root + "/pages")
-    plans = _written_plans(monkeypatch)
-    staged = []
-    stage = assemble._stage
+    pages = spark.read.parquet(_batch_dir(spark, root))
+    cls = type(spark.range(0))
+    plans, checkpoints = [], []
+    collect, checkpoint = cls.collect, cls.localCheckpoint
 
-    def spy(df):
-        staged.append(df._jdf.queryExecution().executedPlan().toString())
-        return stage(df)
+    def spy_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
 
-    monkeypatch.setattr(assemble, "_stage", spy)
-    Pipeline(spark, spark.read.parquet(root + "/pages"), root + "/out",
-             n_buckets=4).run(resume=False)
-    exchanges = {stage: len(re.findall(r"\bExchange\b", plan))
-                 for stage, plan in plans.items()}
-    assert exchanges == dict.fromkeys(STAGES, 0), plans
-    [plan] = staged
+    def spy_checkpoint(self, *args, **kwargs):
+        checkpoints.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "collect", spy_collect)
+    monkeypatch.setattr(cls, "localCheckpoint", spy_checkpoint)
+    before = _job_ids(spark)
+    p = Pipeline(spark, pages, root + "/out", n_buckets=4)
+    p.run(resume=False)
+    jobs = _job_ids(spark) - before
+    monkeypatch.undo()
+    assert all(m["rows"] > 0 for m in p.metrics().values()), p.metrics()
+    assert len(jobs) == 2, sorted(jobs)
+    assert checkpoints == []
+    [plan] = plans
     assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
-    assert _PYTHON_NODES.findall(plan) == ["FlatMapGroupsInArrow"], plan
+    assert _PYTHON_NODES.findall(plan) == ["MapInArrow"], plan
 
 
 def test_empty_role_commits_with_no_exchange(
@@ -373,14 +410,9 @@ PROJECTION_STAGES = {
 }
 
 
-def test_projection_stages_commit_the_pinned_schema_and_rows(
-        spark, tmp_path_factory):
+def _check_pins(p: Pipeline, out: dict) -> None:
     import hashlib
 
-    root = str(tmp_path_factory.mktemp("kgout_pins"))
-    p = Pipeline(spark, pages_df(spark, 7, giant_every=0), root,
-                 n_buckets=4)
-    out = p.run(resume=False)
     for stage, (schema, n_rows, digest) in PROJECTION_STAGES.items():
         assert p.store.manifest(stage)["schema"] == schema, stage
         rows = [r.asDict(recursive=True) for r in out[stage].collect()]
@@ -392,15 +424,69 @@ def test_projection_stages_commit_the_pinned_schema_and_rows(
             == digest, stage
 
 
-def test_projection_is_a_few_py4j_commands_per_field(spark, monkeypatch):
-    """`select_frame` builds a projection as one filter and one
-    `selectExpr`: projecting the 52 `nodes` fields out of a staging
-    sends a few py4j commands per field (2,023 when every field was a
-    tree of Column objects)."""
-    from gpml2pvjson_js_spark.operators.frames import (
-        NODES, SCHEMA, select_frame)
+def test_projection_stages_commit_the_pinned_schema_and_rows(
+        spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("kgout_pins"))
+    p = Pipeline(spark, pages_df(spark, 7, giant_every=0), root,
+                 n_buckets=4)
+    _check_pins(p, p.run(resume=False))
 
-    staged = spark.createDataFrame([], SCHEMA)
+
+def test_many_partitions_stream_each_file_a_row_group_at_a_time(
+        spark, tmp_path_factory, monkeypatch):
+    """With AQE off the pass runs one task per layout key (8 here), so
+    a stage's rows come from several tasks. The snapshots hold the
+    same pinned schema and rows, in the same layout. With a one-byte
+    row-group bound each task writes every url's rows as soon as they
+    are compiled (one row group per url of the file), so what a task
+    holds does not grow with its partition. Each file is named for its
+    task attempt, and no two tasks share a name."""
+    import pyarrow.parquet as pq
+
+    from gpml2pvjson_js_spark.operators import assemble
+    from gpml2pvjson_js_spark.plans.pipeline import WRITE_TASKS_PER_BUCKET
+
+    monkeypatch.setattr(assemble, "ROW_GROUP_BYTES", 1)
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    root = str(tmp_path_factory.mktemp("kgout_partitions"))
+    p = Pipeline(spark, pages_df(spark, 7, giant_every=0), root,
+                 n_buckets=4)
+    try:
+        spark.conf.set(key, "false")
+        out = p.run(resume=False)
+        _check_pins(p, out)
+    finally:
+        spark.conf.set(key, before)
+    metrics = p.metrics()
+    _check_layout(root, metrics)
+    name = re.compile(r"part-(\d{5})-[0-9a-f]{32}-t(\d+)\.parquet")
+    attempts, most_urls = {}, 0
+    for stage, m in metrics.items():
+        for f in m["files"]:
+            if not f["rows"]:
+                continue  # a stage with no rows: Spark's empty file
+            partition, attempt = name.fullmatch(f["file"]).groups()
+            assert attempts.setdefault(attempt, partition) == partition
+            path = os.path.join(root, stage, "data", f["file"])
+            urls = set(pq.read_table(path, columns=["url"])["url"]
+                       .to_pylist())
+            assert pq.ParquetFile(path).metadata.num_row_groups \
+                == len(urls), (stage, f["file"])
+            most_urls = max(most_urls, len(urls))
+    assert most_urls > 1  # some file was written a url at a time
+    assert 1 < len(attempts) <= 4 * WRITE_TASKS_PER_BUCKET
+    assert max(len(m["files"]) for m in metrics.values()) > 1
+
+
+def test_pipeline_run_is_a_bounded_number_of_py4j_commands(
+        spark, tmp_path_factory, monkeypatch):
+    """A whole `Pipeline.run` plans one query and commits 13 stages
+    from its rows, so the driver sends a few hundred py4j commands
+    (488 on this batch; 1,784 when every stage was a projection of a
+    staging)."""
+    root = str(tmp_path_factory.mktemp("kgout_py4j"))
+    pages = spark.read.parquet(_batch_dir(spark, root))
     client = type(spark.sparkContext._gateway._gateway_client)
     send, calls = client.send_command, []
 
@@ -408,11 +494,11 @@ def test_projection_is_a_few_py4j_commands_per_field(spark, monkeypatch):
         calls.append(1)
         return send(self, *args, **kwargs)
 
+    p = Pipeline(spark, pages, root + "/out", n_buckets=4)
     monkeypatch.setattr(client, "send_command", spy)
-    nodes = select_frame(staged, "nodes")
+    p.run(resume=False)
     monkeypatch.undo()
-    assert nodes.columns == NODES.names
-    assert len(calls) < 3 * len(NODES.fields), len(calls)
+    assert len(calls) < 1000, len(calls)
 
 
 def _persistent_rdd_ids(spark) -> set:
@@ -424,140 +510,78 @@ def _persistent_rdd_ids(spark) -> set:
     return ids
 
 
-def test_pipeline_releases_the_rdds_it_persisted(
-        spark, tmp_path_factory, monkeypatch):
+def test_pipeline_releases_the_rdds_it_persisted(spark, tmp_path_factory):
+    """The pass's rows go straight to parquet: a run leaves no
+    persisted RDD behind."""
     root = str(tmp_path_factory.mktemp("kgout_release"))
     p = Pipeline(spark, pages_df(spark, 4, giant_every=0), root,
                  n_buckets=4)
     before = _persistent_rdd_ids(spark)
-    staged = set()
-    release = Pipeline._release_stage_blocks
-
-    def spy(self, persisted_before):
-        staged.update(_persistent_rdd_ids(spark) - before)
-        release(self, persisted_before)
-
-    monkeypatch.setattr(Pipeline, "_release_stage_blocks", spy)
     p.run(resume=False)
-    assert staged  # the run did stage something
-    assert not staged & _persistent_rdd_ids(spark)
+    assert _persistent_rdd_ids(spark) == before
 
 
 def test_stages_start_in_order_and_stay_bounded(
         spark, tmp_path_factory, monkeypatch):
-    """Every stage projects the one staging, so none waits for
-    another: the model is built once, before any stage starts, and
-    with a worker for every stage each starts before any ends. With
-    STAGE_WORKERS workers, no more than that many ever run at once;
-    with one, the stages start in STAGES order. `_stage` is stubbed:
-    it sleeps and records events; so is the model build, which the
-    stub stages never read."""
+    """The pass runs once, before any stage commits; then the stages
+    commit in STAGES order, one at a time, on the calling thread."""
     import threading
-    import time
 
     from gpml2pvjson_js_spark.plans import pipeline
 
-    bound = pipeline.STAGE_WORKERS
+    events = []
+    build, commit = (pipeline.build_document_model,
+                     pipeline.SnapshotStore.commit_files)
 
-    class Committed:
-        def filter(self, _):
-            return self
+    def spy_build(*args, **kwargs):
+        events.append(("build", threading.get_ident()))
+        return build(*args, **kwargs)
 
-    def schedule(workers: int, seconds: float = 0.4):
-        events, running, most = [], set(), [0]
-        lock = threading.Lock()
+    def spy_commit(self, spark, stage, *args, **kwargs):
+        events.append(("start", stage, threading.get_ident()))
+        out = commit(self, spark, stage, *args, **kwargs)
+        events.append(("end", stage, threading.get_ident()))
+        return out
 
-        def build(*args, **kwargs):
-            with lock:
-                events.append(("build", None))
-            return {}
-
-        def stage(self, name, build, resume):
-            with lock:
-                events.append(("start", name))
-                running.add(name)
-                most[0] = max(most[0], len(running))
-            time.sleep(seconds)
-            with lock:
-                events.append(("end", name))
-                running.discard(name)
-            return Committed()
-
-        monkeypatch.setattr(Pipeline, "_stage", stage)
-        monkeypatch.setattr(pipeline, "build_document_model", build)
-        monkeypatch.setattr(pipeline, "STAGE_WORKERS", workers)
-        root = str(tmp_path_factory.mktemp("kgout_schedule"))
-        Pipeline(spark, None, root).run(resume=False)
-        assert events[0] == ("build", None)
-        assert [n for kind, n in events if kind == "build"] == [None]
-        started = [n for kind, n in events if kind == "start"]
-        # stages that start at once may log in either order
-        assert started == STAGES if workers == 1 \
-            else sorted(started) == sorted(STAGES)
-        return events, most[0]
-
-    events, _ = schedule(len(STAGES))
-    first_end = events.index(next(e for e in events if e[0] == "end"))
-    assert {n for kind, n in events[:first_end] if kind == "start"} \
-        == set(STAGES)
-
-    _, most = schedule(bound)
-    assert most == bound
-
-    _, most = schedule(1, seconds=0.01)
-    assert most == 1
+    monkeypatch.setattr(pipeline, "build_document_model", spy_build)
+    monkeypatch.setattr(pipeline.SnapshotStore, "commit_files", spy_commit)
+    root = str(tmp_path_factory.mktemp("kgout_schedule"))
+    Pipeline(spark, pages_df(spark, 4, giant_every=0), root,
+             n_buckets=4).run(resume=False)
+    main = threading.get_ident()
+    assert events[0] == ("build", main)
+    assert events[1:] == [(kind, stage, main) for stage in STAGES
+                          for kind in ("start", "end")]
 
 
-def test_stage_failure_cancels_queued_stages_and_releases_blocks(
+def test_failing_pass_commits_no_manifest_and_leaves_no_file(
         spark, tmp_path_factory, monkeypatch):
-    """A failing stage fails the run with its own exception. The stages
-    still queued when it fails never start, and the run still releases
-    the blocks it staged."""
-    import threading
-    import time
-
+    """A pass that fails fails the run with its error. It commits no
+    manifest, and no file of its stages is left: not the files its
+    task wrote before the failure, and not an earlier run's, whose
+    manifests it removed before it started."""
     import pytest
 
     from gpml2pvjson_js_spark.plans import pipeline
 
-    events, released = [], []
-    lock = threading.Lock()
-
-    class Committed:
-        def filter(self, _):
-            return self
-
-    def stage(self, name, build, resume):
-        with lock:
-            events.append(("start", name))
-        if name == "nodes":
-            time.sleep(0.05)
-            with lock:
-                events.append(("fail", name))
-            raise ValueError("nodes failed")
-        time.sleep({"mentions": 0.05}.get(name, 0.3))
-        return Committed()
-
-    release = Pipeline._release_stage_blocks
-
-    def spy(self, persisted_before):
-        released.append(True)
-        release(self, persisted_before)
-
-    monkeypatch.setattr(Pipeline, "_stage", stage)
-    monkeypatch.setattr(Pipeline, "_release_stage_blocks", spy)
-    monkeypatch.setattr(pipeline, "build_document_model",
-                        lambda *a, **kw: {})
-    monkeypatch.setattr(pipeline, "STAGE_WORKERS", 2)
     root = str(tmp_path_factory.mktemp("kgout_failure"))
-    with pytest.raises(ValueError, match="nodes failed"):
-        Pipeline(spark, None, root).run(resume=False)
-    assert released == [True]
-    # `nodes` took the worker `mentions` freed and `quarantine` ran
-    # beside it; every stage after them was still queued when `nodes`
-    # failed
-    started = [n for kind, n in events if kind == "start"]
-    assert set(started) == {"mentions", "quarantine", "nodes"}
+    pages = pages_df(spark, 4, giant_every=0)
+    Pipeline(spark, pages, root, n_buckets=4).run(resume=False)
+    uncommit = pipeline.SnapshotStore.uncommit
+
+    def broken(self, stage):
+        # `text` is the last output: the task writes and renames 12
+        # files, then fails to open the 13th
+        data = uncommit(self, stage)
+        return os.path.join(data, "missing") if stage == "text" else data
+
+    monkeypatch.setattr(pipeline.SnapshotStore, "uncommit", broken)
+    p = Pipeline(spark, pages, root, n_buckets=4)
+    with pytest.raises(Exception, match="missing"):
+        p.run(resume=False)
+    assert p.metrics() == {}
+    for stage in STAGES:
+        assert os.listdir(os.path.join(root, stage, "data")) == [], stage
 
 
 def test_resume_with_every_compiler_stage_committed_skips_the_model(
@@ -599,3 +623,182 @@ def test_resume_with_every_compiler_stage_committed_skips_the_model(
         else:
             assert after[s] == ts, s
     assert out["quarantine"].count() == quarantined
+
+
+def test_commit_deletes_the_files_no_task_reported(spark, tmp_path_factory):
+    """A stray part file (a failed or speculative attempt's) and a
+    hidden temp file left in a stage's data directory are gone after
+    the next run, and the manifest lists exactly the files that
+    remain."""
+    root = str(tmp_path_factory.mktemp("kgout_sweep"))
+    pages = pages_df(spark, 4, giant_every=0)
+    Pipeline(spark, pages, root, n_buckets=4).run(resume=False)
+    data = os.path.join(root, "nodes", "data")
+    [first] = os.listdir(data)
+    stray = ["part-00007-stray-a0.parquet", f".{first}.tmp"]
+    for name in stray:
+        shutil.copy(os.path.join(data, first), os.path.join(data, name))
+    p = Pipeline(spark, pages, root, n_buckets=4)
+    p.run(resume=False)
+    names = sorted(os.listdir(data))
+    assert not set(stray) & set(names)
+    assert [f["file"] for f in p.metrics()["nodes"]["files"]] == names
+
+
+def test_commit_fails_on_a_file_the_driver_does_not_see(
+        spark, tmp_path_factory, monkeypatch):
+    """A file a task reported that is not in the stage's data directory
+    as the driver sees it (a snapshot root the executors do not share
+    with the driver) fails the commit of that stage: no manifest of it
+    is written."""
+    import pytest
+
+    from gpml2pvjson_js_spark.plans import pipeline
+
+    build = pipeline.build_document_model
+
+    def unseen(*args, **kwargs):
+        written = build(*args, **kwargs)
+        [f, *_] = written.files["nodes"]
+        os.remove(os.path.join(root, "nodes", "data", f["file"]))
+        return written
+
+    monkeypatch.setattr(pipeline, "build_document_model", unseen)
+    root = str(tmp_path_factory.mktemp("kgout_unseen"))
+    p = Pipeline(spark, pages_df(spark, 4, giant_every=0), root,
+                 n_buckets=4)
+    with pytest.raises(FileNotFoundError, match="nodes"):
+        p.run(resume=False)
+    assert not p.store.is_committed("nodes")
+
+
+def test_model_without_a_store_needs_a_local_master(spark, monkeypatch):
+    """Without a store the pass writes into a temporary directory of
+    the driver, which only a local master's tasks see: any other
+    master is refused before anything runs."""
+    import pytest
+
+    from gpml2pvjson_js_spark.operators.assemble import (
+        build_document_model)
+
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://h:7077")
+    with pytest.raises(ValueError, match="SnapshotStore"):
+        build_document_model(spark, pages_df(spark, 2, giant_every=0))
+
+
+def test_stage_with_no_rows_commits_one_empty_file_with_its_schema(
+        spark, tmp_path_factory):
+    """A stage no task wrote a row of commits one empty file, written
+    by Spark's writer for the stage's schema, as it writes an empty
+    frame."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import types as T
+
+    root = str(tmp_path_factory.mktemp("kgout_empty_file"))
+    p = Pipeline(spark, pages_df(spark, 7, giant_every=0), root,
+                 n_buckets=4)
+    p.run(resume=False)
+    empty = [s for s, m in p.metrics().items() if m["rows"] == 0]
+    assert empty == ["quarantine", "vocabularies"]
+    for stage in empty:
+        m = p.store.manifest(stage)
+        [name] = [n for n in os.listdir(os.path.join(root, stage, "data"))
+                  if n.endswith(".parquet")]
+        assert m["files"] == [{"file": name, "rows": 0,
+                               "bucket_min": None, "bucket_max": None}]
+        md = pq.ParquetFile(os.path.join(root, stage, "data", name)).metadata
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        assert md.num_rows == 0
+        assert json.loads(md.metadata[
+            b"org.apache.spark.sql.parquet.row.metadata"]) \
+            == schema.jsonValue()
+
+
+def _parquet_shape(path: str) -> tuple:
+    """What a parquet file says of its schema: every node below the
+    root with its repetition (REQUIRED/OPTIONAL/REPEATED), physical
+    type and logical annotation, which includes the LIST/element
+    encoding; each leaf's physical and converted type; and the Spark
+    schema in its footer."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    schema = md.schema
+    nodes = str(schema).splitlines()[2:]  # below the root group
+    leaves = [(schema.column(i).path, schema.column(i).physical_type,
+               schema.column(i).converted_type)
+              for i in range(len(schema))]
+    return nodes, leaves, md.metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"]
+
+
+def test_pass_files_are_the_parquet_spark_writes(spark, tmp_path_factory):
+    """For each of the 13 stages, the file the pass wrote has the
+    physical schema Spark's writer gives a frame of the stage's schema:
+    REQUIRED vs OPTIONAL, the LIST/element encoding, the INT32, DOUBLE
+    and UTF8 types, and the `org.apache.spark.sql.parquet.row.metadata`
+    footer key."""
+    from pyspark.sql import types as T
+
+    root = str(tmp_path_factory.mktemp("kgout_parity"))
+    p = Pipeline(spark, spark.read.parquet(_batch_dir(spark, root)),
+                 root + "/out", n_buckets=4)
+    p.run(resume=False)
+    for stage in STAGES:
+        m = p.store.manifest(stage)
+        assert m["rows"] > 0, stage  # the pass wrote the file
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        ours = _parquet_shape(os.path.join(m["path"], m["files"][0]["file"]))
+        spark_dir = os.path.join(root, "spark", stage)
+        spark.createDataFrame([], schema).write.parquet(spark_dir)
+        [name] = [n for n in os.listdir(spark_dir) if n.endswith(".parquet")]
+        theirs = _parquet_shape(os.path.join(spark_dir, name))
+        assert ours == theirs, stage
+        types = {t for _, t, _ in ours[1]}
+        assert types <= {"INT32", "DOUBLE", "BYTE_ARRAY", "BOOLEAN"}, stage
+        assert all(c == "UTF8" for _, t, c in ours[1]
+                   if t == "BYTE_ARRAY"), stage
+
+
+RUN_RECORD_KEYS = ["class_data_sharing", "collect_s", "compile_s", "pass_s",
+                   "quarantined", "stages", "tasks", "write_s"]
+
+
+def test_run_writes_its_record(spark, tmp_path_factory):
+    """`run.json` beside the manifests holds the pass's and its
+    collect's wall seconds, its tasks' compile and write seconds, the
+    rows, files and bytes of each stage the run committed, the
+    quarantined rows per `error` prefix and the driver JVM's class-data
+    sharing; a resumed run that commits nothing records no pass."""
+    from gpml2pvjson_js_spark import session
+
+    root = str(tmp_path_factory.mktemp("kgout_record"))
+    pages = spark.read.parquet(_batch_dir(spark, root))
+    p = Pipeline(spark, pages, root + "/out", n_buckets=4)
+    p.run(resume=False)
+    with open(os.path.join(root, "out", "run.json")) as f:
+        record = json.load(f)
+    assert sorted(record) == RUN_RECORD_KEYS
+    assert record["pass_s"] >= record["collect_s"] > 0
+    assert record["tasks"] >= 1
+    assert record["compile_s"] > 0 and record["write_s"] > 0
+    assert list(record["stages"]) == STAGES
+    for stage, figures in record["stages"].items():
+        m = p.store.manifest(stage)
+        assert figures["rows"] == m["rows"], stage
+        assert figures["files"] == len(m["files"]), stage
+        assert figures["bytes"] == sum(
+            os.path.getsize(os.path.join(m["path"], f["file"]))
+            for f in m["files"]), stage
+    assert record["quarantined"] == {"xml-parse": 1}
+    cds = session.class_data_sharing()
+    assert record["class_data_sharing"] == {"mode": cds.mode,
+                                            "detail": cds.detail}
+
+    Pipeline(spark, pages, root + "/out", n_buckets=4).run(resume=True)
+    with open(os.path.join(root, "out", "run.json")) as f:
+        record = json.load(f)
+    assert sorted(record) == RUN_RECORD_KEYS
+    assert record["stages"] == {} and record["tasks"] == 0
+    assert record["pass_s"] == record["collect_s"] == 0.0

@@ -1,16 +1,17 @@
 #!/usr/bin/env python3
 """Dump .explain("formatted") for every declared query plus the KG
-pipeline stage frames and the lazy-probe DAG, to a directory.
+pipeline's one pass, to a directory.
 
 Usage:
     python tools/explain_dump.py OUTDIR [SUFFIX] [--only name1,name2]
 
 Writes OUTDIR/<name>_<SUFFIX>.txt (SUFFIX default "before").
 `stage_pass` is the plan of the one pass per page as `Pipeline.run`
-stages it: the pages laid out on the snapshot keys (the batch's one
-exchange) and grouped into the Arrow pass. Plans only, apart from that
-staging: the KG frames project it, and `build_document_model` computes
-it eagerly, once per model. Do not run it alongside a bench.
+runs it: the pages laid out on the snapshot keys (the batch's one
+exchange), sorted within partitions, and the mapInArrow that writes
+every stage's snapshot; the stages themselves are its files, with no
+plan of their own. Plans only: nothing runs. Do not run it alongside a
+bench.
 """
 
 from __future__ import annotations
@@ -60,42 +61,20 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             print(f"SKIP {name}: {e}")
 
-    # pipeline stage frames (what the headline bench times), built the
-    # way the snapshot pipeline builds them, pre-commit
-    if only is None or any(n.startswith("stage_") or n == "lazy_dag"
-                           for n in only):
+    # the one pass per page, as Pipeline.run runs it: the pages laid
+    # out on the snapshot keys (the batch's one exchange), sorted, and
+    # the mapInArrow that writes every stage
+    if only is None or "stage_pass" in only:
         import tempfile
 
         from gpml2pvjson_js_spark.corpus import pages_from_documents
-        from gpml2pvjson_js_spark.operators.assemble import (
-            build_document_model)
-        from gpml2pvjson_js_spark.operators.canonicalize import (
-            canonical_triples)
-        from gpml2pvjson_js_spark.operators.document import compile_pages
-        from gpml2pvjson_js_spark.operators.interactions import (
-            classify_interactions)
-        from gpml2pvjson_js_spark.operators.linking import (
-            link_entities, link_index)
-        from gpml2pvjson_js_spark.operators.triples import build_triples
-        from gpml2pvjson_js_spark.plans.pipeline import SnapshotStore
+        from gpml2pvjson_js_spark.operators.assemble import pass_frame
+        from gpml2pvjson_js_spark.plans.pipeline import STAGES, SnapshotStore
 
         pages = pages_from_documents(spark, SF_DIR)
         with tempfile.TemporaryDirectory() as root:
-            store = SnapshotStore(root)
-            dump("stage_pass", compile_pages(
-                store.layout(pages.select("url", "html")), link_index(),
-                store.layout_keys()))
-        model = build_document_model(spark, pages)
-        for s in ("mentions", "quarantine", "text", "nodes", "edges",
-                  "citations", "vocabularies", "pathways"):
-            dump(f"stage_{s}", model[s])
-        dump("stage_interactions", classify_interactions(model))
-        dump("stage_linked", link_entities(model))
-        dump("stage_triples", build_triples(model))
-        dump("stage_canonical_triples", canonical_triples(model))
-
-        # the lazy probe DAG (bench.py _lazy_probe)
-        dump("lazy_dag", build_triples(model))
+            dump("stage_pass", pass_frame(spark, pages, SnapshotStore(root),
+                                          STAGES)[0])
 
     spark.stop()
 
