@@ -31,7 +31,8 @@ written its partition, then is renamed. It yields one row per file
 (FILE_ROW). Collecting those rows is the batch's only action,
 so a batch runs two Spark jobs: the layout's map stage and the pass.
 The driver then commits each output from its rows
-(plans/pipeline.py, `SnapshotStore.commit_files`).
+(plans/pipeline.py, `SnapshotStore.commit_files`), and writes the one
+empty file of an output no task had a row of (`write_empty_file`).
 
 Why a side effect of an Arrow UDF, against "DataFrame + Arrow UDFs
 throughout": with Spark's writer each of the 13 stages was its own job
@@ -135,6 +136,17 @@ def _sink(stage: str, data: str, schema: T.StructType,
         [(out.read.get(f.name, f.name),
           None if f.nullable else frames.zero(f.dataType))
          for f in schema.fields if f.name != "bucket"])
+
+
+def write_empty_file(data: str, schema: T.StructType, version: str) -> str:
+    """Write into `data` the one file Spark's writer (of Spark
+    `version`) makes of an empty frame of `schema`: no row group, and
+    the schema and footer of the pass's files. Returns its name."""
+    name = f"part-00000-{uuid.uuid4().hex}.parquet"
+    arrow = to_arrow_schema(schema).with_metadata(
+        _spark_footer(schema, version))
+    pq.ParquetWriter(os.path.join(data, name), arrow).close()
+    return name
 
 
 def stage_table(sink: _Sink, rows: dict, bucket: int) -> pa.Table | None:

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import session
-from ..operators.assemble import build_document_model
+from ..operators.assemble import build_document_model, write_empty_file
 # perfbench/layers.py times its layers by wrapping these names in this
 # module. The pass (build_document_model) compiles every document,
 # links it and writes its interactions, triples, JSON-LD and canonical
@@ -236,7 +236,8 @@ class SnapshotStore:
         rows, `started` the pass's start): delete every other entry of
         the stage's data directory, and write the manifest. A stage
         with no rows commits the one empty file with its schema that
-        Spark's writer makes of an empty frame. Raises if a file a task
+        Spark's writer makes of an empty frame, written here with
+        pyarrow (no Spark job). Raises if a file a task
         reported is not in the data directory as the driver sees it (a
         root the executors do not share with the driver)."""
         data_path = self._paths(stage)[0]
@@ -256,12 +257,10 @@ class SnapshotStore:
                             for f in files), key=lambda f: f["file"])
         else:
             t0 = time.time()
-            (spark.createDataFrame([], schema).write.mode("overwrite")
-                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
-                        "false")
-                .parquet(data_path))
+            name = write_empty_file(data_path, schema, spark.version)
             write_ms = int((time.time() - t0) * 1000)
-            files = self._footer_files(data_path)
+            files = [{"file": name, "rows": 0, "bucket_min": None,
+                      "bucket_max": None}]
         self._write_manifest(stage, schema, files, started, write_ms, 0)
         return spark.read.schema(schema).parquet(data_path)
 

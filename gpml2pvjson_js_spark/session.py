@@ -58,6 +58,26 @@ of 137-188 MB.
 - At interpreter exit, the process waits (up to `JVM_EXIT_WAIT_S`) for
   the driver JVM it launched, so that no JVM outlives it, a dumping one
   included.
+
+Python workers. Spark puts `$SPARK_HOME/python/lib/pyspark.zip`, its
+py4j zip and the `spark-core` jar at the front of every Python
+worker's `sys.path`. The zips hold no `.pyc`, so each daemon compiles
+pyspark from source (on a 4-vCPU host, a fresh interpreter that runs
+`import pyspark.daemon, pyspark.worker` took 1.0 s and 1.4 CPU-s from
+the zip, 0.3-0.4 s and 0.7-0.8 CPU-s from site-packages), and each
+task's `importlib.invalidate_caches()` re-reads the zips' directories
+(0.11-0.14 s a task; under 0.1 ms without them). When `get_spark`
+launches a local-master JVM itself, it sets
+`spark.python.daemon.module` to `_daemon` (`DAEMON_MODULE`), which
+drops Spark's entries of pyspark and of py4j from the path, each only
+when the interpreter's installed copy has the same `version.py`
+version as the zip, and keeps every other entry. Only then: on a
+cluster, or under `spark-submit`, the daemon module has to import
+before a task's pyFiles reach `sys.path`, so the package may not be
+importable there; for the same reason the module is set only when
+the launched workers import the package from the working directory,
+`PYTHONPATH` or site-packages, as the package's own kernels need. A
+caller's own `spark.python.daemon.module` wins.
 """
 
 from __future__ import annotations
@@ -67,6 +87,7 @@ import hashlib
 import os
 import re
 import shutil
+import site
 import subprocess
 import tempfile
 from typing import NamedTuple
@@ -94,6 +115,8 @@ CDS_MAGIC = bytes.fromhex("a8ab0bf0")
 CLASS_PATH_ENV = ("SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR")
 # how long interpreter exit waits for the driver JVM (a dump took 13-16 s)
 JVM_EXIT_WAIT_S = 120
+# Spark's Python daemon on a JVM get_spark launches (_daemon.py)
+DAEMON_MODULE = "gpml2pvjson_js_spark._daemon"
 
 
 class ClassDataSharing(NamedTuple):
@@ -160,6 +183,18 @@ def _java_home() -> str | None:
         return os.environ["JAVA_HOME"]
     java = shutil.which("java")
     return java and os.path.dirname(os.path.dirname(os.path.realpath(java)))
+
+
+def _workers_import_package() -> bool:
+    """Whether the Python workers of a local JVM launched now import
+    this package: the daemon runs with `-m` in the JVM's working
+    directory, which is this process's, on `PYTHONPATH` and
+    site-packages."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+             *site.getsitepackages(), site.getusersitepackages()]
+    return any(p and os.path.realpath(p) == os.path.realpath(root)
+               for p in paths)
 
 
 def plan_class_data_sharing(conf: dict) -> ClassDataSharing:
@@ -368,6 +403,9 @@ def get_spark(
     launch = (SparkContext._gateway is None
               and "PYSPARK_GATEWAY_PORT" not in os.environ)
     cds = plan_class_data_sharing(conf) if launch else None
+    if launch and re.fullmatch(r"local(\[[^\]]*\])?", master) \
+            and _workers_import_package():
+        conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
     if cds and cds.options:
         conf["spark.driver.defaultJavaOptions"] += " " + cds.options
     builder = SparkSession.builder.master(master).appName(app_name)

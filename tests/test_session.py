@@ -1,11 +1,13 @@
-"""Session defaults: sized from the host, and the driver JVM's options."""
+"""Session defaults: sized from the host, the driver JVM's options, and
+where the Python workers import pyspark from."""
 
 import os
+import zipfile
 
 import pytest
 from pyspark.sql import types as T
 
-from gpml2pvjson_js_spark import session
+from gpml2pvjson_js_spark import _daemon, session
 
 
 def _host_ram(monkeypatch, gib):
@@ -133,19 +135,31 @@ def test_cds_off_when_the_caller_sets_the_class_path_or_sharing(
 
 def test_cds_nothing_for_an_active_spark_context(spark, monkeypatch):
     """get_spark on a running session plans no sharing, registers no
-    exit wait and leaves SPARK_CONF_DIR alone."""
+    exit wait, sets no daemon module and leaves SPARK_CONF_DIR
+    alone."""
     import atexit
+
+    from pyspark.sql import SparkSession
 
     def fail(*_):
         raise AssertionError("planned or registered for a running JVM")
 
+    options = {}
+    get_or_create = SparkSession.Builder.getOrCreate
+
+    def spy(builder):
+        options.update(builder._options)
+        return get_or_create(builder)
+
     before = session.class_data_sharing()
     monkeypatch.setattr(session, "plan_class_data_sharing", fail)
     monkeypatch.setattr(atexit, "register", fail)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", spy)
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     assert session.get_spark(app_name="tests", master="local[8]") is spark
     assert session.class_data_sharing() is before
     assert "SPARK_CONF_DIR" not in os.environ
+    assert "spark.python.daemon.module" not in options
 
 
 def test_cds_never_publishes_an_incomplete_archive(spark_home):
@@ -184,6 +198,175 @@ def test_cds_never_publishes_an_incomplete_archive(spark_home):
     cds = session.plan_class_data_sharing({})
     assert cds == ("off", f"process {os.getpid()} is making the archive",
                    "", None, None)
+
+
+def test_python_workers_import_the_installed_pyspark(spark):
+    """The suite's session runs Spark's Python daemon from `_daemon`: a
+    task imports pyspark and py4j from outside any zip, no importer of
+    Spark's entries is cached, and `importlib.invalidate_caches()`,
+    which pyspark calls once per task, takes under 10 ms (0.11-0.14 s
+    with Spark's zips on the path)."""
+    assert spark.conf.get("spark.python.daemon.module") \
+        == session.DAEMON_MODULE
+
+    def probe(_):
+        import importlib
+        import sys
+        import time
+        import zipimport
+
+        import py4j
+        import pyspark
+        took = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            importlib.invalidate_caches()
+            took.append(time.perf_counter() - t0)
+        zips = [entry for entry, finder in sys.path_importer_cache.items()
+                if isinstance(finder, zipimport.zipimporter)]
+        yield (pyspark.__file__, py4j.__file__, sys.path,
+               _daemon.spark_entries(zips), min(took))
+
+    [(pyspark_file, py4j_file, path, spark_zips, took)] = \
+        spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    for file in (pyspark_file, py4j_file):
+        assert os.path.isfile(file), file
+    assert _daemon.spark_entries(path) == {}, path
+    assert spark_zips == {}
+    assert took < 0.010
+
+
+@pytest.fixture
+def worker_sys_path(tmp_path):
+    """A Python worker's `sys.path` as Spark starts it: the working
+    directory, Spark's pyspark 4.1.2 and py4j 0.10.9.9 zips and its
+    spark-core jar, a user `PYTHONPATH` directory and a pyFiles zip,
+    the standard library, and site-packages (`tmp_path / "site"`,
+    which installs nothing yet)."""
+    lib = tmp_path / "spark" / "python" / "lib"
+    lib.mkdir(parents=True)
+    zips = {"pyspark.zip": ("pyspark", "__version__: str = '4.1.2'\n"),
+            "py4j-0.10.9.9-src.zip": ("py4j", "__version__ = '0.10.9.9'\n")}
+    for name, (package, source) in zips.items():
+        with zipfile.ZipFile(lib / name, "w") as z:
+            z.writestr(f"{package}/version.py", source)
+    jar = tmp_path / "spark" / "jars" / "spark-core_2.13-4.1.2.jar"
+    jar.parent.mkdir()
+    jar.write_bytes(b"PK")
+    user = tmp_path / "user"
+    user.mkdir()
+    with zipfile.ZipFile(tmp_path / "deps.zip", "w") as z:
+        z.writestr("deps/__init__.py", "")
+    (tmp_path / "site").mkdir()
+    return [str(tmp_path / "cwd"), str(lib / "pyspark.zip"),
+            str(lib / "py4j-0.10.9.9-src.zip"), str(jar), str(user),
+            str(tmp_path / "deps.zip"), str(tmp_path / "stdlib"),
+            str(tmp_path / "site")]
+
+
+def _install(site: str, pyspark: str | None, py4j: str | None) -> None:
+    """Install pyspark and py4j (None: not at all) in `site`, as the
+    `version.py` the decision reads."""
+    for package, version in (("pyspark", pyspark), ("py4j", py4j)):
+        if version:
+            os.makedirs(os.path.join(site, package))
+            with open(os.path.join(site, package, "version.py"), "w") as f:
+                f.write(f'__version__ = "{version}"\n')
+
+
+def test_daemon_drops_spark_entries_the_installed_copies_match(
+        worker_sys_path):
+    """Installed pyspark and py4j of the zips' versions: the two zips
+    and the jar go, and every other entry stays in its place."""
+    cwd, pyspark_zip, py4j_zip, jar, *rest = worker_sys_path
+    _install(worker_sys_path[-1], "4.1.2", "0.10.9.9")
+    assert _daemon.spark_entries(worker_sys_path) == {
+        pyspark_zip: "pyspark", py4j_zip: "py4j", jar: "pyspark"}
+    assert _daemon.worker_path(worker_sys_path) == [cwd, *rest]
+
+
+@pytest.mark.parametrize("installed", ["4.1.1", None])
+def test_daemon_keeps_pyspark_zip_unless_the_installed_copy_matches(
+        worker_sys_path, installed):
+    """A pyspark of another version, or none installed, keeps Spark's
+    pyspark zip and the jar; py4j is still decided by its own
+    version."""
+    _install(worker_sys_path[-1], installed, "0.10.9.9")
+    py4j_zip = worker_sys_path[2]
+    assert _daemon.worker_path(worker_sys_path) \
+        == [e for e in worker_sys_path if e != py4j_zip]
+
+
+def test_daemon_decides_py4j_by_its_own_version(worker_sys_path):
+    _install(worker_sys_path[-1], "4.1.2", "0.10.9.7")
+    _, pyspark_zip, _, jar, *_ = worker_sys_path
+    assert _daemon.worker_path(worker_sys_path) \
+        == [e for e in worker_sys_path if e not in (pyspark_zip, jar)]
+
+
+def _launch_conf(monkeypatch, master: str) -> dict:
+    """The settings get_spark would launch a driver JVM with for
+    `master` when no JVM runs yet, taken at `getOrCreate`, which then
+    raises instead of launching one."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    class Launched(Exception):
+        pass
+
+    conf = {}
+
+    def get_or_create(builder):
+        conf.update(builder._options)
+        raise Launched
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    with pytest.raises(Launched):
+        session.get_spark(master=master)
+    return conf
+
+
+@pytest.mark.parametrize("master", ["local", "local[2]", "local[*]"])
+def test_local_launch_runs_the_daemon_module(spark_home, monkeypatch,
+                                             master):
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    conf = _launch_conf(monkeypatch, master)
+    assert conf["spark.python.daemon.module"] == session.DAEMON_MODULE
+
+
+@pytest.mark.parametrize("master", ["spark://h:7077", "yarn",
+                                    "local-cluster[2,1,1024]"])
+def test_non_local_master_gets_no_daemon_module(spark_home, monkeypatch,
+                                                master):
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert "spark.python.daemon.module" not in _launch_conf(monkeypatch,
+                                                            master)
+
+
+def test_session_get_spark_did_not_launch_gets_no_daemon_module(
+        spark_home, monkeypatch):
+    """Under spark-submit (a gateway handed over) get_spark launches no
+    JVM, so it sets no daemon module, as for a running SparkContext
+    (test_cds_nothing_for_an_active_spark_context)."""
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    assert "spark.python.daemon.module" not in _launch_conf(monkeypatch,
+                                                            "local[2]")
+
+
+def test_no_daemon_module_when_workers_cannot_import_the_package(
+        spark_home, monkeypatch, tmp_path):
+    """A driver that imported the package from a path its workers do
+    not have (here: another working directory, no PYTHONPATH, nothing
+    in site-packages) keeps Spark's own daemon, which every worker can
+    import."""
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(session.site, "getsitepackages", lambda: [])
+    monkeypatch.setattr(session.site, "getusersitepackages", lambda: "")
+    assert "spark.python.daemon.module" not in _launch_conf(monkeypatch,
+                                                            "local[2]")
 
 
 def test_package_reads_only_the_deployment_env_names():

@@ -1,14 +1,18 @@
 #!/usr/bin/env python3
-"""Where a cold `pipeline` batch spends its CPU, by JVM thread kind.
+"""Where a cold benchmark run spends its CPU, by JVM thread kind.
 
-    python3 tools/jvm_cpu_split.py [--seed N]
+    python3 tools/jvm_cpu_split.py [--workload pipeline|bulk] [--seed N]
 
 Run from the repository root. Starts a fresh Spark session with the
 benchmark's settings (perfbench/run.py `spark_conf`, local[nproc]),
-writes the seed's first `pipeline` batch (perfbench/workloads.plan) to
-parquet and runs it through one `Pipeline.run(resume=False)`. Prints
-CPU seconds, read from /proc, for the set-up (JVM start to the batch's
-start) and for the batch:
+writes the seed's first batch of the workload (perfbench/workloads.plan;
+default `pipeline`, 33 pages; `bulk` is its 380-page corpus) to parquet
+and runs it once through the workload's runner (perfbench/stages.py
+`RUNNERS`: one `Pipeline.run(resume=False)` for `pipeline`, the
+mentions, quarantine and text commits for `bulk`), as the benchmark's
+first timed run does. perfbench is only read. Prints CPU seconds, read
+from /proc, for the set-up (JVM start to the batch's start) and for
+the batch:
 - the driver JVM, split by thread name into the JIT compilers (C2,
   C1), executor task threads, GC and the rest;
 - the Python daemons the JVM forks, and the workers they fork (with
@@ -219,12 +223,14 @@ def report(setup: dict, batch: dict, wall: tuple[float, float],
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("--workload", choices=("pipeline", "bulk"),
+                   default="pipeline")
     p.add_argument("--seed", type=int, default=1)
     args = p.parse_args(argv)
 
     import run as bench_run
+    import stages
     import workloads
-    from gpml2pvjson_js_spark.plans.pipeline import Pipeline
     from gpml2pvjson_js_spark.session import class_data_sharing, get_spark
 
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -238,16 +244,16 @@ def main(argv=None) -> int:
                           extra_conf=bench_run.spark_conf(tmp))
         threads = JvmThreads(spark.sparkContext._gateway.proc.pid)
         threads.thread.start()
-        pages = workloads.plan("pipeline", args.seed, 0)
+        spec = workloads.WORKLOADS[args.workload]
+        pages = workloads.plan(args.workload, args.seed, 0)
         path = os.path.join(tmp, "pages")
-        workloads.write_pages(pages, path,
-                              workloads.WORKLOADS["pipeline"]["files"])
-        pipe = Pipeline(spark,
-                        spark.read.schema(workloads.PAGES_DDL).parquet(path),
-                        os.path.join(tmp, "out"))
+        workloads.write_pages(pages, path, spec["files"])
+        runner = stages.RUNNERS[spec["stages"]](
+            spark, spark.read.schema(workloads.PAGES_DDL).parquet(path),
+            os.path.join(tmp, "out"))
         first_job = next_job_id(spark)
         (setup, setup_seen), t1 = threads.snapshot(), time.monotonic()
-        pipe.run(resume=False)
+        runner.run()
         (end, batch_seen), t2 = threads.snapshot(), time.monotonic()
         work = spark_work(spark, first_job)
     finally:
@@ -257,8 +263,8 @@ def main(argv=None) -> int:
         if spark is not None:
             bench_run.stop_spark(spark)
         shutil.rmtree(tmp, ignore_errors=True)
-    print(f"pipeline batch 0 of seed {args.seed}: {len(pages)} pages, "
-          f"cold driver JVM")
+    print(f"{args.workload} batch 0 of seed {args.seed}: {len(pages)} "
+          "pages, cold driver JVM")
     print(f"class-data sharing: {class_data_sharing()}")
     report(setup, {k: end[k] - setup[k] for k in end}, (t1 - t0, t2 - t1),
            (setup_seen, batch_seen), work)
