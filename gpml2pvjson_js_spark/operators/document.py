@@ -34,7 +34,8 @@ mention rows to `compile_document`, which
    - edge points: attachment against node/state/group/anchor targets,
      with the anchor hop to the anchor's edge (J7,
      ref: src/edge/edge.ts:148-317);
-   - Elbow/Curved waypoints, via `waypoints.resolve_document` (F4/F5);
+   - Elbow/Curved waypoints (F4/F5), `waypoints.resolve_document`:
+     hyperedges in the level order of `plans.topo.kahn_levels`;
    - members re-based to their group's origin, gaining isPartOf (A4,
      ref: src/2013a/toPvjson.ts:800-860);
    - burrs on their hosts, group and pathway `contains`, each sorted
@@ -78,8 +79,6 @@ a worker's memory does not grow with its partition.
 from __future__ import annotations
 
 from collections import defaultdict
-
-import pandas as pd
 
 from pyspark.sql import types as T
 
@@ -249,23 +248,6 @@ def _resolve_points(edge: dict, target) -> None:
     edge["endpoint_last_ref"] = edge_refs[-1]
 
 
-def _synthesize_waypoints(edges: list[dict]) -> None:
-    """The waypoint pass over this document's edges, through
-    waypoints.resolve_document and its level order and MAX_ROUNDS."""
-    if not any(e["curvy"] for e in edges):
-        return
-    pdf = pd.DataFrame({
-        "pos": range(len(edges)),
-        W._ROLE: [bool(e["curvy"]) for e in edges],
-        **{c: [e.get(c) for e in edges]
-           for c in ("id", "endpoint_first_ref", "endpoint_last_ref",
-                     "is_attached_to", "points")},
-    })
-    out = W.resolve_document(pdf)
-    for pos, points in zip(out["pos"], out["points"]):
-        edges[pos]["points"] = points
-
-
 def _resolve(els: list[dict]) -> tuple[set, list]:
     """Resolve the references among a document's element rows in
     place; returns the kept groups' elem_idx and the pathway's
@@ -317,7 +299,7 @@ def _resolve(els: list[dict]) -> tuple[set, list]:
     edges = [e for e in els if e["gpml_element_name"] in E.EDGE_NAMES]
     for e in edges:
         _resolve_points(e, target)
-    _synthesize_waypoints(edges)
+    W.resolve_document(edges)
 
     # 5. rebase members of kept groups
     for e in els:

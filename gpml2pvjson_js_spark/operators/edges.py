@@ -12,7 +12,6 @@ converted points `convert_edge` leaves in `pts`.
 from __future__ import annotations
 
 from . import entities as N
-from . import waypoints as W
 from ..functions import converters as C
 from ..functions.mappings import MARKER_MAPPINGS
 
@@ -76,7 +75,6 @@ def convert_edge(r: dict) -> dict:
         "stroke_dasharray": C.stroke_dasharray(eff["line_style"]),
         "fill": C.fill(eff["fill_color"], eff["shape_type"], True),
         "citations": N.citation_ids(r["biopax_refs"]),
-        "curvy": draw in W._CURVY,
         "pts": pts,
         # what a State attached to the edge measures its offset by
         "width": width,

@@ -138,7 +138,7 @@ def convert_node(r: dict) -> dict:
     if is_anchor and position is not None:
         # the array Arrow delivered here before the kernel computed it:
         # the anchor hop hands it on, and hyperedge_start_orientation's
-        # truth test of it raises (ROADMAP item 5 pins that defect)
+        # truth test of it raises (ROADMAP item 4 pins that defect)
         att_pos = np.array([position, 0.0])
     else:
         att_pos = _rel(r["rel_x"], r["rel_y"], C.rel_position_scalar)

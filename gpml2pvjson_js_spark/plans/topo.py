@@ -7,11 +7,14 @@ and dependency rows reach one Python call (`document_levels`).
 An entity's dependencies are what must be resolved before it
 (contains ∪ isAttachedTo ∪ isAttachedToOrVia). Both kinds of row
 travel in ONE frame with a role flag rather than as a `cogroup` of two
-frames, as in `waypoints.synthesize_waypoints`: cogroup segfaulted
-inside pyarrow 16.1. Entities left unresolved — a cycle, or a
-dependency that names no entity of the document — get level -1,
-matching the reference's cycle tolerance (leftovers appended
-unsorted).
+frames: cogroup segfaulted inside pyarrow 16.1. Entities left
+unresolved — a cycle, or a dependency that names no entity of the
+document — get level -1, matching the reference's cycle tolerance
+(leftovers appended unsorted).
+
+`kahn_levels` is the package's one level order: the document
+compiler's hyperedge waypoints (operators/waypoints.py) take theirs
+from it too, over the row indices of a document's curvy edges.
 """
 
 from __future__ import annotations

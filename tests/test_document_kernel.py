@@ -185,7 +185,7 @@ def test_anchor_hop():
         _edge(3, "e2", [_pt(0, 50.0, 50.0, "n1", (-1.0, 1.0)),
                         _pt(1, 40.0, 0.0, "an")]))
     # the anchor's position as the numpy array the anchor hop hands on
-    # (ROADMAP item 5 pins the defect it keeps)
+    # (ROADMAP item 4 pins the defect it keeps)
     position = got["an"]["attachment_position"]
     assert isinstance(position, np.ndarray)
     assert list(position) == [0.4, 0.0]
@@ -206,6 +206,28 @@ def test_anchor_hop():
     first = got["e1"]["points"][0]
     assert first["orientation"] == [1.0, 0.0]
     assert got["e1"]["burrs"] == ["an"]
+
+
+@pytest.mark.xfail(strict=True, reason=(
+    "known defect kept for the benchmark pins: entities.convert_node "
+    "builds an anchor's attachment_position as a numpy array, the "
+    "anchor hop hands it on, and its truth test raises inside "
+    "hyperedge_start_orientation, so the edge keeps its explicit "
+    "points"))
+def test_elbow_anchored_with_position_gets_its_points():
+    got, _ = _run(
+        _el(0, "DataNode", "n1"),
+        _edge(1, "e1", [_pt(0, 0.0, 0.0, "n1", (1.0, 0.0)),
+                        _pt(1, 100.0, 0.0)]),
+        _el(2, "Anchor", "an", x=None, y=None, width=None, height=None,
+            graph_ref="e1", position=0.4),
+        # no orientation: the anchor picks it from e1's points
+        _edge(3, "e2", [_pt(0, 40.0, 0.0, "an"), _pt(1, 90.0, 60.0)],
+              connector_type="Elbow"))
+    e2 = got["e2"]
+    assert e2["draw_as"] == "ElbowLine"
+    assert e2["endpoint_first_ref"] == "e1"
+    assert len(e2["points"]) > 2
 
 
 def test_dangling_group_ref_and_graph_ref_do_not_throw():

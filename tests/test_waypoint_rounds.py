@@ -5,10 +5,16 @@ points). Within one (url, frag), a curvy edge is ready once none of
 its `is_attached_to` refs names a curvy edge still unresolved; levels
 deeper than MAX_ROUNDS and cycles pass through unchanged."""
 
+import subprocess
+import sys
+
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import types as T
 
+from gpml2pvjson_js_spark.operators import waypoints as W
 from gpml2pvjson_js_spark.operators.waypoints import (
     MAX_ROUNDS, synthesize_waypoints)
 
@@ -177,12 +183,9 @@ def test_edge_anchored_to_straight_edge_gets_its_points(by_key):
     assert got != _expected("a1")
 
 
-@pytest.mark.xfail(strict=True, reason=(
-    "known defect kept for the benchmark pins: the anchor hop hands "
-    "the anchor's attachment_position on as a numpy array, whose truth "
-    "test raises inside hyperedge_start_orientation, so the edge "
-    "keeps its explicit points"))
 def test_edge_anchored_with_position_gets_its_points(by_key):
+    # the frame hands the position on as a list; the document kernel's
+    # anchor hop does not (test_document_kernel.py)
     assert _xy(by_key["u", "h1"]["points"]) == \
         _expected("h1", src=by_key["u", "s1"]["points"])
 
@@ -206,3 +209,172 @@ def test_documents_sharing_ids_stay_independent(by_key):
     # "v" has no c2, so its c1 is ready at level 1
     assert len(by_key["v", "c1"]["points"]) > 2
 
+
+# --- the level order against the round loop it replaced ---------------
+
+CURVY = ("ElbowLine", "CurvedLine")
+
+
+def _tag(points) -> str:
+    return "-" if not points else ",".join(p["marker"] for p in points)
+
+
+def _stub_geometry(points, first_points, last_points):
+    """Stands in for calculate_all_points: one point whose marker
+    spells out which points fed it; raises on a `boom` edge."""
+    if "boom" in _tag(points):
+        raise ValueError("degenerate geometry")
+    return [{"x": 0.0, "y": 0.0, "marker": f"({_tag(points)}<"
+             f"{_tag(first_points)}|{_tag(last_points)}>)"}]
+
+
+def _copy(points):
+    return [dict(p) for p in points] \
+        if points is not None and len(points) else None
+
+
+def _round_loop(edges: list[dict]) -> list:
+    """The oracle: the per-document round loop that kahn_levels
+    replaced, in plain Python. -> every edge's points."""
+    curvy = [e for e in edges if e["draw_as"] in CURVY]
+    pool = {e["id"]: e["points"] for e in edges
+            if e["draw_as"] not in CURVY}
+    ids = [e["id"] for e in curvy]
+    refs = [set(e["is_attached_to"] or ()) for e in curvy]
+    points = [e["points"] for e in curvy]
+    pending = list(range(len(curvy)))
+    for _ in range(MAX_ROUNDS):
+        unresolved = {ids[i] for i in pending}
+        ready = [i for i in pending if not refs[i] & unresolved]
+        if not ready:
+            break
+        level = []
+        for i in ready:
+            try:
+                pts = _stub_geometry(
+                    [dict(p) for p in points[i]],
+                    _copy(pool.get(curvy[i]["endpoint_first_ref"])),
+                    _copy(pool.get(curvy[i]["endpoint_last_ref"])))
+            except Exception:
+                pts = points[i]
+            level.append((i, pts))
+        for i, pts in level:
+            points[i] = pool[ids[i]] = pts
+        done = set(ready)
+        pending = [i for i in pending if i not in done]
+    out = dict(zip(map(id, curvy), points))
+    return [out.get(id(e), e["points"]) for e in edges]
+
+
+# repeated and None ids; refs to nodes ("n") and absent ids ("zz")
+_IDS = st.sampled_from(["a", "b", "c", "d", None])
+_REFS = st.sampled_from(["a", "b", "c", "d", None, "n", "zz"])
+
+
+@st.composite
+def _documents(draw):
+    edges = []
+    for row in range(draw(st.integers(0, 9))):
+        n_points = draw(st.sampled_from([None, 0, 1, 2]))
+        boom = draw(st.integers(0, 5)) == 0
+        refs = draw(st.one_of(st.none(), st.lists(_REFS, max_size=3)))
+        # an endpoint ref is mostly one of the edge's refs
+        ends = st.one_of(st.sampled_from(refs), _REFS) if refs else _REFS
+        edges.append({
+            "id": draw(_IDS),
+            "draw_as": draw(st.sampled_from(
+                ["ElbowLine", "CurvedLine", "StraightLine", None])),
+            "is_attached_to": refs,
+            "endpoint_first_ref": draw(ends),
+            "endpoint_last_ref": draw(ends),
+            "points": None if n_points is None else [
+                {"x": 0.0, "y": 0.0,
+                 "marker": f"{'boom' if boom else 'r'}{row}.{k}"}
+                for k in range(n_points)],
+        })
+    return edges
+
+
+def _chain(order, depth):
+    """A chain k0 <- k1 <- ... hanging off a straight edge s, its rows
+    in `order`."""
+    rows = [{"id": f"k{i}", "draw_as": "ElbowLine",
+             "is_attached_to": [f"k{i - 1}" if i else "s"],
+             "endpoint_first_ref": f"k{i - 1}" if i else "s",
+             "endpoint_last_ref": None,
+             "points": [{"x": 0.0, "y": 0.0, "marker": f"k{i}"}]}
+            for i in range(depth)]
+    straight = {"id": "s", "draw_as": "StraightLine",
+                "is_attached_to": None, "endpoint_first_ref": None,
+                "endpoint_last_ref": None,
+                "points": [{"x": 0.0, "y": 0.0, "marker": "s"}]}
+    return [straight, *(rows[i] for i in order)]
+
+
+def _resolved(edges, monkeypatch) -> list:
+    monkeypatch.setattr(W, "calculate_all_points", _stub_geometry)
+    W.resolve_document(edges)
+    return [e["points"] for e in edges]
+
+
+_PROPERTY = settings(max_examples=600, deadline=None, derandomize=True,
+                     suppress_health_check=[
+                         HealthCheck.too_slow,
+                         HealthCheck.function_scoped_fixture])
+
+
+@_PROPERTY
+@given(_documents())
+@example([  # self-reference, a two-cycle and a ref to a straight edge
+    {"id": "a", "draw_as": "ElbowLine", "is_attached_to": ["a"],
+     "endpoint_first_ref": "a", "endpoint_last_ref": None,
+     "points": [{"x": 0.0, "y": 0.0, "marker": "a"}]},
+    {"id": "b", "draw_as": "CurvedLine", "is_attached_to": ["c"],
+     "endpoint_first_ref": "c", "endpoint_last_ref": None,
+     "points": [{"x": 0.0, "y": 0.0, "marker": "b"}]},
+    {"id": "c", "draw_as": "ElbowLine", "is_attached_to": ["b"],
+     "endpoint_first_ref": "b", "endpoint_last_ref": None,
+     "points": [{"x": 0.0, "y": 0.0, "marker": "c"}]},
+    {"id": "d", "draw_as": "ElbowLine", "is_attached_to": ["s"],
+     "endpoint_first_ref": "s", "endpoint_last_ref": "s",
+     "points": [{"x": 0.0, "y": 0.0, "marker": "d"}]},
+    {"id": "s", "draw_as": "StraightLine", "is_attached_to": None,
+     "endpoint_first_ref": None, "endpoint_last_ref": None,
+     "points": [{"x": 0.0, "y": 0.0, "marker": "s"}]},
+])
+@example([  # two rows of one id in a level: the later joins the pool
+    {"id": "a", "draw_as": "ElbowLine", "is_attached_to": None,
+     "endpoint_first_ref": None, "endpoint_last_ref": None,
+     "points": [{"x": 0.0, "y": 0.0, "marker": "a0"}]},
+    {"id": "a", "draw_as": "CurvedLine", "is_attached_to": None,
+     "endpoint_first_ref": None, "endpoint_last_ref": None,
+     "points": [{"x": 0.0, "y": 0.0, "marker": "a1"}]},
+    {"id": "b", "draw_as": "ElbowLine", "is_attached_to": ["a"],
+     "endpoint_first_ref": "a", "endpoint_last_ref": None,
+     "points": [{"x": 0.0, "y": 0.0, "marker": "b"}]},
+])
+def test_levels_match_the_round_loop(monkeypatch, edges):
+    expected = _round_loop(edges)
+    assert _resolved(edges, monkeypatch) == expected
+
+
+@_PROPERTY
+@given(st.integers(1, 9).flatmap(
+    lambda n: st.tuples(st.just(n), st.permutations(range(n)))))
+def test_shuffled_chains_match_the_round_loop(monkeypatch, chain):
+    depth, order = chain
+    edges = _chain(order, depth)
+    expected = _round_loop(edges)
+    got = _resolved(edges, monkeypatch)
+    assert got == expected
+    # the first MAX_ROUNDS links resolve; the rest keep their points
+    resolved = sum(p[0]["marker"].startswith("(") for p in got[1:])
+    assert resolved == min(depth, MAX_ROUNDS)
+
+
+def test_the_pass_imports_no_pandas():
+    """What the pass's pickled function loads in a Python worker
+    (operators.assemble) imports no pandas."""
+    code = ("import sys, gpml2pvjson_js_spark.operators.assemble; "
+            "assert 'pandas' not in sys.modules, 'pandas imported'")
+    subprocess.run([sys.executable, "-c", code], check=True)
