@@ -20,14 +20,22 @@ The pass (`write_pass`) is one `mapInArrow` over the pages as
 `SnapshotStore.layout` lays them out (the batch's one exchange),
 sorted within partitions on (bucket, url), so the pages of one url are
 adjacent and every output comes out sorted by bucket. Each task
-compiles its pages one url at a time (document.compile_page_group),
-turns each output's rows into an Arrow table of that output's own
-frame (frames.OUTPUTS) plus `bucket`, and streams them into one
-parquet file per output it holds rows of, a row group at a time
-(ROW_GROUP_BYTES), so a task holds one url's rows and at most a row
-group per output, however large its partition. Each file has a
-hidden temp name unique to the task attempt until the task has
-written its partition, then is renamed. It yields one row per file
+compiles its pages one url at a time (document.compile_page_group;
+a url whose compile raises gets one quarantine row, `compile:` and
+the exception's type, and the rest of the partition goes on). Each
+output keeps its compiled rows pending, with the bucket of each row,
+until their estimated Arrow bytes reach a row group
+(ROW_GROUP_BYTES); then one `stage_table` call turns them into an
+Arrow table of that output's own frame (frames.OUTPUTS) plus
+`bucket`, which is written to the output's parquet file as one row
+group. So a task builds one table per row group, not one per url,
+and holds one url's rows plus, per output, the pending rows of at
+most one row group, however large its partition. Those rows are
+Python rows, which take about twice their Arrow bytes (the compiled
+rows of the 380-page `bulk` corpus: 27 MB under tracemalloc, for 14.6
+MB of Arrow tables over the 13 outputs). Each file has a hidden temp
+name unique to the task attempt until the task has written its
+partition, then is renamed. It yields one row per file
 (FILE_ROW). Collecting those rows is the batch's only action,
 so a batch runs two Spark jobs: the layout's map stage and the pass.
 The driver then commits each output from its rows
@@ -59,8 +67,9 @@ of scope.
 Without a store, `build_document_model` writes the pass into a
 temporary store on the driver, removed at interpreter exit, so it
 needs a local master (it refuses any other), and returns its frames
-read back from the snapshots: the operators, the driver contract and
-the benchmarks read what the pipeline commits, through the same code.
+read from the snapshots with `SnapshotStore.read`, the one read path
+of the package: the operators, the driver contract and the benchmarks
+read what the pipeline commits, through the same code.
 A per-document topo-level operator is still provided in plans/topo.py
 for hyperedge-depth diagnostics and cycle quarantine.
 """
@@ -76,7 +85,8 @@ import time
 import uuid
 from collections import Counter
 from itertools import groupby
-from typing import NamedTuple
+from operator import itemgetter
+from typing import Callable, NamedTuple
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -89,7 +99,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from . import document as D
 from . import frames
 from .linking import link_index
-from .parse import text_schema
+from .parse import MENTIONS_SCHEMA, text_schema
 
 BUCKET = T.StructField("bucket", T.IntegerType())
 # one row per file the pass wrote; a task's compile seconds and its
@@ -125,17 +135,31 @@ class _Sink(NamedTuple):
     # per frame field: the row field it reads, and the zero a null in it
     # commits as (None for a nullable field)
     fields: list[tuple[str, object]]
+    # a row's Arrow bytes of fixed width (values, and offsets of the
+    # variable-width ones), and the getter of its variable-width values
+    # (arrow_bytes)
+    fixed: int
+    sized: Callable[[dict], tuple]
 
 
 def _sink(stage: str, data: str, schema: T.StructType,
           out: frames.Output, version: str) -> _Sink:
     footer = _spark_footer(schema, version)
-    return _Sink(
-        stage, data, to_arrow_schema(schema).with_metadata(footer),
-        out.roles,
-        [(out.read.get(f.name, f.name),
-          None if f.nullable else frames.zero(f.dataType))
-         for f in schema.fields if f.name != "bucket"])
+    arrow = to_arrow_schema(schema).with_metadata(footer)
+    fields = [(out.read.get(f.name, f.name),
+               None if f.nullable else frames.zero(f.dataType))
+              for f in schema.fields if f.name != "bucket"]
+    fixed, sized = 4, []  # 4: the int32 bucket
+    for (name, _), field in zip(fields, arrow):
+        if pa.types.is_primitive(field.type):
+            fixed += (field.type.bit_width + 7) // 8
+        else:
+            fixed += 4  # its offset
+            sized.append(name)
+    # every output has two variable-width fields or more (url and
+    # another), so the getter returns a tuple
+    return _Sink(stage, data, arrow, out.roles, fields, fixed,
+                 itemgetter(*sized))
 
 
 def write_empty_file(data: str, schema: T.StructType, version: str) -> str:
@@ -149,20 +173,37 @@ def write_empty_file(data: str, schema: T.StructType, version: str) -> str:
     return name
 
 
-def stage_table(sink: _Sink, rows: dict, bucket: int) -> pa.Table | None:
-    """The rows of `sink`'s roles out of one url's rows by role, as its
-    Arrow table, each with `bucket`; None when there are none."""
-    recs = [r for role in sink.roles for r in rows.get(role, ())]
-    if not recs:
-        return None
+def stage_table(sink: _Sink, recs: list[dict],
+                buckets: list[int]) -> pa.Table:
+    """`sink`'s rows `recs` (of its roles, any number of urls) as its
+    Arrow table, each row with its bucket in `buckets`."""
     columns = []
     for (name, zero), field in zip(sink.fields, sink.schema):
         values = [r[name] for r in recs]
         if zero is not None:
             values = [zero if v is None else v for v in values]
         columns.append(pa.array(values, field.type))
-    columns.append(pa.array([bucket] * len(recs), pa.int32()))
+    columns.append(pa.array(buckets, pa.int32()))
     return pa.Table.from_arrays(columns, schema=sink.schema)
+
+
+def arrow_bytes(sink: _Sink, recs: list[dict]) -> int:
+    """An estimate of the Arrow bytes of `sink`'s rows `recs`, cheap
+    beside building their table: each row's fixed-width bytes, plus the
+    length of each of its variable-width values (a string's characters,
+    a list's or a map's entries)."""
+    return sink.fixed * len(recs) + sum([
+        len(v) for r in recs for v in sink.sized(r) if v is not None])
+
+
+def _compile_error(url: str, exc: Exception) -> dict:
+    """The quarantine row of a url whose compile raised `exc`: a
+    mention row with `error` `compile: <type>`, frag 0 and every other
+    field null."""
+    row = dict.fromkeys(MENTIONS_SCHEMA.names)
+    row.update(url=url, frag=0, gpml_element_name="_error",
+               error=f"compile: {type(exc).__name__}")
+    return row
 
 
 def _pages_by_url(batches):
@@ -175,17 +216,20 @@ def _pages_by_url(batches):
         yield bucket, [(url, html) for url, html, _ in group]
 
 
-# the Arrow bytes of one output a pass task buffers before it writes
-# them as a row group: with one url's rows, what a task holds per
-# output, however many pages its partition has
+# the estimated Arrow bytes (arrow_bytes) of one output's rows that a
+# pass task keeps pending before it writes them as a row group: with
+# one url's rows, what a task holds per output, however many pages its
+# partition has. The pending rows are Python rows, which take about
+# twice their Arrow bytes.
 ROW_GROUP_BYTES = 8 << 20
 
 
 class _File:
-    """One output's file of one task attempt. It is opened under a
-    hidden temp name when its first rows come; its rows are buffered
-    up to a row group's bytes, then written; `close` renames it into
-    place."""
+    """One output's file of one task attempt. Its rows stay pending,
+    each with its bucket, until their estimated Arrow bytes reach a
+    row group; then one table of them is written as one row group,
+    into the file, which is opened under a hidden temp name on its
+    first. `close` writes the rest and renames the file into place."""
 
     def __init__(self, sink: _Sink, name: str, row_group_bytes: int):
         self.sink, self.name = sink, name
@@ -193,32 +237,43 @@ class _File:
         self.tmp = os.path.join(sink.data, f".{name}.tmp")
         self.row_group_bytes = row_group_bytes
         self.writer = None
-        self.buffer, self.buffered = [], 0
-        self.rows, self.lo, self.hi, self.write_s = 0, None, None, 0.0
+        self.pending, self.buckets, self.pending_bytes = [], [], 0
+        self.rows, self.lo, self.hi = 0, None, None
+        self.arrow_s = self.write_s = 0.0
 
-    def add(self, table: pa.Table, bucket: int) -> None:
-        self.buffer.append(table)
-        self.buffered += table.nbytes
-        self.rows += table.num_rows
+    def add(self, rows: dict, bucket: int) -> None:
+        """Add the output's rows out of one url's `rows` by role."""
+        recs = [r for role in self.sink.roles for r in rows.get(role, ())]
+        if not recs:
+            return
+        t0 = time.perf_counter()
+        self.pending += recs
+        self.buckets += [bucket] * len(recs)
+        self.pending_bytes += arrow_bytes(self.sink, recs)
+        self.arrow_s += time.perf_counter() - t0
+        self.rows += len(recs)
         self.lo = bucket if self.lo is None else min(self.lo, bucket)
         self.hi = bucket if self.hi is None else max(self.hi, bucket)
-        if self.buffered >= self.row_group_bytes:
+        if self.pending_bytes >= self.row_group_bytes:
             self._flush()
 
     def _flush(self) -> None:
         t0 = time.perf_counter()
+        table = stage_table(self.sink, self.pending, self.buckets)
+        self.pending, self.buckets, self.pending_bytes = [], [], 0
+        t1 = time.perf_counter()
         if self.writer is None:
             self.writer = pq.ParquetWriter(self.tmp, self.sink.schema)
-        self.writer.write_table(pa.concat_tables(self.buffer))
-        self.buffer, self.buffered = [], 0
-        self.write_s += time.perf_counter() - t0
+        self.writer.write_table(table)
+        self.arrow_s += t1 - t0
+        self.write_s += time.perf_counter() - t1
 
     def close(self) -> dict | None:
-        """Write what is buffered, close and rename the file: its
+        """Write what is pending, close and rename the file: its
         FILE_ROW fields; None if it got no rows."""
         if not self.rows:
             return None
-        if self.buffer:
+        if self.pending:
             self._flush()
         t0 = time.perf_counter()
         self.writer.close()
@@ -245,7 +300,9 @@ def _pass(index, sinks: list[_Sink], run: str, row_group_bytes: int):
     files, written, as FILE_ROW batches. A task writes one file per
     output it holds rows of, named for its attempt (`taskAttemptId` is
     unique in the application, so no two attempts share a name, and a
-    failed attempt removes only its own files)."""
+    failed attempt removes only its own files). A url whose compile
+    raises gets its `_compile_error` row instead of its rows. A task's
+    `compile_s` is its compile plus its Arrow tables."""
 
     def write_partition(batches):
         ctx = TaskContext.get()
@@ -256,13 +313,13 @@ def _pass(index, sinks: list[_Sink], run: str, row_group_bytes: int):
         try:
             for bucket, pages in _pages_by_url(batches):
                 t0 = time.perf_counter()
-                rows = D.compile_page_group(pages, index)
-                tables = [(f, stage_table(f.sink, rows, bucket))
-                          for f in files]
+                try:
+                    rows = D.compile_page_group(pages, index)
+                except Exception as exc:
+                    rows = {"quarantine": [_compile_error(pages[0][0], exc)]}
                 compile_s += time.perf_counter() - t0
-                for f, table in tables:
-                    if table is not None:
-                        f.add(table, bucket)
+                for f in files:
+                    f.add(rows, bucket)
                 quarantined.update(r["error"].split(":", 1)[0]
                                    for r in rows["quarantine"]
                                    if r["error"] is not None)
@@ -271,6 +328,7 @@ def _pass(index, sinks: list[_Sink], run: str, row_group_bytes: int):
             for f in files:
                 f.abort()
             raise
+        compile_s += sum(f.arrow_s for f in files)
         out = [{**w, "task": ctx.partitionId(), "compile_s": compile_s,
                 "quarantined": list(quarantined.items())}
                for w in written if w is not None]
@@ -346,9 +404,9 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
     Without one, it writes every output into a temporary store on the
     driver (so only with a local master; it is removed at interpreter
     exit, as the frames read it lazily), commits them, and returns the
-    model: each output (frames.OUTPUTS) by name, read back from its
-    snapshot as its frame, and `mentions` holds only the ok mention
-    rows (`quarantine` the others)."""
+    model: each output (frames.OUTPUTS) by name, read from its snapshot
+    (`SnapshotStore.read`) as its frame, and `mentions` holds only the
+    ok mention rows (`quarantine` the others)."""
     if store is not None:
         return write_pass(spark, pages, store, stages)
     if not spark.sparkContext.master.startswith("local"):
@@ -363,10 +421,9 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
     written = write_pass(spark, pages, store, frames.OUTPUTS)
     model = {}
     for stage, schema in written.schemas.items():
-        committed = store.commit_files(spark, stage, schema,
-                                       written.files[stage],
-                                       written.started)
-        model[stage] = frames.as_frame(committed,
+        store.commit_files(spark, stage, schema, written.files[stage],
+                           written.started)
+        model[stage] = frames.as_frame(store.read(spark, stage),
                                        T.StructType(schema.fields[:-1]))
     model["mentions"] = model["mentions"].filter(
         F.col("gpml_element_name") != "_error")

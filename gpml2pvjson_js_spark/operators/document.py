@@ -57,11 +57,12 @@ last element carrying it in document order, like the reference's
 `entitiesById` overwrite.
 
 The kernel returns the rows by role (frames.FRAMES) as Python dicts;
-the pass (assemble.py) turns them into one Arrow table per snapshot
-and streams it into that snapshot's file. The model values are those the earlier Catalyst
-projections produced, nulls and NaNs included; the string casts follow
-Spark's ANSI mode, so input that made those projections raise makes
-the kernel raise.
+the pass (assemble.py) gathers each snapshot's rows over its urls into
+one Arrow table per row group of that snapshot's file. The model values
+are those the earlier Catalyst projections produced, nulls and NaNs
+included; the string casts follow Spark's ANSI mode, so input that
+made those projections raise makes the kernel raise (the pass
+quarantines such a url).
 
 The rows stay plain Python values, without pandas: most documents are
 small, and building a pandas frame of some 90 columns per document
@@ -72,8 +73,9 @@ holds.
 Bound: the kernel sees a whole page at once, so one page's html and
 mention rows must fit in one Python worker's memory; a page with tens
 of thousands of elements is still a few MB. Beyond that, the pass
-holds at most a row group per output (assemble.ROW_GROUP_BYTES), so
-a worker's memory does not grow with its partition.
+holds at most a row group of pending rows per output, by their
+estimated Arrow bytes (assemble.ROW_GROUP_BYTES), so a worker's
+memory does not grow with its partition.
 """
 
 from __future__ import annotations

@@ -15,6 +15,11 @@ writes all 13 snapshots itself, then a commit of each on the driver
          write the manifest                    (SnapshotStore.commit_files)
       -> run.json, the batch's record
 
+The commit reads nothing back: `run` returns a mapping that reads a
+stage (`SnapshotStore.read`) only when a caller first asks for it, so
+a batch whose caller reads none of its frames, as the benchmark, the
+streaming sink and bench.py do, makes no read on the driver.
+
 No stage waits for another: each is an output of the same pass, and
 the driver plans one query. Linking and canonicalization read nothing
 beyond the document but the dictionary, which the compiler holds as a
@@ -46,6 +51,7 @@ import os
 import shutil
 import time
 from collections import Counter
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -230,14 +236,16 @@ class SnapshotStore:
         return committed
 
     def commit_files(self, spark: SparkSession, stage: str, schema,
-                     files: list[dict], started: float) -> DataFrame:
+                     files: list[dict], started: float) -> None:
         """Commit the files a pass wrote for `stage`
         (operators/assemble.py, `write_pass`; `files` are its FILE_ROW
         rows, `started` the pass's start): delete every other entry of
-        the stage's data directory, and write the manifest. A stage
-        with no rows commits the one empty file with its schema that
-        Spark's writer makes of an empty frame, written here with
-        pyarrow (no Spark job). Raises if a file a task
+        the stage's data directory, and write the manifest. It runs no
+        Spark job and reads nothing back (`read` does, when asked). A
+        stage with no rows commits the one empty file with its schema
+        that Spark's writer makes of an empty frame, written here with
+        pyarrow; only then is the session asked anything, its Spark
+        version, for the file's footer. Raises if a file a task
         reported is not in the data directory as the driver sees it (a
         root the executors do not share with the driver)."""
         data_path = self._paths(stage)[0]
@@ -262,7 +270,6 @@ class SnapshotStore:
             files = [{"file": name, "rows": 0, "bucket_min": None,
                       "bucket_max": None}]
         self._write_manifest(stage, schema, files, started, write_ms, 0)
-        return spark.read.schema(schema).parquet(data_path)
 
     def _write_manifest(self, stage: str, schema, files: list[dict],
                         started: float, write_ms: int,
@@ -293,6 +300,35 @@ STAGES = [
 ]
 
 
+class Snapshots(Mapping):
+    """Each stage of STAGES by name, as its committed snapshot: read
+    (`SnapshotStore.read`) the first time it is asked for, then kept.
+    `mentions` holds only the ok rows (`quarantine` the others)."""
+
+    def __init__(self, spark: SparkSession, store: SnapshotStore):
+        self._spark, self._store = spark, store
+        self._frames: dict[str, DataFrame] = {}
+
+    def __getitem__(self, stage: str) -> DataFrame:
+        if stage not in self._frames:
+            if stage not in STAGES:
+                raise KeyError(stage)
+            df = self._store.read(self._spark, stage)
+            if stage == "mentions":
+                df = df.filter(F.col("gpml_element_name") != "_error")
+            self._frames[stage] = df
+        return self._frames[stage]
+
+    def __contains__(self, stage) -> bool:
+        return stage in STAGES
+
+    def __iter__(self):
+        return iter(STAGES)
+
+    def __len__(self) -> int:
+        return len(STAGES)
+
+
 class Pipeline:
     """End-to-end KG construction with resumable stage snapshots."""
 
@@ -302,15 +338,14 @@ class Pipeline:
         self.pages = pages
         self.store = SnapshotStore(out_root, n_buckets)
 
-    def _stage(self, name: str, build, resume: bool) -> DataFrame:
-        """The stage's snapshot: read back if `resume` finds it
-        committed, else committed from what `build()` returns, the
-        (schema, files, pass start) its pass wrote."""
-        if resume and self.store.is_committed(name):
-            return self.store.read(self.spark, name)
-        return self.store.commit_files(self.spark, name, *build())
+    def _stage(self, name: str, build, resume: bool) -> None:
+        """Commit the stage from what `build()` returns, the (schema,
+        files, pass start) its pass wrote, unless `resume` finds it
+        committed."""
+        if not (resume and self.store.is_committed(name)):
+            self.store.commit_files(self.spark, name, *build())
 
-    def run(self, resume: bool = True) -> dict[str, DataFrame]:
+    def run(self, resume: bool = True) -> Snapshots:
         """Run the pass for the stages not yet committed (all of them
         unless `resume`), then commit each stage in STAGES order on the
         calling thread, then write the run's record (`run.json`).
@@ -321,8 +356,9 @@ class Pipeline:
         its stages. A resumed run with any stage uncommitted re-runs
         the pass over the pages, which is deterministic, for those
         stages only; a run with all 13 committed builds nothing.
-        Returns each stage's committed snapshot, `mentions` holding
-        only the ok rows."""
+        Returns each stage's committed snapshot by name (`Snapshots`),
+        read only when first asked for, `mentions` holding only the ok
+        rows; the run itself reads none of them."""
         todo = [s for s in STAGES
                 if not (resume and self.store.is_committed(s))]
         written, pass_s = None, 0.0
@@ -331,19 +367,20 @@ class Pipeline:
             written = build_document_model(self.spark, self.pages,
                                            store=self.store, stages=todo)
             pass_s = time.time() - t0
-        out = {name: self._stage(
-            name, lambda n=name: (written.schemas[n], written.files[n],
-                                  written.started), resume)
-            for name in STAGES}
-        self._record(todo, written, pass_s)
-        out["mentions"] = out["mentions"].filter(
-            F.col("gpml_element_name") != "_error")
-        return out
+        t0 = time.time()
+        for name in STAGES:
+            self._stage(name, lambda n=name: (
+                written.schemas[n], written.files[n], written.started),
+                resume)
+        self._record(todo, written, pass_s, time.time() - t0)
+        return Snapshots(self.spark, self.store)
 
-    def _record(self, committed: list[str], written, pass_s: float) -> None:
-        """Write `run.json` beside the manifests: the pass's and its
-        collect's wall seconds, its tasks' compile and write seconds,
-        the rows, files and bytes of each stage this run committed, the
+    def _record(self, committed: list[str], written, pass_s: float,
+                commit_s: float) -> None:
+        """Write `run.json` beside the manifests: the pass's, its
+        collect's and the commit loop's wall seconds, its tasks'
+        compile (kernel plus Arrow tables) and write seconds, the rows,
+        files and bytes of each stage this run committed, the
         quarantined rows per `error` prefix, and the driver JVM's
         class-data sharing (session.class_data_sharing)."""
         files = [f for fs in (written.files.values() if written else ())
@@ -364,6 +401,7 @@ class Pipeline:
         record = {
             "pass_s": pass_s,
             "collect_s": written.collect_s if written else 0.0,
+            "commit_s": commit_s,
             "tasks": len(tasks),
             "compile_s": sum(t["compile_s"] for t in tasks.values()),
             "write_s": sum(f["write_s"] for f in files),

@@ -414,8 +414,10 @@ def _output_table(rows: dict, stage: str, bucket: int = 3) -> pa.Table:
 
     out = OUTPUTS[stage]
     schema = T.StructType([*out.frame.fields, assemble.BUCKET])
+    recs = [r for role in out.roles for r in rows.get(role, ())]
     table = assemble.stage_table(
-        assemble._sink(stage, "", schema, out, "4.1.2"), rows, bucket)
+        assemble._sink(stage, "", schema, out, "4.1.2"), recs,
+        [bucket] * len(recs))
     assert table.schema.remove_metadata() == to_arrow_schema(schema)
     return table
 
@@ -451,6 +453,82 @@ def test_arrow_boundary_keeps_nan_rotations_and_nulls_other_nans():
     assert [(p["x"], p["y"]) for p in points] == [(None, 1.0), (5.0, 1.0)]
     assert mentions["sh"]["rotation"] == "NaN"
     assert {r["bucket"] for r in mentions.values()} == {3}
+
+
+def _page_rows() -> list[tuple[int, dict]]:
+    """(bucket, rows by role) of seven urls: six fixture documents and
+    one that does not parse."""
+    docs = [C.gpml_data_nodes(), C.gpml_interactions(), C.gpml_groups(),
+            C.gpml_publication_xrefs(), C.gpml_vocab(), C.gpml_hyperedge(),
+            "<Pathway"]
+    index = link_index()
+    return [(i % 3, compile_page_group(
+        [(f"https://t.example/{i}",
+          ('<html><body><script type="application/gpml+xml">\n' + gpml
+           + "\n</script></body></html>").encode())], index))
+        for i, gpml in enumerate(docs)]
+
+
+def _sinks(data: str = ""):
+    from pyspark.sql import types as T
+
+    for stage, out in OUTPUTS.items():
+        schema = T.StructType([*out.frame.fields, assemble.BUCKET])
+        yield out, assemble._sink(stage, data, schema, out, "4.1.2")
+
+
+def test_one_table_of_several_urls_is_their_tables_concatenated():
+    """`stage_table` over several urls' rows is the concatenation of
+    each url's own table: the same rows in order, schema, Spark footer
+    and bucket of each row. `arrow_bytes` estimates the table's Arrow
+    bytes from the rows to within a small factor, never above."""
+    urls = _page_rows()
+    for out, sink in _sinks():
+        tables, recs, buckets = [], [], []
+        for bucket, rows in urls:
+            mine = [r for role in out.roles for r in rows.get(role, ())]
+            if mine:
+                tables.append(assemble.stage_table(
+                    sink, mine, [bucket] * len(mine)))
+            recs += mine
+            buckets += [bucket] * len(mine)
+        assert recs, sink.stage
+        one = assemble.stage_table(sink, recs, buckets)
+        assert one.equals(pa.concat_tables(tables), check_metadata=True), \
+            sink.stage
+        assert one.schema.metadata == sink.schema.metadata
+        assert one["bucket"].to_pylist() == buckets, sink.stage
+        estimate = assemble.arrow_bytes(sink, recs)
+        assert one.nbytes / 3 <= estimate <= one.nbytes, sink.stage
+
+
+@pytest.mark.parametrize("row_group_bytes, groups", [(1, "url"),
+                                                     (8 << 20, "one")])
+def test_a_file_writes_a_row_group_when_its_pending_rows_reach_it(
+        tmp_path, row_group_bytes, groups):
+    """An output's file keeps its rows pending until their estimated
+    Arrow bytes reach the row-group bound: with a one-byte bound it
+    writes each url's rows as its own row group, with the default one
+    row group for the whole partition. Either way the file holds every
+    row, in order, with its bucket."""
+    import pyarrow.parquet as pq
+
+    urls = _page_rows()
+    for out, sink in _sinks(str(tmp_path)):
+        f = assemble._File(sink, f"{sink.stage}.parquet", row_group_bytes)
+        for bucket, rows in urls:
+            f.add(rows, bucket)
+        written = f.close()
+        per_url = [sum(len(rows.get(role, ())) for role in out.roles)
+                   for _, rows in urls]
+        assert written["rows"] == sum(per_url), sink.stage
+        md = pq.ParquetFile(f.path).metadata
+        assert md.num_row_groups == (
+            sum(n > 0 for n in per_url) if groups == "url" else 1), \
+            sink.stage
+        assert pq.read_table(f.path)["bucket"].to_pylist() == [
+            bucket for (bucket, _), n in zip(urls, per_url)
+            for _ in range(n)], sink.stage
 
 
 # --- Spark --------------------------------------------------------------

@@ -754,26 +754,34 @@ def test_pass_files_are_the_parquet_spark_writes(spark, tmp_path_factory):
                    if t == "BYTE_ARRAY"), stage
 
 
-RUN_RECORD_KEYS = ["class_data_sharing", "collect_s", "compile_s", "pass_s",
-                   "quarantined", "stages", "tasks", "write_s"]
+RUN_RECORD_KEYS = ["class_data_sharing", "collect_s", "commit_s",
+                   "compile_s", "pass_s", "quarantined", "stages", "tasks",
+                   "write_s"]
 
 
 def test_run_writes_its_record(spark, tmp_path_factory):
-    """`run.json` beside the manifests holds the pass's and its
-    collect's wall seconds, its tasks' compile and write seconds, the
-    rows, files and bytes of each stage the run committed, the
-    quarantined rows per `error` prefix and the driver JVM's class-data
-    sharing; a resumed run that commits nothing records no pass."""
+    """`run.json` beside the manifests holds the pass's, its
+    collect's and the commit loop's wall seconds, its tasks' compile
+    and write seconds, the rows, files and bytes of each stage the run
+    committed, the quarantined rows per `error` prefix and the driver
+    JVM's class-data sharing; a resumed run that commits nothing
+    records no pass."""
+    import time
+
     from gpml2pvjson_js_spark import session
 
     root = str(tmp_path_factory.mktemp("kgout_record"))
     pages = spark.read.parquet(_batch_dir(spark, root))
     p = Pipeline(spark, pages, root + "/out", n_buckets=4)
+    t0 = time.time()
     p.run(resume=False)
+    wall_s = time.time() - t0
     with open(os.path.join(root, "out", "run.json")) as f:
         record = json.load(f)
     assert sorted(record) == RUN_RECORD_KEYS
     assert record["pass_s"] >= record["collect_s"] > 0
+    assert record["commit_s"] > 0
+    assert record["pass_s"] + record["commit_s"] <= wall_s
     assert record["tasks"] >= 1
     assert record["compile_s"] > 0 and record["write_s"] > 0
     assert list(record["stages"]) == STAGES
@@ -795,3 +803,94 @@ def test_run_writes_its_record(spark, tmp_path_factory):
     assert sorted(record) == RUN_RECORD_KEYS
     assert record["stages"] == {} and record["tasks"] == 0
     assert record["pass_s"] == record["collect_s"] == 0.0
+
+
+def _spy_parquet_reads(monkeypatch) -> list:
+    """The paths of every `DataFrameReader.parquet` call from now on."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls, parquet = [], DataFrameReader.parquet
+
+    def spy(self, *paths, **kwargs):
+        calls.append(paths)
+        return parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return calls
+
+
+def test_run_reads_a_stage_only_when_it_is_asked_for(
+        spark, tmp_path_factory, monkeypatch):
+    """`Pipeline.run` commits the 13 stages without reading one back;
+    a stage is read the first time the caller asks for it, and only
+    then. A resumed run over a committed root reads nothing either."""
+    root = str(tmp_path_factory.mktemp("kgout_lazy"))
+    pages = pages_df(spark, 4, giant_every=0)
+    calls = _spy_parquet_reads(monkeypatch)
+    p = Pipeline(spark, pages, root, n_buckets=4)
+    out = p.run(resume=False)
+    assert calls == []
+    nodes = out["nodes"]
+    assert calls == [(os.path.join(root, "nodes", "data"),)]
+    assert out["nodes"] is nodes and len(calls) == 1
+    assert "nodes" in out and "model_triples" not in out
+    assert list(out) == STAGES and len(calls) == 1
+
+    out = Pipeline(spark, pages, root, n_buckets=4).run(resume=True)
+    assert len(calls) == 1
+    assert out["triples"].count() == p.store.manifest("triples")["rows"]
+    assert len(calls) == 2
+
+
+def test_run_frames_are_the_store_reads(spark, tmp_path_factory):
+    """Each frame `Pipeline.run` returns has the schema, nullability
+    included, and the rows of `SnapshotStore.read` of its stage;
+    `mentions` holds only the ok rows."""
+    root = str(tmp_path_factory.mktemp("kgout_reads"))
+    p = Pipeline(spark, pages_df(spark, 7), root, n_buckets=4)
+    out = p.run(resume=False)
+    for stage in STAGES:
+        want = p.store.read(spark, stage)
+        if stage == "mentions":
+            want = want.filter(F.col("gpml_element_name") != "_error")
+        got = out[stage]
+        assert got.schema == want.schema, stage
+        assert [f.nullable for f in got.schema.fields] \
+            == [f.nullable for f in want.schema.fields], stage
+        assert sorted(map(repr, got.collect())) \
+            == sorted(map(repr, want.collect())), stage
+
+
+def test_a_url_that_fails_to_compile_is_quarantined(spark, tmp_path_factory):
+    """A page whose compile raises (a non-numeric `Width`) does not
+    fail the batch: all 13 stages commit, its url gets one quarantine
+    row, `compile: ValueError`, and no other row, and `run.json`
+    counts it under `compile`."""
+    import datetime as dt
+
+    from gpml2pvjson_js_spark import corpus as C
+
+    bad = "https://hostile.example/width"
+    ts = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
+    gpml = C._doc(C._pathway_open(), C._datanode("n1", "N", w="abc"))
+    hostile = spark.createDataFrame(
+        [(bad, ts, ('<html><body><script type="application/gpml+xml">\n'
+                    + gpml + "\n</script></body></html>").encode(), "",
+          "en")], C.PAGES_SCHEMA)
+    root = str(tmp_path_factory.mktemp("kgout_hostile"))
+    p = Pipeline(spark, pages_df(spark, 4, giant_every=0).union(hostile),
+                 root, n_buckets=4)
+    out = p.run(resume=False)
+    assert set(p.metrics()) == set(STAGES)
+    [row] = out["quarantine"].filter(F.col("url") == bad).collect()
+    assert (row["gpml_element_name"], row["error"], row["frag"]) == \
+        ("_error", "compile: ValueError", 0)
+    for stage in STAGES:
+        if stage != "quarantine":
+            assert out[stage].filter(F.col("url") == bad).count() == 0, \
+                stage
+    assert p.store.read(spark, "mentions").filter(
+        F.col("url") == bad).count() == 1
+    assert out["nodes"].count() > 0
+    with open(os.path.join(root, "run.json")) as f:
+        assert json.load(f)["quarantined"] == {"compile": 1}

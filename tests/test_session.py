@@ -413,3 +413,48 @@ def test_local_frame_keeps_the_schema_nullability(spark):
     assert df.collect() == [("x", None), ("y", 2)]
     with pytest.raises(ValueError):
         session.local_frame(spark, [(None, 1)], schema)
+
+
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+# a fresh session that calls F.col and runs a small batch, then one
+# whose caller turns call-site capture back on; prints what it saw
+_DEBUGGING_PROBE = f"""
+import json, sys, tempfile
+from pyspark.sql import functions as F
+from gpml2pvjson_js_spark.corpus import pages_df
+from gpml2pvjson_js_spark.plans.pipeline import Pipeline
+from gpml2pvjson_js_spark.session import get_spark
+
+small = {{"spark.driver.memory": "1g"}}
+spark = get_spark(master="local[2]", extra_conf=small)
+F.col("url")
+Pipeline(spark, pages_df(spark, 2, giant_every=0), tempfile.mkdtemp(),
+         n_buckets=2).run(resume=False)
+seen = {{"ipython": "IPython" in sys.modules,
+         "conf": spark.conf.get("{_DEBUGGING}")}}
+spark.stop()
+spark = get_spark(master="local[2]",
+                  extra_conf={{**small, "{_DEBUGGING}": "true"}})
+seen["caller_conf"] = spark.conf.get("{_DEBUGGING}")
+print(json.dumps(seen))
+"""
+
+
+def test_sessions_capture_no_dataframe_call_sites():
+    """A fresh `get_spark` session has pyspark's DataFrame call-site
+    capture off: `F.col` and a small `Pipeline.run` import no IPython.
+    A caller's `extra_conf` turns it back on."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        filter(None, [repo, os.environ.get("PYTHONPATH")]))}
+    proc = subprocess.run([sys.executable, "-c", _DEBUGGING_PROBE],
+                          cwd=repo, env=env, capture_output=True,
+                          text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    seen = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert seen == {"ipython": False, "conf": "false",
+                    "caller_conf": "true"}

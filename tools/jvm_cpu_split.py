@@ -1,18 +1,25 @@
 #!/usr/bin/env python3
-"""Where a cold benchmark run spends its CPU, by JVM thread kind.
+"""Where a benchmark batch spends its CPU, cold and warm, by JVM thread
+kind.
 
     python3 tools/jvm_cpu_split.py [--workload pipeline|bulk] [--seed N]
+                                   [--batches N]
 
 Run from the repository root. Starts a fresh Spark session with the
 benchmark's settings (perfbench/run.py `spark_conf`, local[nproc]),
-writes the seed's first batch of the workload (perfbench/workloads.plan;
-default `pipeline`, 33 pages; `bulk` is its 380-page corpus) to parquet
-and runs it once through the workload's runner (perfbench/stages.py
-`RUNNERS`: one `Pipeline.run(resume=False)` for `pipeline`, the
-mentions, quarantine and text commits for `bulk`), as the benchmark's
-first timed run does. perfbench is only read. Prints CPU seconds, read
-from /proc, for the set-up (JVM start to the batch's start) and for
-the batch:
+writes the seed's first N batches of the workload
+(perfbench/workloads.plan; default `pipeline`, 33 pages a batch; `bulk`
+is its 380-page corpus, the same every batch, as in the benchmark) to
+parquet and runs them one after another in that session through the
+workload's runner (perfbench/stages.py `RUNNERS`: one
+`Pipeline.run(resume=False)` for `pipeline`, the mentions, quarantine
+and text commits for `bulk`), as the benchmark's timed runs do. The
+first batch is cold; the later ones run on a warm JVM and warm Python
+workers. perfbench is only read. Prints CPU seconds, read from /proc,
+for the set-up (JVM start to the first batch's start, every batch's
+pages written and read), for the cold batch and, with `--batches`
+above 1 (default 1), the median of the warm batches, each figure its
+own median:
 - the driver JVM, split by thread name into the JIT compilers (C2,
   C1), executor task threads, GC and the rest;
 - the Python daemons the JVM forks, and the workers they fork (with
@@ -24,10 +31,10 @@ the batch:
 - this process, the Python driver.
 Under the title, one line gives the driver JVM's class-data sharing
 (`session.class_data_sharing()`): `use` or `dump` with the archive, or
-`off` with the reason. Under the CPU table, one line gives the batch's
-Spark jobs, their tasks and their shuffle MB (read and written), from
-the Spark status store, so the exchanges a change removes show beside
-the CPU it saves.
+`off` with the reason. Under the CPU table, one line per batch column
+gives its Spark jobs, their tasks and their shuffle MB (read and
+written), from the Spark status store, so the exchanges a change
+removes show beside the CPU it saves.
 
 perfbench's trace times layers and stages, not threads, so it cannot
 show where a change to the JVM's JIT work lands; this tool can. JVM
@@ -42,6 +49,7 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import threading
@@ -198,27 +206,39 @@ def next_job_id(spark) -> int:
     return _max_job_id(spark.sparkContext._jsc.sc().statusStore()) + 1
 
 
-def report(setup: dict, batch: dict, wall: tuple[float, float],
-           seen: tuple[dict, dict], work: tuple[int, int, float]) -> None:
+def median(figures: list[dict]) -> dict:
+    """Each key's median over `figures`."""
+    return {k: statistics.median(f[k] for f in figures) for k in figures[0]}
+
+
+def report(columns: list[tuple[str, dict, float, dict]],
+           works: list[tuple[str, tuple[float, float, float]]]) -> None:
+    """One CPU table with a column per (title, CPU s, wall s, Python
+    seen), then each batch's Spark work."""
     jvm = [kind for kind, _ in KINDS] + ["rest", "exited threads"]
-    rows = [("driver JVM", sum(setup[k] for k in jvm),
-             sum(batch[k] for k in jvm))]
-    rows += [(f"  {k}", setup[k], batch[k]) for k in jvm]
-    rows += [(k, setup[k], batch[k])
-             for k in ("python daemons", "python workers",
-                       "JVM child commands", "python driver")]
-    rows.append(("all", sum(setup.values()), sum(batch.values())))
-    print(f"{'CPU s':<20}{'set-up':>9}{'batch':>9}{'total':>9}")
-    for name, s, b in rows:
-        print(f"{name:<20}{s:9.1f}{b:9.1f}{s + b:9.1f}")
-    print(f"{'wall s':<20}{wall[0]:9.1f}{wall[1]:9.1f}{sum(wall):9.1f}")
-    print(f"batch Spark work: {work[0]} jobs, {work[1]} tasks, "
-          f"{work[2]:.2f} MB shuffled")
-    print(f"{'python seen':<20}{'set-up':>9}{'batch':>9}")
+    names = ["driver JVM", *(f"  {k}" for k in jvm), "python daemons",
+             "python workers", "JVM child commands", "python driver", "all"]
+
+    def figures(cpu):
+        return [sum(cpu[k] for k in jvm), *(cpu[k] for k in jvm),
+                *(cpu[k] for k in ("python daemons", "python workers",
+                                   "JVM child commands", "python driver")),
+                sum(cpu.values())]
+
+    cols = [figures(cpu) for _, cpu, _, _ in columns]
+    print(f"{'CPU s':<20}" + "".join(f"{t:>11}" for t, *_ in columns))
+    for i, name in enumerate(names):
+        print(f"{name:<20}" + "".join(f"{c[i]:11.2f}" for c in cols))
+    print(f"{'wall s':<20}" + "".join(f"{w:11.2f}" for _, _, w, _ in columns))
+    print(f"{'python seen':<20}" + "".join(f"{t:>11}" for t, *_ in columns))
     for role in ("daemon", "worker"):
-        print(f"{'  ' + role + 's':<20}{seen[0][role]:9d}{seen[1][role]:9d}")
-    print(f"{'  peak RSS MB':<20}{seen[0]['rss_mb']:9.0f}"
-          f"{seen[1]['rss_mb']:9.0f}")
+        print(f"{'  ' + role + 's':<20}"
+              + "".join(f"{seen[role]:11g}" for *_, seen in columns))
+    print(f"{'  peak RSS MB':<20}"
+          + "".join(f"{seen['rss_mb']:11.0f}" for *_, seen in columns))
+    for title, (jobs, tasks, mb) in works:
+        print(f"{title} Spark work: {jobs:g} jobs, {tasks:g} tasks, "
+              f"{mb:.2f} MB shuffled")
 
 
 def main(argv=None) -> int:
@@ -226,7 +246,11 @@ def main(argv=None) -> int:
     p.add_argument("--workload", choices=("pipeline", "bulk"),
                    default="pipeline")
     p.add_argument("--seed", type=int, default=1)
+    p.add_argument("--batches", type=int, default=1,
+                   help="batches to run in the session, the first cold")
     args = p.parse_args(argv)
+    if args.batches < 1:
+        p.error("--batches must be at least 1")
 
     import run as bench_run
     import stages
@@ -238,6 +262,7 @@ def main(argv=None) -> int:
     tmp = tempfile.mkdtemp(prefix="jvm_cpu_split_")
     t0 = time.monotonic()
     spark = threads = None
+    batches = []  # (CPU s, wall s, Python seen, Spark work) per batch
     try:
         spark = get_spark(app_name="jvm_cpu_split",
                           master=f"local[{len(os.sched_getaffinity(0))}]",
@@ -245,17 +270,23 @@ def main(argv=None) -> int:
         threads = JvmThreads(spark.sparkContext._gateway.proc.pid)
         threads.thread.start()
         spec = workloads.WORKLOADS[args.workload]
-        pages = workloads.plan(args.workload, args.seed, 0)
-        path = os.path.join(tmp, "pages")
-        workloads.write_pages(pages, path, spec["files"])
-        runner = stages.RUNNERS[spec["stages"]](
-            spark, spark.read.schema(workloads.PAGES_DDL).parquet(path),
-            os.path.join(tmp, "out"))
-        first_job = next_job_id(spark)
+        runners = []
+        for i in range(args.batches):
+            batch = 0 if spec["stages"] == "ingest" else i
+            pages = workloads.plan(args.workload, args.seed, batch)
+            path = os.path.join(tmp, "pages", str(i))
+            workloads.write_pages(pages, path, spec["files"])
+            runners.append(stages.RUNNERS[spec["stages"]](
+                spark, spark.read.schema(workloads.PAGES_DDL).parquet(path),
+                os.path.join(tmp, "out", str(i))))
         (setup, setup_seen), t1 = threads.snapshot(), time.monotonic()
-        runner.run()
-        (end, batch_seen), t2 = threads.snapshot(), time.monotonic()
-        work = spark_work(spark, first_job)
+        for runner in runners:
+            first_job = next_job_id(spark)
+            (before, _), t2 = threads.snapshot(), time.monotonic()
+            runner.run()
+            (end, seen), t3 = threads.snapshot(), time.monotonic()
+            batches.append(({k: end[k] - before[k] for k in end}, t3 - t2,
+                            seen, spark_work(spark, first_job)))
     finally:
         if threads is not None:
             threads.done.set()
@@ -263,11 +294,24 @@ def main(argv=None) -> int:
         if spark is not None:
             bench_run.stop_spark(spark)
         shutil.rmtree(tmp, ignore_errors=True)
-    print(f"{args.workload} batch 0 of seed {args.seed}: {len(pages)} "
-          "pages, cold driver JVM")
+    print(f"{args.workload} seed {args.seed}: {args.batches} batch(es) of "
+          f"{len(pages)} pages in one session, the first on a cold driver "
+          "JVM")
     print(f"class-data sharing: {class_data_sharing()}")
-    report(setup, {k: end[k] - setup[k] for k in end}, (t1 - t0, t2 - t1),
-           (setup_seen, batch_seen), work)
+    cpu, wall, seen, work = batches[0]
+    columns = [("set-up", setup, t1 - t0, setup_seen),
+               ("cold", cpu, wall, seen)]
+    works = [("cold batch", work)]
+    if len(batches) > 1:
+        warm = batches[1:]
+        columns.append((f"warm med/{len(warm)}",
+                        median([b[0] for b in warm]),
+                        statistics.median(b[1] for b in warm),
+                        median([b[2] for b in warm])))
+        works.append((f"warm batch (median of {len(warm)})",
+                      tuple(statistics.median(b[3][i] for b in warm)
+                            for i in range(3))))
+    report(columns, works)
     return 0
 
 
