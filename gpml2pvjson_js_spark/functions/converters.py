@@ -10,9 +10,10 @@ expression it replaced, not those of a Python library:
 - HTML decoding decodes numeric entities first, in one
   non-recursive pass, then exactly six named entities;
 - `encode_uri` is Java's URLEncoder plus a fixed table of rewrites;
-- the string casts (`cast_double`, `cast_int`) accept what Spark's
-  ANSI-mode casts (the Spark 4 default) accept, and raise where they
-  raise.
+- the string casts (`cast_double`, `cast_int`) are Spark's
+  `try_cast`: they accept what its ANSI-mode casts (the Spark 4
+  default) accept, and give None where those raise, so a hostile
+  value is null, not a failed page.
 """
 
 from __future__ import annotations
@@ -163,37 +164,36 @@ def _java_trim(v: str) -> str:
     return v[i:j]
 
 
-def _invalid_cast(v: str, to: str):
-    raise ValueError(f"[CAST_INVALID_INPUT] The value '{v}' of the type "
-                     f"\"STRING\" cannot be cast to \"{to}\"")
-
-
 def cast_double(v):
-    """Spark's ANSI string -> double cast: parseDouble, then the special
-    literals inf/infinity/nan in any case; other input raises."""
+    """Spark's string -> double `try_cast`: parseDouble (a hex value
+    too large for a double is infinite, as parseDouble rounds it), then
+    the special literals inf/infinity/nan in any case; None for other
+    input."""
     if v is None:
         return None
     s = _java_trim(v)
-    if _JAVA_DOUBLE.fullmatch(s):
-        if s[-1] in "fFdD":
-            s = s[:-1]
+    if not _JAVA_DOUBLE.fullmatch(s):
+        return _SPECIAL_DOUBLES.get(s.lower())
+    if s[-1] in "fFdD":
+        s = s[:-1]
+    try:
         return float.fromhex(s) if "x" in s or "X" in s else float(s)
-    special = _SPECIAL_DOUBLES.get(s.lower())
-    if special is None:
-        _invalid_cast(v, "DOUBLE")
-    return special
+    except OverflowError:
+        return -math.inf if s[0] == "-" else math.inf
 
 
 def cast_int(v):
-    """Spark's ANSI string -> int cast: surrounding whitespace trimmed,
-    an optional sign, digits; a fraction, malformed or out-of-range
-    input raises."""
+    """Spark's string -> int `try_cast`: surrounding whitespace
+    trimmed, an optional sign, digits; None for a fraction, malformed
+    or out-of-range input."""
     if v is None:
         return None
     s = _java_trim(v)
-    if _INT.fullmatch(s) and -2**31 <= int(s) < 2**31:
-        return int(s)
-    _invalid_cast(v, "INT")
+    digits = s.lstrip("+-").lstrip("0") or "0"
+    if not _INT.fullmatch(s) or len(digits) > 10:  # int() caps digits
+        return None
+    n = -int(digits) if s[0] == "-" else int(digits)
+    return n if -2**31 <= n < 2**31 else None
 
 
 _SIDES = {"Top": 0.0, "Right": 0.5 * math.pi, "Bottom": math.pi,
@@ -202,15 +202,16 @@ _TWO_PI = 2.0 * math.pi
 _RADIANS_TO_DEGREES = 57.29577951308232  # java.lang.Math.toDegrees
 
 
-def rotation_degrees(v) -> float:
+def rotation_degrees(v) -> float | None:
     """Rotation: radians (or a side keyword) -> normalized [0, 2pi) ->
     degrees (ref: src/2013a/ValueConverters.ts:191-222 + Angle.ts:60-62).
-    None -> 0. The normalization is Spark's pmod."""
-    rad = _SIDES.get(v)
+    None -> 0; a value that is neither a number (`cast_double`) nor a
+    side keyword -> None. The normalization is Spark's pmod."""
+    rad = 0.0 if v is None else _SIDES.get(v)
     if rad is None:
         rad = cast_double(v)
     if rad is None:
-        rad = 0.0
+        return None
     r = math.fmod(rad, _TWO_PI) if math.isfinite(rad) else math.nan
     if r < 0:
         r = math.fmod(r + _TWO_PI, _TWO_PI)

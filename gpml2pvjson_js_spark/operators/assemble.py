@@ -20,9 +20,9 @@ The pass (`write_pass`) is one `mapInArrow` over the pages as
 `SnapshotStore.layout` lays them out (the batch's one exchange),
 sorted within partitions on (bucket, url), so the pages of one url are
 adjacent and every output comes out sorted by bucket. Each task
-compiles its pages one url at a time (document.compile_page_group;
-a url whose compile raises gets one quarantine row, `compile:` and
-the exception's type, and the rest of the partition goes on). Each
+compiles its pages one url at a time (document.compile_page_group,
+which quarantines a document whose compile raises), its rows as their
+frames store them (frames.stored), written as given. Each
 output keeps its compiled rows pending, with the bucket of each row,
 until their estimated Arrow bytes reach a row group
 (ROW_GROUP_BYTES); then one `stage_table` call turns them into an
@@ -66,10 +66,10 @@ of scope.
 
 Without a store, `build_document_model` writes the pass into a
 temporary store on the driver, removed at interpreter exit, so it
-needs a local master (it refuses any other), and returns its frames
-read from the snapshots with `SnapshotStore.read`, the one read path
-of the package: the operators, the driver contract and the benchmarks
-read what the pipeline commits, through the same code.
+needs a local master (it refuses any other), commits it, and returns
+what `Pipeline.run` returns (plans/pipeline.Snapshots), the one read
+shape of the package: the operators, the driver contract and the
+benchmarks read what the pipeline commits, as its frames.
 A per-document topo-level operator is still provided in plans/topo.py
 for hyperedge-depth diagnostics and cycle quarantine.
 """
@@ -92,14 +92,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import document as D
 from . import frames
 from .linking import link_index
-from .parse import MENTIONS_SCHEMA, text_schema
+from .parse import text_schema
 
 BUCKET = T.StructField("bucket", T.IntegerType())
 # one row per file the pass wrote; a task's compile seconds and its
@@ -132,9 +131,7 @@ class _Sink(NamedTuple):
     data: str  # its data directory
     schema: pa.Schema  # its frame, then bucket; Spark's footer
     roles: tuple[str, ...]
-    # per frame field: the row field it reads, and the zero a null in it
-    # commits as (None for a nullable field)
-    fields: list[tuple[str, object]]
+    fields: list[str]  # per frame field, the row field it reads
     # a row's Arrow bytes of fixed width (values, and offsets of the
     # variable-width ones), and the getter of its variable-width values
     # (arrow_bytes)
@@ -146,11 +143,10 @@ def _sink(stage: str, data: str, schema: T.StructType,
           out: frames.Output, version: str) -> _Sink:
     footer = _spark_footer(schema, version)
     arrow = to_arrow_schema(schema).with_metadata(footer)
-    fields = [(out.read.get(f.name, f.name),
-               None if f.nullable else frames.zero(f.dataType))
+    fields = [out.read.get(f.name, f.name)
               for f in schema.fields if f.name != "bucket"]
     fixed, sized = 4, []  # 4: the int32 bucket
-    for (name, _), field in zip(fields, arrow):
+    for name, field in zip(fields, arrow):
         if pa.types.is_primitive(field.type):
             fixed += (field.type.bit_width + 7) // 8
         else:
@@ -176,13 +172,18 @@ def write_empty_file(data: str, schema: T.StructType, version: str) -> str:
 def stage_table(sink: _Sink, recs: list[dict],
                 buckets: list[int]) -> pa.Table:
     """`sink`'s rows `recs` (of its roles, any number of urls) as its
-    Arrow table, each row with its bucket in `buckets`."""
+    Arrow table, each row with its bucket in `buckets`, its rows as
+    given (frames.stored made them). A null in a non-nullable field
+    raises a ValueError that names it (pyarrow would write a file no
+    reader can read)."""
     columns = []
-    for (name, zero), field in zip(sink.fields, sink.schema):
-        values = [r[name] for r in recs]
-        if zero is not None:
-            values = [zero if v is None else v for v in values]
-        columns.append(pa.array(values, field.type))
+    for name, field in zip(sink.fields, sink.schema):
+        column = pa.array([r[name] for r in recs], field.type)
+        if column.null_count and not field.nullable:
+            raise ValueError(
+                f"{sink.stage}.{field.name}: {column.null_count} null(s) "
+                "in a non-nullable field")
+        columns.append(column)
     columns.append(pa.array(buckets, pa.int32()))
     return pa.Table.from_arrays(columns, schema=sink.schema)
 
@@ -194,16 +195,6 @@ def arrow_bytes(sink: _Sink, recs: list[dict]) -> int:
     a list's or a map's entries)."""
     return sink.fixed * len(recs) + sum([
         len(v) for r in recs for v in sink.sized(r) if v is not None])
-
-
-def _compile_error(url: str, exc: Exception) -> dict:
-    """The quarantine row of a url whose compile raised `exc`: a
-    mention row with `error` `compile: <type>`, frag 0 and every other
-    field null."""
-    row = dict.fromkeys(MENTIONS_SCHEMA.names)
-    row.update(url=url, frag=0, gpml_element_name="_error",
-               error=f"compile: {type(exc).__name__}")
-    return row
 
 
 def _pages_by_url(batches):
@@ -300,9 +291,8 @@ def _pass(index, sinks: list[_Sink], run: str, row_group_bytes: int):
     files, written, as FILE_ROW batches. A task writes one file per
     output it holds rows of, named for its attempt (`taskAttemptId` is
     unique in the application, so no two attempts share a name, and a
-    failed attempt removes only its own files). A url whose compile
-    raises gets its `_compile_error` row instead of its rows. A task's
-    `compile_s` is its compile plus its Arrow tables."""
+    failed attempt removes only its own files). A task's `compile_s` is
+    its compile plus its Arrow tables."""
 
     def write_partition(batches):
         ctx = TaskContext.get()
@@ -313,10 +303,7 @@ def _pass(index, sinks: list[_Sink], run: str, row_group_bytes: int):
         try:
             for bucket, pages in _pages_by_url(batches):
                 t0 = time.perf_counter()
-                try:
-                    rows = D.compile_page_group(pages, index)
-                except Exception as exc:
-                    rows = {"quarantine": [_compile_error(pages[0][0], exc)]}
+                rows = D.compile_page_group(pages, index)
                 compile_s += time.perf_counter() - t0
                 for f in files:
                     f.add(rows, bucket)
@@ -401,12 +388,11 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
     wrote (PassFiles), uncommitted: `Pipeline.run` commits each
     stage.
 
-    Without one, it writes every output into a temporary store on the
-    driver (so only with a local master; it is removed at interpreter
-    exit, as the frames read it lazily), commits them, and returns the
-    model: each output (frames.OUTPUTS) by name, read from its snapshot
-    (`SnapshotStore.read`) as its frame, and `mentions` holds only the
-    ok mention rows (`quarantine` the others)."""
+    Without one, it writes every output (frames.OUTPUTS) into a
+    temporary store on the driver (so only with a local master; it is
+    removed at interpreter exit, as the frames read it lazily),
+    commits them, and returns them as `Pipeline.run` does
+    (plans/pipeline.Snapshots): each output by name, as its frame."""
     if store is not None:
         return write_pass(spark, pages, store, stages)
     if not spark.sparkContext.master.startswith("local"):
@@ -415,16 +401,11 @@ def build_document_model(spark: SparkSession, pages: DataFrame,
             "directory of the driver, which only a local master's tasks "
             "see; on master %r pass a SnapshotStore whose root every "
             "executor sees" % spark.sparkContext.master)
-    from ..plans.pipeline import SnapshotStore
+    from ..plans.pipeline import SnapshotStore, Snapshots
 
     store = SnapshotStore(_temp_root())
     written = write_pass(spark, pages, store, frames.OUTPUTS)
-    model = {}
     for stage, schema in written.schemas.items():
         store.commit_files(spark, stage, schema, written.files[stage],
                            written.started)
-        model[stage] = frames.as_frame(store.read(spark, stage),
-                                       T.StructType(schema.fields[:-1]))
-    model["mentions"] = model["mentions"].filter(
-        F.col("gpml_element_name") != "_error")
-    return model
+    return Snapshots(spark, store)

@@ -41,10 +41,10 @@ mention rows to `compile_document`, which
    - burrs on their hosts, group and pathway `contains`, each sorted
      by zIndex with nulls first and ties by id (J8/O1,
      ref: src/2013a/toPvjson.ts:663-667,680-710,791-798);
-4. from the model rows as their frames commit them (`_committed`):
-   classifies the interactions (interactions.py), flattens the
-   distinct triples (triples.py) and writes the JSON-LD document
-   (export.py);
+4. makes each model row as its frame stores it (frames.stored), and
+   from those rows classifies the interactions (interactions.py),
+   flattens the distinct triples (triples.py) and writes the JSON-LD
+   document (export.py);
 5. links the node rows against the linking index (linking.py), and
    rewrites the triples through the sameAs components
    (canonicalize.py) into columns of the triple rows themselves
@@ -60,15 +60,15 @@ The kernel returns the rows by role (frames.FRAMES) as Python dicts;
 the pass (assemble.py) gathers each snapshot's rows over its urls into
 one Arrow table per row group of that snapshot's file. The model values
 are those the earlier Catalyst projections produced, nulls and NaNs
-included; the string casts follow Spark's ANSI mode, so input that
-made those projections raise makes the kernel raise (the pass
-quarantines such a url).
+included; the string casts are Spark's `try_cast`, a numeric attribute
+no `float` reads is null (parse._f), and a document whose compile still
+raises is quarantined alone (`compile_page_group`).
 
 The rows stay plain Python values, without pandas: most documents are
 small, and building a pandas frame of some 90 columns per document
 cost more than compiling it. The compiler reads the mention rows as
-they commit (NaN null), so it compiles what the mentions snapshot
-holds.
+the mentions snapshot stores them (parse.page_mentions), so it
+compiles what that snapshot holds.
 
 Bound: the kernel sees a whole page at once, so one page's html and
 mention rows must fit in one Python worker's memory; a page with tens
@@ -82,8 +82,6 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from pyspark.sql import types as T
-
 from . import edges as E
 from . import entities as N
 from . import export as X
@@ -93,7 +91,7 @@ from . import linking as L
 from . import triples as TR
 from . import waypoints as W
 from .canonicalize import canonicalize_document
-from .parse import _nan_to_null, extract_page_text, page_mentions
+from .parse import extract_page_text, page_mentions
 from ..functions import converters as C
 
 _NAN = float("nan")
@@ -105,46 +103,6 @@ _GEO = (*_NODE_LIKE, *E.EDGE_NAMES)
 _BURRS = ("State", "Anchor")
 _NODE_NAMES = (*_NODE_LIKE, "Anchor", "Group")
 _ELEMENTS = (*_NODE_NAMES, *E.EDGE_NAMES)
-
-# the only doubles the converters can make NaN (a rotation of "NaN" or
-# "Infinity"), which Spark's cast makes NaN too; everywhere else NaN
-# only stands for null arithmetic (`_num`) and is committed as null
-_NAN_FIELDS = ("rotation", "text_rotation")
-
-
-def _has_nan(v, t: T.DataType) -> bool:
-    if v is None:
-        return False
-    if isinstance(t, T.DoubleType):
-        return v != v
-    if isinstance(t, T.ArrayType):
-        return any(_has_nan(x, t.elementType) for x in v)
-    if isinstance(t, T.StructType):
-        return any(_has_nan(v.get(f.name), f.dataType) for f in t.fields)
-    return False
-
-
-# per model frame: each field, and the value a null in it commits as
-# (a non-nullable field's `frames.zero`)
-_COMMIT_PLANS = {
-    role: [(f, None if f.nullable else frames.zero(f.dataType))
-           for f in frames.FRAMES[role].fields]
-    for role in frames.MODEL_FRAMES}
-
-
-def _committed(role: str, row: dict) -> dict:
-    """A model row as its frame commits it, which is what the
-    interactions, the triples and the JSON-LD read: NaN is null (but
-    in the rotations), and a null in a non-nullable field is what
-    its snapshot stores for it (`frames.zero`)."""
-    out = {}
-    for f, default in _COMMIT_PLANS[role]:
-        v = row.get(f.name)
-        if f.name not in _NAN_FIELDS and _has_nan(v, f.dataType):
-            v = _nan_to_null(v, f.dataType)
-        out[f.name] = default if v is None else v
-    return out
-
 
 # --- reference resolution ----------------------------------------------
 
@@ -345,16 +303,33 @@ def _key_fields(r: dict, *names) -> dict:
     return {n: r[n] for n in names}
 
 
+def _compile_error(url: str, frag: int, exc: Exception) -> dict:
+    """The quarantine row of a page or a document whose compile raised
+    `exc`: a mention row of its url and frag, with `error`
+    `compile: <type>` and every other field null."""
+    return frames.stored("mentions", {
+        "url": url, "frag": frag, "gpml_element_name": "_error",
+        "error": f"compile: {type(exc).__name__}"})
+
+
 def compile_page_group(pages, index: L.LinkIndex) -> dict[str, list[dict]]:
     """The pages of one url (`(url, html)` pairs; two when a batch
     holds the url twice) -> their rows by role (frames.FRAMES): each
     page's mention rows and text, and the compiled rows of each of
     their documents. The ok mention rows of one (url, frag) compile as
-    one document, whichever page they came from."""
+    one document, whichever page they came from. Nothing raises out of
+    it: a page whose parse raises gets one `_compile_error` row (frag
+    0), and a document whose compile raises one with its frag, in place
+    of its mention and compiled rows; the page keeps its text and its
+    other documents."""
     rows = defaultdict(list)
     docs = defaultdict(list)
     for url, html in pages:
-        for r in page_mentions(url, html):
+        try:
+            mentions = page_mentions(url, html)
+        except Exception as exc:
+            mentions = [_compile_error(url, 0, exc)]
+        for r in mentions:
             if r["gpml_element_name"] == "_error":
                 rows["quarantine"].append(r)
             else:
@@ -362,9 +337,20 @@ def compile_page_group(pages, index: L.LinkIndex) -> dict[str, list[dict]]:
                 docs[r["frag"]].append(r)
         rows["text"].append({"url": url,
                              "extracted_text": extract_page_text(html)})
-    for recs in docs.values():
-        for role, rs in compile_document(recs, index).items():
+    failed = set()
+    for frag, recs in docs.items():
+        try:
+            compiled = compile_document(recs, index)
+        except Exception as exc:
+            failed.add(frag)
+            rows["quarantine"].append(
+                _compile_error(recs[0]["url"], frag, exc))
+            continue
+        for role, rs in compiled.items():
             rows[role].extend(rs)
+    if failed:
+        rows["mentions"] = [r for r in rows["mentions"]
+                            if r["frag"] not in failed]
     return rows
 
 
@@ -399,20 +385,20 @@ def compile_document(recs: list[dict], index: L.LinkIndex
     rows = {role: [] for role in frames.FRAMES}
     for e in els:
         if e["gpml_element_name"] in E.EDGE_NAMES:
-            rows["edges"].append(_committed("edges", e))
+            rows["edges"].append(frames.stored("edges", e))
         elif e["gpml_element_name"] != "Group" or e["elem_idx"] in kept:
-            rows["nodes"].append(_committed("nodes", e))
+            rows["nodes"].append(frames.stored("nodes", e))
     for r, row in zip(by_name["PublicationXref"],
                       N.citation_rows(by_name["PublicationXref"])):
         row.update(_key_fields(r, "url", "frag", "pathway_id", "elem_idx",
                                "xref_identifier"))
-        rows["citations"].append(_committed("citations", row))
+        rows["citations"].append(frames.stored("citations", row))
     po_terms = []
     for r in by_name["openControlledVocabulary"]:
         row = N.vocabulary_row(r)
         row.update(_key_fields(r, "url", "frag", "pathway_id", "elem_idx",
                                "ontology", "xref_identifier"))
-        rows["vocabularies"].append(_committed("vocabularies", row))
+        rows["vocabularies"].append(frames.stored("vocabularies", row))
         if r["ontology"] == "Pathway Ontology" and row["id"] is not None:
             po_terms.append(row["id"])
     for r in by_name["Pathway"]:
@@ -420,7 +406,7 @@ def compile_document(recs: list[dict], index: L.LinkIndex
         row.update(_key_fields(r, "url", "frag", "pathway_id", "organism",
                                "license", "last_modified"),
                    comments=r["comments"])
-        rows["pathways"].append(_committed("pathways", row))
+        rows["pathways"].append(frames.stored("pathways", row))
 
     rows["interactions"] = I.classify(rows["nodes"], rows["edges"])
     rows["model_triples"], rows["interaction_triples"] = \

@@ -1,5 +1,6 @@
-"""The frames the one pass per page (document.py) emits, by role, and
-the snapshots it writes of them (OUTPUTS).
+"""The frames the one pass per page (document.py) emits, by role, the
+snapshots it writes of them (OUTPUTS), and the one rule by which a row
+of a frame is stored (`stored`).
 
 The roles are the page's `mentions` (MENTIONS_SCHEMA; the `_error` rows
 are the `quarantine` role), its `text`, and what the document compiler
@@ -12,20 +13,27 @@ rewritten to their canonical ids (`canonical_subj`, `canonical_obj`,
 canonicalize.py), so the triples and the canonical triples are two
 outputs of the same rows.
 
+Write side: a mention row (parse.page_mentions, and the quarantine row
+of a document that fails to compile) and a row of the five model
+frames is made as `stored` returns it, once, where it is made. What
+the compiler reads after that (the interactions, the triples, the
+JSON-LD) is what the snapshot holds, and the pass writes every row as
+given (assemble.stage_table).
+
 Each output is one snapshot: its frame, then the url-hash `bucket`
 of the page its rows came from (operators/assemble.py writes it,
-plans/pipeline.py commits it). `as_frame` reads a snapshot back as its
-frame, nullability included.
+plans/pipeline.py commits it). Read side: `as_frame` reads a snapshot
+back as its frame, nullability included, which is how
+plans/pipeline.Snapshots returns every committed output.
 """
 
 from __future__ import annotations
 
+from operator import is_
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-from .parse import MENTIONS_SCHEMA
 
 _S, _D, _I = T.StringType(), T.DoubleType(), T.IntegerType()
 _STRS, _DOUBLES = T.ArrayType(_S), T.ArrayType(_D)
@@ -42,6 +50,40 @@ _POINT = _struct(("x", _D), ("y", _D), ("is_attached_to", _S),
                  ("attachment_offset", _DOUBLES),
                  ("orientation", _DOUBLES), ("marker", _S))
 _KEY = (("url", _S), ("frag", _I))
+
+# one row per GPML element of a page (parse.page_mentions)
+MENTIONS_SCHEMA = _struct(
+    *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("gpml_element_name", _S),
+    ("graph_id", _S), ("graph_id_explicit", T.BooleanType()),
+    ("group_id", _S), ("group_ref", _S), ("graph_ref", _S),
+    ("text_label", _S), ("href", _S), ("wp_type", _S), ("state_type", _S),
+    ("style", _S), ("xref_datasource", _S), ("xref_identifier", _S),
+    # graphics
+    ("center_x", _D), ("center_y", _D), ("width", _D), ("height", _D),
+    ("zorder", _D), ("color", _S), ("fill_color", _S), ("shape_type", _S),
+    ("line_style", _S), ("line_thickness", _D), ("connector_type", _S),
+    ("rotation", _S), ("font_size", _D), ("font_name", _S),
+    ("font_weight", _S), ("font_style", _S), ("font_decoration", _S),
+    ("font_strikethru", _S), ("align", _S), ("valign", _S),
+    ("position", _D), ("rel_x", _D), ("rel_y", _D), ("anchor_shape", _S),
+    ("fill_opacity", _D),
+    ("points", T.ArrayType(_struct(
+        ("idx", _I), ("x", _D), ("y", _D), ("rel_x", _D), ("rel_y", _D),
+        ("graph_ref", _S), ("arrow_head", _S)))),
+    ("biopax_refs", _STRS), ("comments", _COMMENTS),
+    ("attributes", T.MapType(_S, _S)),
+    # pathway-level
+    ("name", _S), ("organism", _S), ("license", _S), ("data_source", _S),
+    ("version", _S), ("author", _S), ("email", _S), ("maintainer", _S),
+    ("last_modified", _S), ("board_width", _D), ("board_height", _D),
+    # publication xref
+    ("pub_id", _S), ("pub_db", _S), ("pub_title", _S), ("pub_source", _S),
+    ("pub_year", _S), ("pub_authors", _STRS),
+    # controlled vocabulary
+    ("ontology", _S), ("vocab_term", _S),
+    # quarantine
+    ("error", _S),
+    required=("url", "frag"))
 
 NODES = _struct(
     *_KEY, ("pathway_id", _S), ("elem_idx", _I), ("id", _S),
@@ -136,14 +178,84 @@ FRAMES = {"nodes": NODES, "edges": EDGES, "citations": CITATIONS,
           "quarantine": QUARANTINE, "text": TEXT}
 
 
-# a null in a non-nullable field commits as this literal (`zero`)
+# a null in a non-nullable field is stored as this literal (`zero`)
 ZERO = {_D: 0.0, _I: 0, _S: ""}
 _ZERO_SQL = {_D: "0.0D", _I: "0", _S: "''"}
 
 
 def zero(t: T.DataType):
-    """What a null in a non-nullable field of type `t` commits as."""
+    """What a null in a non-nullable field of type `t` is stored as."""
     return [] if isinstance(t, T.ArrayType) else ZERO[t]
+
+
+def _nan_to_null(v, t: T.DataType):
+    """`v`, of type `t`, with every NaN null, at every nesting level:
+    `v` itself when it holds no NaN, else a copy (a struct's with every
+    field of `t`)."""
+    if v is None:
+        return None
+    if isinstance(t, T.DoubleType):
+        return None if v != v else v
+    if isinstance(t, T.ArrayType):
+        xs = list(v)
+        out = [_nan_to_null(x, t.elementType) for x in xs]
+    elif isinstance(t, T.StructType):
+        xs = [v.get(n) for n in t.names]
+        out = [_nan_to_null(x, f.dataType) for x, f in zip(xs, t.fields)]
+    else:
+        return v
+    if all(map(is_, out, xs)):
+        return v
+    return out if isinstance(t, T.ArrayType) else dict(zip(t.names, out))
+
+
+# per role, the double fields where NaN is a value, not null: the
+# rotations, where the converters make NaN of a "NaN" or "Infinity"
+# as Spark's cast does; everywhere else NaN only stands for null
+# arithmetic (document._num) or a "NaN" coordinate
+_NAN_KEPT = {"nodes": ("rotation", "text_rotation")}
+
+
+def _plan(role: str, frame: T.StructType) -> tuple:
+    """What `stored` visits of a role's rows: every field, in order;
+    the double fields whose NaN is null, and the array and struct
+    fields that hold such doubles; each non-nullable field, with its
+    zero."""
+    kept = _NAN_KEPT.get(role, ())
+    bearing = [f for f in frame.fields if f.name not in kept
+               and "double" in f.dataType.simpleString()]
+    return (frame.names, [f.name for f in bearing if f.dataType == _D],
+            [(f.name, f.dataType) for f in bearing if f.dataType != _D],
+            [(f.name, zero(f.dataType)) for f in frame.fields
+             if not f.nullable])
+
+
+_PLANS = {role: _plan(role, frame) for role, frame in FRAMES.items()}
+
+
+def stored(role: str, row: dict) -> dict:
+    """`row` as the snapshot of `role`'s frame (FRAMES) stores it:
+    every field of the frame, in order, and no other (a field `row`
+    lacks is null); NaN null at every nesting level, but where NaN is
+    a value (`_NAN_KEPT`); and a null in a non-nullable field its
+    `zero`."""
+    names, doubles, nested, required = _PLANS[role]
+    out = dict.fromkeys(names)
+    out.update(row)
+    if len(out) > len(names):  # `row` has fields beyond the frame's
+        out = {n: out[n] for n in names}
+    for n in doubles:
+        v = out[n]
+        if v != v:
+            out[n] = None
+    for n, t in nested:
+        v = out[n]
+        if v is not None:
+            out[n] = _nan_to_null(v, t)
+    for n, z in required:
+        if out[n] is None:
+            out[n] = z
+    return out
 
 
 class Output(NamedTuple):

@@ -18,6 +18,11 @@ genuinely need document order:
   (ref: src/GraphIdManager.ts:31-53) which depends on the document
   order of elements and on existing hex-parsable ids.
 
+A mention row is made as the mentions snapshot stores it
+(frames.stored, the package's one commit rule, where MENTIONS_SCHEMA
+lives too). A numeric attribute is read with Python's `float`, and one
+that `float` cannot read is null (`_f`).
+
 `parse_gpml` and `extracted_text` are the same kernels as Spark
 frames of their own, one Arrow pass over the pages each.
 """
@@ -36,6 +41,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.mappings import SUPPORTED_NAMESPACES
+from . import frames
+from .frames import MENTIONS_SCHEMA
 
 _SCRIPT_RE = re.compile(
     r'<script type="application/gpml\+xml">\n?(.*?)\n?</script>',
@@ -45,101 +52,8 @@ _XML_DECL_RE = re.compile(r"<\?xml[^>]*\?>")
 _P_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
 _RDF_ID_FIX = (' rdf:id="', ' rdf:ID="')
 
-_POINT_TYPE = T.StructType([
-    T.StructField("idx", T.IntegerType()),
-    T.StructField("x", T.DoubleType()),
-    T.StructField("y", T.DoubleType()),
-    T.StructField("rel_x", T.DoubleType()),
-    T.StructField("rel_y", T.DoubleType()),
-    T.StructField("graph_ref", T.StringType()),
-    T.StructField("arrow_head", T.StringType()),
-])
-
-_COMMENT_TYPE = T.StructType([
-    T.StructField("content", T.StringType()),
-    T.StructField("source", T.StringType()),
-])
-
-MENTIONS_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("frag", T.IntegerType(), False),
-    T.StructField("pathway_id", T.StringType()),
-    T.StructField("elem_idx", T.IntegerType()),
-    T.StructField("gpml_element_name", T.StringType()),
-    T.StructField("graph_id", T.StringType()),
-    T.StructField("graph_id_explicit", T.BooleanType()),
-    T.StructField("group_id", T.StringType()),
-    T.StructField("group_ref", T.StringType()),
-    T.StructField("graph_ref", T.StringType()),
-    T.StructField("text_label", T.StringType()),
-    T.StructField("href", T.StringType()),
-    T.StructField("wp_type", T.StringType()),
-    T.StructField("state_type", T.StringType()),
-    T.StructField("style", T.StringType()),
-    T.StructField("xref_datasource", T.StringType()),
-    T.StructField("xref_identifier", T.StringType()),
-    # graphics
-    T.StructField("center_x", T.DoubleType()),
-    T.StructField("center_y", T.DoubleType()),
-    T.StructField("width", T.DoubleType()),
-    T.StructField("height", T.DoubleType()),
-    T.StructField("zorder", T.DoubleType()),
-    T.StructField("color", T.StringType()),
-    T.StructField("fill_color", T.StringType()),
-    T.StructField("shape_type", T.StringType()),
-    T.StructField("line_style", T.StringType()),
-    T.StructField("line_thickness", T.DoubleType()),
-    T.StructField("connector_type", T.StringType()),
-    T.StructField("rotation", T.StringType()),
-    T.StructField("font_size", T.DoubleType()),
-    T.StructField("font_name", T.StringType()),
-    T.StructField("font_weight", T.StringType()),
-    T.StructField("font_style", T.StringType()),
-    T.StructField("font_decoration", T.StringType()),
-    T.StructField("font_strikethru", T.StringType()),
-    T.StructField("align", T.StringType()),
-    T.StructField("valign", T.StringType()),
-    T.StructField("position", T.DoubleType()),
-    T.StructField("rel_x", T.DoubleType()),
-    T.StructField("rel_y", T.DoubleType()),
-    T.StructField("anchor_shape", T.StringType()),
-    T.StructField("fill_opacity", T.DoubleType()),
-    T.StructField("points", T.ArrayType(_POINT_TYPE)),
-    T.StructField("biopax_refs", T.ArrayType(T.StringType())),
-    T.StructField("comments", T.ArrayType(_COMMENT_TYPE)),
-    T.StructField("attributes", T.MapType(T.StringType(), T.StringType())),
-    # pathway-level
-    T.StructField("name", T.StringType()),
-    T.StructField("organism", T.StringType()),
-    T.StructField("license", T.StringType()),
-    T.StructField("data_source", T.StringType()),
-    T.StructField("version", T.StringType()),
-    T.StructField("author", T.StringType()),
-    T.StructField("email", T.StringType()),
-    T.StructField("maintainer", T.StringType()),
-    T.StructField("last_modified", T.StringType()),
-    T.StructField("board_width", T.DoubleType()),
-    T.StructField("board_height", T.DoubleType()),
-    # publication xref
-    T.StructField("pub_id", T.StringType()),
-    T.StructField("pub_db", T.StringType()),
-    T.StructField("pub_title", T.StringType()),
-    T.StructField("pub_source", T.StringType()),
-    T.StructField("pub_year", T.StringType()),
-    T.StructField("pub_authors", T.ArrayType(T.StringType())),
-    # controlled vocabulary
-    T.StructField("ontology", T.StringType()),
-    T.StructField("vocab_term", T.StringType()),
-    # quarantine
-    T.StructField("error", T.StringType()),
-])
-
 _ARROW_MENTIONS = to_arrow_schema(MENTIONS_SCHEMA)
 
-
-# the fields a NaN can reach: doubles, and the points' doubles
-_DOUBLE_FIELDS = [(f.name, f.dataType) for f in MENTIONS_SCHEMA.fields
-                  if "double" in f.dataType.simpleString()]
 
 # Elements that may carry a GraphId (ref: Processor.ts:212-249 is applied
 # to exactly the element streams below plus nested Anchors).
@@ -223,8 +137,17 @@ def _clean(v):
 
 
 def _f(v):
+    """A numeric attribute as Python's `float` reads it, None if it
+    cannot. Not JS `parseFloat`'s reading: "12px" is None, not 12, and
+    "inf", "1_0" and " 1 " read as inf, 10.0 and 1.0. (The reference's
+    XSD-typed parse, cxml, is not at hand to follow.)"""
     v = _clean(v)
-    return float(v) if v is not None else None
+    if v is None:
+        return None
+    try:
+        return float(v)
+    except ValueError:
+        return None
 
 
 def _graphics_fields(graphics: ET.Element | None) -> dict:
@@ -462,44 +385,16 @@ def _parse_fragment(url: str, frag_idx: int, fragment: str) -> list[dict]:
     return rows
 
 
-def _rows_for_page(url: str, html: bytes) -> list[dict]:
-    rows = []
-    for i, frag in enumerate(extract_fragments(html)):
-        rows.extend(_parse_fragment(url, i, frag))
-    return rows
-
-
-def _nan_to_null(v, t: T.DataType):
-    """v with every NaN null, at every nesting level, as the Arrow
-    conversion of a pandas frame (`from_pandas`) commits it."""
-    if v is None:
-        return None
-    if isinstance(t, T.DoubleType):
-        return None if v != v else v
-    if isinstance(t, T.ArrayType):
-        return [_nan_to_null(x, t.elementType) for x in v]
-    if isinstance(t, T.StructType):
-        return {f.name: _nan_to_null(v.get(f.name), f.dataType)
-                for f in t.fields}
-    return v
-
-
 def page_mentions(url: str, html: bytes | None) -> list[dict]:
-    """One page's mention rows (`_error` rows included), each with
-    every MENTIONS_SCHEMA field, as they commit: a NaN (a "NaN"
-    coordinate) is null at every nesting level. A page with no html
-    has none."""
+    """One page's mention rows (`_error` rows included), as the
+    mentions snapshot stores them (frames.stored): every
+    MENTIONS_SCHEMA field, and a NaN (a "NaN" coordinate) null at every
+    nesting level. A page with no html has none."""
     if html is None:
         return []
-    rows = []
-    for r in _rows_for_page(url, html):
-        row = dict.fromkeys(MENTIONS_SCHEMA.names)
-        row.update(r)
-        for name, t in _DOUBLE_FIELDS:
-            if row[name] is not None:
-                row[name] = _nan_to_null(row[name], t)
-        rows.append(row)
-    return rows
+    return [frames.stored("mentions", r)
+            for i, frag in enumerate(extract_fragments(html))
+            for r in _parse_fragment(url, i, frag)]
 
 
 def text_schema(pages: DataFrame) -> T.StructType:

@@ -15,10 +15,12 @@ writes all 13 snapshots itself, then a commit of each on the driver
          write the manifest                    (SnapshotStore.commit_files)
       -> run.json, the batch's record
 
-The commit reads nothing back: `run` returns a mapping that reads a
-stage (`SnapshotStore.read`) only when a caller first asks for it, so
-a batch whose caller reads none of its frames, as the benchmark, the
-streaming sink and bench.py do, makes no read on the driver.
+The commit reads nothing back: `run` returns a mapping (`Snapshots`)
+that reads a stage only when a caller first asks for it, as its
+declared frame (frames.as_frame), so a batch whose caller reads none
+of its frames, as the benchmark, the streaming sink and bench.py do,
+makes no read on the driver. `build_document_model` without a store
+returns the same mapping.
 
 No stage waits for another: each is an output of the same pass, and
 the driver plans one query. Linking and canonicalization read nothing
@@ -55,8 +57,10 @@ from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import session
+from ..operators import frames
 from ..operators.assemble import build_document_model, write_empty_file
 # perfbench/layers.py times its layers by wrapping these names in this
 # module. The pass (build_document_model) compiles every document,
@@ -114,14 +118,17 @@ class SnapshotStore:
                 else:
                     os.remove(path)
 
+    def schema(self, stage: str) -> T.StructType:
+        """The stage's schema as its manifest records it: its frame,
+        then `bucket`."""
+        return T.StructType.fromJson(json.loads(
+            self.manifest(stage)["schema"]))
+
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        from pyspark.sql import types as T
-        data_path, _ = self._paths(stage)
-        schema_json = self.manifest(stage).get("schema")
-        if schema_json:
-            schema = T.StructType.fromJson(json.loads(schema_json))
-            return spark.read.schema(schema).parquet(data_path)
-        return spark.read.parquet(data_path)
+        """The stage's files as written: every field nullable, `bucket`
+        included (`Snapshots` reads them as their frames)."""
+        return spark.read.schema(self.schema(stage)) \
+            .parquet(self._paths(stage)[0])
 
     def manifest(self, stage: str) -> dict:
         with open(self._paths(stage)[1]) as f:
@@ -301,32 +308,39 @@ STAGES = [
 
 
 class Snapshots(Mapping):
-    """Each stage of STAGES by name, as its committed snapshot: read
-    (`SnapshotStore.read`) the first time it is asked for, then kept.
-    `mentions` holds only the ok rows (`quarantine` the others)."""
+    """Each output committed in a store (frames.OUTPUTS, in that
+    order) by name, as its frame: the fields and nullability its
+    manifest's schema declares, without the layout column `bucket`
+    (frames.as_frame over `SnapshotStore.read`). A stage is read the
+    first time it is asked for, then kept. `mentions` holds only the
+    ok rows (`quarantine` the others)."""
 
     def __init__(self, spark: SparkSession, store: SnapshotStore):
         self._spark, self._store = spark, store
+        self._stages = [s for s in frames.OUTPUTS if store.is_committed(s)]
         self._frames: dict[str, DataFrame] = {}
 
     def __getitem__(self, stage: str) -> DataFrame:
         if stage not in self._frames:
-            if stage not in STAGES:
+            if stage not in self._stages:
                 raise KeyError(stage)
-            df = self._store.read(self._spark, stage)
+            df = frames.as_frame(
+                self._store.read(self._spark, stage),
+                T.StructType([f for f in self._store.schema(stage).fields
+                              if f.name != "bucket"]))
             if stage == "mentions":
                 df = df.filter(F.col("gpml_element_name") != "_error")
             self._frames[stage] = df
         return self._frames[stage]
 
     def __contains__(self, stage) -> bool:
-        return stage in STAGES
+        return stage in self._stages
 
     def __iter__(self):
-        return iter(STAGES)
+        return iter(self._stages)
 
     def __len__(self) -> int:
-        return len(STAGES)
+        return len(self._stages)
 
 
 class Pipeline:
@@ -356,9 +370,9 @@ class Pipeline:
         its stages. A resumed run with any stage uncommitted re-runs
         the pass over the pages, which is deterministic, for those
         stages only; a run with all 13 committed builds nothing.
-        Returns each stage's committed snapshot by name (`Snapshots`),
-        read only when first asked for, `mentions` holding only the ok
-        rows; the run itself reads none of them."""
+        Returns each stage's committed snapshot by name, as its frame
+        (`Snapshots`), read only when first asked for, `mentions`
+        holding only the ok rows; the run itself reads none of them."""
         todo = [s for s in STAGES
                 if not (resume and self.store.is_committed(s))]
         written, pass_s = None, 0.0

@@ -54,15 +54,16 @@ def golden():
 def compiled_rows(gpml: str, url: str = "https://t.example/doc",
                   index=None) -> dict:
     """The document compiler's rows by role for one GPML document,
-    parsed and compiled in plain Python, linked against `index` (the
-    dictionary's by default)."""
+    compiled in plain Python from what the pass hands it: the ok rows
+    of the page's mentions (parse.page_mentions), linked against
+    `index` (the dictionary's by default)."""
     from gpml2pvjson_js_spark.operators.document import compile_document
     from gpml2pvjson_js_spark.operators.linking import link_index
-    from gpml2pvjson_js_spark.operators.parse import (
-        MENTIONS_SCHEMA, _parse_fragment)
-    return compile_document([{**dict.fromkeys(MENTIONS_SCHEMA.names), **r}
-                             for r in _parse_fragment(url, 0, gpml)],
-                            index or link_index())
+    from gpml2pvjson_js_spark.operators.parse import page_mentions
+    page = f'<script type="application/gpml+xml">\n{gpml}\n</script>'
+    return compile_document(
+        [r for r in page_mentions(url, page.encode())
+         if r["gpml_element_name"] != "_error"], index or link_index())
 
 
 def rows_by_id(df, url_part):
