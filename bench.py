@@ -216,8 +216,9 @@ def _measure(tmp: str) -> dict:
                       shuffle_partitions=256)
     queries: dict[str, float] = {}
 
-    # warmup: small corpus through the same plans — compiles codegen,
-    # spins up python workers, JITs the hot paths
+    # warmup: small corpus through the same plans — spins up python
+    # workers, JITs the hot paths (get_spark turns Spark's code
+    # generation off, so there is no Java to compile)
     t0 = time.time()
     run_pipeline_measured(spark, "/root/testdata/sf0.001",
                           f"{tmp}/warmup")

@@ -15,8 +15,8 @@ public geom-utils API surface a rendering consumer uses.
 Spark-first design: the whole computation is Catalyst expressions —
 the variable-length sequence folds through ``F.aggregate`` with an
 ``array<double>(9)`` row-major matrix as the accumulator, so the
-operator is JVM-side, codegen-able, and shuffle-free (a pure
-per-row ``Project``). No UDF, no python workers.
+operator is JVM-side and shuffle-free (a pure per-row ``Project``,
+interpreted in a ``session.get_spark`` session). No UDF, no python workers.
 """
 
 from __future__ import annotations

@@ -65,9 +65,9 @@ _NAMED_ENTITIES = (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
 
 def _chr(cp: int) -> str:
     """A code point as a string. A lone surrogate is malformed UTF-16,
-    which Spark 4's decode rejects."""
+    and decodes to U+FFFD, as he.decode does when not strict."""
     if 0xD800 <= cp <= 0xDFFF:
-        raise ValueError(f"malformed UTF-16 code point {cp:#x}")
+        return "\ufffd"
     return chr(cp)
 
 

@@ -134,10 +134,12 @@ def _sig_df(sh: DataFrame,
             num_perm: int = DEFAULT_MINHASH_PERMS) -> DataFrame:
     """(doc_id, sig: array<long>) for docs with >= 1 shingle.
 
-    Expressed as explode -> num_perm codegen'd xxhash64(shingle, k)
-    columns -> groupBy-min (map-side combinable): the whole signature
-    stays in whole-stage codegen. The previous form — num_perm
-    array_min(transform(...)) folds — ran interpreted per element
+    Expressed as explode -> num_perm xxhash64(shingle, k) columns ->
+    groupBy-min (map-side combinable): the whole signature is plain
+    JVM expressions, one per column, with no lambda (a
+    `session.get_spark` session evaluates them interpreted; code
+    generation is off there). The previous form — num_perm
+    array_min(transform(...)) folds — called a lambda per element
     (and its 2-arg `lambda s, k=k` silently received the array INDEX
     as k from F.transform, so every perm hashed with the same seed;
     the DuckDB all-pairs oracle caught a j=0.99 pair with 0/16 equal
@@ -242,7 +244,7 @@ def portable_token_hash(col) -> "F.Column":
     `CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT)`). Used by the
     simhash ORACLE variant so the banding/vote/Hamming logic is
     value-checked end-to-end; production defaults to xxhash64 (one
-    codegen'd JVM op, no hex round-trip)."""
+    JVM expression, no hex round-trip)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 

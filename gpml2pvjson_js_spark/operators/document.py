@@ -306,10 +306,14 @@ def _key_fields(r: dict, *names) -> dict:
 def _compile_error(url: str, frag: int, exc: Exception) -> dict:
     """The quarantine row of a page or a document whose compile raised
     `exc`: a mention row of its url and frag, with `error`
-    `compile: <type>` and every other field null."""
+    `compile: <type>: <message>` (the first line of the exception's
+    message, at most 200 characters; `compile: <type>` when it has
+    none) and every other field null."""
+    error = f"compile: {type(exc).__name__}"
+    message = next(iter(str(exc).splitlines()), "")[:200]
     return frames.stored("mentions", {
         "url": url, "frag": frag, "gpml_element_name": "_error",
-        "error": f"compile: {type(exc).__name__}"})
+        "error": f"{error}: {message}" if message else error})
 
 
 def compile_page_group(pages, index: L.LinkIndex) -> dict[str, list[dict]]:

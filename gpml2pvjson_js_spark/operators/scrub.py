@@ -4,8 +4,9 @@ and repetition/boilerplate scoring.
 
 Everything here is pure Catalyst — narrow projections and filters
 built from ``regexp_*`` / array expressions, no UDFs, no shuffles —
-so every operator stays inside whole-stage codegen and scales
-linearly with input at any corpus size. Each is also deliberately
+so every operator runs in the JVM, row by row (interpreted in a
+``session.get_spark`` session, which turns code generation off), and
+scales linearly with input at any corpus size. Each is also deliberately
 ANSI-SQL-expressible so a DuckDB oracle can replicate it
 byte-for-byte (the patterns below stick to the regex subset with
 identical semantics in Java regex and RE2: ``\\d``, ``\\b``,

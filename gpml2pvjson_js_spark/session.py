@@ -25,6 +25,39 @@ launches its JVM; under `spark-submit` (`tools/submit_job.py`) pass
 them with `--driver-java-options`. Executors keep the JVM's default
 policy.
 
+Expression evaluation. For a plan it runs, Spark generates Java source
+(whole-stage codegen, and one class per projection, predicate and
+ordering) and compiles it with Janino, once per JVM. The plans of a
+batch do little JVM work per row: they hash and sort page keys, hand
+Arrow batches to Python and write parquet. In a cold JVM the compiling
+costs more than it saves: on a 4-vCPU host, in
+`tools/jvm_cpu_split.py`, a cold `bulk` batch compiled 21 classes in
+0.9-1.1 s of compile time, a cold `pipeline` batch 8 in 0.5 s, and a
+warm batch none. `get_spark` sets `spark.sql.codegen.wholeStage=false`
+and `spark.sql.codegen.factoryMode=NO_CODEGEN`, so every operator and
+expression runs on Spark's interpreted path and no class is generated.
+Both are needed: with whole-stage codegen off alone, the cold `bulk`
+batch still compiled 15 of its 21 classes and its CPU did not move.
+With both, the cold `bulk` batch read 11.7-12.9 -> 9.1-9.9 CPU-s
+(driver JVM 9.0-9.8 -> 6.9-7.5) and the cold `pipeline` batch 5.7 ->
+4.3, with the warm batches at parity (2 interleaved pairs each, seed
+2); `perfbench/run.py --workload bulk --seconds 5` read `cpu_s` 7.07
+-> 5.48 (medians of 12 interleaved pairs).
+- `factoryMode` is internal to Spark (its `SQLConf` doc says end users
+  are not to set it), so an upgrade could quietly ignore it;
+  `tests/test_session.py` fails if the suite's session compiles a
+  class.
+- Spark can only compile two things, whatever the settings: the row
+  joiner of a `HashAggregateExec`'s partial aggregation (a `groupBy`
+  with `sum`, `count` and the like) and the ordering of a range
+  partitioner (a global `orderBy`). A batch of the pipeline uses
+  neither.
+- The cost is in long queries over much data, whose per-row work then
+  runs interpreted: at sf0.1, `bench.py`'s aggregation-heavy queries
+  (`agg_pricing_summary`, `bbox_agg`) ran slower (CHANGES.md has the
+  figures). A caller's `extra_conf` or `SPARK_GRAFT_CONF` can turn
+  either setting back on.
+
 Class-data sharing of the driver JVM. Most of a cold session's set-up
 is the JVM loading, parsing and verifying Spark's classes. When
 `get_spark` launches the driver JVM it maps a dynamic AppCDS archive
@@ -349,11 +382,12 @@ def get_spark(
     """The session, with this module's defaults: AQE, Arrow, explicit-
     only broadcasts, a driver heap sized to the host, the driver JVM's
     JIT options and class-data sharing, Spark's Python daemon replaced
-    on a local master, and no DataFrame call-site capture (pyspark's
+    on a local master, no DataFrame call-site capture (pyspark's
     `dataFrameDebugging`: errors lose the Python call site in their
-    DataFrame query context; tracebacks are unchanged). `SPARK_GRAFT_CONF`
-    (`k=v;k=v`) overrides the defaults, and `extra_conf` overrides
-    both."""
+    DataFrame query context; tracebacks are unchanged), and interpreted
+    expression evaluation (no whole-stage codegen, no Janino classes).
+    `SPARK_GRAFT_CONF` (`k=v;k=v`) overrides the defaults, and
+    `extra_conf` overrides both."""
     global _cds
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     master = master or f"local[{cpus}]"
@@ -410,6 +444,10 @@ def get_spark(
         # module docstring): its capture costs 10 py4j round trips and a
         # stack walk on every F.col, and an IPython import on the first
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # interpreted expressions and operators: no Java generated or
+        # compiled (see the module docstring)
+        "spark.sql.codegen.wholeStage": "false",
+        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
         # defaultJavaOptions, which Spark prepends to extraJavaOptions,
         # so a caller's own extraJavaOptions adds to these, not replaces
         "spark.driver.defaultJavaOptions":

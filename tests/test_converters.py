@@ -1,8 +1,10 @@
 """The value converters (functions/converters.py) against a table of
-inputs and outputs. Every expected value, raises included, was
-computed once by the Catalyst expressions these converters replaced,
-under Spark 4.1.2 with ANSI mode on, and is written in as a literal;
-where that cast raised, the casts now give `try_cast`'s null (NULL)."""
+inputs and outputs. Every expected value was computed once by the
+Catalyst expressions these converters replaced, under Spark 4.1.2 with
+ANSI mode on, and is written in as a literal, except where Spark
+raised: where a cast raised, the casts now give `try_cast`'s null
+(NULL), and where the decode of a lone surrogate raised,
+`html_unescape` gives U+FFFD."""
 
 import math
 
@@ -11,15 +13,10 @@ import pytest
 from gpml2pvjson_js_spark.functions import converters as C
 
 NAN = float("nan")
-RAISES = object()
 NULL = object()
 
 
 def _check(fn, args, want):
-    if want is RAISES:
-        with pytest.raises(ValueError):
-            fn(*args)
-        return
     if want is NULL:
         assert fn(*args) is None
         return
@@ -62,8 +59,8 @@ def test_css_color(value, want):
      "<b> & \"q\" 'a'  x"),
     ("&amp;lt;", "&lt;"),
     ("plain", "plain"), ("", ""), (None, None),
-    # a lone surrogate is malformed UTF-16
-    ("&#xD800;", RAISES), ("&#55357;", RAISES),
+    # a lone surrogate is malformed UTF-16: U+FFFD, as he.decode gives
+    ("&#xD800;", "\uFFFD"), ("&#55357;", "\uFFFD"),
 ])
 def test_html_unescape(value, want):
     _check(C.html_unescape, (value,), want)

@@ -108,10 +108,25 @@ def test_a_document_that_fails_to_compile_is_quarantined_alone():
     rows = compile_page_group([(URL, b"<p>t</p>" + _page(good, bad))],
                               INDEX)
     [q] = rows["quarantine"]
-    assert (q["url"], q["frag"], q["error"]) == (URL, 1, "compile: ValueError")
+    assert (q["url"], q["frag"], q["error"]) == (
+        URL, 1, "compile: ValueError: [INVALID_ARRAY_INDEX_IN_ELEMENT_AT] "
+        "The index 1 is out of bounds. The array has 0 elements. "
+        f"(edge 'e1' of '{URL}' has no points)")
     assert rows["text"] == [{"url": URL, "extracted_text": "t"}]
     for role in ("mentions", "nodes", "pathways", "documents"):
         assert {r["frag"] for r in rows[role]} == {0}, role
+    _tables(rows)
+
+
+def test_a_label_naming_a_lone_surrogate_keeps_its_node():
+    """A numeric entity naming a lone surrogate decodes to U+FFFD, as
+    he.decode does when not strict: the DataNode keeps its row, and
+    its document gets no `compile:` row."""
+    gpml = C._doc(C._pathway_open(), C._datanode("n1", "&amp;#xD800;"))
+    rows = compile_page_group([(URL, _page(gpml))], INDEX)
+    assert rows["quarantine"] == []
+    [node] = rows["nodes"]
+    assert (node["id"], node["text_content"]) == ("n1", "\ufffd")
     _tables(rows)
 
 
@@ -122,7 +137,7 @@ def test_a_page_whose_parse_raises_keeps_its_text(monkeypatch):
     monkeypatch.setattr(document, "page_mentions", broken)
     rows = compile_page_group([(URL, b"<p>t</p>")], INDEX)
     [q] = rows["quarantine"]
-    assert (q["frag"], q["error"]) == (0, "compile: RuntimeError")
+    assert (q["frag"], q["error"]) == (0, "compile: RuntimeError: parse")
     assert list(q) == frames.MENTIONS_SCHEMA.names
     assert rows["text"] == [{"url": URL, "extracted_text": "t"}]
     assert rows["mentions"] == []

@@ -899,9 +899,9 @@ def test_run_and_the_model_return_the_same_frames(spark, tmp_path_factory):
 def test_a_url_that_fails_to_compile_is_quarantined(spark, tmp_path_factory):
     """A document whose compile raises (an Interaction without a Point)
     does not fail the batch: all 13 stages commit, it gets one
-    quarantine row, `compile: ValueError`, with its frag, and no other
-    row, its page keeps its text and its other document, and
-    `run.json` counts it under `compile`."""
+    quarantine row, `compile: ValueError: <message>`, with its frag,
+    and no other row, its page keeps its text and its other document,
+    and `run.json` counts it under `compile`."""
     import datetime as dt
 
     from gpml2pvjson_js_spark import corpus as C
@@ -923,7 +923,9 @@ def test_a_url_that_fails_to_compile_is_quarantined(spark, tmp_path_factory):
     assert set(p.metrics()) == set(STAGES)
     [row] = out["quarantine"].filter(F.col("url") == bad).collect()
     assert (row["gpml_element_name"], row["error"], row["frag"]) == \
-        ("_error", "compile: ValueError", 1)
+        ("_error", "compile: ValueError: [INVALID_ARRAY_INDEX_IN_ELEMENT_AT] "
+         "The index 1 is out of bounds. The array has 0 elements. "
+         f"(edge 'e1' of '{bad}' has no points)", 1)
     [text] = out["text"].filter(F.col("url") == bad).collect()
     assert text["extracted_text"] == "kept"
 

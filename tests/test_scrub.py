@@ -196,7 +196,7 @@ def test_contamination_joins_are_broadcast(contam_corpus):
 
 def test_scrub_plans_are_narrow(pii_docs, keyed):
     """100 TB contract: no Exchange in any scrub plan (pure
-    projections/filters that stay in whole-stage codegen)."""
+    projections and filters, evaluated row by row in the JVM)."""
     for df in (redact_pii(pii_docs),
                hash_sample(keyed, "k", 0.25),
                repetition_score(pii_docs)):

@@ -458,3 +458,80 @@ def test_sessions_capture_no_dataframe_call_sites():
     seen = json.loads(proc.stdout.strip().splitlines()[-1])
     assert seen == {"ipython": False, "conf": "false",
                     "caller_conf": "true"}
+
+
+def _compiled(spark) -> int:
+    """Classes Janino has compiled in this JVM (Spark's CodegenMetrics)."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def _plan_node_names(df) -> list[str]:
+    """The node names of `df`'s executed plan, through AQE's final
+    plan and its query stages."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def _grouped_and_sorted(spark):
+    """A groupBy and an orderBy over a local frame, run to the end. A
+    literal unique to the call makes any code generated for it new
+    to Janino's cache. The plan avoids the two operators Spark has no
+    interpreted form of: a `HashAggregateExec`'s partial aggregation
+    (`collect_list` plans an `ObjectHashAggregate`) and a range
+    partitioner's ordering (one partition, so no exchange)."""
+    import time
+
+    from pyspark.sql import functions as F
+    df = session.local_frame(spark, [("a", 1), ("b", 2), ("a", 3)],
+                             "k string, v long")
+    out = (df.groupBy("k")
+           .agg(F.collect_list(F.col("v") + F.lit(time.time_ns()))
+                .alias("vs"))
+           .coalesce(1).orderBy("k"))
+    assert [r["k"] for r in out.collect()] == ["a", "b"]
+    return out
+
+
+def test_session_compiles_no_java(spark, tmp_path):
+    """The session evaluates expressions interpreted: a groupBy and
+    orderBy and a 2-page `Pipeline.run` compile no class with Janino,
+    and no plan has a `WholeStageCodegen` node. `factoryMode` is an
+    internal Spark setting, so this is what catches an upgrade that
+    ignores it. The two settings set back to Spark's defaults in the
+    session bring compilation back."""
+    from gpml2pvjson_js_spark.corpus import pages_df
+    from gpml2pvjson_js_spark.plans.pipeline import Pipeline
+
+    settings = {"spark.sql.codegen.wholeStage": "true",
+                "spark.sql.codegen.factoryMode": "FALLBACK"}
+    before = _compiled(spark)
+    df = _grouped_and_sorted(spark)
+    assert not [n for n in _plan_node_names(df) if "WholeStageCodegen" in n]
+    Pipeline(spark, pages_df(spark, 2, giant_every=0), str(tmp_path),
+             n_buckets=2).run(resume=False)
+    assert _compiled(spark) == before
+
+    saved = {k: spark.conf.get(k) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        df = _grouped_and_sorted(spark)
+        assert _compiled(spark) > before
+        assert [n for n in _plan_node_names(df) if "WholeStageCodegen" in n]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert {k: spark.conf.get(k) for k in settings} == {
+        "spark.sql.codegen.wholeStage": "false",
+        "spark.sql.codegen.factoryMode": "NO_CODEGEN"}

@@ -31,10 +31,13 @@ own median:
 - this process, the Python driver.
 Under the title, one line gives the driver JVM's class-data sharing
 (`session.class_data_sharing()`): `use` or `dump` with the archive, or
-`off` with the reason. Under the CPU table, one line per batch column
-gives its Spark jobs, their tasks and their shuffle MB (read and
-written), from the Spark status store, so the exchanges a change
-removes show beside the CPU it saves.
+`off` with the reason. At the foot of the CPU table, each column's
+Janino classes and compile ms: the classes Spark generated and
+compiled in the driver JVM (`CodegenMetrics`) and the time Janino
+took to compile them (`CodeGenerator.compileTime`). Under the table,
+one line per batch column gives its Spark jobs, their tasks and their
+shuffle MB (read and written), from the Spark status store. So the
+classes and exchanges a change removes show beside the CPU it saves.
 
 perfbench's trace times layers and stages, not threads, so it cannot
 show where a change to the JVM's JIT work lands; this tool can. JVM
@@ -202,6 +205,16 @@ def spark_work(spark, first_job: int) -> tuple[int, int, float]:
     return len(jobs), tasks, shuffle / 2**20
 
 
+def janino(spark) -> tuple[int, float]:
+    """(classes, compile ms) of the code Spark has generated and
+    compiled in the driver JVM so far."""
+    jvm = spark._jvm
+    return (jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount(),
+            jvm.org.apache.spark.sql.catalyst.expressions.codegen
+            .CodeGenerator.compileTime() / 1e6)
+
+
 def next_job_id(spark) -> int:
     return _max_job_id(spark.sparkContext._jsc.sc().statusStore()) + 1
 
@@ -214,7 +227,7 @@ def median(figures: list[dict]) -> dict:
 def report(columns: list[tuple[str, dict, float, dict]],
            works: list[tuple[str, tuple[float, float, float]]]) -> None:
     """One CPU table with a column per (title, CPU s, wall s, Python
-    seen), then each batch's Spark work."""
+    and Janino seen), then each batch's Spark work."""
     jvm = [kind for kind, _ in KINDS] + ["rest", "exited threads"]
     names = ["driver JVM", *(f"  {k}" for k in jvm), "python daemons",
              "python workers", "JVM child commands", "python driver", "all"]
@@ -236,6 +249,10 @@ def report(columns: list[tuple[str, dict, float, dict]],
               + "".join(f"{seen[role]:11g}" for *_, seen in columns))
     print(f"{'  peak RSS MB':<20}"
           + "".join(f"{seen['rss_mb']:11.0f}" for *_, seen in columns))
+    print(f"{'Janino classes':<20}"
+          + "".join(f"{seen['classes']:11g}" for *_, seen in columns))
+    print(f"{'  compile ms':<20}"
+          + "".join(f"{seen['compile_ms']:11.0f}" for *_, seen in columns))
     for title, (jobs, tasks, mb) in works:
         print(f"{title} Spark work: {jobs:g} jobs, {tasks:g} tasks, "
               f"{mb:.2f} MB shuffled")
@@ -262,7 +279,7 @@ def main(argv=None) -> int:
     tmp = tempfile.mkdtemp(prefix="jvm_cpu_split_")
     t0 = time.monotonic()
     spark = threads = None
-    batches = []  # (CPU s, wall s, Python seen, Spark work) per batch
+    batches = []  # (CPU s, wall s, seen, Spark work) per batch
     try:
         spark = get_spark(app_name="jvm_cpu_split",
                           master=f"local[{len(os.sched_getaffinity(0))}]",
@@ -280,11 +297,14 @@ def main(argv=None) -> int:
                 spark, spark.read.schema(workloads.PAGES_DDL).parquet(path),
                 os.path.join(tmp, "out", str(i))))
         (setup, setup_seen), t1 = threads.snapshot(), time.monotonic()
+        setup_seen["classes"], setup_seen["compile_ms"] = janino(spark)
         for runner in runners:
-            first_job = next_job_id(spark)
+            first_job, compiled = next_job_id(spark), janino(spark)
             (before, _), t2 = threads.snapshot(), time.monotonic()
             runner.run()
             (end, seen), t3 = threads.snapshot(), time.monotonic()
+            seen["classes"], seen["compile_ms"] = (
+                b - a for a, b in zip(compiled, janino(spark)))
             batches.append(({k: end[k] - before[k] for k in end}, t3 - t2,
                             seen, spark_work(spark, first_job)))
     finally:
