@@ -137,7 +137,7 @@ def _z_sorted(items) -> list[str]:
 def _edge_box(pts) -> tuple:
     """An edge member's box from its first and last explicit points
     (least/greatest skip nulls)."""
-    if pts is None or len(pts) == 0:
+    if pts is None:
         return _NAN, _NAN, _NAN, _NAN
     xs = (pts[0]["x"], pts[-1]["x"])
     ys = (pts[0]["y"], pts[-1]["y"])
@@ -168,8 +168,8 @@ def _resolve_points(edge: dict, target) -> None:
     """Each explicit point against the element its GraphRef names;
     `target(ref)` is that element when it can be attached to."""
     pts = edge["pts"]
-    if pts is None or len(pts) == 0:
-        edge["points"] = None if pts is None else []
+    if pts is None:
+        edge["points"] = None
         return
     points, edge_refs, targets = [], [], []
     for p in pts:

@@ -35,7 +35,9 @@ def convert_edge(r: dict) -> dict:
     name = r["gpml_element_name"]
     eff = N.effective(r)
     pts = None
-    if r["points"] is not None:
+    # a Graphics with no Point converts as no Graphics: no pts, types
+    # or markers
+    if r["points"]:
         pts = [{"idx": p["idx"], "x": p["x"], "y": p["y"],
                 "marker": C.map_value(p["arrow_head"]),
                 "graph_ref": p["graph_ref"],
@@ -44,11 +46,6 @@ def convert_edge(r: dict) -> dict:
                 "roff_x": C.rel_offset_scalar(p["rel_x"]),
                 "roff_y": C.rel_offset_scalar(p["rel_y"])}
                for p in r["points"]]
-        if not pts:
-            raise ValueError(
-                "[INVALID_ARRAY_INDEX_IN_ELEMENT_AT] The index 1 is out "
-                f"of bounds. The array has 0 elements. (edge "
-                f"{r['graph_id']!r} of {r['url']!r} has no points)")
     types = None
     if pts is not None:
         types = C.union_types(

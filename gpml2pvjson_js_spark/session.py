@@ -7,23 +7,44 @@ to the parallelism level rather than the 200 default.
 
 JIT policy of the driver JVM. The entry points (`python -m
 gpml2pvjson_js_spark`, `tools/submit_job.py`, the benchmark) each start
-a fresh driver JVM and run one batch in it, so the traffic is cold
-runs. On a cold `Pipeline.run` the JIT compilers are the largest CPU
-consumer: HotSpot's C2 tier spends most of its time compiling Janino,
-Catalyst and Java serialization code that one batch runs only a few
-thousand times. `DRIVER_JIT_OPTIONS` keeps tiered compilation but
-raises the four tier-4 (C2) thresholds twentyfold, so a cold batch
-runs on C1 code and C2 compiles only code that stays hot across
-batches. On a 4-vCPU host, `perfbench/run.py --workload pipeline` read
--24% `cpu_s` cold, and `tools/jvm_cpu_split.py` read compiler-thread
-CPU 60-70 -> 23-27 s. The warm check is the same workload run back to back
-in one JVM (`--seconds 300`): long-lived sessions (streaming
-micro-batches, the test suite) must stay at parity, which is why C2
-stays on: C1 only (`-XX:TieredStopAtLevel=1`) was cheaper cold but
-~25% slower warm. The options reach the driver only when this factory
-launches its JVM; under `spark-submit` (`tools/submit_job.py`) pass
-them with `--driver-java-options`. Executors keep the JVM's default
-policy.
+a fresh driver JVM and run one batch in it, and a session's later
+batches are small: with Spark's code generation off (below) and the
+pass in Python, a warm `pipeline` batch does about 0.55 CPU-s of work,
+little of it in the JVM. `DRIVER_JIT_OPTIONS` is
+`-XX:TieredStopAtLevel=1`: HotSpot compiles with C1 alone, and no C2
+thread starts.
+- Under the default tiered policy a hot method first compiles at tier
+  3, C1 code with full profiling and the slowest compiled tier, and
+  stays there until it crosses a tier-4 (C2) threshold; C2 then spends
+  CPU on code that a short batch never pays back. At tier 1, C1
+  compiles without profiling, and its code runs faster than tier-3
+  code.
+- On a 4-vCPU host, against the policy this replaced (C2 on, its four
+  tier-4 thresholds raised twentyfold, which kept hot code in tier 3
+  twenty times longer; interleaved pairs, every run correct against
+  the pins): `perfbench/run.py --seconds 5` read
+  `cpu_s` 0.74 -> 0.57 on `pipeline` (medians of 10 pairs, lower in
+  10) and 3.35 -> 2.33 on `bulk` (8 pairs, lower in 8), with
+  `setup_s` and `peak_rss_mb` lower on both. `tools/jvm_cpu_split.py
+  --workload bulk --seed 2 --batches 4` (3 pairs) read the cold batch
+  7.5-9.2 -> 6.2-7.2 CPU-s (driver JVM 5.7-6.8 -> 4.0-4.7; C2 0.8-0.9
+  -> 0; JIT compile time 2.2-2.6 -> 1.5-1.9 s) and the warm batches
+  2.4-3.1 -> 2.1-2.4. Long sessions got cheaper too: over
+  `--workload pipeline --seconds 60` (83-94 runs, 3 pairs) the runs
+  after the first read a median 0.43-0.46 -> 0.40-0.41 CPU-s. An
+  earlier measurement that found C1 alone ~25% slower warm was taken
+  on batches of about 28 CPU-s, most of it in generated Java.
+- The cost is in long queries whose per-row work runs in the JVM, which
+  only C2 optimises: at sf0.1, `bench.py`'s `agg_pricing_summary`,
+  `bbox_agg` and `minhash_lsh_pairs` ran slower (CHANGES.md has the
+  figures), while its KG pipeline ran faster.
+- The options reach the driver only when this factory launches its
+  JVM; under `spark-submit` (`tools/submit_job.py`) pass them with
+  `--driver-java-options`. They go in `spark.driver.defaultJavaOptions`,
+  and Spark puts a caller's `spark.driver.extraJavaOptions` after
+  them, where HotSpot keeps the last value of a flag: a caller gets C2
+  back with `-XX:TieredStopAtLevel=4` there. Executors keep the JVM's
+  default policy; on a local master they run in the driver JVM.
 
 Expression evaluation. For a plan it runs, Spark generates Java source
 (whole-stage codegen, and one class per projection, predicate and
@@ -145,12 +166,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 MAX_DRIVER_MEMORY_MB = 24 * 1024
-# tier-4 thresholds at 20x HotSpot's defaults (5000/600/15000/40000)
-DRIVER_JIT_OPTIONS = (
-    "-XX:Tier4InvocationThreshold=100000 "
-    "-XX:Tier4MinInvocationThreshold=12000 "
-    "-XX:Tier4CompileThreshold=300000 "
-    "-XX:Tier4BackEdgeThreshold=800000")
+# C1 alone, without profiling: no tier 3, no C2 (see the docstring)
+DRIVER_JIT_OPTIONS = "-XX:TieredStopAtLevel=1"
 # the class-data-sharing archives, and the empty conf directory
 CDS_CACHE_DIR = os.path.join(os.path.expanduser("~"), ".cache",
                              "gpml2pvjson_js_spark")

@@ -5,6 +5,7 @@ Spark."""
 
 from xml.sax.saxutils import escape, quoteattr
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
@@ -98,23 +99,47 @@ def test_hostile_numbers_compile(values):
     _tables(rows)
 
 
-def test_a_document_that_fails_to_compile_is_quarantined_alone():
-    """An Interaction without a Point fails its document's compile; that
-    document becomes one `compile:` row with its frag, and the page
-    keeps its text and its other document."""
-    good = C._doc(C._pathway_open(), C._datanode("n1", "N"))
-    bad = C._doc(C._pathway_open(), C._datanode("n1", "N"),
-                 C._interaction("e1", []))
-    rows = compile_page_group([(URL, b"<p>t</p>" + _page(good, bad))],
+def test_a_document_that_fails_to_compile_is_quarantined_alone(
+        monkeypatch):
+    """A document whose compile raises becomes one `compile:` row with
+    its frag, and the page keeps its text and its other document."""
+    compile_document = document.compile_document
+
+    def fails_frag_1(recs, index):
+        if recs[0]["frag"] == 1:
+            raise ValueError("boom\nsecond line")
+        return compile_document(recs, index)
+
+    monkeypatch.setattr(document, "compile_document", fails_frag_1)
+    gpml = C._doc(C._pathway_open(), C._datanode("n1", "N"))
+    rows = compile_page_group([(URL, b"<p>t</p>" + _page(gpml, gpml))],
                               INDEX)
     [q] = rows["quarantine"]
     assert (q["url"], q["frag"], q["error"]) == (
-        URL, 1, "compile: ValueError: [INVALID_ARRAY_INDEX_IN_ELEMENT_AT] "
-        "The index 1 is out of bounds. The array has 0 elements. "
-        f"(edge 'e1' of '{URL}' has no points)")
+        URL, 1, "compile: ValueError: boom")
     assert rows["text"] == [{"url": URL, "extracted_text": "t"}]
     for role in ("mentions", "nodes", "pathways", "documents"):
         assert {r["frag"] for r in rows[role]} == {0}, role
+    _tables(rows)
+
+
+@pytest.mark.parametrize("element", ["Interaction", "GraphicalLine"])
+def test_an_edge_whose_graphics_hold_no_point_keeps_its_document(element):
+    """An edge whose `<Graphics>` holds no `<Point>` converts as one
+    with no `<Graphics>`: no points, types or markers; its document
+    keeps its nodes, pathway row, JSON-LD and triples."""
+    gpml = C._doc(C._pathway_open(), C._datanode("n1", "N"),
+                  C._interaction("e1", [], connector_type="Elbow",
+                                 element=element))
+    rows = compile_page_group([(URL, _page(gpml))], INDEX)
+    assert rows["quarantine"] == []
+    [edge] = rows["edges"]
+    assert edge["id"] == "e1"
+    assert (edge["points"], edge["types"], edge["marker_start"],
+            edge["marker_end"]) == (None, None, None, None)
+    assert [n["id"] for n in rows["nodes"]] == ["n1"]
+    assert len(rows["pathways"]) == 1 and len(rows["documents"]) == 1
+    assert rows["model_triples"]
     _tables(rows)
 
 

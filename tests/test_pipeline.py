@@ -896,24 +896,31 @@ def test_run_and_the_model_return_the_same_frames(spark, tmp_path_factory):
             == [f.nullable for f in model[stage].schema.fields], stage
 
 
-def test_a_url_that_fails_to_compile_is_quarantined(spark, tmp_path_factory):
-    """A document whose compile raises (an Interaction without a Point)
-    does not fail the batch: all 13 stages commit, it gets one
-    quarantine row, `compile: ValueError: <message>`, with its frag,
-    and no other row, its page keeps its text and its other document,
-    and `run.json` counts it under `compile`."""
+def test_a_url_that_fails_to_compile_is_quarantined(spark, tmp_path_factory,
+                                                    monkeypatch):
+    """A document whose compile raises does not fail the batch: all 13
+    stages commit, it gets one quarantine row, `compile: ValueError:
+    <message>`, with its frag, and no other row, its page keeps its
+    text and its other document, and `run.json` counts it under
+    `compile`. The trigger is a linking index whose block for the
+    label "boom" holds a malformed entry; the pass ships the driver's
+    index to its tasks, so only that document's compile raises."""
     import datetime as dt
 
     from gpml2pvjson_js_spark import corpus as C
+    from gpml2pvjson_js_spark.operators import assemble, linking
 
-    bad = "https://hostile.example/pointless"
+    index = linking.link_index()
+    broken = index._replace(
+        blocks={**index.blocks, "boom": [(frozenset(), None, None)]})
+    monkeypatch.setattr(assemble, "link_index", lambda: broken)
+    bad = "https://hostile.example/boom"
     ts = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
     good = C._doc(C._pathway_open(), C._datanode("n1", "N"))
-    pointless = C._doc(C._pathway_open(), C._datanode("n1", "N"),
-                       C._interaction("e1", []))
+    boom = C._doc(C._pathway_open(), C._datanode("n1", "boom"))
     html = "<p>kept</p>" + "".join(
         f'<script type="application/gpml+xml">\n{g}\n</script>'
-        for g in (good, pointless))
+        for g in (good, boom))
     hostile = spark.createDataFrame(
         [(bad, ts, html.encode(), "kept", "en")], C.PAGES_SCHEMA)
     root = str(tmp_path_factory.mktemp("kgout_hostile"))
@@ -923,9 +930,8 @@ def test_a_url_that_fails_to_compile_is_quarantined(spark, tmp_path_factory):
     assert set(p.metrics()) == set(STAGES)
     [row] = out["quarantine"].filter(F.col("url") == bad).collect()
     assert (row["gpml_element_name"], row["error"], row["frag"]) == \
-        ("_error", "compile: ValueError: [INVALID_ARRAY_INDEX_IN_ELEMENT_AT] "
-         "The index 1 is out of bounds. The array has 0 elements. "
-         f"(edge 'e1' of '{bad}' has no points)", 1)
+        ("_error", "compile: ValueError: too many values to unpack "
+         "(expected 2)", 1)
     [text] = out["text"].filter(F.col("url") == bad).collect()
     assert text["extracted_text"] == "kept"
 

@@ -26,15 +26,29 @@ def test_driver_memory_is_capped_at_24g(monkeypatch):
 
 
 def test_driver_jvm_gets_the_jit_policy_and_utc(spark):
-    """The suite's own driver JVM runs with the tier-4 thresholds and
-    the UTC zone that get_spark sets in spark.driver.defaultJavaOptions."""
+    """The suite's own driver JVM runs with C1 alone and the UTC zone
+    that get_spark sets in spark.driver.defaultJavaOptions, and with
+    none of the tier-4 thresholds they replaced."""
     args = set(spark._jvm.java.lang.management.ManagementFactory
                .getRuntimeMXBean().getInputArguments())
-    assert {"-XX:Tier4InvocationThreshold=100000",
-            "-XX:Tier4MinInvocationThreshold=12000",
-            "-XX:Tier4CompileThreshold=300000",
-            "-XX:Tier4BackEdgeThreshold=800000",
-            "-Duser.timezone=UTC"} <= args
+    assert {"-XX:TieredStopAtLevel=1", "-Duser.timezone=UTC"} <= args
+    assert not [a for a in args if a.startswith("-XX:Tier4")]
+
+
+def test_driver_jvm_starts_no_c2_compiler(spark):
+    """The flag takes effect: the driver JVM has a C1 compiler thread
+    and no C2 one (thread names as /proc shows them, cut to 15
+    characters)."""
+    pid = spark.sparkContext._gateway.proc.pid
+    names = []
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                names.append(f.read().strip())
+        except FileNotFoundError:
+            pass  # the thread exited
+    assert "C1 CompilerThre" in names
+    assert "C2 CompilerThre" not in names
 
 
 def test_driver_jvm_runs_with_class_data_sharing(spark):

@@ -34,10 +34,13 @@ Under the title, one line gives the driver JVM's class-data sharing
 `off` with the reason. At the foot of the CPU table, each column's
 Janino classes and compile ms: the classes Spark generated and
 compiled in the driver JVM (`CodegenMetrics`) and the time Janino
-took to compile them (`CodeGenerator.compileTime`). Under the table,
-one line per batch column gives its Spark jobs, their tasks and their
+took to compile them (`CodeGenerator.compileTime`); then its JIT
+compile ms, the time the driver JVM's JIT compilers took
+(`CompilationMXBean.getTotalCompilationTime`). Under the table, one
+line per batch column gives its Spark jobs, their tasks and their
 shuffle MB (read and written), from the Spark status store. So the
-classes and exchanges a change removes show beside the CPU it saves.
+classes, compiles and exchanges a change removes show beside the CPU
+it saves.
 
 perfbench's trace times layers and stages, not threads, so it cannot
 show where a change to the JVM's JIT work lands; this tool can. JVM
@@ -205,14 +208,21 @@ def spark_work(spark, first_job: int) -> tuple[int, int, float]:
     return len(jobs), tasks, shuffle / 2**20
 
 
-def janino(spark) -> tuple[int, float]:
+# the keys `compiled` fills, in its order
+COMPILED = ("classes", "compile_ms", "jit_ms")
+
+
+def compiled(spark) -> tuple[int, float, int]:
     """(classes, compile ms) of the code Spark has generated and
-    compiled in the driver JVM so far."""
+    compiled in the driver JVM so far, and the ms its JIT compilers
+    have taken."""
     jvm = spark._jvm
     return (jvm.org.apache.spark.metrics.source.CodegenMetrics
             .METRIC_COMPILATION_TIME().getCount(),
             jvm.org.apache.spark.sql.catalyst.expressions.codegen
-            .CodeGenerator.compileTime() / 1e6)
+            .CodeGenerator.compileTime() / 1e6,
+            jvm.java.lang.management.ManagementFactory
+            .getCompilationMXBean().getTotalCompilationTime())
 
 
 def next_job_id(spark) -> int:
@@ -227,7 +237,7 @@ def median(figures: list[dict]) -> dict:
 def report(columns: list[tuple[str, dict, float, dict]],
            works: list[tuple[str, tuple[float, float, float]]]) -> None:
     """One CPU table with a column per (title, CPU s, wall s, Python
-    and Janino seen), then each batch's Spark work."""
+    and compiles seen), then each batch's Spark work."""
     jvm = [kind for kind, _ in KINDS] + ["rest", "exited threads"]
     names = ["driver JVM", *(f"  {k}" for k in jvm), "python daemons",
              "python workers", "JVM child commands", "python driver", "all"]
@@ -253,6 +263,8 @@ def report(columns: list[tuple[str, dict, float, dict]],
           + "".join(f"{seen['classes']:11g}" for *_, seen in columns))
     print(f"{'  compile ms':<20}"
           + "".join(f"{seen['compile_ms']:11.0f}" for *_, seen in columns))
+    print(f"{'JIT compile ms':<20}"
+          + "".join(f"{seen['jit_ms']:11.0f}" for *_, seen in columns))
     for title, (jobs, tasks, mb) in works:
         print(f"{title} Spark work: {jobs:g} jobs, {tasks:g} tasks, "
               f"{mb:.2f} MB shuffled")
@@ -297,14 +309,14 @@ def main(argv=None) -> int:
                 spark, spark.read.schema(workloads.PAGES_DDL).parquet(path),
                 os.path.join(tmp, "out", str(i))))
         (setup, setup_seen), t1 = threads.snapshot(), time.monotonic()
-        setup_seen["classes"], setup_seen["compile_ms"] = janino(spark)
+        setup_seen.update(zip(COMPILED, compiled(spark)))
         for runner in runners:
-            first_job, compiled = next_job_id(spark), janino(spark)
+            first_job, start = next_job_id(spark), compiled(spark)
             (before, _), t2 = threads.snapshot(), time.monotonic()
             runner.run()
             (end, seen), t3 = threads.snapshot(), time.monotonic()
-            seen["classes"], seen["compile_ms"] = (
-                b - a for a, b in zip(compiled, janino(spark)))
+            seen.update(zip(COMPILED, (
+                b - a for a, b in zip(start, compiled(spark)))))
             batches.append(({k: end[k] - before[k] for k in end}, t3 - t2,
                             seen, spark_work(spark, first_job)))
     finally:

@@ -15,13 +15,16 @@ parquet + lineage manifests; rerunning with --resume picks up from
 the last committed snapshot.
 
 spark-submit starts the driver JVM itself, so `session.get_spark`'s
-driver options do not reach it; pass them with `--driver-java-options`.
-Class-data sharing takes an archive made by a `get_spark` session on
-the same JDK and Spark installation (`session.class_data_sharing()`
-names it), or one dumped with `-XX:ArchiveClassesAtExit=<file>`:
+driver options do not reach it; pass them with `--driver-java-options`:
+the JIT policy (`session.DRIVER_JIT_OPTIONS`, C1 alone) and the UTC
+zone, and class-data sharing, which takes an archive made by a
+`get_spark` session on the same JDK and Spark installation
+(`session.class_data_sharing()` names it), or one dumped with
+`-XX:ArchiveClassesAtExit=<file>`:
 
     spark-submit --driver-java-options \
-        "-XX:SharedArchiveFile=<archive> -Xshare:auto -Xlog:cds*=off" ...
+        "-Duser.timezone=UTC -XX:TieredStopAtLevel=1 \
+         -XX:SharedArchiveFile=<archive> -Xshare:auto -Xlog:cds*=off" ...
 
 CDS refuses a non-empty directory on the class path, and the launcher
 puts the conf directory there: run with `SPARK_CONF_DIR` set to an
