@@ -14,11 +14,15 @@
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from gpml2pvjson_js_spark.operators.scrub import EMAIL_RE as _EMAIL_RE
 from gpml2pvjson_js_spark.operators.scrub import IPV4_RE as _IPV4_RE
@@ -36,36 +40,24 @@ def _read(spark, sf_dir, name):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_MODEL_CACHE: dict = {}
+# the snapshot roots of `_kg`, one per (sf_dir, limit), removed at exit
+_KG_ROOT = tempfile.mkdtemp(prefix="gpml2pvjson_kg_")
+atexit.register(shutil.rmtree, _KG_ROOT, True)
 
 
-def _kg(spark: SparkSession, sf_dir: str, limit: int = 64) -> dict:
-    """Build (and cache per sf_dir) the KG document model over pages
-    synthesized from the documents table: one pass of the document
-    compiler, and the snapshots it wrote."""
-    key = (sf_dir, limit)
-    if key not in _MODEL_CACHE:
-        from gpml2pvjson_js_spark.corpus import pages_from_documents
-        from gpml2pvjson_js_spark.operators.assemble import (
-            build_document_model)
-        from gpml2pvjson_js_spark.operators.canonicalize import (
-            canonical_triples)
-        from gpml2pvjson_js_spark.operators.interactions import (
-            classify_interactions)
-        from gpml2pvjson_js_spark.operators.linking import link_entities
-        from gpml2pvjson_js_spark.operators.triples import build_triples
+def _kg(spark: SparkSession, sf_dir: str, limit: int = 64):
+    """The KG snapshots (plans/pipeline.Snapshots) of the pages
+    synthesized from the first `limit` rows of sf_dir's documents
+    table: one `Pipeline.run` into a root of its own per (sf_dir,
+    limit). The store's resume is the cache: a second call finds every
+    stage committed, so it commits nothing and runs no pass."""
+    from gpml2pvjson_js_spark.corpus import pages_from_documents
+    from gpml2pvjson_js_spark.plans.pipeline import Pipeline
 
-        pages = pages_from_documents(spark, sf_dir, limit=limit) \
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        model = build_document_model(spark, pages)
-        _MODEL_CACHE[key] = {
-            "pages": pages, "model": model,
-            "interactions": classify_interactions(model),
-            "triples": build_triples(model),
-            "linked": link_entities(model),
-            "canonical_triples": canonical_triples(model),
-        }
-    return _MODEL_CACHE[key]
+    root = os.path.join(_KG_ROOT, hashlib.sha256(
+        f"{sf_dir}\0{limit}".encode()).hexdigest()[:16])
+    pages = pages_from_documents(spark, sf_dir, limit=limit)
+    return Pipeline(spark, pages, root).run(resume=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -568,13 +560,13 @@ def q_repetition_score(spark, sf_dir):
 
 def kg_mentions(spark, sf_dir):
     k = _kg(spark, sf_dir)
-    return k["model"]["mentions"].select(
+    return k["mentions"].select(
         "url", "frag", "gpml_element_name", "graph_id", "elem_idx")
 
 
 def kg_nodes(spark, sf_dir):
     k = _kg(spark, sf_dir)
-    return k["model"]["nodes"].select(
+    return k["nodes"].select(
         "url", "frag", "id", "gpml_element_name", "kaavio_type",
         F.concat_ws("|", "types").alias("types"), "text_content",
         "x", "y", "width", "height", "z_index", "is_part_of")
@@ -582,7 +574,7 @@ def kg_nodes(spark, sf_dir):
 
 def kg_edges(spark, sf_dir):
     k = _kg(spark, sf_dir)
-    return k["model"]["edges"].select(
+    return k["edges"].select(
         "url", "frag", "id", "gpml_element_name", "marker_start",
         "marker_end", F.concat_ws("|", "types").alias("types"),
         F.concat_ws("|", "is_attached_to").alias("is_attached_to"),
@@ -612,30 +604,31 @@ def kg_linked(spark, sf_dir):
 
 
 def kg_text_invariant(spark, sf_dir):
-    """Per-url byte-identical extracted text check; returns one row per
-    page with ok=true (any false row is an invariant violation)."""
-    from gpml2pvjson_js_spark.operators.parse import extracted_text
-    k = _kg(spark, sf_dir)
-    pages = k["pages"]
-    t = extracted_text(pages).join(pages.select("url", "text"), "url")
+    """Per-url byte-identical extracted text check: the pass's `text`
+    snapshot against the text of the documents-table row each page was
+    made from (its doc id is the url's last path segment); returns one
+    row per page with ok=true (any false row is an invariant
+    violation)."""
+    text = _kg(spark, sf_dir)["text"]
+    docs = _read(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text")
+    t = text.withColumn(
+        "doc_id", F.element_at(F.split("url", "/"), -1)).join(docs, "doc_id")
     return t.select(
         "url", (F.col("extracted_text") == F.col("text")).alias("ok"))
 
 
 def kg_jsonld(spark, sf_dir):
-    from gpml2pvjson_js_spark.operators.export import jsonld_documents
-    k = _kg(spark, sf_dir)
-    return jsonld_documents(k["model"])
+    return _kg(spark, sf_dir)["documents"]
 
 
 def kg_topo_levels(spark, sf_dir):
     from gpml2pvjson_js_spark.plans.topo import (
         dependency_edges, topo_levels)
     k = _kg(spark, sf_dir)
-    model = k["model"]
-    ents = model["nodes"].select("url", "frag", "id").unionByName(
-        model["edges"].select("url", "frag", "id"))
-    return topo_levels(ents, dependency_edges(model))
+    ents = k["nodes"].select("url", "frag", "id").unionByName(
+        k["edges"].select("url", "frag", "id"))
+    return topo_levels(ents, dependency_edges(k))
 
 
 def kg_golden_pr(spark, sf_dir):
@@ -647,7 +640,7 @@ def kg_golden_pr(spark, sf_dir):
     and `ok` false."""
     from gpml2pvjson_js_spark.golden import pr_report
     from gpml2pvjson_js_spark.session import local_frame
-    rep = pr_report(spark)
+    rep = pr_report()
 
     def ok(p, r):
         return rep["status"] == "ok" and p >= 0.95 and r >= 0.95

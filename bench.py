@@ -178,17 +178,16 @@ def run_pipeline_measured(spark, sf_dir: str,
     return n, wall, stages, footers
 
 
-def _lazy_probe(spark, sf_dir: str) -> tuple[int, float]:
-    """One model build, one count — pure compute window. The build
-    runs the compiler's pass and writes its snapshots, so the window
-    starts before it."""
+def _lazy_probe(spark, sf_dir: str, out_root: str) -> tuple[int, float]:
+    """One pipeline run into `out_root`, one count of its triples —
+    pure compute window. The run writes and commits the pass's
+    snapshots, so the window starts before it."""
     from gpml2pvjson_js_spark.corpus import pages_from_documents
-    import gpml2pvjson_js_spark.operators.assemble as A
-    from gpml2pvjson_js_spark.operators.triples import build_triples
+    from gpml2pvjson_js_spark.plans.pipeline import Pipeline
     pages = pages_from_documents(spark, sf_dir)
     t0 = time.time()
-    model = A.build_document_model(spark, pages)
-    n_lazy = build_triples(model).count()
+    n_lazy = Pipeline(spark, pages, out_root).run(resume=False)[
+        "triples"].count()
     return n_lazy, time.time() - t0
 
 
@@ -197,7 +196,7 @@ def main() -> dict:
     try:
         return _measure(tmp)
     finally:
-        # the warmup and measured snapshot stores
+        # the warmup, measured and lazy-probe snapshot stores
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -234,7 +233,7 @@ def _measure(tmp: str) -> dict:
     for s, ms in stages.items():
         queries[f"kg_stage_{s}"] = round(ms / 1000.0, 3)
 
-    n_lazy, lazy_sec = _lazy_probe(spark, SF_DIR)
+    n_lazy, lazy_sec = _lazy_probe(spark, SF_DIR, f"{tmp}/lazy")
     queries["kg_lazy_exec"] = round(lazy_sec, 3)
     queries["kg_lazy_triples_per_sec"] = round(n_lazy / lazy_sec, 2) \
         if lazy_sec else 0.0

@@ -9,10 +9,10 @@ Modes:
                                        bench.py's queries dict per rep.
   python bench_extra.py micro [K]      K reps of the 10 headline micro
                                        queries via the noop sink.
-  python bench_extra.py stage NAME [K] noop-sink isolation of one
-                                       pipeline stage frame (guide
-                                       §1.4): times the computation,
-                                       not the snapshot write.
+  python bench_extra.py stage NAME [K] K pipeline runs, each with a
+                                       noop sink of ONE stage's
+                                       committed frame (NAME is one of
+                                       plans.pipeline.STAGES).
 
 Same env contract as bench.py (SPARK_GRAFT_SF_DIR / _CPUS).
 """
@@ -58,7 +58,7 @@ def _pipeline_reps(k: int, tmp: str) -> None:
         c0 = B._contention_sample()
         n, wall, stages, _f = B.run_pipeline_measured(
             spark, SF_DIR, f"{tmp}/m{i}")
-        n_lazy, lazy_sec = B._lazy_probe(spark, SF_DIR)
+        n_lazy, lazy_sec = B._lazy_probe(spark, SF_DIR, f"{tmp}/lazy{i}")
         rep = {"rep": i, "kg_pipeline_exec": round(wall, 3),
                "triples_per_sec": round(n / wall, 1),
                "kg_lazy_exec": round(lazy_sec, 3),
@@ -87,42 +87,32 @@ def micro_reps(k: int) -> None:
 
 
 def stage_noop(name: str, k: int) -> None:
-    """Build the pipeline frames lazily and noop-sink ONE of them —
-    isolates compute from the snapshot write. Stage frames are built
-    fresh per rep (no cross-rep caching)."""
+    """Run the pipeline and noop-sink ONE of its stages. The snapshot
+    root is fresh per rep (no cross-rep resume), so each rep times the
+    pass, its commit and the read of that stage."""
+    tmp = tempfile.mkdtemp(prefix="kgbx_stage_")
+    try:
+        _stage_noop(name, k, tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _stage_noop(name: str, k: int, tmp: str) -> None:
     from gpml2pvjson_js_spark.corpus import pages_from_documents
-    from gpml2pvjson_js_spark.operators.assemble import (
-        build_document_model)
-    from gpml2pvjson_js_spark.operators.canonicalize import (
-        canonical_triples)
-    from gpml2pvjson_js_spark.operators.interactions import (
-        classify_interactions)
-    from gpml2pvjson_js_spark.operators.linking import link_entities
-    from gpml2pvjson_js_spark.operators.parse import parse_gpml
-    from gpml2pvjson_js_spark.operators.triples import build_triples
+    from gpml2pvjson_js_spark.plans.pipeline import Pipeline
 
     spark = _spark()
 
-    def frame(sf_dir):
+    def frame(sf_dir, root):
         pages = pages_from_documents(spark, sf_dir)
-        if name == "mentions":
-            return parse_gpml(pages)
-        model = build_document_model(spark, pages)
-        if name in model:
-            return model[name]
-        if name == "interactions":
-            return classify_interactions(model)
-        if name == "triples":
-            return build_triples(model)
-        if name == "linked":
-            return link_entities(model)
-        return canonical_triples(model)
+        return Pipeline(spark, pages, root).run(resume=False)[name]
 
-    frame("/root/testdata/sf0.001").write.format("noop") \
-        .mode("overwrite").save()  # warmup
+    frame("/root/testdata/sf0.001", f"{tmp}/warmup").write \
+        .format("noop").mode("overwrite").save()
     for i in range(k):
         t0 = time.time()
-        frame(SF_DIR).write.format("noop").mode("overwrite").save()
+        frame(SF_DIR, f"{tmp}/m{i}").write.format("noop") \
+            .mode("overwrite").save()
         print(json.dumps({"rep": i, "stage": name,
                           "sec": round(time.time() - t0, 3)}),
               flush=True)

@@ -1,7 +1,8 @@
 """Golden-fixture kit: measure triple P/R against the reference's own
 expected outputs.
 
-Two pure-Python halves (no Spark needed):
+Two pure-Python halves, and a scorer that uses them (no Spark
+needed):
 
 - ``golden_triples(doc)``: flatten a reference expected pvjson document
   (/root/reference/test/expected/*.json, the output shape of
@@ -15,6 +16,12 @@ Two pure-Python halves (no Spark needed):
   inverse mappings mirror src/2013a/ValueConverters.ts (position
   scalars, marker casing, rotation radians) — geometry attributes are
   carried through but only structure feeds triples.
+
+- ``pr_report()``: each golden rendered back to GPML and compiled by
+  the pass's own per-page function (document.compile_page_group, the
+  kernel a `Pipeline.run` task runs, in plain Python; the offline pins
+  in tests/test_pins_offline.py hold it to the pipeline's snapshots),
+  its model triples scored against the golden's flatten.
 
 Pathway ids are content hashes of the original GPML bytes
 (bin/gpml2pvjson:55-108), which a reconstruction cannot reproduce, so
@@ -477,51 +484,32 @@ def golden_fixture_docs(expected_dir: str = EXPECTED_DIR) -> dict:
     return out
 
 
-def golden_pages(spark, docs: dict):
-    """One Common-Crawl-style page per golden fixture, embedding the
-    reconstructed GPML, so the whole golden corpus runs through the
-    production parse -> model -> triples path in a single job."""
-    import datetime
-    from .corpus import PAGES_SCHEMA
-    rows = []
-    for i, (name, doc) in enumerate(sorted(docs.items())):
-        gpml = gpml_from_golden(doc)
+def triples_by_fixture(docs: dict) -> dict:
+    """{fixture: set((subj, pred, obj))}: the compiler's model triples
+    (the `model_triples` role, without the interaction triples) of one
+    Common-Crawl-style page per golden fixture that embeds its
+    reconstructed GPML, with pathway ids normalized. Each page compiles
+    as a task of the pass compiles it (document.compile_page_group), in
+    plain Python."""
+    from .operators.document import compile_page_group
+    from .operators.linking import link_index
+
+    index = link_index()
+    out = {}
+    for name, doc in sorted(docs.items()):
         html = ("<html><head><title>golden</title></head><body>\n"
                 '<script type="application/gpml+xml">\n'
-                + gpml + "\n</script>\n</body></html>")
-        rows.append((
-            f"https://golden.example/{name}",
-            datetime.datetime(2020, 1, 6) + datetime.timedelta(seconds=i),
-            html.encode("utf-8"),
-            f"golden fixture {name}",
-            "en",
-        ))
-    return spark.createDataFrame(rows, PAGES_SCHEMA)
-
-
-def spark_triples_by_fixture(spark, pages) -> dict:
-    """Run the document-model pipeline over the golden pages; return
-    {fixture: set((subj, pred, obj))} with pathway ids normalized."""
-    from pyspark.sql import functions as F
-    from .operators.assemble import build_document_model
-    from .operators.triples import build_triples
-
-    model = build_document_model(spark, pages)
-    triples = build_triples(model, with_interactions=False)
-    norm = triples.select(
-        F.element_at(F.split("url", "/"), -1).alias("fixture"),
-        F.when(F.col("subj") == F.col("pathway_id"),
-               F.lit(PATHWAY_TOKEN)).otherwise(F.col("subj")).alias("subj"),
-        "pred", "obj",
-    )
-    out: dict = {}
-    for row in norm.collect():
-        out.setdefault(row["fixture"], set()).add(
-            (row["subj"], row["pred"], row["obj"]))
+                + gpml_from_golden(doc) + "\n</script>\n</body></html>")
+        rows = compile_page_group(
+            [(f"https://golden.example/{name}", html.encode("utf-8"))],
+            index)
+        out[name] = {(PATHWAY_TOKEN if t["subj"] == t["pathway_id"]
+                      else t["subj"], t["pred"], t["obj"])
+                     for t in rows["model_triples"]}
     return out
 
 
-def pr_report(spark, expected_dir: str = EXPECTED_DIR,
+def pr_report(expected_dir: str = EXPECTED_DIR,
               exclude: Iterable[str] = ()) -> dict:
     """Corpus-wide triple precision/recall vs the reference goldens.
 
@@ -541,7 +529,7 @@ def pr_report(spark, expected_dir: str = EXPECTED_DIR,
             "fixtures": {},
         }
     gold = {name: golden_triples(doc) for name, doc in docs.items()}
-    ours = spark_triples_by_fixture(spark, golden_pages(spark, docs))
+    ours = triples_by_fixture(docs)
 
     fixtures = {}
     tp = n_ours = n_gold = 0

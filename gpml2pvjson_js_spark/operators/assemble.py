@@ -16,7 +16,7 @@ canonicalization read only the dictionary beyond the document, and the
 dictionary is a driver-built Python index (linking.link_index) handed
 to the pass.
 
-The pass (`write_pass`) is one `mapInArrow` over the pages as
+The pass (`build_document_model`) is one `mapInArrow` over the pages as
 `SnapshotStore.layout` lays them out (the batch's one exchange),
 sorted within partitions on (bucket, url), so the pages of one url are
 adjacent and every output comes out sorted by bucket. Each task
@@ -64,23 +64,21 @@ does not share with the executors fails the commit rather than
 committing what it cannot see. Object stores (s3, gs, abfs) are out
 of scope.
 
-Without a store, `build_document_model` writes the pass into a
-temporary store on the driver, removed at interpreter exit, so it
-needs a local master (it refuses any other), commits it, and returns
-what `Pipeline.run` returns (plans/pipeline.Snapshots), the one read
-shape of the package: the operators, the driver contract and the
-benchmarks read what the pipeline commits, as its frames.
+The pass always writes into a store its caller owns, and only
+`Pipeline.run` commits it: what `run` returns (plans/pipeline.Snapshots)
+is the one read shape of the package, and the operators, the driver
+contract and the benchmarks read what the pipeline commits, as its
+frames. A caller that wants one document's rows without Spark calls
+the pass's own function, document.compile_page_group, as the stdin CLI
+(__main__.py) and the golden scorer (golden.py) do.
 A per-document topo-level operator is still provided in plans/topo.py
 for hyperedge-depth diagnostics and cycle quarantine.
 """
 
 from __future__ import annotations
 
-import atexit
 import json
 import os
-import shutil
-import tempfile
 import time
 import uuid
 from collections import Counter
@@ -354,11 +352,13 @@ def pass_frame(spark: SparkSession, pages: DataFrame, store,
                            FILE_ROW), schemas
 
 
-def write_pass(spark: SparkSession, pages: DataFrame, store,
-               stages) -> PassFiles:
-    """Run the pass (`pass_frame`). Nothing is committed: the caller
-    commits each output from the returned rows. If the pass fails,
-    every file of its outputs is removed."""
+def build_document_model(spark: SparkSession, pages: DataFrame, store,
+                         stages) -> PassFiles:
+    """The one pass over `pages` (`pass_frame`): it writes the outputs
+    `stages` into the snapshot `store` (plans/pipeline.py,
+    SnapshotStore) and returns what it wrote, uncommitted: the caller
+    (`Pipeline.run`) commits each output from the returned rows. If
+    the pass fails, every file of its outputs is removed."""
     df, schemas = pass_frame(spark, pages, store, stages)
     started = time.time()
     try:
@@ -371,41 +371,3 @@ def write_pass(spark: SparkSession, pages: DataFrame, store,
     for r in rows:
         files[r["stage"]].append(r.asDict())
     return PassFiles(schemas, files, started, time.time() - started)
-
-
-def _temp_root() -> str:
-    root = tempfile.mkdtemp(prefix="gpml2pvjson_model_")
-    atexit.register(shutil.rmtree, root, True)
-    return root
-
-
-def build_document_model(spark: SparkSession, pages: DataFrame,
-                         store=None, stages=None):
-    """The one pass over `pages`.
-
-    With a snapshot `store` (plans/pipeline.py, SnapshotStore), it
-    writes the outputs `stages` into the store and returns what it
-    wrote (PassFiles), uncommitted: `Pipeline.run` commits each
-    stage.
-
-    Without one, it writes every output (frames.OUTPUTS) into a
-    temporary store on the driver (so only with a local master; it is
-    removed at interpreter exit, as the frames read it lazily),
-    commits them, and returns them as `Pipeline.run` does
-    (plans/pipeline.Snapshots): each output by name, as its frame."""
-    if store is not None:
-        return write_pass(spark, pages, store, stages)
-    if not spark.sparkContext.master.startswith("local"):
-        raise ValueError(
-            "build_document_model without a store writes into a temporary "
-            "directory of the driver, which only a local master's tasks "
-            "see; on master %r pass a SnapshotStore whose root every "
-            "executor sees" % spark.sparkContext.master)
-    from ..plans.pipeline import SnapshotStore, Snapshots
-
-    store = SnapshotStore(_temp_root())
-    written = write_pass(spark, pages, store, frames.OUTPUTS)
-    for stage, schema in written.schemas.items():
-        store.commit_files(spark, stage, schema, written.files[stage],
-                           written.started)
-    return Snapshots(spark, store)

@@ -76,6 +76,8 @@ def canonicalize_document(linked: list[dict], triples: list[dict],
              "obj": canonical.get(t["obj"], t["obj"])} for t in triples]
 
 
+# kept as a name perfbench's trace wraps where plans/pipeline.py
+# imports it; the package's callers read the snapshot itself
 def canonical_triples(model: dict) -> DataFrame:
     """(url, frag, pathway_id, subj, pred, obj): the model's triples,
     their subject and object the canonical ids (the model's

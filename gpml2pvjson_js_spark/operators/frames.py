@@ -11,7 +11,8 @@ among them), the JSON-LD `documents` and the `linked` mentions. Each
 distinct triple is one row: it also carries its subject and object
 rewritten to their canonical ids (`canonical_subj`, `canonical_obj`,
 canonicalize.py), so the triples and the canonical triples are two
-outputs of the same rows.
+outputs of the same rows. No output holds `model_triples` alone: a
+caller that wants them (golden.py) reads the compiler's rows.
 
 Write side: a mention row (parse.page_mentions, and the quarantine row
 of a document that fails to compile) and a row of the five model
@@ -268,7 +269,7 @@ class Output(NamedTuple):
 
 
 _TRIPLE_ROLES = ("model_triples", "interaction_triples")
-# every output of the pass, the pipeline's stages in their order first
+# every output of the pass: the pipeline's stages, in their order
 OUTPUTS = {
     "mentions": Output(MENTIONS_SCHEMA, ("mentions", "quarantine")),
     "quarantine": Output(QUARANTINE, ("quarantine",)),
@@ -279,8 +280,6 @@ OUTPUTS = {
     "canonical_triples": Output(TRIPLES, _TRIPLE_ROLES, CANONICAL),
     "documents": Output(DOCUMENTS, ("documents",)),
     "text": Output(TEXT, ("text",)),
-    # the triples without the interactions' (golden.py)
-    "model_triples": Output(TRIPLES, ("model_triples",)),
 }
 
 

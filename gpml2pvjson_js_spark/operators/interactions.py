@@ -51,6 +51,8 @@ _GENERIC = ("Interaction", "MolecularInteraction")
 _NO_FACTS = (False, False, False, False)
 
 
+# kept as a name perfbench's trace wraps where plans/pipeline.py
+# imports it; the package's callers read the snapshot itself
 def classify_interactions(model: dict) -> DataFrame:
     """The interactions frame (frames.INTERACTIONS) of the model: one
     row per classified Interaction edge and per kept Group (the

@@ -178,6 +178,8 @@ def link_document(nodes: list[dict], index: LinkIndex) -> list[dict]:
     return out
 
 
+# kept as a name perfbench's trace wraps where plans/pipeline.py
+# imports it; the package's callers read the snapshot itself
 def link_entities(model: dict) -> DataFrame:
     """(url, frag, id, canonical_iri, link_method, link_score): the
     model's `linked` snapshot (assemble.build_document_model)."""

@@ -16,7 +16,8 @@ distinct. Each triple is one row: it also carries the canonical ids
 of its subject and object as columns (`canonical_subj`,
 `canonical_obj`), which the canonical triples read
 (canonicalize.py). The pass writes both roles' plain triples as the
-`triples` snapshot, which `build_triples` reads.
+`triples` snapshot; the `model_triples` alone are no snapshot, and the
+golden scorer (golden.py) reads them from the compiler's rows.
 """
 
 from __future__ import annotations
@@ -29,11 +30,12 @@ from ..functions import mappings as M
 TRIPLE_COLS = ["url", "frag", "pathway_id", "subj", "pred", "obj"]
 
 
-def build_triples(model: dict, with_interactions: bool = True
-                  ) -> DataFrame:
-    """The distinct triples of the model (frames.TRIPLES); without the
-    interaction triples when `with_interactions` is false."""
-    return model["triples" if with_interactions else "model_triples"]
+# kept as a name perfbench's trace wraps where plans/pipeline.py
+# imports it; the package's callers read the snapshot itself
+def build_triples(model: dict) -> DataFrame:
+    """The distinct triples of the model (frames.TRIPLES): its
+    `triples` snapshot."""
+    return model["triples"]
 
 
 def _xref(r: dict):

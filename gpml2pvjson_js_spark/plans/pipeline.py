@@ -19,8 +19,11 @@ The commit reads nothing back: `run` returns a mapping (`Snapshots`)
 that reads a stage only when a caller first asks for it, as its
 declared frame (frames.as_frame), so a batch whose caller reads none
 of its frames, as the benchmark, the streaming sink and bench.py do,
-makes no read on the driver. `build_document_model` without a store
-returns the same mapping.
+makes no read on the driver. `run` is the one way to run the pass
+on Spark: its caller owns the snapshot root, `build_document_model`
+writes into it, and `run` commits. The stdin CLI and the golden
+scorer call the pass's per-page function (document.compile_page_group)
+in plain Python instead, with no session.
 
 No stage waits for another: each is an output of the same pass, and
 the driver plans one query. Linking and canonicalization read nothing
@@ -68,7 +71,10 @@ from ..operators.assemble import build_document_model, write_empty_file
 # triples, so Pipeline.run calls none of the others; `xref_dictionary`,
 # `canonicalize_linked` and `rewrite_triples` stand for the linking
 # index and the canonical triples. Its `bulk` workload commits
-# `parse_gpml` and `extracted_text`.
+# `parse_gpml` and `extracted_text`. Outside perfbench and the tests
+# nothing calls `classify_interactions`, `build_triples`,
+# `link_entities` or `canonical_triples`: each stays only as a name the
+# trace wraps.
 from ..operators.canonicalize import canonical_triples
 from ..operators.interactions import classify_interactions  # noqa: F401
 from ..operators.linking import link_entities, link_index  # noqa: F401
@@ -245,10 +251,11 @@ class SnapshotStore:
     def commit_files(self, spark: SparkSession, stage: str, schema,
                      files: list[dict], started: float) -> None:
         """Commit the files a pass wrote for `stage`
-        (operators/assemble.py, `write_pass`; `files` are its FILE_ROW
-        rows, `started` the pass's start): delete every other entry of
-        the stage's data directory, and write the manifest. It runs no
-        Spark job and reads nothing back (`read` does, when asked). A
+        (operators/assemble.py, `build_document_model`; `files` are its
+        FILE_ROW rows, `started` the pass's start): delete every other
+        entry of the stage's data directory, and write the manifest. It
+        runs no Spark job and reads nothing back (`read` does, when
+        asked). A
         stage with no rows commits the one empty file with its schema
         that Spark's writer makes of an empty frame, written here with
         pyarrow; only then is the session asked anything, its Spark

@@ -5,9 +5,9 @@ import pytest
 
 from gpml2pvjson_js_spark.corpus import pages_df
 from gpml2pvjson_js_spark.golden import EXPECTED_DIR
-from gpml2pvjson_js_spark.operators.assemble import build_document_model
 from gpml2pvjson_js_spark.operators.interactions import classify_interactions
 from gpml2pvjson_js_spark.operators.triples import build_triples
+from gpml2pvjson_js_spark.plans.pipeline import Pipeline
 from gpml2pvjson_js_spark.session import get_spark
 
 N_PAGES = 15  # one page per fixture class (PAGE_MIX), no giants
@@ -25,8 +25,9 @@ def pages(spark):
 
 
 @pytest.fixture(scope="session")
-def model(spark, pages):
-    return build_document_model(spark, pages)
+def model(spark, pages, tmp_path_factory):
+    return Pipeline(spark, pages, str(tmp_path_factory.mktemp("model"))) \
+        .run(resume=False)
 
 
 @pytest.fixture(scope="session")

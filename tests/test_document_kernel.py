@@ -1,7 +1,7 @@
 """The document compiler (operators/document.py): plain-Python cases
 for `compile_document` on hand-built mention rows, the pass's Arrow
 boundary (`compile_page_group`, then each output's table) on pages,
-and Spark cases through `build_document_model`."""
+and Spark cases through `Pipeline.run`."""
 
 import datetime as dt
 import math
@@ -13,12 +13,12 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from gpml2pvjson_js_spark import corpus as C
 from gpml2pvjson_js_spark.operators import assemble
-from gpml2pvjson_js_spark.operators.assemble import build_document_model
 from gpml2pvjson_js_spark.operators.document import (
     compile_document, compile_page_group)
 from gpml2pvjson_js_spark.operators.frames import FRAMES, OUTPUTS
 from gpml2pvjson_js_spark.operators.linking import link_index
 from gpml2pvjson_js_spark.operators.parse import MENTIONS_SCHEMA
+from gpml2pvjson_js_spark.plans.pipeline import Pipeline
 
 
 def _el(idx, element, eid, x=0.0, y=0.0, width=80.0, height=20.0,
@@ -554,8 +554,14 @@ def _grouped_doc(cx):
                               C._point(0.0, 0.0, "n2", -1.0, 0.0)]))
 
 
-def test_two_urls_sharing_ids_stay_independent(spark):
-    model = build_document_model(spark, _pages(
+def _snapshots(spark, tmp_path_factory, pages):
+    """`Pipeline.run` over `pages`, into a root of its own."""
+    root = str(tmp_path_factory.mktemp("kernel"))
+    return Pipeline(spark, pages, root).run(resume=False)
+
+
+def test_two_urls_sharing_ids_stay_independent(spark, tmp_path_factory):
+    model = _snapshots(spark, tmp_path_factory, _pages(
         spark, [("https://a.example/p", _grouped_doc(100.0)),
                 ("https://b.example/p", _grouped_doc(400.0))]))
     nodes = {(r.url, r.id): r for r in model["nodes"].collect()}
@@ -573,9 +579,10 @@ def test_two_urls_sharing_ids_stay_independent(spark):
         assert pathway[0].contains == ["e1", "G1", "n2"]
 
 
-def test_giant_page_builds_with_expected_row_counts(spark):
+def test_giant_page_builds_with_expected_row_counts(spark,
+                                                    tmp_path_factory):
     n = 2000
-    model = build_document_model(spark, _pages(
+    model = _snapshots(spark, tmp_path_factory, _pages(
         spark, [("https://giant.example/p", C.gpml_giant(n_nodes=n))]))
     assert model["nodes"].count() == n
     edges = model["edges"]
@@ -585,7 +592,8 @@ def test_giant_page_builds_with_expected_row_counts(spark):
     assert len(pathway) == 1 and len(pathway[0].contains) == 2 * n - 1
 
 
-def test_duplicate_url_keeps_both_pages_and_compiles_one_document(spark):
+def test_duplicate_url_keeps_both_pages_and_compiles_one_document(
+        spark, tmp_path_factory):
     """Two page rows with one url: both pages' mention and text rows
     are kept, and the fragments that share a (url, frag) compile as
     one document, whose JSON-LD each of its two Pathway elements
@@ -595,7 +603,7 @@ def test_duplicate_url_keeps_both_pages_and_compiles_one_document(spark):
     from gpml2pvjson_js_spark.operators.export import jsonld_documents
 
     url = "https://dup.example/p"
-    model = build_document_model(spark, _pages(spark, [
+    model = _snapshots(spark, tmp_path_factory, _pages(spark, [
         (url, C._doc(C._pathway_open(name="a"),
                      C._datanode("n1", "A", cx=100.0))),
         (url, C._doc(C._pathway_open(name="b"),

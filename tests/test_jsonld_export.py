@@ -29,47 +29,60 @@ def test_documents_are_valid_json_per_page(model):
         assert d["pathway"]["type"][0] == "Pathway"
 
 
-def test_cli_convert_bytes_multidoc(spark):
+def _stream() -> bytes:
+    """Two concatenated GPML documents on one stream."""
+    from gpml2pvjson_js_spark.corpus import gpml_data_nodes, gpml_groups
+
+    return (gpml_data_nodes() + "\n" + gpml_groups()).encode()
+
+
+def _main(monkeypatch, data: bytes, *argv) -> int:
+    """The CLI's `main` with `data` on stdin."""
+    import io
+    import types
+
+    from gpml2pvjson_js_spark.__main__ import main
+
+    monkeypatch.setattr("sys.stdin",
+                        types.SimpleNamespace(buffer=io.BytesIO(data)))
+    return main(list(argv))
+
+
+def test_cli_convert_bytes_multidoc():
     """The reference's stdin->stdout CLI surface: concatenated GPML
     docs on one stream come back as one JSON-LD document per pathway,
     in input order, byte-deterministic across runs
     (ref: bin/gpml2pvjson:61-96)."""
-    import json
-
     from gpml2pvjson_js_spark.__main__ import convert_bytes
-    from gpml2pvjson_js_spark.corpus import gpml_data_nodes, gpml_groups
 
-    stream = (gpml_data_nodes() + "\n" + gpml_groups()).encode()
-    docs = convert_bytes(spark, stream, "file://stdin")
+    stream = _stream()
+    docs = convert_bytes(stream, "file://stdin")
     assert len(docs) == 2
     parsed = [json.loads(d) for d in docs]
     assert all(set(p) == {"pathway", "entitiesById"} for p in parsed)
     # doc 0 is the data-node fixture, doc 1 the groups fixture
     assert any(v.get("gpmlElementName") == "Group"
                for v in parsed[1]["entitiesById"].values())
-    assert docs == convert_bytes(spark, stream, "file://stdin")
+    assert docs == convert_bytes(stream, "file://stdin")
 
 
-def test_cli_id_and_pathway_version_flags(spark):
+def test_cli_id_and_pathway_version_flags():
     """Reference CLI options: `--id` overrides pathway.id on every
     document of the stream (ref: src/2013a/toPvjson.ts:219-230 via
     bin/gpml2pvjson:52), `--pathway-version` is a CLI-side post-set
     appended to the pathway object (ref: bin/gpml2pvjson:112-114),
-    and with neither flag the pipeline bytes pass through untouched
+    and with neither flag the compiler's bytes pass through untouched
     (content-hash fallback, ref: bin/gpml2pvjson:57-59,108-111)."""
-    import json
-
     from gpml2pvjson_js_spark.__main__ import convert_bytes
-    from gpml2pvjson_js_spark.corpus import gpml_data_nodes, gpml_groups
 
-    stream = (gpml_data_nodes() + "\n" + gpml_groups()).encode()
+    stream = _stream()
     iri = "http://identifiers.org/wikipathways/WP4"
 
-    plain = convert_bytes(spark, stream, "file://stdin")
+    plain = convert_bytes(stream, "file://stdin")
     assert all(json.loads(d)["pathway"]["id"].startswith("hash://sha256/")
                for d in plain)
 
-    flagged = convert_bytes(spark, stream, "file://stdin",
+    flagged = convert_bytes(stream, "file://stdin",
                             pathway_id=iri, pathway_version="90358")
     assert len(flagged) == len(plain)
     for doc in flagged:
@@ -86,12 +99,104 @@ def test_cli_id_and_pathway_version_flags(spark):
         assert da == db
 
     # version-only: id keeps its content-hash fallback
-    ver_only = convert_bytes(spark, stream, "file://stdin",
+    ver_only = convert_bytes(stream, "file://stdin",
                              pathway_version="7")
     for doc in ver_only:
         p = json.loads(doc)["pathway"]
         assert p["id"].startswith("hash://sha256/")
         assert p["pathwayVersion"] == "7"
+
+
+def test_cli_bytes_are_the_pipelines_documents(spark, tmp_path_factory,
+                                               monkeypatch, capsysbinary):
+    """The CLI runs the pass's own function: on every catalog page of
+    the benchmark and on the two-document stream, its documents are
+    the rows of the `documents` snapshot `Pipeline.run` commits for
+    the same page, in frag order, byte for byte (the stream's through
+    `main`, as NDJSON)."""
+    import datetime
+    import random
+
+    from gpml2pvjson_js_spark.__main__ import convert_bytes
+    from gpml2pvjson_js_spark.corpus import PAGES_SCHEMA
+    from gpml2pvjson_js_spark.plans.pipeline import Pipeline
+    from tests.test_pins_offline import workloads
+
+    stream_url = "https://cli.example/stream"
+    pages = {stream_url: _stream()}
+    for kind, variant in workloads.catalog():
+        url = f"https://cli.example/{kind}/{variant}"
+        pages[url] = workloads.page(kind, variant, url,
+                                    random.Random(0))["html"]
+    ts = datetime.datetime(2020, 1, 1)
+    df = spark.createDataFrame(
+        [(url, ts, html, "", "en") for url, html in pages.items()],
+        PAGES_SCHEMA)
+    out = Pipeline(spark, df, str(tmp_path_factory.mktemp("cli"))) \
+        .run(resume=False)
+    committed = {}
+    for r in sorted(out["documents"].collect(), key=lambda r: r["frag"]):
+        committed.setdefault(r["url"], []).append(r["jsonld"])
+    assert len(committed[stream_url]) == 2
+    for url, html in pages.items():
+        assert convert_bytes(html, url) == committed.get(url, []), url
+
+    assert _main(monkeypatch, pages[stream_url],
+                 "--pathway-iri", stream_url) == 0
+    assert capsysbinary.readouterr().out == "".join(
+        doc + "\n" for doc in committed[stream_url]).encode()
+
+
+def test_cli_prints_each_quarantine_reason_and_fails(monkeypatch, capsys):
+    """A document that does not compile is quarantined as in the pass:
+    the CLI writes the documents that compiled, prints each quarantine
+    row's reason on stderr, and exits 1."""
+    from gpml2pvjson_js_spark.corpus import gpml_data_nodes, gpml_groups
+
+    assert _main(monkeypatch, b"<Pathway><oops") == 1
+    got = capsys.readouterr()
+    assert got.out == ""
+    assert "xml-parse: unclosed token: line 1, column 9" in got.err
+    assert "no <Pathway> documents" not in got.err
+
+    broken = gpml_groups().replace("<DataNode", '<DataNode A="1" A="2"', 1)
+    stream = (gpml_data_nodes() + "\n" + broken).encode()
+    assert _main(monkeypatch, stream) == 1
+    got = capsys.readouterr()
+    [doc] = got.out.splitlines()
+    assert not any(v.get("gpmlElementName") == "Group"
+                   for v in json.loads(doc)["entitiesById"].values())
+    assert "pathway 1: xml-parse: duplicate attribute" in got.err
+
+    assert _main(monkeypatch, _stream()) == 0
+    got = capsys.readouterr()
+    assert len(got.out.splitlines()) == 2 and got.err == ""
+
+
+def test_cli_runs_without_java(tmp_path):
+    """`python -m gpml2pvjson_js_spark` starts no JVM: with JAVA_HOME
+    naming a missing directory and no `java` on PATH it still prints
+    both documents of the two-document stream."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(
+        d for d in os.environ.get("PATH", "").split(os.pathsep)
+        if d and not os.path.exists(os.path.join(d, "java")))
+    env = {**os.environ, "JAVA_HOME": str(tmp_path / "no-java"),
+           "PATH": path, "PYTHONPATH": repo}
+    assert shutil.which("java", path=path) is None
+    done = subprocess.run(
+        [sys.executable, "-m", "gpml2pvjson_js_spark"], input=_stream(),
+        capture_output=True, env=env, cwd=str(tmp_path), timeout=120)
+    assert done.returncode == 0, done.stderr.decode()
+    docs = done.stdout.decode().splitlines()
+    assert len(docs) == 2
+    assert all(set(json.loads(d)) == {"pathway", "entitiesById"}
+               for d in docs)
 
 
 # --- the compiler's JSON writer against Spark's to_json -----------------

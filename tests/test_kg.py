@@ -429,3 +429,40 @@ def test_topo_levels_have_no_depth_cap(spark):
         [(0, c, n) for n, c in enumerate(chain)]
         + [(1, "a", -1), (1, "b", -1), (2, "m", -1), (3, "r", 2),
            (3, "r", 2), (3, "x", 0), (3, "y", 1)])
+
+
+def test_kg_queries_share_one_run_per_root(spark, monkeypatch):
+    """The driver contract's `kg_*` queries read the snapshots of one
+    `Pipeline.run` per (sf_dir, limit): the first query runs the pass
+    and commits its stages, and every later one resumes the committed
+    root, running no pass and committing nothing. `kg_text_invariant`
+    compares the pass's `text` snapshot with the documents table: one
+    ok row per page."""
+    import __spark_entry__ as entry
+    from gpml2pvjson_js_spark.plans import pipeline
+
+    sf = "/root/testdata/sf0.001"
+    calls = []
+    build, commit = (pipeline.build_document_model,
+                     pipeline.SnapshotStore.commit_files)
+
+    def spy_build(*args, **kwargs):
+        calls.append("pass")
+        return build(*args, **kwargs)
+
+    def spy_commit(self, spark, stage, *args):
+        calls.append(stage)
+        return commit(self, spark, stage, *args)
+
+    monkeypatch.setattr(pipeline, "build_document_model", spy_build)
+    monkeypatch.setattr(pipeline.SnapshotStore, "commit_files", spy_commit)
+    text = entry.kg_text_invariant(spark, sf).collect()
+    ran = list(calls)
+    # the pass and every commit, unless an earlier test ran them
+    assert ran in ([], ["pass", *pipeline.STAGES])
+    assert len(text) == 64 == len({r["url"] for r in text})
+    assert all(r["ok"] for r in text)
+    triples = entry.kg_triples(spark, sf).count()
+    assert triples == entry.kg_canonical_triples(spark, sf).count() > 0
+    assert list(entry._kg(spark, sf)) == pipeline.STAGES
+    assert calls == ran

@@ -45,11 +45,9 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
     574k-char trees on canonical/documents used to dominate plan
     stringification). Structural, not data-dependent: committed
     stages read back from parquet, so stage plans are scan + a
-    bounded operator tree, and so are the model's frames, which read
-    back the snapshots of the one pass. Measured at sf0.01, when the
-    stages projected a staging: max executed-plan string 99k."""
-    from gpml2pvjson_js_spark.operators.assemble import (
-        build_document_model)
+    bounded operator tree, and so are the operators' frames, which read
+    back the same snapshots. Measured at sf0.01, when the stages
+    projected a staging: max executed-plan string 99k."""
     from gpml2pvjson_js_spark.operators.canonicalize import (
         canonical_triples)
     from gpml2pvjson_js_spark.operators.export import jsonld_documents
@@ -68,14 +66,12 @@ def test_pipeline_stage_plans_stay_bounded(spark, tmp_path_factory):
             len(df._jdf.queryExecution().optimizedPlan().toString())
             for name, df in out.items()
         }
-        # the two build shapes that used to carry the 574k trees,
-        # rebuilt as the pipeline's stage lambdas build them
-        # (pre-commit): projections of the model staged from the pages
-        model = build_document_model(spark, pages)
+        # the two build shapes that used to carry the 574k trees, as
+        # their operators read them from what the run returned
         for name, build in (("canonical_build", canonical_triples),
                             ("documents_build", jsonld_documents)):
             sizes[name] = len(
-                build(model)._jdf.queryExecution().optimizedPlan()
+                build(out)._jdf.queryExecution().optimizedPlan()
                 .toString())
     finally:
         spark.conf.set("spark.sql.maxPlanStringLength", old_cap)
@@ -671,20 +667,6 @@ def test_commit_fails_on_a_file_the_driver_does_not_see(
     assert not p.store.is_committed("nodes")
 
 
-def test_model_without_a_store_needs_a_local_master(spark, monkeypatch):
-    """Without a store the pass writes into a temporary directory of
-    the driver, which only a local master's tasks see: any other
-    master is refused before anything runs."""
-    import pytest
-
-    from gpml2pvjson_js_spark.operators.assemble import (
-        build_document_model)
-
-    monkeypatch.setattr(spark.sparkContext, "master", "spark://h:7077")
-    with pytest.raises(ValueError, match="SnapshotStore"):
-        build_document_model(spark, pages_df(spark, 2, giant_every=0))
-
-
 def test_stage_with_no_rows_commits_one_empty_file_with_its_schema(
         spark, tmp_path_factory):
     """A stage no task wrote a row of commits one empty file with the
@@ -875,25 +857,6 @@ def test_run_frames_are_the_store_reads(spark, tmp_path_factory):
             == [f.nullable for f in declared.fields], stage
         assert sorted(map(repr, got.collect())) \
             == sorted(map(repr, want.collect())), stage
-
-
-def test_run_and_the_model_return_the_same_frames(spark, tmp_path_factory):
-    """`Pipeline.run` and `build_document_model` without a store return
-    each stage in one shape: the same schema, nullability included;
-    the model also has `model_triples`."""
-    from gpml2pvjson_js_spark.operators.assemble import (
-        build_document_model)
-
-    pages = pages_df(spark, 4, giant_every=0)
-    root = str(tmp_path_factory.mktemp("kgout_shapes"))
-    out = Pipeline(spark, pages, root, n_buckets=4).run(resume=False)
-    model = build_document_model(spark, pages)
-    assert list(model) == [*STAGES, "model_triples"]
-    assert list(out) == STAGES
-    for stage in STAGES:
-        assert out[stage].schema == model[stage].schema, stage
-        assert [f.nullable for f in out[stage].schema.fields] \
-            == [f.nullable for f in model[stage].schema.fields], stage
 
 
 def test_a_url_that_fails_to_compile_is_quarantined(spark, tmp_path_factory,

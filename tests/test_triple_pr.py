@@ -1,9 +1,13 @@
 """North-rule gate: triple P/R >= 0.95 against ALL reference golden
 fixtures (/root/reference/test/expected/*.json), not a hand-curated
 subset. Every golden pvjson document is inverted back to GPML
-(golden.gpml_from_golden), pushed through the production
-parse -> document model -> triples path in ONE Spark job, and compared
-against the flatten of the golden itself (golden.golden_triples).
+(golden.gpml_from_golden), compiled by the pass's own per-page
+function (document.compile_page_group) in plain Python, with no Spark
+session, and its model triples compared against the flatten of the
+golden itself (golden.golden_triples). That function is the production
+kernel: each task of `Pipeline.run`'s pass runs it, and
+tests/test_pins_offline.py holds its output to the pins the pipeline's
+snapshots were recorded from.
 
 A per-fixture report is written to BENCH/PR_REPORT.json so regressions
 are attributable to a fixture and a triple. Without the goldens the
@@ -22,8 +26,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
-def report(spark):
-    rep = pr_report(spark)
+def report():
+    rep = pr_report()
     if rep["status"] == "ok":
         # the committed report is the last one scored against real
         # goldens; a run without them must not overwrite it
@@ -72,8 +76,8 @@ def test_kg_golden_pr_gate_is_false_without_reference(
     from gpml2pvjson_js_spark import golden
 
     score = golden.pr_report
-    monkeypatch.setattr(golden, "pr_report", lambda spark: score(
-        spark, str(tmp_path / "expected")))
+    monkeypatch.setattr(golden, "pr_report", lambda: score(
+        str(tmp_path / "expected")))
     rows = entry.kg_golden_pr(spark, None).collect()
     assert [r["fixture"] for r in rows] == ["__aggregate__"]
     agg = rows[0]
